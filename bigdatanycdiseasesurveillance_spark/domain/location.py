@@ -97,15 +97,6 @@ def neighborhood_zip_dim(spark: SparkSession) -> DataFrame:
 _NB_BOROUGH = {n[0]: n[1] for n in NEIGHBORHOODS}
 
 
-def alias_dim(spark: SparkSession) -> DataFrame:
-    """J6 + J7 at build time: alias -> canonical neighborhood -> borough
-    (a dim-to-dim join performed once at module load, not per record)."""
-    rows = [(a, n, _NB_BOROUGH[n]) for a, n in ALIASES]
-    return values_dim(
-        spark, rows, "alias string, neighborhood string, alias_borough string"
-    )
-
-
 def subreddit_dim(spark: SparkSession) -> DataFrame:
     """J5 + J7: subreddit -> neighborhood -> borough."""
     rows = [(s, n, _NB_BOROUGH[n]) for s, n in SUBREDDITS]

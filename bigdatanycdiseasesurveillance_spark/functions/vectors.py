@@ -38,11 +38,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_cols(a: Column, b: Column) -> Column:
-    """Cosine over raw float arrays: casts then computes."""
-    return cosine(as_double(a), as_double(b))
-
-
 def quantize_int8(vec: Column) -> Column:
     """Symmetric per-vector int8 quantization of a float array:
     scale = max|v| / 127, q_i = floor(v_i/scale + 0.5) in [-127, 127].

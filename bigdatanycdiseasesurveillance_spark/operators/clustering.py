@@ -22,26 +22,27 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Small-corpus fast-path cap for the Lloyd kernels: at or under this many
-# points the whole fixed-iteration loop runs on the driver off ONE capped
-# Arrow collect (<= cap x (d+1) doubles — ~27 MB at d=16, the same
-# bounded-driver-materialization class as dedup.SMALL_GRAPH_EDGES). Above
-# the cap the distributed loop runs exactly as before, so the 100 TB
-# shape is unchanged. Why: each distributed iteration costs one 2-stage
-# k-row aggregate job + a collect round trip (~160 ms of pure control
-# plane at any corpus size; measured r13 — ~1.3 s of
+from .bounded import bounded_collect, min_label_components
+
+# Small-corpus fast-path cap for the Lloyd loop: at or under this many
+# points the whole fixed-iteration loop runs on the driver off ONE
+# operators.bounded.bounded_collect (<= cap x (d+1) doubles — ~27 MB at
+# d=16, the same bounded-driver-materialization class as
+# dedup.SMALL_GRAPH_EDGES). Above the cap the distributed loop runs, so
+# the 100 TB shape is unchanged. Why: each distributed iteration costs
+# one 2-stage k-row aggregate job + a collect round trip (~160 ms of
+# pure control plane at any corpus size; ~1.3 s of
 # dedup_semdedup_profile's warm time was this loop's scheduling, not
 # compute).
 SMALL_KMEANS_POINTS = 200_000
 
-# Hard caps on the bounded-control-plane driver collects (r13 verdict
-# directive #2): the eps-grid invariant bounds cells at geography/eps^2
-# (a few hundred for every in-repo caller at ANY corpus size), so these
-# caps are pure contract enforcement — orders of magnitude of headroom,
-# never reachable without a caller violating the invariant, and a loud
-# ValueError beats an unbounded driver materialization.
+# Hard cap on cellgrid_assign's driver collect: the eps-grid invariant
+# bounds cells at geography/eps^2 (a few hundred for every in-repo
+# caller at ANY corpus size), so the cap is pure contract enforcement —
+# orders of magnitude of headroom, never reachable without a caller
+# violating the invariant, and a loud ValueError beats an unbounded
+# driver materialization.
 BOUNDED_CELLS_CAP = 500_000
-BOUNDED_CC_EDGES = 2_000_000  # <= 9 x cells + self-edges
 
 
 def _round6_spark(x: float) -> float:
@@ -113,15 +114,14 @@ def _driver_lloyd(pids, cols, k: int, iters: int):
 
 
 def _lloyd_head(pts: DataFrame, dim_names: list[str]):
-    """One capped Arrow action serving as both the size probe and the
-    point fetch (the connected_components r13 device). Returns
-    (pids, [dim arrays...]) when the corpus is at or under
-    SMALL_KMEANS_POINTS and clean (non-null), else None — callers then
-    run the distributed loop unchanged. Empty or null-bearing frames
-    also fall through so degenerate behavior stays byte-identical to
-    the previous code path."""
-    head = pts.limit(SMALL_KMEANS_POINTS + 1).toArrow()
-    if not (0 < head.num_rows <= SMALL_KMEANS_POINTS):
+    """One operators.bounded.bounded_collect serving as both the size
+    probe and the point fetch. Returns (pids, [dim arrays...]) when the
+    corpus is at or under SMALL_KMEANS_POINTS and clean (non-null), else
+    None — the caller then runs the distributed loop. Empty or
+    null-bearing frames also fall through, so degenerate inputs keep the
+    distributed loop's semantics."""
+    head = bounded_collect(pts, SMALL_KMEANS_POINTS)
+    if head is None or head.num_rows == 0:
         return None
     if any(head.column(c).null_count for c in ("pid", *dim_names)):
         return None
@@ -187,92 +187,12 @@ def lloyd_kmeans_2d(
 ) -> DataFrame:
     """M8, deterministic variant: Lloyd's k-means on 2-D points (the
     reference clusters geographic coordinates,
-    spatial_clustering.py:342-378) with SQL-expressible semantics so the
-    DuckDB oracle can replay it exactly:
-
-    - init: the k points with the smallest ids, cluster ids 0..k-1 in
-      id order (no sampling — reproducible everywhere);
-    - assignment: nearest centroid by squared distance, ties to the
-      smallest cluster id;
-    - update: per-cluster mean, ROUNDED to 6 decimals each iteration so
-      cross-engine float-sum last-bit drift cannot compound;
-    - fixed `iters` iterations (no convergence test — both sides run
-      the same count).
-
-    Scale: points never leave the cluster; each iteration is one
-    broadcast of k centroid literals + one k-key groupBy. Only the k
-    centroid rows are collected per iteration. Returns
-    (id, cluster_id).
-
-    Small-corpus fast path (r14): at or under SMALL_KMEANS_POINTS the
-    whole loop runs driver-side off one capped Arrow collect
-    (_driver_lloyd — bit-compatible arithmetic, see there); above the
-    cap the distributed loop below runs exactly as before."""
-    pts = points.select(
-        F.col(id_col).alias("pid"),
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-    ).localCheckpoint(eager=False)  # scanned once, not once per iteration
-    head = _lloyd_head(pts, ["x", "y"])
-    if head is not None:
-        import pandas as pd
-
-        pids, cols = head
-        assign_cid, _ = _driver_lloyd(pids, cols, k, iters)
-        out = pd.DataFrame(
-            {
-                id_col: pd.Series(pids, dtype="int64"),
-                "cluster_id": pd.Series(assign_cid, dtype="int64"),
-            }
-        )
-        return points.sparkSession.createDataFrame(
-            out, f"{id_col} long, cluster_id long"
-        )
-    init = pts.orderBy("pid").limit(k).collect()
-    centroids = [(i, float(r["x"]), float(r["y"])) for i, r in enumerate(init)]
-    assigned = None
-    for _ in range(iters):
-        # Each iteration is built as TWO selectExpr SQL strings instead
-        # of ~50 Column-object calls: profiling (r13) showed ~150 ms of
-        # the ~250 ms per-iteration cost was driver-side Py4J expression
-        # construction, not execution. CAST('<repr>' AS DOUBLE) literals
-        # round-trip Python floats exactly (repr is shortest-exact) and
-        # constant-fold to the same double literals the Column API
-        # produced, so the physical plan — and every centroid value —
-        # is bit-identical (a bare SQL decimal literal would be DECIMAL,
-        # hence the explicit cast). least + first-match CASE keeps the
-        # tie-to-smallest-cid rule unchanged.
-        d_exprs = [
-            f"(x - CAST('{cx!r}' AS DOUBLE)) * (x - CAST('{cx!r}' AS DOUBLE))"
-            f" + (y - CAST('{cy!r}' AS DOUBLE)) * (y - CAST('{cy!r}' AS DOUBLE))"
-            f" AS __d{cid}"
-            for cid, cx, cy in centroids
-        ]
-        least = "least(" + ", ".join(f"__d{cid}" for cid, _, _ in centroids) + ")"
-        case = (
-            "CASE "
-            + " ".join(  # ascending cid → ties break to smallest id
-                f"WHEN __d{cid} = __m THEN {cid}" for cid, _, _ in centroids
-            )
-            + " END AS cluster_id"
-        )
-        assigned = (
-            pts.selectExpr("pid", "x", "y", *d_exprs)
-            .selectExpr("pid", "x", "y", f"{least} AS __m", *[
-                f"__d{cid}" for cid, _, _ in centroids
-            ])
-            .selectExpr("pid", "x", "y", case)
-        )
-        # k rows — sort driver-side; a DataFrame orderBy would add a
-        # range-partition sampling job to every iteration
-        new_c = (
-            assigned.groupBy("cluster_id")
-            .agg(F.round(F.avg("x"), 6).alias("cx"), F.round(F.avg("y"), 6).alias("cy"))
-            .collect()
-        )
-        centroids = sorted(
-            (int(r["cluster_id"]), float(r["cx"]), float(r["cy"])) for r in new_c
-        )
+    spatial_clustering.py:342-378) — lloyd_kmeans_nd with d = 2, whose
+    SQL-replayable semantics the DuckDB oracle replays exactly. Returns
+    (id, cluster_id)."""
+    assigned, _ = lloyd_kmeans_nd(
+        points, [x_col, y_col], k=k, iters=iters, id_col=id_col
+    )
     return assigned.select(
         F.col("pid").alias(id_col), F.col("cluster_id").cast("long").alias("cluster_id")
     )
@@ -285,7 +205,6 @@ def grid_dbscan(
     x_col: str = "x",
     y_col: str = "y",
     id_col: str = "vec_id",
-    max_rounds: int = 20,
 ) -> DataFrame:
     """M7: density clustering with DBSCAN semantics on 2-D points.
 
@@ -388,8 +307,7 @@ def grid_dbscan(
     from .dedup import connected_components
 
     cc = connected_components(
-        core_edges.select(F.col("pid").alias("id_a"), F.col("qid").alias("id_b")),
-        max_iter=max_rounds,
+        core_edges.select(F.col("pid").alias("id_a"), F.col("qid").alias("id_b"))
     ).select(F.col("doc_id").alias("lid"), F.col("canonical_id").alias("cluster_id"))
     # connected_components labels only nodes with at least one core-core
     # edge; a core point with no other core in range is its own cluster
@@ -428,75 +346,6 @@ def cluster_profiles(assigned: DataFrame, points: DataFrame, id_col: str = "vec_
     )
 
 
-def bounded_cc_labels(
-    edges: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
-    """Connected components for BOUNDED control-plane graphs — graphs
-    whose node count is corpus-size-INDEPENDENT by construction (the
-    eps-grid cell graph: cells <= geography/eps^2, a few hundred at any
-    corpus size). Collects the edge list ONCE (O(cells x 9) rows — the
-    same bounded-control-plane class as the CC convergence probes and
-    the k-means centroid collects), labels with a driver union-find,
-    and returns (doc_id, canonical_id) as a LocalRelation, with
-    canonical_id = min node id of the component — bit-identical to
-    operators.dedup.connected_components on the same edges.
-
-    Why not the distributed loop here: per materialization it costs
-    2-3 jobs (propagate + probe) regardless of graph size; on a
-    ~100-node graph that is pure scheduler overhead (measured r13:
-    ~2s of the cellgrid flagship's 3.5s warm time was CC control
-    plane). Corpus-dependent graphs (dedup near-dup groups) MUST keep
-    the distributed loop — this helper deliberately has no iteration
-    cap to raise because a bounded graph cannot grow one.
-
-    The collect IS capped though (r14, r13 verdict directive #2): the
-    bounded-graph contract is the caller's invariant, and a caller that
-    breaks it must fail loudly with the contract named, not OOM the
-    driver."""
-    from ..tables import values_dim
-
-    spark = edges.sparkSession
-    rows = (
-        edges.select(
-            F.col(id_a).cast("long").alias("a"),
-            F.col(id_b).cast("long").alias("b"),
-        )
-        .limit(BOUNDED_CC_EDGES + 1)
-        .collect()
-    )
-    if len(rows) > BOUNDED_CC_EDGES:
-        raise ValueError(
-            "bounded_cc_labels: edge list exceeds the bounded control-"
-            f"plane cap ({BOUNDED_CC_EDGES}) — this labeler is only for "
-            "graphs whose node count is corpus-size-independent by "
-            "construction (cells <= geography/eps^2); corpus-dependent "
-            "graphs must use operators.dedup.connected_components"
-        )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in rows:
-        a, b = r["a"], r["b"]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)  # min-label union
-    label = {n: find(n) for n in parent}
-    return values_dim(
-        spark,
-        sorted((int(n), int(c)) for n, c in label.items()),
-        "doc_id bigint, canonical_id bigint",
-    )
-
-
 def cellgrid_assign(
     cells: DataFrame, key_mult: int = 100000, num: int = 12, den: int = 10
 ) -> DataFrame:
@@ -515,38 +364,32 @@ def cellgrid_assign(
     geography/eps^2, so the plan is identical at 100x the points."""
     # The ENTIRE cascade below (8-neighborhood density, relative-density
     # core rule, cell CC, border attach, noise) is cell-level work on a
-    # bounded frame, so it runs driver-side off ONE capped collect and
-    # returns a LocalRelation (r13). The previous DataFrame cascade —
-    # 4 checkpoints, ~10 broadcast exchanges, the bounded_cc_labels
-    # collect — cost ~25 scheduler round-trips per run (measured sf0.1:
-    # ~1.7s of the cellgrid flagship's 2.7s warm time was this control
-    # plane, job-sum only 0.97s). The collect is the same bounded class
-    # as bounded_cc_labels' edge collect one level down — and strictly
-    # smaller: cells <= geography/eps^2 rows of three longs, while the
-    # cell EDGE list it previously collected is up to 9x that. All
-    # arithmetic below is integer-exact (Python ints are wider than the
-    # previous BIGINT columns, matching the DuckDB oracle's HUGEINT
-    # promotion rather than Spark's silent non-ANSI wrap).
+    # bounded frame, so it runs driver-side off ONE
+    # operators.bounded.bounded_collect (raise mode) and returns a
+    # LocalRelation. A DataFrame cascade — 4 checkpoints, ~10 broadcast
+    # exchanges, a cell-edge collect — cost ~25 scheduler round-trips
+    # per run (measured sf0.1: ~1.7s of the cellgrid flagship's 2.7s
+    # warm time was this control plane, job-sum only 0.97s). The collect
+    # is cells <= geography/eps^2 rows of three longs. All arithmetic
+    # below is integer-exact (Python ints are wider than BIGINT
+    # columns, matching the DuckDB oracle's HUGEINT promotion rather
+    # than Spark's silent non-ANSI wrap).
     from ..tables import values_dim
 
     spark = cells.sparkSession
-    head = (
+    head = bounded_collect(
         cells.select(
             F.col("cx").cast("long").alias("cx"),
             F.col("cy").cast("long").alias("cy"),
             F.col("w").cast("long").alias("w"),
-        )
-        .limit(BOUNDED_CELLS_CAP + 1)
-        .toArrow()
+        ),
+        BOUNDED_CELLS_CAP,
+        "cellgrid_assign: occupied-cell count exceeds the bounded-cells "
+        f"cap BOUNDED_CELLS_CAP={BOUNDED_CELLS_CAP} — the eps-grid contract "
+        "bounds cells at geography/eps^2 (corpus-size-independent); a "
+        "caller hitting this cap is passing a corpus-dependent frame and "
+        "must use the distributed grid_dbscan cascade",
     )
-    if head.num_rows > BOUNDED_CELLS_CAP:
-        raise ValueError(
-            "cellgrid_assign: occupied-cell count exceeds the bounded-"
-            f"cells cap ({BOUNDED_CELLS_CAP}) — the eps-grid contract "
-            "bounds cells at geography/eps^2 (corpus-size-independent); "
-            "a caller hitting this cap is passing a corpus-dependent "
-            "frame and must use the distributed grid_dbscan cascade"
-        )
     out_schema = "cx bigint, cy bigint, w bigint, cid bigint"
     if head.num_rows == 0:
         return spark.createDataFrame([], out_schema)
@@ -596,32 +439,20 @@ def cellgrid_assign(
     core_set = set(core)
     key = {q: q[0] * key_mult + q[1] for q in core}
 
-    # CC over core-core grid adjacency: min-label union-find, identical
-    # labels to bounded_cc_labels / connected_components (component
-    # minimum of the packed key)
-    parent = {key[q]: key[q] for q in core}
-
-    def find(k: int) -> int:
-        r = k
-        while parent[r] != r:
-            r = parent[r]
-        while parent[k] != r:  # path compression
-            parent[k], k = r, parent[k]
-        return r
-
-    for q in core:
-        for p in neighbors(*q):
-            if p in core_set:
-                ra, rb = find(key[q]), find(key[p])
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)  # min-label union
+    # CC over core-core grid adjacency: the shared min-label union-find
+    # (operators.bounded), the same labels as connected_components
+    # (component minimum of the packed key). neighbors() includes the
+    # cell itself, so every core cell seeds itself through a self-edge.
+    label = min_label_components(
+        (key[q], key[p]) for q in core for p in neighbors(*q) if p in core_set
+    )
     rows: list[tuple[int, int, int, int]] = []
     for x, y in cw:
         if (x, y) in core_set:
-            cid = find(key[(x, y)])
+            cid = label[key[(x, y)]]
         else:
             core_nb = [
-                find(key[p]) for p in neighbors(x, y) if p in core_set
+                label[key[p]] for p in neighbors(x, y) if p in core_set
             ]
             cid = min(core_nb) if core_nb else -1  # border else noise
         rows.append((x, y, cw[(x, y)], cid))
@@ -636,17 +467,31 @@ def lloyd_kmeans_nd(
     id_col: str = "pid",
     precheckpointed: bool = False,
 ):
-    """d-dimensional generalization of lloyd_kmeans_2d with identical
-    SQL-replayable semantics (smallest-id init, nearest-centroid with
-    ties to the smallest cluster id, per-iteration means rounded to 6
-    decimals, fixed iteration count). Returns (assigned, centroids):
-    assigned = (pid, dims..., cluster_id); centroids = the FINAL
-    rounded centroid list [(cid, [v0..vd-1]), ...] — callers compute
-    reconstruction/quantization stats against these exact literals so
-    both engines measure against the same numbers. Scale contract as
-    the 2-D variant: points never leave the cluster; per iteration one
-    k-literal broadcast compare + one k-key groupBy; only k centroid
-    rows cross the control plane.
+    """M8, deterministic variant: Lloyd's k-means on d-dimensional
+    points with SQL-expressible semantics so the DuckDB oracle can
+    replay it exactly:
+
+    - init: the k points with the smallest ids, cluster ids 0..k-1 in
+      id order (no sampling — reproducible everywhere);
+    - assignment: nearest centroid by squared distance, ties to the
+      smallest cluster id;
+    - update: per-cluster mean, ROUNDED to 6 decimals each iteration so
+      cross-engine float-sum last-bit drift cannot compound;
+    - fixed `iters` iterations (no convergence test — both sides run
+      the same count).
+
+    Returns (assigned, centroids): assigned = (pid, dims...,
+    cluster_id); centroids = the FINAL rounded centroid list [(cid,
+    [v0..vd-1]), ...] — callers compute reconstruction/quantization
+    stats against these exact literals so both engines measure against
+    the same numbers. Scale: points never leave the cluster; per
+    iteration one k-literal broadcast compare + one k-key groupBy; only
+    k centroid rows cross the control plane.
+
+    Small-corpus fast path: at or under SMALL_KMEANS_POINTS the whole
+    loop runs driver-side off one capped collect (_driver_lloyd —
+    bit-compatible arithmetic, see there); above the cap the
+    distributed loop below runs.
 
     precheckpointed=True skips the internal localCheckpoint — for
     callers (the PQ family) that train several codebooks as slices of
@@ -657,11 +502,9 @@ def lloyd_kmeans_nd(
     )
     if not precheckpointed:
         pts = pts.localCheckpoint(eager=False)
-    # Small-corpus fast path (r14) — same contract as lloyd_kmeans_2d's:
-    # one capped Arrow collect, driver loop, distributed fallback above
-    # the cap. The assigned frame comes back as a local relation whose
-    # dim columns are the exact collected doubles; cluster_id is int to
-    # match the distributed CASE literal type.
+    # The fast path's assigned frame comes back as a local relation
+    # whose dim columns are the exact collected doubles; cluster_id is
+    # int to match the distributed CASE literal type.
     head = _lloyd_head(pts, list(dim_cols))
     if head is not None:
         import pandas as pd
@@ -681,11 +524,14 @@ def lloyd_kmeans_nd(
     centroids = [(i, [float(r[c]) for c in dim_cols]) for i, r in enumerate(init)]
     assigned = None
     for _ in range(iters):
-        # selectExpr SQL-string iteration build — the same Py4J-chatter
-        # fix as lloyd_kmeans_2d (see there): CAST('<repr>' AS DOUBLE)
-        # literals fold to bit-identical doubles, the d0+d1+... sum
-        # parses left-associative exactly like the Python sum() it
-        # replaces, and least + first-match CASE keeps tie-breaks.
+        # Each iteration is built as selectExpr SQL strings instead of
+        # ~50 Column-object calls per dim: profiling showed most of the
+        # per-iteration cost was driver-side Py4J expression
+        # construction, not execution. CAST('<repr>' AS DOUBLE) literals
+        # round-trip Python floats exactly (repr is shortest-exact; a
+        # bare SQL decimal literal would be DECIMAL), the d0+d1+... sum
+        # parses left-associative, and least + first-match CASE keeps
+        # the tie-to-smallest-cid rule.
         d_exprs = [
             " + ".join(
                 f"(`{c}` - CAST('{v!r}' AS DOUBLE))"
@@ -711,6 +557,8 @@ def lloyd_kmeans_nd(
             ])
             .selectExpr("pid", *qcols, case)
         )
+        # k rows — sort driver-side; a DataFrame orderBy would add a
+        # range-partition sampling job to every iteration
         new_c = (
             assigned.groupBy("cluster_id")
             .agg(*[F.round(F.avg(c), 6).alias(c) for c in dim_cols])

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_funcs import distinct_tokens, fingerprint, word_jaccard
 from ..functions.vectors import dot, unit
+from .bounded import bounded_collect, min_label_components
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -195,6 +196,11 @@ SIMHASH_CHUNKS = 4
 # the multi-round distributed loop. Larger graphs take the loop.
 SMALL_GRAPH_EDGES = 200_000
 
+# connected_components' distributed loop runs at most this many
+# propagation steps (pointer jumping makes that O(log diameter)
+# materializations) before it raises instead of returning split groups.
+CC_MAX_STEPS = 20
+
 
 def minhash_band_hashes(
     sig_col: str = "sig", n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS
@@ -301,11 +307,7 @@ def minhash_lsh_pairs(
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    fixed_steps: int | None = None,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Duplicate GROUPS from near-dup pairs: iterative minimum-label
     propagation (the standard large-graph connected-components loop,
@@ -316,43 +318,35 @@ def connected_components(
 
     Pair lists are quadratic on templated corpora; groups are the
     scale-honest dedup contract (one row per member, size bounded by the
-    corpus). Each materialization is two edge-propagation steps plus one
-    pointer-jumping compression (labels chase their label's label), so
-    the materialization count is O(log diameter) — near-dup graphs are
-    NOT always cliques (the bench corpus measured diameter 7 at sf0.1,
-    chain-shaped templated text), and log-depth is what survives when
-    chains grow with the corpus. Returns (doc_id, canonical_id).
+    corpus). Each materialization is three edge-propagation steps plus
+    one pointer-jumping compression (labels chase their label's label),
+    so the materialization count is O(log diameter) — near-dup graphs
+    are NOT always cliques (the bench corpus measured diameter 7 at
+    sf0.1, chain-shaped templated text), and log-depth is what survives
+    when chains grow with the corpus. A graph still changing after
+    CC_MAX_STEPS propagation steps raises. Returns (doc_id,
+    canonical_id).
 
-    ``fixed_steps``: pin the body to exactly N pure propagation steps
-    with NO per-block convergence probes, then assert convergence ONCE
-    with a single verification step afterwards. Only for corpora whose
-    diameter is KNOWN a priori; a graph needing more hops raises
-    instead of returning under-merged groups (and the sf0.1 bench
-    corpus proved such assumptions wrong once already — prefer the
-    adaptive loop unless the bound is structural).
-
-    Small-graph fast path (r13): one limit-bounded count probes the
-    edge list; at or under ``SMALL_GRAPH_EDGES`` rows the labeling runs
-    as ONE capped collect + driver union-find (the broadcast-join
-    device: a bounded driver materialization replacing a multi-round
-    shuffle plan — the cap is ~3 MB of id pairs, far under any
-    broadcast threshold). Each adaptive-loop materialization costs 2-3
-    scheduler rounds regardless of graph size, so a small graph paid
-    ~10 rounds of pure overhead (measured r13: 4.5 s of
+    Small-graph fast path: at or under ``SMALL_GRAPH_EDGES`` edge rows
+    the labeling runs as ONE capped collect + driver union-find
+    (operators.bounded — a bounded driver materialization replacing a
+    multi-round shuffle plan; the cap is ~3 MB of id pairs, far under
+    any broadcast threshold). Each adaptive-loop materialization costs
+    2-3 scheduler rounds regardless of graph size, so a small graph paid
+    ~10 rounds of pure overhead (measured: 4.5 s of
     dedup_duplicate_groups' 4.65 s warm time). Above the cap the
-    distributed loop runs exactly as before — the 100 TB shape is
-    unchanged, and the probe itself is one cheap job on the cached
-    edge list. Identical labels: union-find with min-root union is
-    order-independent and yields the component minimum.
+    distributed loop runs, so the 100 TB shape is unchanged. Identical
+    labels: union-find with min-root union is order-independent and
+    yields the component minimum.
     """
-    # LAZY checkpoints (r13): every block's convergence probe is an
-    # action anyway, so eager=False lets the probe job materialize the
-    # checkpoint it reads — the previous eager=True paid one whole
-    # Spark job per checkpoint (2 upfront + 1 per block) purely to
-    # materialize ahead of the probe. Lineage truncation is identical:
-    # the lazy checkpoint already replaces the logical plan.
+    # LAZY checkpoints: every block's convergence probe is an action
+    # anyway, so eager=False lets the probe job materialize the
+    # checkpoint it reads — eager=True paid one whole Spark job per
+    # checkpoint (2 upfront + 1 per block) purely to materialize ahead
+    # of the probe. Lineage truncation is identical: the lazy checkpoint
+    # already replaces the logical plan.
     # (An explicit repartition(defaultParallelism, "s") before this
-    # checkpoint was A/B-measured on the r14 12M-edge geo graph and
+    # checkpoint was A/B-measured on a 12M-edge geo graph and
     # REJECTED: the up-front shuffle of the doubled edge list cost more
     # than the loop won back at this scale, and at 100 TB the edge list
     # arrives from wide scans with natural partitioning anyway.)
@@ -363,53 +357,23 @@ def connected_components(
     )
 
     # --- small-graph fast path: capped collect + driver union-find ---
-    # (adaptive mode only: a fixed_steps caller asked for the pinned
-    # distributed body and its convergence assert verbatim)
-    if fixed_steps is None:
-        # ONE capped Arrow action serves as both the size probe and the
-        # edge fetch (r13: the previous limit().count() probe executed
-        # the whole upstream pair join as a separate job, and the
-        # follow-up collect() paid per-Row object conversion — together
-        # ~0.7s of dedup_duplicate_groups' warm time at sf0.1). The
-        # limit bounds the driver transfer at ~3 MB of long pairs
-        # regardless of graph size; over the cap the partial result is
-        # discarded and the distributed loop below runs as before.
-        head = edges.limit(SMALL_GRAPH_EDGES + 1).toArrow()
-        if head.num_rows <= SMALL_GRAPH_EDGES:
-            parent: dict[int, int] = {}
+    head = bounded_collect(edges, SMALL_GRAPH_EDGES)
+    if head is not None:
+        import pandas as pd
 
-            def find(x: int) -> int:
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
+        label = min_label_components(
+            zip(head.column("s").to_pylist(), head.column("d").to_pylist())
+        )
+        nodes = sorted(label)
+        out = pd.DataFrame(
+            {
+                "doc_id": pd.Series(nodes, dtype="int64"),
+                "canonical_id": pd.Series([label[n] for n in nodes], dtype="int64"),
+            }
+        )
+        return pairs.sparkSession.createDataFrame(out, "doc_id long, canonical_id long")
 
-            for a, b in zip(
-                head.column("s").to_pylist(), head.column("d").to_pylist()
-            ):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)  # min-label union
-            import pandas as pd
-
-            nodes = sorted(parent)
-            out = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(nodes, dtype="int64"),
-                    "canonical_id": pd.Series(
-                        [find(n) for n in nodes], dtype="int64"
-                    ),
-                }
-            )
-            return pairs.sparkSession.createDataFrame(
-                out, "doc_id long, canonical_id long"
-            )
-
-    # --- distributed loop: the 100 TB shape, unchanged ---
+    # --- distributed loop: the 100 TB shape ---
     # localCheckpoint per block truncates lineage — without it the
     # plan doubles every round (each labels embeds the previous one) and
     # the driver OOMs on graphs needing more than a few hops
@@ -434,10 +398,9 @@ def connected_components(
         # so one self-join halves the remaining pointer-chain depth —
         # propagate+compress converges in O(log d) materializations
         # where plain propagation needs O(d). The bench corpus measured
-        # d=7 at sf0.1 (chain-shaped near-dup components, NOT cliques —
-        # the r5 'diameter <= 2' premise was wrong at 10x), and d grows
-        # with corpus size on templated text; log-depth is the shape
-        # that survives 100 TB.
+        # d=7 at sf0.1 (chain-shaped near-dup components, NOT cliques),
+        # and d grows with corpus size on templated text; log-depth is
+        # the shape that survives 100 TB.
         m = lbl.select(F.col("node").alias("cnode"), F.col("comp").alias("ccomp"))
         return lbl.join(m, lbl["comp"] == m["cnode"], "left").select(
             "node",
@@ -446,42 +409,23 @@ def connected_components(
             ).alias("comp"),
         )
 
-    if fixed_steps is not None:
-        lbl = labels
-        for i in range(fixed_steps):
-            lbl = step(lbl)
-            if i % 2 == 1 or i == fixed_steps - 1:
-                lbl = lbl.localCheckpoint(eager=False)
-        labels = lbl
-        before = labels.agg(F.sum("comp")).collect()[0][0]
-        after = step(labels).agg(F.sum("comp")).collect()[0][0]
-        if before != after:
-            raise RuntimeError(
-                f"connected_components: min-label propagation not converged "
-                f"after the pinned {fixed_steps} steps (graph diameter "
-                f"exceeds the pin); raise fixed_steps or drop the pin"
-            )
-        return labels.select(
-            F.col("node").alias("doc_id"), F.col("comp").alias("canonical_id")
-        )
-
     prev_sum = labels.agg(F.sum("comp")).collect()[0][0]
     converged = False
     steps_done = 0
-    while steps_done < max_iter:
+    while steps_done < CC_MAX_STEPS:
         # THREE propagation steps + ONE pointer-jump per
         # materialization, then a convergence probe. The probe-per-block
         # (not per-step) cadence bounds driver round-trips — the
-        # measured source of the bench run-to-run swing (r5 verdict #2)
-        # — and the pointer jump makes the block count O(log d). Block
-        # size 3 was A/B'd against 2 on the bench graph (sf0.1, d=7):
-        # one fewer materialization round, 3.9s -> 3.3s, identical
-        # groups; the cost of a bigger block is only extra no-op steps
-        # in the final confirming block. Labels only decrease, so an
-        # unchanged sum across a whole block implies every operation in
-        # it was a no-op (fixpoint: at convergence label[label[x]] ==
-        # label[x], so compression is also a no-op).
-        block = min(3, max_iter - steps_done)
+        # measured source of the bench run-to-run swing — and the
+        # pointer jump makes the block count O(log d). Block size 3 was
+        # A/B'd against 2 on the bench graph (sf0.1, d=7): one fewer
+        # materialization round, 3.9s -> 3.3s, identical groups; the
+        # cost of a bigger block is only extra no-op steps in the final
+        # confirming block. Labels only decrease, so an unchanged sum
+        # across a whole block implies every operation in it was a no-op
+        # (fixpoint: at convergence label[label[x]] == label[x], so
+        # compression is also a no-op).
+        block = min(3, CC_MAX_STEPS - steps_done)
         lbl = labels
         for _ in range(block):
             lbl = step(lbl)
@@ -500,8 +444,8 @@ def connected_components(
         # instead of returning silently-wrong groups on chain graphs.
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
-            f"within {max_iter} iterations (graph diameter exceeds the cap); "
-            f"raise max_iter"
+            f"within CC_MAX_STEPS={CC_MAX_STEPS} propagation steps (graph "
+            f"diameter exceeds the cap)"
         )
     return labels.select(F.col("node").alias("doc_id"), F.col("comp").alias("canonical_id"))
 

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .bounded import bounded_collect
+
 _B = "__rk_bucket"
 _LOCAL = "__rk_local"
 _OFF = "__rk_offset"
@@ -54,17 +56,18 @@ MAX_BUCKETS = 1_000_000  # loud failure beats a silent driver OOM
 
 
 def _offset_dim(bucketed: DataFrame, agg: Column):
-    """Collect per-bucket totals (bounded: bucket-key cardinality),
-    prefix-sum driver-side, return (broadcast offsets frame, grand
-    total). One bounded control-plane job; the caller's plan joins a
-    LocalTableScan literal dim."""
-    rows = bucketed.groupBy(_B).agg(agg.cast("long").alias("__bn")).collect()
-    if len(rows) > MAX_BUCKETS:
-        raise ValueError(
-            f"bucketed rank: {len(rows)} buckets exceeds MAX_BUCKETS="
-            f"{MAX_BUCKETS}; pick a coarser bucket key"
-        )
-    if any(r[_B] is None for r in rows):
+    """Collect per-bucket totals (bounded: bucket-key cardinality, at
+    most MAX_BUCKETS rows through operators.bounded.bounded_collect in
+    raise mode), prefix-sum driver-side, return (broadcast offsets
+    frame, grand total). One bounded control-plane job; the caller's
+    plan joins a literal dim."""
+    head = bounded_collect(
+        bucketed.groupBy(_B).agg(agg.cast("long").alias("__bn")),
+        MAX_BUCKETS,
+        f"bucketed rank: more than MAX_BUCKETS={MAX_BUCKETS} buckets; "
+        "pick a coarser bucket key",
+    )
+    if head.column(_B).null_count:
         # A NULL bucket key would crash the Python sort below on mixed
         # types, and — worse — silently drop every null-bucket row at the
         # equi-join in the caller. The naive global window the device
@@ -78,11 +81,12 @@ def _offset_dim(bucketed: DataFrame, agg: Column):
             "the bucket expression to a sentinel that sorts like the "
             "window's null ordering (NULLS FIRST -> lowest bucket)"
         )
-    rows.sort(key=lambda r: r[_B])
     offsets, acc = [], 0
-    for r in rows:
-        offsets.append((r[_B], acc))
-        acc += r["__bn"] or 0
+    for b, n in sorted(
+        zip(head.column(_B).to_pylist(), head.column("__bn").to_pylist())
+    ):
+        offsets.append((b, acc))
+        acc += n or 0
     spark = bucketed.sparkSession
     btype = bucketed.schema[_B].dataType.simpleString()
     dim = spark.createDataFrame(offsets, f"{_B} {btype}, {_OFF} long")

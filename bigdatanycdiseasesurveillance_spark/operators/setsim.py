@@ -156,12 +156,6 @@ def mask_relation(
     every document)."""
     from pyspark.sql import Window
 
-    import os as _os
-
-    if _os.environ.get("BDNDS_AB_MASK_SPREAD", "0") == "1":
-        from ..tables import parallelize_scan
-
-        df = parallelize_scan(df)
     extras = [F.col(c) if isinstance(c, str) else c for c in extra_cols]
     toks = df.select(
         F.col(id_col).alias("id"),

@@ -15,7 +15,7 @@ from a hash of stable columns, not rand().
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -44,19 +44,3 @@ def salted_join(
     )
     out = lhs.join(rhs, [on, "__salt"], how)
     return out.drop("__salt")
-
-
-def salted_count(df: DataFrame, key: Column, salt: int = 16, cnt_alias: str = "cnt") -> DataFrame:
-    """Two-phase count for a skewed key: partial count per (key, salt)
-    then final sum per key. Spark's hash aggregate already does map-side
-    partials; this form additionally bounds the FINAL-stage bucket for a
-    hot key, which matters when the reduce side applies per-key logic
-    heavier than sum (sketches, collect_list caps)."""
-    salted = df.groupBy(
-        key.alias("__k"), F.spark_partition_id().alias("__salt")
-    ).agg(F.count("*").alias("__partial"))
-    return (
-        salted.groupBy("__k")
-        .agg(F.sum("__partial").cast("long").alias(cnt_alias))
-        .withColumnRenamed("__k", "key")
-    )

@@ -11,13 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import (
-    STOPWORDS,
-    fingerprint,
-    stopword_count,
-    token_count,
-    tokens,
-)
+from ..functions.text_funcs import stopword_count, tokens
 
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -251,13 +245,3 @@ def langid_trigram_fast(
     # scoring is Python-per-doc: reuse the checkpointed rebalanced scan
     # from the profile pass (it holds exactly the three needed columns)
     return src0.mapInPandas(score_batches, out_schema)
-
-
-def fingerprint_docs(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprinting: md5 of normalized text + duplicate-group
-    flag (rolling-hash-class dedup key)."""
-    out = df.withColumn("fp", fingerprint(F.col(text_col)))
-    groups = out.groupBy("fp").agg(
-        F.count("*").alias("fp_count"), F.min("doc_id").alias("canonical_id")
-    )
-    return out.join(groups, "fp")

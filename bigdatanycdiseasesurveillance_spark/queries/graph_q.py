@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.bounded import bounded_collect
 from ..registry import register
 from ..tables import table, values_dim
 
@@ -244,10 +245,13 @@ def graph_pagerank_nations(spark, sf_dir):
 
 _BFS_TOPK = 3
 _BFS_MAX_HOPS = 25
+# graph_bfs_hops' driver edge-list cap: src is the nation dim, so the
+# list holds <= 25 x topk rows at any corpus size
+BFS_EDGE_CAP = 10_000
 
-# tree_subtree_rollup's capped driver fast path (r14): at or under this
-# many distinct users the heap-tree rollup runs on the driver; above it
-# the level-synchronous distributed loop runs unchanged
+# tree_subtree_rollup's capped driver fast path: at or under this many
+# distinct users the heap-tree rollup runs on the driver; above it the
+# level-synchronous distributed loop runs
 TREE_FAST_PATH_NODES = 200_000
 
 
@@ -314,25 +318,23 @@ def graph_bfs_hops(spark, sf_dir):
     # joins + top-k window, recomputed from parquet every run). The
     # edge LIST it produces is bounded by construction — nationkey is
     # the 25-row nation dim, so <= nations x topk rows at ANY corpus
-    # size — which makes the traversal bounded control plane (the
-    # bounded_cc_labels / k-means-centroid collect class). The previous
-    # per-hop DataFrame loop paid join + distinct + anti-join +
-    # checkpoint + emptiness probe (~4 scheduler rounds) per level of a
-    # <= 25-node frontier (r13: ~0.7s of the query's 0.9s warm time);
-    # the driver BFS below yields identical (node, min-hop) levels.
-    # capped (r14): src is the nation dim, so <= 25 x topk rows; the cap
-    # enforces that invariant loudly instead of letting a hypothetical
-    # unbounded key space collect onto the driver
-    edge_cap = 10_000
-    edge_rows = edges.limit(edge_cap + 1).collect()
-    if len(edge_rows) > edge_cap:
-        raise ValueError(
-            f"graph_bfs_hops: edge list exceeds {edge_cap} rows — the "
-            "driver BFS requires the nation-dim-bounded trade graph"
-        )
+    # size — which makes the traversal bounded control plane, fetched by
+    # ONE operators.bounded.bounded_collect in raise mode. A per-hop
+    # DataFrame loop paid join + distinct + anti-join + checkpoint +
+    # emptiness probe (~4 scheduler rounds) per level of a <= 25-node
+    # frontier (~0.7s of the query's 0.9s warm time); the driver BFS
+    # below yields identical (node, min-hop) levels. The cap enforces
+    # the nation-dim invariant loudly instead of letting a hypothetical
+    # unbounded key space collect onto the driver.
+    head = bounded_collect(
+        edges,
+        BFS_EDGE_CAP,
+        f"graph_bfs_hops: edge list exceeds BFS_EDGE_CAP={BFS_EDGE_CAP} "
+        "rows — the driver BFS requires the nation-dim-bounded trade graph",
+    )
     adj: dict[int, list[int]] = {}
-    for r in edge_rows:
-        adj.setdefault(int(r["src"]), []).append(int(r["dst"]))
+    for a, b in zip(head.column("src").to_pylist(), head.column("dst").to_pylist()):
+        adj.setdefault(int(a), []).append(int(b))
     hops = {0: 0}
     frontier = [0]
     for hop in range(1, _BFS_MAX_HOPS + 1):
@@ -396,8 +398,8 @@ def tree_subtree_rollup(spark, sf_dir):
         )
         .cache()
     )
-    # Small-population fast path (r14, the connected_components/Lloyd
-    # capped-collect device): the node table is one row per DISTINCT
+    # Small-population fast path (operators.bounded.bounded_collect,
+    # falling back on None): the node table is one row per DISTINCT
     # user, and the level-synchronous loop below costs ~4 actions per
     # tree level (depth = log2 users) — measured 6.5-6.7 s of pure
     # control plane at sf0.1 against 0.15 s of execution. At or under
@@ -407,10 +409,13 @@ def tree_subtree_rollup(spark, sf_dir):
     # the same bottom-up sum the leaf-pruning rounds compute — integer
     # adds, so bit-identical including the missing-parent drop semantics
     # (a pushed total whose parent id is absent vanishes in both forms).
-    # Above the cap the distributed loop runs exactly as before.
-    head = nodes.select("node", "sub_v").limit(TREE_FAST_PATH_NODES + 1).toArrow()
-    if 0 < head.num_rows <= TREE_FAST_PATH_NODES and not any(
-        head.column(c).null_count for c in ("node", "sub_v")
+    # Above the cap (and on empty or null-bearing input) the
+    # distributed loop runs.
+    head = bounded_collect(nodes.select("node", "sub_v"), TREE_FAST_PATH_NODES)
+    if (
+        head is not None
+        and head.num_rows
+        and not any(head.column(c).null_count for c in ("node", "sub_v"))
     ):
         import pandas as pd
 

@@ -17,7 +17,7 @@ JSONL/Parquet-partitioned and read via `spark.read.schema(s).json` —
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,16 +68,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType | str) -> Data
     """S5: CSV source with explicit schema (the reference pulls official
     respiratory CSVs via pandas; engine reads them distributed)."""
     return spark.read.schema(schema).option("header", "true").csv(path)
-
-
-def kafka_envelope_columns() -> list[Column]:
-    """The metadata the reference's publisher adds to every record
-    (kafka_publisher.py:219-223), as engine columns."""
-    return [
-        F.current_timestamp().alias("published_to_kafka_at"),
-        F.input_file_name().alias("source_path"),
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source_file"),
-    ]
 
 
 def parse_kafka_frame(kafka_df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -190,9 +190,3 @@ def _split_ddl(schema: str) -> list[str]:
 
 def load(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [table(spark, sf_dir, n) for n in names]
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() access."""
-    for n in TABLE_NAMES:
-        table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -108,3 +108,29 @@ def test_cellgrid_key_pack_accepts_negative_cy_and_guards_span(spark):
     )
     with pytest.raises(Exception, match="cy span|would collide"):
         C.cellgrid_assign(bad, key_mult=100000).collect()
+
+
+def test_round6_spark_matches_spark_round(spark):
+    """_round6_spark replicates java.math.BigDecimal.valueOf(x)
+    .setScale(6, HALF_UP) — the shortest-decimal-repr rounding Spark's
+    codegen runs — including the cases where the exact binary expansion
+    would round the other way (0.1234565 is stored below its shortest
+    repr)."""
+    vals = [
+        0.1234565,
+        -0.1234565,
+        1.0000005,
+        2.5e-7,
+        -2.5e-7,
+        0.0,
+        3.14159265358979,
+        123456.7891011,
+        1e-12,
+        -7.7777775,
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "v double").select(
+        F.col("v"), F.round(F.col("v"), 6).alias("r")
+    )
+    got = {r["v"]: r["r"] for r in df.collect()}
+    for v in vals:
+        assert C._round6_spark(v) == got[v], v

@@ -183,55 +183,40 @@ def test_certification_band_replay_equals_operator_buckets(spark):
     assert (1, 2) in op_pairs  # identical docs always collide
 
 
-def test_connected_components_log_depth_on_chain(spark):
+def test_connected_components_log_depth_on_chain(spark, monkeypatch):
     """Pointer jumping must keep the materialization count O(log d): a
-    24-node path (diameter 23) has to converge well inside the default
-    max_iter=20 PROPAGATION-step budget, which plain 1-hop propagation
-    could not do (it needs 23 steps). Also pins label correctness on a
-    long chain."""
-    from bigdatanycdiseasesurveillance_spark.operators.dedup import connected_components
+    24-node path (diameter 23) has to converge well inside the
+    CC_MAX_STEPS=20 PROPAGATION-step budget, which plain 1-hop
+    propagation could not do (it needs 23 steps). Also pins label
+    correctness on a long chain. The small-graph fast path is forced
+    off so the distributed loop is what runs."""
+    from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(23)], "id_a long, id_b long"
     )
     got = {
         r["doc_id"]: r["canonical_id"]
-        for r in connected_components(pairs, max_iter=20).collect()
+        for r in D.connected_components(pairs).collect()
     }
     assert got == {i: 0 for i in range(24)}
 
 
-def test_connected_components_fixed_steps_matches_adaptive(spark):
-    """The pinned-steps body (no per-block probes) returns the same
-    labels as the adaptive loop when the pin covers the diameter."""
-    from bigdatanycdiseasesurveillance_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 10)], "id_a long, id_b long"
-    )
-    adaptive = {
-        r["doc_id"]: r["canonical_id"] for r in connected_components(pairs).collect()
-    }
-    pinned = {
-        r["doc_id"]: r["canonical_id"]
-        for r in connected_components(pairs, fixed_steps=3).collect()
-    }
-    assert pinned == adaptive
-
-
-def test_connected_components_fixed_steps_raises_when_pin_too_small(spark):
-    """A diameter-11 path cannot converge in 1 pinned step — the
-    post-hoc verification must fail loudly, never return under-merged
-    groups silently."""
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """A graph still changing after CC_MAX_STEPS propagation steps must
+    fail loudly, never return under-merged groups silently."""
     import pytest
 
-    from bigdatanycdiseasesurveillance_spark.operators.dedup import connected_components
+    from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
+    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)  # force the loop
+    monkeypatch.setattr(D, "CC_MAX_STEPS", 1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "id_a long, id_b long"
     )
-    with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(pairs, fixed_steps=1).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.connected_components(pairs).collect()
 
 
 def test_jaccard_gemm_equals_dataframe_variant(spark, sf_dir):

@@ -548,3 +548,29 @@ def test_restart_recovery_counts_and_structure(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+def test_run_to_memory_state_partitions_override_and_restore(spark, sf_dir):
+    """Dim-bounded state sizing: _run_to_memory(state_partitions=N) must
+    bake N into the streaming aggregate's state layout (complete-mode
+    output is unchanged) and restore the session conf afterwards — a later
+    batch query must plan with the original shuffle partitioning."""
+    src = P.stream_table(spark, sf_dir, "events")
+    agg = src.groupBy("event_type").agg(F.count("*").cast("long").alias("cnt"))
+    # read AFTER stream_table: building the source applies the session's
+    # runtime confs (incl. shuffle partitions), which is the value the
+    # drain must restore
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    out = {
+        r["event_type"]: r["cnt"]
+        for r in P._run_to_memory(agg, "complete", state_partitions=3).collect()
+    }
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    exp = {
+        r["event_type"]: r["cnt"]
+        for r in table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count("*").cast("long").alias("cnt"))
+        .collect()
+    }
+    assert out == exp
