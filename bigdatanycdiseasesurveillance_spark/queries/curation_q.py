@@ -1,9 +1,6 @@
 """Corpus-curation query tier: decontamination, domain quotas,
 repetition quality, exact unblocked similarity join, embedding
 quantization, and session windows.
-
-Registered LAST: the round driver's correctness gate covers a bounded
-registration prefix per round; these queue behind the round-2 prefix.
 """
 
 from __future__ import annotations

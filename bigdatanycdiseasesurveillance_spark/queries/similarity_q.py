@@ -482,6 +482,43 @@ def ann_rp_multiprobe_pairs(spark, sf_dir):
     return S.rp_lsh_multiprobe_pairs(emb, _RP_PLANES, threshold=0.3)
 
 
+def _pq_train_ctes(m: int, sub_dim: int, k: int, iters: int) -> str:
+    """Subspace m's PQ training chain as comma-joined CTEs, shared by the
+    PQ oracles: p{m} (the sub-vector slice), c{m}_0 (the k smallest-id
+    points) and, per iteration t, a{m}_t (nearest centroid, ties to the
+    smallest cid), s{m}_t (the assignment) and c{m}_t (means rounded
+    to 6)."""
+    cols = ", ".join(
+        f"CAST(embedding[{m * sub_dim + j + 1}] AS DOUBLE) AS e{j}"
+        for j in range(sub_dim)
+    )
+    parts = [f"p{m} AS (SELECT vec_id AS pid, {cols} FROM embeddings)"]
+    init_cols = ", ".join(f"e{j} AS c{j}" for j in range(sub_dim))
+    parts.append(
+        f", c{m}_0 AS (SELECT ROW_NUMBER() OVER (ORDER BY pid) - 1 AS cid,"
+        f" {init_cols} FROM (SELECT * FROM p{m} ORDER BY pid LIMIT {k}))"
+    )
+    dist = " + ".join(
+        f"(p.e{j} - c.c{j}) * (p.e{j} - c.c{j})" for j in range(sub_dim)
+    )
+    pcols = ", ".join(f"p.e{j}" for j in range(sub_dim))
+    scols = ", ".join(f"e{j}" for j in range(sub_dim))
+    avgs = ", ".join(f"ROUND(AVG(e{j}), 6) AS c{j}" for j in range(sub_dim))
+    for t in range(1, iters + 1):
+        parts.append(
+            f", a{m}_{t} AS (SELECT p.pid, {pcols}, c.cid,"
+            f" ROW_NUMBER() OVER (PARTITION BY p.pid ORDER BY {dist}, c.cid)"
+            f" AS rn FROM p{m} p CROSS JOIN c{m}_{t - 1} c)"
+        )
+        parts.append(
+            f", s{m}_{t} AS (SELECT pid, {scols}, cid FROM a{m}_{t} WHERE rn = 1)"
+        )
+        parts.append(
+            f", c{m}_{t} AS (SELECT cid, {avgs} FROM s{m}_{t} GROUP BY cid)"
+        )
+    return "".join(parts)
+
+
 def _pq_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4, iters: int = 4) -> str:
     """Generated relational replay of the PQ codebook training: per
     subspace, the d-dim Lloyd chain (smallest-id init, nearest centroid
@@ -491,40 +528,8 @@ def _pq_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4, iters: int = 4) ->
     parts = ["WITH "]
     finals = []
     for m in range(n_sub):
-        dims = [f"e{j}" for j in range(sub_dim)]
-        cols = ", ".join(
-            f"CAST(embedding[{m * sub_dim + j + 1}] AS DOUBLE) AS e{j}"
-            for j in range(sub_dim)
-        )
         lead = "" if m == 0 else ", "
-        parts.append(
-            f"{lead}p{m} AS (SELECT vec_id AS pid, {cols} FROM embeddings)"
-        )
-        init_cols = ", ".join(f"{d} AS c{j}" for j, d in enumerate(dims))
-        parts.append(
-            f", c{m}_0 AS (SELECT ROW_NUMBER() OVER (ORDER BY pid) - 1 AS cid,"
-            f" {init_cols} FROM (SELECT * FROM p{m} ORDER BY pid LIMIT {k}))"
-        )
-        for t in range(1, iters + 1):
-            dist = " + ".join(
-                f"(p.e{j} - c.c{j}) * (p.e{j} - c.c{j})" for j in range(sub_dim)
-            )
-            pcols = ", ".join(f"p.e{j}" for j in range(sub_dim))
-            parts.append(
-                f", a{m}_{t} AS (SELECT p.pid, {pcols}, c.cid,"
-                f" ROW_NUMBER() OVER (PARTITION BY p.pid ORDER BY {dist}, c.cid)"
-                f" AS rn FROM p{m} p CROSS JOIN c{m}_{t - 1} c)"
-            )
-            scols = ", ".join(f"e{j}" for j in range(sub_dim))
-            parts.append(
-                f", s{m}_{t} AS (SELECT pid, {scols}, cid FROM a{m}_{t} WHERE rn = 1)"
-            )
-            avgs = ", ".join(
-                f"ROUND(AVG(e{j}), 6) AS c{j}" for j in range(sub_dim)
-            )
-            parts.append(
-                f", c{m}_{t} AS (SELECT cid, {avgs} FROM s{m}_{t} GROUP BY cid)"
-            )
+        parts.append(lead + _pq_train_ctes(m, sub_dim, k, iters))
         norm = " + ".join(f"c.c{j} * c.c{j}" for j in range(sub_dim))
         err = " + ".join(
             f"(s.e{j} - c.c{j}) * (s.e{j} - c.c{j})" for j in range(sub_dim)
@@ -636,45 +641,14 @@ def emb_pq_codebook(spark, sf_dir):
 
 def _pq_adc_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4,
                    iters: int = 4, topk: int = 10) -> str:
-    """ADC search replay: the PQ training chains (shared generator
-    logic with _pq_oracle), a FINAL-centroid assignment per subspace
+    """ADC search replay: the PQ training chains (_pq_train_ctes, as in
+    _pq_oracle), a FINAL-centroid assignment per subspace
     (codes), the query vector's per-subspace distance table over the
     same rounded centroids, and the top-k by summed table lookups."""
     parts = ["WITH "]
     for m in range(n_sub):
-        cols = ", ".join(
-            f"CAST(embedding[{m * sub_dim + j + 1}] AS DOUBLE) AS e{j}"
-            for j in range(sub_dim)
-        )
         lead = "" if m == 0 else ", "
-        parts.append(
-            f"{lead}p{m} AS (SELECT vec_id AS pid, {cols} FROM embeddings)"
-        )
-        init_cols = ", ".join(f"e{j} AS c{j}" for j in range(sub_dim))
-        parts.append(
-            f", c{m}_0 AS (SELECT ROW_NUMBER() OVER (ORDER BY pid) - 1 AS cid,"
-            f" {init_cols} FROM (SELECT * FROM p{m} ORDER BY pid LIMIT {k}))"
-        )
-        for t in range(1, iters + 1):
-            dist = " + ".join(
-                f"(p.e{j} - c.c{j}) * (p.e{j} - c.c{j})" for j in range(sub_dim)
-            )
-            pcols = ", ".join(f"p.e{j}" for j in range(sub_dim))
-            parts.append(
-                f", a{m}_{t} AS (SELECT p.pid, {pcols}, c.cid,"
-                f" ROW_NUMBER() OVER (PARTITION BY p.pid ORDER BY {dist}, c.cid)"
-                f" AS rn FROM p{m} p CROSS JOIN c{m}_{t - 1} c)"
-            )
-            scols = ", ".join(f"e{j}" for j in range(sub_dim))
-            parts.append(
-                f", s{m}_{t} AS (SELECT pid, {scols}, cid FROM a{m}_{t} WHERE rn = 1)"
-            )
-            avgs = ", ".join(
-                f"ROUND(AVG(e{j}), 6) AS c{j}" for j in range(sub_dim)
-            )
-            parts.append(
-                f", c{m}_{t} AS (SELECT cid, {avgs} FROM s{m}_{t} GROUP BY cid)"
-            )
+        parts.append(lead + _pq_train_ctes(m, sub_dim, k, iters))
         # codes vs FINAL rounded centroids (not the last training assign)
         dist = " + ".join(
             f"(p.e{j} - c.c{j}) * (p.e{j} - c.c{j})" for j in range(sub_dim)

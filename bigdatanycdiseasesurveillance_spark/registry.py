@@ -6,6 +6,10 @@ semantics are SQL-expressible, the equivalent ANSI SQL the DuckDB oracle
 runs on the same parquet tables. ``__spark_entry__.py`` exposes the
 registry verbatim.
 
+The registry order is the registration order: ``queries/__init__.py``
+imports the query modules in a fixed order, and each module registers
+its specs top to bottom. Building the registry reads no file.
+
 Parity rules every spec follows (so order-insensitive value-hash
 comparison succeeds):
 
@@ -59,152 +63,9 @@ def register(
     return deco
 
 
-_ROWS_ONLY_SENTINEL = "<rows-only>"
-
-
-def oracle_hash(oracle: str | None) -> str:
-    """Content hash of a spec's oracle SQL — the contract fingerprint.
-
-    Rows-only specs (oracle=None) hash a fixed sentinel: their contract
-    is the row-count check, which has no SQL text to fingerprint."""
-    import hashlib
-
-    text = _ROWS_ONLY_SENTINEL if oracle is None else oracle
-    return hashlib.sha256(text.encode()).hexdigest()[:16]
-
-
-def _repo_root() -> str:
-    import os
-
-    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def certified_hashes() -> dict[str, str]:
-    """name -> oracle hash as of the query's latest driver-green row
-    (ORACLE_HASHES.json, maintained by tools/refresh_oracle_hashes.py —
-    run at the START of each build round, before any oracle edits, so a
-    later rework this round hashes differently and self-promotes)."""
-    import json
-    import os
-
-    path = os.path.join(_repo_root(), "ORACLE_HASHES.json")
-    try:
-        with open(path) as fh:
-            return {str(k): str(v) for k, v in json.load(fh).items()}
-    except Exception:  # missing/corrupt snapshot → everything looks stale
-        return {}
-
-
-def _driver_coverage() -> tuple[dict[str, int], dict[str, int], dict[str, int]]:
-    """(green_round, red_round, sample_round): per-name latest round with
-    a hash_match row, latest round with an explicit FAILURE row, and
-    latest SAMPLED round of any kind, from CORRECTNESS_r*.json at the
-    repo root. Used only to order the registry so the neediest specs
-    surface first for drivers that sample a prefix; sampling is
-    otherwise out of our control.
-
-    A row is red only when it carries positive failure evidence: an
-    err that isn't the rows-only marker, or an explicit False on any
-    match flag. A rows-only `no_oracle` PASS is neither green nor red —
-    inferring red from "sampled but not hash-green" pinned once-green
-    queries whose oracle was later removed into tier 0 forever (r8
-    advisor finding)."""
-    import glob
-    import json
-    import logging
-    import os
-    import re
-
-    green_round: dict[str, int] = {}
-    red_round: dict[str, int] = {}
-    sample_round: dict[str, int] = {}
-    for path in glob.glob(os.path.join(_repo_root(), "CORRECTNESS_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                for name, row in json.load(fh).items():
-                    sample_round[name] = max(sample_round.get(name, 0), rnd)
-                    # only exact-value GREEN rows count as covered: a
-                    # rows-only (`no_oracle`) row that predates a spec's
-                    # oracle must NOT demote it out of the priority tier
-                    # (r5 verdict finding #3) — a query stays prioritized
-                    # until the driver records a hash_match for it.
-                    if row.get("hash_match"):
-                        green_round[name] = max(green_round.get(name, 0), rnd)
-                    elif (
-                        row.get("err") not in (None, "no_oracle")
-                        or row.get("hash_match") is False
-                        or row.get("rows_match") is False
-                        or row.get("schema_match") is False
-                    ):
-                        red_round[name] = max(red_round.get(name, 0), rnd)
-        except Exception as exc:  # malformed round artifact — ordering hint only
-            logging.getLogger(__name__).warning(
-                "ignoring unreadable coverage artifact %s: %s", path, exc
-            )
-    return green_round, red_round, sample_round
-
-
-def ordering_key(
-    name: str,
-    idx: int,
-    green_round: dict[str, int],
-    red_round: dict[str, int],
-    sample_round: dict[str, int],
-    certified: dict[str, str],
-    current_hash: str,
-) -> tuple[int, int, int]:
-    """Four-tier driver-sampling priority (lower sorts first):
-
-      0. failing — the latest EXPLICIT failure row (oracle mismatch,
-         error, or driver timeout: see _driver_coverage) is newer than
-         the latest green row, or the query failed and has never been
-         green; highest priority whether or not the contract also
-         changed since. Derived from positive failure evidence, not
-         from "sampled > green" — a rows-only no_oracle PASS must not
-         read as a regression (r8 advisor finding);
-      1. contract-stale — the current oracle hash differs from the hash
-         on file for the query's last green row (covers brand-new
-         queries AND reworked oracles, structurally: editing any
-         oracle's SQL re-promotes it with no hand-maintained list);
-      2. never sampled (and contract unchanged — pre-snapshot legacy);
-      3. green under the current contract — ordered OLDEST latest-green
-         round first, so long-uncertified entries rotate back through
-         the driver's 50-sample window instead of being pinned behind
-         registration order.
-
-    Pure function of its inputs (pytest-pinned in test_registry_order)."""
-    green_rnd = green_round.get(name)
-    red_rnd = red_round.get(name, 0)
-    if red_rnd and (green_rnd is None or red_rnd > green_rnd):
-        return (0, 0, idx)
-    if certified.get(name) != current_hash:
-        return (1, 0, idx)
-    if not sample_round.get(name, 0):
-        return (2, 0, idx)
-    return (3, green_rnd or 0, idx)
-
-
 def all_specs() -> dict[str, QuerySpec]:
+    """Every registered spec, in registration order."""
     # Import the query modules for their registration side effects.
     from . import queries  # noqa: F401
 
-    # Repeat calls (and rounds) agree given the same artifacts.
-    green_round, red_round, sample_round = _driver_coverage()
-    certified = certified_hashes()
-    idx = {n: i for i, n in enumerate(_REGISTRY)}
-
-    ordered = sorted(
-        _REGISTRY,
-        key=lambda n: ordering_key(
-            n,
-            idx[n],
-            green_round,
-            red_round,
-            sample_round,
-            certified,
-            oracle_hash(_REGISTRY[n].oracle),
-        ),
-    )
-    return {n: _REGISTRY[n] for n in ordered}
+    return dict(_REGISTRY)

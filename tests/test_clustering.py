@@ -134,3 +134,27 @@ def test_round6_spark_matches_spark_round(spark):
     got = {r["v"]: r["r"] for r in df.collect()}
     for v in vals:
         assert C._round6_spark(v) == got[v], v
+
+
+def test_lloyd_kmeans_nd_known_clusters(spark):
+    """Two well-separated 4-d blobs, k=2: every point must land with
+    its blob and the final centroids must be the blob means."""
+    from bigdatanycdiseasesurveillance_spark.operators.clustering import (
+        lloyd_kmeans_nd,
+    )
+
+    blob_a = [(i, 0.0 + i * 0.01, 0.0, 0.0, 0.0) for i in range(4)]
+    blob_b = [(10 + i, 5.0 + i * 0.01, 5.0, 5.0, 5.0) for i in range(4)]
+    pts = spark.createDataFrame(
+        blob_a + blob_b, "pid long, e0 double, e1 double, e2 double, e3 double"
+    )
+    assigned, centroids = lloyd_kmeans_nd(
+        pts, ["e0", "e1", "e2", "e3"], k=2, iters=3, id_col="pid"
+    )
+    got = {r["pid"]: r["cluster_id"] for r in assigned.collect()}
+    a_labels = {got[i] for i in range(4)}
+    b_labels = {got[10 + i] for i in range(4)}
+    assert len(a_labels) == 1 and len(b_labels) == 1 and a_labels != b_labels
+    cent = dict(centroids)
+    assert any(abs(v[1]) < 0.1 for v in cent.values())      # blob A y=0
+    assert any(abs(v[1] - 5.0) < 0.1 for v in cent.values())  # blob B y=5

@@ -401,3 +401,79 @@ def test_quantize_gemm_kernel_bitexact_vs_expressions(spark, sf_dir):
         got = (np.floor(E / scales + 0.5) * scales)[0]
         want = np.asarray(r["edq"], dtype=np.float64)
         assert got.tolist() == want.tolist(), r["vec_id"]
+
+
+def test_gopher_rules_empty_and_tiny_docs(spark, sf_dir, monkeypatch):
+    """Empty/whitespace docs must flow through every rule (n_words = 0
+    fails the guards, never NaNs or crashes) and pass counts must be
+    exact on a hand corpus."""
+    from bigdatanycdiseasesurveillance_spark.queries.curation_q import (
+        cur_gopher_rules,
+    )
+    import bigdatanycdiseasesurveillance_spark.queries.curation_q as CQ
+
+    rows = [
+        (1, ""),                      # empty -> every guarded rule fails
+        (2, "   "),                   # whitespace-only -> same
+        (3, "the " * 30 + "a " * 30),  # 60 words, repetitive (the: 30/60)
+        (4, " ".join(f"w{i}" for i in range(60)) + " the a"),  # diverse
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(CQ, "table", lambda _s, _d, _n: df)
+    out = {r["rule"]: (r["n_pass"], r["n_fail"]) for r in
+           cur_gopher_rules(spark, sf_dir).collect()}
+    assert set(out) == {
+        "min_words", "max_words", "mean_word_len", "stopword_floor",
+        "repetition_cap", "uniq_floor",
+    }
+    assert all(p + f == 4 for p, f in out.values())
+    # doc 3+4 have >= 50 words; 1+2 have zero
+    assert out["min_words"] == (2, 2)
+    # nothing here approaches the 100k upper gate
+    assert out["max_words"] == (4, 0)
+    # repetition: doc 3 most-common token is 30/60 > 20% -> fail;
+    # doc 4 max count 1/62 -> pass; empty docs fail the word-count
+    # gate the expensive expression is now guarded behind (r11 #2)
+    assert out["repetition_cap"] == (1, 3)
+    # stopwords: doc 3 has 60, doc 4 has 2 -> both pass
+    assert out["stopword_floor"] == (2, 2)
+
+
+def test_dsir_weights_direction(spark, sf_dir, monkeypatch):
+    """DSIR importance weights must rank target-like documents above
+    off-target ones: docs sharing the seed source's bigrams get higher
+    log-weights."""
+    from bigdatanycdiseasesurveillance_spark.queries import lm_q as LQ
+
+    target_text = "clean reference prose sentence "
+    rows = (
+        [(i, target_text * 5, "src0") for i in range(6)]
+        + [(10 + i, target_text * 5, "srcX") for i in range(3)]   # target-like
+        + [(20 + i, "zz yy xx ww vv uu tt ss " * 4, "srcX") for i in range(3)]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    monkeypatch.setattr(LQ, "table", lambda _s, _d, _n: df)
+    out = {r["doc_id"]: r["dsir_logweight"] for r in
+           LQ.cur_importance_resampling(spark, sf_dir).collect()}
+    like = [out[10 + i] for i in range(3) if 10 + i in out]
+    unlike = [out[20 + i] for i in range(3) if 20 + i in out]
+    assert like and unlike
+    assert min(like) > max(unlike)
+
+
+def test_perplexity_buckets_are_balanced_terciles(spark, sf_dir, monkeypatch):
+    """Integer rank arithmetic must cut near-equal terciles and keep
+    exactly the middle one."""
+    from bigdatanycdiseasesurveillance_spark.queries import lm_q as LQ
+
+    rows = [(i, " ".join(f"w{j % (i + 2)}" for j in range(20)), "s")
+            for i in range(9)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    monkeypatch.setattr(LQ, "table", lambda _s, _d, _n: df)
+    out = LQ.cur_perplexity_buckets(spark, sf_dir).collect()
+    assert len(out) == 9
+    sizes = {b: 0 for b in (0, 1, 2)}
+    for r in out:
+        sizes[r["ppl_bucket"]] += 1
+        assert r["keep"] == (r["ppl_bucket"] == 1)
+    assert sizes == {0: 3, 1: 3, 2: 3}

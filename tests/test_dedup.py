@@ -268,3 +268,25 @@ def test_two_batch_persisted_groups_equal_full_recompute(spark, sf_dir):
         for r in specs["inc_groups_two_batch"].fn(spark, sf_dir).collect()
     }
     assert two == full and full
+
+
+def test_sorted_neighborhood_window_bound_and_adjacency(spark, sf_dir, monkeypatch):
+    """SNM emits at most (w-1) x n candidate pairs, and two docs whose
+    normalized texts share a 12-char prefix and are Jaccard-identical
+    must pair."""
+    from bigdatanycdiseasesurveillance_spark.queries import dedup_q as DQ
+
+    rows = [
+        (1, "influenza outbreak in queens reported today", "s"),
+        (2, "influenza outbreak in queens reported today", "s"),  # dup of 1
+        (3, "zebra totally unrelated content words here", "s"),
+        (4, "measles cases rising in brooklyn schools", "s"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    monkeypatch.setattr(DQ, "table", lambda _s, _d, _n: df)
+    out = DQ.dedup_sorted_neighborhood(spark, sf_dir).collect()
+    pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out}
+    assert pairs.get((1, 2)) == 1.0
+    assert all(j >= 0.7 for j in pairs.values())
+    # candidate bound: w-1 = 3 neighbors per doc max
+    assert len(pairs) <= 3 * len(rows)

@@ -1,38 +1,13 @@
 #!/usr/bin/env python3
-"""Summarize a scale_audit log (SCALE_AUDIT_r*.log) into the stats the
-SCALE.md audit section reports: status counts, slow tail, and a
-before/after comparison against a prior round's recorded numbers.
+"""Summarize a scale_audit log into the stats the SCALE.md audit
+section reports: status counts, the retime pass and the slow tail.
 
-Usage: python tools/audit_report.py SCALE_AUDIT_r7.log
+Usage: python tools/audit_report.py LOG
 """
 
 import re
 import sys
 from collections import Counter
-
-# r5 sf1 measurements recorded in SCALE.md (round-5 audit) for the
-# entries round 6 reworked — the "before" column of the directive-2
-# table. Values are Spark seconds; TIMEOUT = hit the 900 s cap.
-R5_BASELINE = {
-    "dedup_prefix_jaccard": 511.6,
-    "dedup_simhash_md5": 407.2,
-    "graph_triangle_count": 275.0,
-    "tok_bpe_merges": 168.6,
-    "dedup_embedding_cosine": 127.7,
-    "dedup_fingerprint_pairs": 122.9,
-    "cluster_geo_pipeline": 651.8,
-    "dedup_duplicate_groups": 23.0,
-    "dedup_minhash_md5": 111.8,
-    "llm_prep_pipeline": 53.9,
-    "dedup_containment_pairs": "TIMEOUT",
-    "dedup_blocking_quality": "TIMEOUT",
-    "dedup_incremental_new_vs_old": "TIMEOUT",
-    "dedup_source_overlap_matrix": "TIMEOUT",
-    "dedup_minhash_lsh": "TIMEOUT",
-    "dedup_simhash": "TIMEOUT",
-    "dedup_hamming_pairs": "TIMEOUT",
-    "dq_split_leakage": "TIMEOUT",
-}
 
 LINE = re.compile(
     r"^(OK-CHECKSUM|MISMATCH-CHECKSUM|OK-ALTPROOF|MISMATCH-ALTPROOF"
@@ -90,14 +65,8 @@ def main(path):
     for name, s in sorted(spark_s.items(), key=lambda kv: -kv[1])[:15]:
         print(f"  {s:7.1f}s  {name}")
 
-    print("\nbefore/after vs r5 (reworked entries):")
-    print(f"  {'query':38s} {'r5':>9s} {'now':>9s}")
-    for name, before in R5_BASELINE.items():
-        after = spark_s.get(name)
-        a = f"{after:.1f}s" if after is not None else "-"
-        b = f"{before:.1f}s" if isinstance(before, float) else before
-        print(f"  {name:38s} {b:>9s} {a:>9s}")
-
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else "SCALE_AUDIT_r7.log")
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    main(sys.argv[1])
