@@ -56,10 +56,14 @@ def normalize_events(
 ) -> DataFrame:
     """Produce the unified (id, timestamp, source, text_content) core of
     the silver schema from any bronze source shape."""
-    out = df.withColumn("timestamp", coalesce_timestamp(df, ts_candidates))
-    out = out.withColumn("id", synthesize_id(df, id_candidates, content_cols))
+    cols = {
+        "timestamp": coalesce_timestamp(df, ts_candidates),
+        "id": synthesize_id(df, id_candidates, content_cols),
+    }
     if source_file_col and source_file_col in df.columns:
-        out = out.withColumn("source", classify_source(F.col(source_file_col)))
+        cols["source"] = classify_source(F.col(source_file_col))
     if text_col and text_col in df.columns:
-        out = out.withColumn("text_content", F.col(text_col))
-    return out
+        cols["text_content"] = F.col(text_col)
+    # one projection, analysed once (a withColumn chain re-analyses the
+    # growing plan per column)
+    return df.withColumns(cols)

@@ -28,7 +28,7 @@ from .bounded import bounded_collect, min_label_components
 # points the whole fixed-iteration loop runs on the driver off ONE
 # operators.bounded.bounded_collect (<= cap x (d+1) doubles — ~27 MB at
 # d=16, the same bounded-driver-materialization class as
-# dedup.SMALL_GRAPH_EDGES). Above the cap the distributed loop runs, so
+# dedup.SMALL_GRAPH_PAIRS). Above the cap the distributed loop runs, so
 # the 100 TB shape is unchanged. Why: each distributed iteration costs
 # one 2-stage k-row aggregate job + a collect round trip (~160 ms of
 # pure control plane at any corpus size; ~1.3 s of

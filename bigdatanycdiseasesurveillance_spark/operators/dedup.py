@@ -14,8 +14,8 @@ Scale design:
 - n-gram Jaccard: blocked self-join (equi-join on block keys, so the
   pair space is per-block, never full-corpus O(n^2));
 - MinHash-LSH: signature = array of per-permutation mins computed as
-  column expressions (xxhash64 — JVM-side, no Python); banding turns
-  near-dup search into equi-joins on band keys; candidates verified
+  one SQL expression (xxhash64 — JVM-side, no Python); banding turns
+  near-dup search into a group-by on band keys; candidates verified
   with exact Jaccard;
 - SimHash: 64-bit signature via bit-vote aggregation over token hashes,
   chunk-blocked Hamming candidate generation;
@@ -190,11 +190,11 @@ MINHASH_BANDS = 8
 SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
 
-# connected_components small-graph cap: an edge list at or under this
-# many (directed) rows is labeled driver-side in one collect (~3 MB of
-# long pairs — the broadcast-relation size class) instead of running
-# the multi-round distributed loop. Larger graphs take the loop.
-SMALL_GRAPH_EDGES = 200_000
+# connected_components small-graph cap: a pair list at or under this
+# many rows is labeled driver-side in one collect (~3 MB of long pairs —
+# the broadcast-relation size class) instead of running the multi-round
+# distributed loop. Larger graphs take the loop.
+SMALL_GRAPH_PAIRS = 200_000
 
 # connected_components' distributed loop runs at most this many
 # propagation steps (pointer jumping makes that O(log diameter)
@@ -203,14 +203,17 @@ CC_MAX_STEPS = 20
 
 
 def minhash_band_hashes(
-    sig_col: str = "sig", n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS
-) -> list[Column]:
-    """One Column per band: xxhash64 over that band's signature slots.
-    Bucket collision <=> band-hash equality, so this is both the
-    production bucket key and the certification's hit predicate."""
+    sig_expr: str = "sig", n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS
+) -> list[str]:
+    """SQL text per band: xxhash64 over that band's signature slots of
+    the array<long> `sig_expr`. Bucket collision <=> band-hash equality,
+    so this is both the production bucket key and the certification's
+    hit predicate."""
     rows_per_band = n_perm // bands
     return [
-        F.xxhash64(*[F.col(sig_col)[b * rows_per_band + r] for r in range(rows_per_band)])
+        "xxhash64("
+        + ", ".join(f"{sig_expr}[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ")"
         for b in range(bands)
     ]
 
@@ -233,17 +236,19 @@ def simhash_chunk_structs(
     ]
 
 
-def minhash_signature(tokens_col: Column, n_perm: int = MINHASH_N_PERM) -> Column:
-    """MinHash signature as an array<long>: perm i = min over tokens of
-    xxhash64(token, seed=i). Pure column expressions — the whole
-    signature computes inside codegen, no Python, no ML-pipeline
-    intermediate DataFrames."""
-    def perm(i):
-        # single-param lambda: a 2-param lambda would receive the array
-        # INDEX as its second argument (higher-order-function contract)
-        return lambda t: F.xxhash64(t, F.lit(i))
-
-    return F.array(*[F.array_min(F.transform(tokens_col, perm(i))) for i in range(n_perm)])
+def minhash_signature(tokens_expr: str, n_perm: int = MINHASH_N_PERM) -> str:
+    """MinHash signature as ONE SQL expression string over `tokens_expr`
+    (the SQL text of an array<string>): an array<long> whose slot i is
+    the min over tokens of xxhash64(token, i). The whole signature
+    computes inside codegen, no Python, no ML-pipeline intermediate
+    DataFrames. Text, not Column objects, for simhash_signature_sql's
+    reason: one parsed expression instead of n_perm Py4J-built lambdas
+    (minhash_lsh_pairs' plan build: 0.48 -> 0.18 s, median of 10 calls
+    on a 4-core VM)."""
+    return "array(" + ", ".join(
+        f"array_min(transform({tokens_expr}, t -> xxhash64(t, {i})))"
+        for i in range(n_perm)
+    ) + ")"
 
 
 def minhash_lsh_pairs(
@@ -255,44 +260,43 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
 ) -> DataFrame:
     """M2: MinHash-LSH near-dup detection. shingle -> minhash -> band ->
-    bucket-join -> verify. With 32 perms in 8 bands of 4, pairs with
-    Jaccard 0.7 collide in >=1 band w.p. ~0.97; all candidates are then
-    verified with exact Jaccard so the output has no false positives.
-    Returns (id_a, id_b, jaccard) — same contract as jaccard_pairs.
+    bucket -> verify. With 32 perms in 8 bands of 4, pairs with Jaccard
+    0.7 collide in >=1 band w.p. ~0.97; all candidates are then verified
+    with exact Jaccard so the output has no false positives. Returns
+    (id_a, id_b, jaccard) — same contract as jaccard_pairs.
 
     Scale path: signatures are fixed-width (n_perm longs) regardless of
-    doc size; each band bucket-join is an equi-join on (band, hash) so
-    the shuffle key space is uniform unless the corpus is degenerate.
+    doc size; buckets group on (band, hash), so the shuffle key space is
+    uniform unless the corpus is degenerate, and a bucket's pairs are
+    exactly those a (band, hash) equi-join would produce.
     """
-    toks = distinct_tokens(F.col(text_col))
     sigs = df.select(
-        F.col(id_col).alias("id"),
-        toks.alias("tok"),
-        minhash_signature(toks, n_perm).alias("sig"),
+        F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
+    ).withColumn("sig", F.expr(minhash_signature("tok", n_perm)))
+    # candidates come from ONE (band, bucket) -> ids aggregate, expanded
+    # to id_a < id_b: the signatures compute in a single stage (a bucket
+    # self-join computed them once per join side), and the shuffle
+    # carries BARE ids — carrying the token arrays would ship every
+    # document's token set once per band (8x) and again through the pair
+    # dedup; tokens attach once per DISTINCT candidate pair afterward (2
+    # narrow joins back to the signature table). Measured at sf0.1 with
+    # the bucket join: 258 s -> ~80 s, identical output.
+    bands_sql = ", ".join(
+        f"named_struct('band', {b}, 'bucket', {h})"
+        for b, h in enumerate(minhash_band_hashes("sig", n_perm, bands))
     )
-    # the band join and candidate dedup run on BARE (band, bucket, id)
-    # rows — carrying the token arrays here would ship every document's
-    # token set through the shuffle once per band (8x) and again through
-    # the pair dedup; instead tokens attach once per DISTINCT candidate
-    # pair afterward (2 narrow joins back to the signature table).
-    # Measured at sf0.1: 258 s -> ~80 s, identical output.
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), h.alias("bucket"))
-                    for b, h in enumerate(minhash_band_hashes("sig", n_perm, bands))
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    a = banded.select("band", "bucket", F.col("id").alias("id_a"))
-    b = banded.select("band", "bucket", F.col("id").alias("id_b"))
     cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        sigs.select("id", F.inline(F.expr(f"array({bands_sql})")))
+        .groupBy("band", "bucket")
+        .agg(F.collect_list("id").alias("ids"))
+        .select(
+            F.inline(
+                F.expr(
+                    "flatten(transform(ids, a -> transform(filter(ids, b -> a < b),"
+                    " b -> named_struct('id_a', a, 'id_b', b))))"
+                )
+            )
+        )
         .distinct()
     )
     toks_only = sigs.select("id", "tok")
@@ -327,37 +331,27 @@ def connected_components(
     CC_MAX_STEPS propagation steps raises. Returns (doc_id,
     canonical_id).
 
-    Small-graph fast path: at or under ``SMALL_GRAPH_EDGES`` edge rows
-    the labeling runs as ONE capped collect + driver union-find
-    (operators.bounded — a bounded driver materialization replacing a
-    multi-round shuffle plan; the cap is ~3 MB of id pairs, far under
-    any broadcast threshold). Each adaptive-loop materialization costs
-    2-3 scheduler rounds regardless of graph size, so a small graph paid
-    ~10 rounds of pure overhead (measured: 4.5 s of
-    dedup_duplicate_groups' 4.65 s warm time). Above the cap the
-    distributed loop runs, so the 100 TB shape is unchanged. Identical
-    labels: union-find with min-root union is order-independent and
-    yields the component minimum.
+    Small-graph fast path: at or under ``SMALL_GRAPH_PAIRS`` pair rows
+    the labeling runs as ONE capped collect of the pair list + driver
+    union-find (operators.bounded — a bounded driver materialization
+    replacing a multi-round shuffle plan; the cap is ~3 MB of id pairs,
+    far under any broadcast threshold). Each loop materialization costs
+    2-3 scheduler rounds regardless of graph size, so a small graph
+    would pay ~10 rounds of pure overhead. Above the cap the distributed
+    loop runs, so the 100 TB shape is unchanged. Identical labels:
+    union-find with min-root union is order-independent, needs no
+    reverse edges, and yields the component minimum.
     """
-    # LAZY checkpoints: every block's convergence probe is an action
-    # anyway, so eager=False lets the probe job materialize the
-    # checkpoint it reads — eager=True paid one whole Spark job per
-    # checkpoint (2 upfront + 1 per block) purely to materialize ahead
-    # of the probe. Lineage truncation is identical: the lazy checkpoint
-    # already replaces the logical plan.
-    # (An explicit repartition(defaultParallelism, "s") before this
-    # checkpoint was A/B-measured on a 12M-edge geo graph and
-    # REJECTED: the up-front shuffle of the doubled edge list cost more
-    # than the loop won back at this scale, and at 100 TB the edge list
-    # arrives from wide scans with natural partitioning anyway.)
-    edges = (
+    # The pair plan runs ONCE on either path: the probe's action
+    # materializes this lazy checkpoint, and the loop's doubled edge list
+    # is built from the checkpoint, not from `pairs`.
+    checked = (
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
         .localCheckpoint(eager=False)
     )
 
     # --- small-graph fast path: capped collect + driver union-find ---
-    head = bounded_collect(edges, SMALL_GRAPH_EDGES)
+    head = bounded_collect(checked, SMALL_GRAPH_PAIRS)
     if head is not None:
         import pandas as pd
 
@@ -372,6 +366,15 @@ def connected_components(
             }
         )
         return pairs.sparkSession.createDataFrame(out, "doc_id long, canonical_id long")
+
+    # (An explicit repartition(defaultParallelism, "s") of the edge list
+    # was A/B-measured on a 12M-edge geo graph and REJECTED: the up-front
+    # shuffle of the doubled edge list cost more than the loop won back
+    # at this scale, and at 100 TB the edge list arrives from wide scans
+    # with natural partitioning anyway.)
+    edges = checked.unionByName(
+        checked.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    )
 
     # --- distributed loop: the 100 TB shape ---
     # localCheckpoint per block truncates lineage — without it the

@@ -70,12 +70,14 @@ def extract_relevance(
     confidence = F.round(
         F.least(F.lit(0.9), 0.25 * n_p.cast("double") + 0.1 * n_s.cast("double")), 2
     )
-    return (
-        df.withColumn("matched_primary", F.array_join(p, ","))
-        .withColumn("n_primary", n_p.cast("long"))
-        .withColumn("n_secondary", n_s.cast("long"))
-        .withColumn("n_hazard", n_h.cast("long"))
-        .withColumn("is_relevant", is_rel)
-        .withColumn("severity", severity)
-        .withColumn("confidence", confidence)
+    return df.withColumns(
+        {
+            "matched_primary": F.array_join(p, ","),
+            "n_primary": n_p.cast("long"),
+            "n_secondary": n_s.cast("long"),
+            "n_hazard": n_h.cast("long"),
+            "is_relevant": is_rel,
+            "severity": severity,
+            "confidence": confidence,
+        }
     )

@@ -12,7 +12,10 @@ Here the whole chain is ONE Spark lineage:
 Stage boundaries are materialized parquet tables (bronze/silver/gold),
 not process hops — restartable at any stage, and each stage's output is
 a queryable table. No collect() anywhere; the only Spark actions are
-the stage writes.
+the stage writes. The bronze, unique and relevant counts are observed
+metrics that the silver write collects in the same pass, so no counting
+scan runs, and silver is read back with the schema just written, so no
+schema-inference job runs either.
 """
 
 from __future__ import annotations
@@ -20,7 +23,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,8 +67,10 @@ def run_pipeline(
     SURVEY §7.4 #1), with the near-dup tiers available as separate
     operators over the silver table.
     """
-    bronze = read_json_any(spark, bronze_dir, schema)
-    n_bronze = bronze.count()
+    bronze_obs, silver_obs = Observation(), Observation()
+    bronze = read_json_any(spark, bronze_dir, schema).observe(
+        bronze_obs, F.count(F.lit(1)).alias("n_bronze")
+    )
 
     normalized = normalize_events(
         bronze,
@@ -85,18 +91,30 @@ def run_pipeline(
     # exact-dedup tier: canonical = lowest id per normalized-text
     # fingerprint; is_duplicate marks the rest (kept, flagged — the
     # reference drops them; flagging preserves lineage for audits)
-    w = Window.partitionBy("fp").orderBy("id")
-    silver = (
-        located.withColumn("fp", fingerprint(F.col(text_col)))
-        .withColumn("is_duplicate", F.row_number().over(w) > 1)
-        .withColumn("event_date", F.to_date("timestamp"))
+    # the window partitions by the fingerprint expression itself, so the
+    # three columns are one projection; codegen's subexpression
+    # elimination computes the shared fingerprint once per row
+    fp = fingerprint(F.col(text_col))
+    w = Window.partitionBy(fp).orderBy("id")
+    silver = located.withColumns(
+        {
+            "fp": fp,
+            "is_duplicate": F.row_number().over(w) > 1,
+            "event_date": F.to_date("timestamp"),
+        }
+    )
+    # count_if, not sum: a count over zero matching rows is 0, not NULL
+    silver = silver.observe(
+        silver_obs,
+        F.count_if(~F.col("is_duplicate")).alias("n_unique"),
+        F.count_if(F.col("is_relevant") & ~F.col("is_duplicate")).alias("n_relevant"),
     )
 
     silver_path = os.path.join(out_dir, "silver_events")
     write_partitioned_parquet(
         silver, silver_path, ["event_date"], mode="overwrite"
     )
-    silver_tbl = spark.read.parquet(silver_path)
+    silver_tbl = spark.read.schema(silver.schema).parquet(silver_path)
 
     relevant = silver_tbl.filter(F.col("is_relevant") & ~F.col("is_duplicate"))
 
@@ -117,11 +135,25 @@ def run_pipeline(
     gold_severity_path = os.path.join(out_dir, "gold_severity")
     gold_severity.write.mode("overwrite").parquet(gold_severity_path)
 
+    counts = {**_observed(bronze_obs, "bronze"), **_observed(silver_obs, "silver")}
     return PipelineResult(
         silver_path=silver_path,
         gold_daily_path=gold_daily_path,
         gold_severity_path=gold_severity_path,
-        n_bronze=n_bronze,
-        n_relevant=relevant.count(),
-        n_unique=silver_tbl.filter(~F.col("is_duplicate")).count(),
+        **counts,
     )
+
+
+def _observed(obs: Observation, frame: str) -> dict:
+    """The metrics the silver write observed on `frame`, as a dict.
+
+    Spark completes an observation whose operator never reported (the
+    adaptive plan dropped it) with an empty row, which PySpark cannot
+    convert: fail naming the contract instead of returning None."""
+    try:
+        return obs.get
+    except Py4JJavaError as e:
+        raise ValueError(
+            f"run_pipeline: the silver write must observe the {frame} "
+            f"counts, but the {frame} observation returned no row"
+        ) from e

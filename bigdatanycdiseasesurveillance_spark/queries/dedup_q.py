@@ -170,11 +170,11 @@ def dedup_minhash_lsh(spark, sf_dir):
     # tests/test_dedup.py pins replay == D.minhash_lsh_pairs buckets.
     bands = D.MINHASH_BANDS
     sigs = rep_toks.select(
-        "mask", D.minhash_signature(F.col("tok")).alias("sig")
+        "mask", F.expr(D.minhash_signature("tok")).alias("sig")
     )
     bh = sigs.select(
         "mask",
-        *[h.alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))],
+        *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))],
     ).localCheckpoint(eager=False)
     # blocked exact pairs (the ground truth), multiplicity-weighted —
     # the SAME relation the oracle recomputes; read by the recall AND

@@ -56,11 +56,11 @@ def get_spark(app_name: str = "bdnds-engine", master: str | None = None) -> Spar
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (bench hygiene); SPARK_GRAFT_UI=1/true/yes
-        # turns it on so tools/profile_query.py can read per-job times via
-        # the REST API. Normalized: spark.ui.enabled accepts only
-        # true/false, so a raw "1" would throw INVALID_CONF_VALUE at
-        # SparkContext creation (r13 advisor).
+        # UI off by default (bench hygiene; tools/profile_query.py reads
+        # per-job times from the event log); SPARK_GRAFT_UI=1/true/yes
+        # turns it on for interactive inspection. Normalized:
+        # spark.ui.enabled accepts only true/false, so a raw "1" would
+        # throw INVALID_CONF_VALUE at SparkContext creation.
         .config(
             "spark.ui.enabled",
             "true"

@@ -166,10 +166,11 @@ def test_certification_band_replay_equals_operator_buckets(spark):
     from pyspark.sql import functions as F
 
     sigs = docs.select(
-        F.col("doc_id").alias("id"),
-        D.minhash_signature(D.distinct_tokens(F.col("text"))).alias("sig"),
+        F.col("doc_id").alias("id"), D.distinct_tokens(F.col("text")).alias("tok")
     ).select(
-        "id", *[h.alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))]
+        "id", F.expr(D.minhash_signature("tok")).alias("sig")
+    ).select(
+        "id", *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))]
     )
     rows = {r["id"]: [r[f"bh{b}"] for b in range(D.MINHASH_BANDS)] for r in sigs.collect()}
     ids = sorted(rows)
@@ -192,7 +193,7 @@ def test_connected_components_log_depth_on_chain(spark, monkeypatch):
     off so the distributed loop is what runs."""
     from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
-    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)
+    monkeypatch.setattr(D, "SMALL_GRAPH_PAIRS", -1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(23)], "id_a long, id_b long"
     )
@@ -210,7 +211,7 @@ def test_connected_components_raises_when_not_converged(spark, monkeypatch):
 
     from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
-    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)  # force the loop
+    monkeypatch.setattr(D, "SMALL_GRAPH_PAIRS", -1)  # force the loop
     monkeypatch.setattr(D, "CC_MAX_STEPS", 1)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "id_a long, id_b long"

@@ -82,7 +82,7 @@ def _tree(spark, sf_dir):
 
 # name -> (module, cap constant, run)
 FALLBACK_CASES = {
-    "connected_components": (D, "SMALL_GRAPH_EDGES", _cc),
+    "connected_components": (D, "SMALL_GRAPH_PAIRS", _cc),
     "lloyd_kmeans_2d": (C, "SMALL_KMEANS_POINTS", _lloyd_2d),
     "lloyd_kmeans_nd": (C, "SMALL_KMEANS_POINTS", _lloyd_nd),
     "tree_subtree_rollup": (G, "TREE_FAST_PATH_NODES", _tree),
@@ -175,7 +175,41 @@ def test_min_label_components_equals_connected_components(spark, monkeypatch):
     always carry one)."""
     edges = _PAIRS + [(n, n) for n in (0, 20, 30, 40)]
     got = min_label_components(edges)
-    monkeypatch.setattr(D, "SMALL_GRAPH_EDGES", -1)  # force the loop
+    monkeypatch.setattr(D, "SMALL_GRAPH_PAIRS", -1)  # force the loop
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     loop = {r["doc_id"]: r["canonical_id"] for r in D.connected_components(pairs).collect()}
     assert got == loop
+
+
+def _labels(spark, pairs):
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    return sorted(tuple(r) for r in D.connected_components(df).collect())
+
+
+def test_cc_pair_list_probe_reverse_duplicate_and_self_pairs(spark, monkeypatch):
+    """The fast path labels the pair list as given, with no mirrored
+    edges: pairs in both directions, repeated pairs and a self-pair
+    (an isolated node) must label as the distributed loop does."""
+    pairs = _PAIRS + [(1, 0), (8, 7), (21, 20), (2, 3), (2, 3), (40, 40), (31, 30)]
+    fast = _labels(spark, pairs)
+    monkeypatch.setattr(D, "SMALL_GRAPH_PAIRS", -1)  # force the loop
+    assert fast == _labels(spark, pairs)
+    assert (40, 40) in fast and (8, 0) in fast
+
+
+def test_cc_fast_path_cap_is_in_pair_rows(spark, monkeypatch):
+    """A list of exactly SMALL_GRAPH_PAIRS rows takes the driver
+    union-find; one row more takes the distributed loop."""
+    calls = []
+
+    def spy(edges):
+        calls.append(1)
+        return min_label_components(edges)
+
+    monkeypatch.setattr(D, "min_label_components", spy)
+    monkeypatch.setattr(D, "SMALL_GRAPH_PAIRS", len(_PAIRS))
+    at_cap = _labels(spark, _PAIRS)
+    assert calls == [1]
+    over_cap = _labels(spark, _PAIRS + [(40, 41)])
+    assert calls == [1]  # the loop ran
+    assert over_cap == sorted(at_cap + [(40, 40), (41, 40)])

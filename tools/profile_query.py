@@ -1,26 +1,34 @@
 #!/usr/bin/env python3
-"""Profile one registry query: plan-build time vs execution time, plus a
-per-Spark-job wall-time table pulled from the live UI REST API (guide
-§1.1 "empirical" — where does the time actually go). Usage:
+"""Profile one registry query with the Spark UI off: plan-build time vs
+execution time, and the Spark jobs each one ran, read from the Spark
+event log (guide §1.1 "empirical" — where does the time actually go).
+Usage:
 
     python tools/profile_query.py <query> [reps] [sf_dir]
 
-Prints, per rep: build_s (spec.fn call = driver-side plan construction,
-including any control-plane collects the query performs while building)
-and exec_s (noop sink). Then the job table of the LAST rep: job id,
-description, duration, stage count, task count.
+The session writes an uncompressed event log to a temp dir. Each rep
+runs under two job groups: build (the spec.fn call = driver-side plan
+construction, including any control-plane collects the query performs
+while building) and exec (noop sink). After the last rep,
+perfbench/tracing.fold_event_log folds the log into per-group totals.
+Prints one row per rep and phase: wall seconds, jobs, seconds covered
+by jobs, executor run and CPU ms, shuffle write, input and spill bytes,
+task count and the longest task.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_DIR)
+sys.path.insert(0, os.path.join(REPO_DIR, "perfbench"))
+
+import tracing  # noqa: E402  (perfbench/tracing.py)
 
 
 def main() -> None:
@@ -33,72 +41,66 @@ def main() -> None:
     from bigdatanycdiseasesurveillance_spark.registry import all_specs
     from bigdatanycdiseasesurveillance_spark.session import get_spark
 
-    spark = get_spark("bdnds-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    spec = all_specs()[name]
+    log_dir = tempfile.mkdtemp(prefix="profile_query_")
+    try:
+        # the event log is read by the SparkContext at start: start one,
+        # set the log properties, and start a new context in the same JVM
+        spark = get_spark("bdnds-profile")
+        tracing.set_event_log(spark, log_dir)
+        spark.stop()
+        spark = get_spark("bdnds-profile")
+        spark.sparkContext.setLogLevel("ERROR")
+        spans = run_reps(spark, all_specs()[name], sf_dir, reps)
+        spark.stop()  # closes the event log
+        report(spans, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
+
+def run_reps(spark, spec, sf_dir: str, reps: int) -> list[tuple]:
+    """Warm up, then run `reps` build + exec pairs, each phase under a
+    job group of its own; returns (rep, phase, group, t0, t1) spans."""
+    sc = spark.sparkContext
     # Warm-up: JVM/codegen + python worker pool
     spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.range(spark.sparkContext.defaultParallelism).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark.range(sc.defaultParallelism).repartition(sc.defaultParallelism).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
 
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    spans = []  # (rep, phase, group, t0, t1)
 
-    def jobs_after(first_job: int):
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs?status=succeeded"
-        ) as r:
-            js = json.load(r)
-        return sorted(
-            (j for j in js if j["jobId"] >= first_job), key=lambda j: j["jobId"]
-        )
+    def run(rep: int, phase: str, fn):
+        group = f"profile-{rep}-{phase}"
+        sc.setJobGroup(group, f"{spec.name}/{phase}")
+        t0 = time.time()
+        try:
+            return fn()
+        finally:
+            spans.append((rep, phase, group, t0, time.time()))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
-    def last_job_id() -> int:
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/jobs"
-        ) as r:
-            js = json.load(r)
-        return max((j["jobId"] for j in js), default=-1)
-
-    marker = -1
     for rep in range(reps):
-        marker = last_job_id() + 1
-        t0 = time.perf_counter()
-        df = spec.fn(spark, sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        print(
-            f"rep {rep}: build={t1 - t0:.3f}s exec={t2 - t1:.3f}s "
-            f"total={t2 - t0:.3f}s"
-        )
+        df = run(rep, "build", lambda: spec.fn(spark, sf_dir))
+        run(rep, "exec", lambda: df.write.format("noop").mode("overwrite").save())
+    return spans
 
-    print("\njobs of last rep:")
-    total = 0.0
-    for j in jobs_after(marker):
-        dur = 0.0
-        if j.get("completionTime") and j.get("submissionTime"):
-            from datetime import datetime
 
-            # [:23] keeps "YYYY-MM-DDTHH:MM:SS.mmm" and drops the GMT
-            # suffix — durations are differences, so the zone cancels
-            try:
-                st = datetime.strptime(j["submissionTime"][:23], "%Y-%m-%dT%H:%M:%S.%f")
-                en = datetime.strptime(j["completionTime"][:23], "%Y-%m-%dT%H:%M:%S.%f")
-                dur = (en - st).total_seconds()
-            except Exception:
-                pass
-        total += dur
-        desc = (j.get("description") or j.get("name") or "")[:90]
+def report(spans: list[tuple], log_dir: str) -> None:
+    groups = tracing.fold_event_log(log_dir)
+    print(
+        f"{'rep':>3} {'phase':5} {'wall_s':>7} {'jobs':>4} {'job_s':>6} "
+        f"{'run_ms':>8} {'cpu_ms':>8} {'shuf_w_B':>10} {'input_B':>10} "
+        f"{'spill_B':>8} {'tasks':>5} {'max_task_ms':>11}"
+    )
+    for rep, phase, group, t0, t1 in spans:
+        g = groups.get(group, tracing.GroupTotals())
         print(
-            f"  job {j['jobId']:4d} {dur:7.3f}s stages={len(j.get('stageIds', []))}"
-            f" tasks={j.get('numTasks', 0):5d}  {desc}"
+            f"{rep:>3} {phase:5} {t1 - t0:7.3f} {g.jobs:4d} "
+            f"{tracing.covered(g.intervals, t0, t1):6.3f} {g.run_ms:8.0f} "
+            f"{g.cpu_ms:8.0f} {g.shuffle_write_bytes:10d} {g.input_bytes:10d} "
+            f"{g.spill_bytes:8d} {len(g.task_ms):5d} {max(g.task_ms, default=0):11.0f}"
         )
-    print(f"  sum of job durations: {total:.3f}s")
 
 
 if __name__ == "__main__":
