@@ -4,8 +4,10 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Each query is forced end-to-end with the noop sink (full physical
-execution, no driver-side collect overhead). One warm-up of the first
-query amortizes JVM/codegen startup out of the per-query numbers.
+execution, no driver-side collect overhead): one cold run, then the
+min of 3 warm runs. One warm-up of the first query amortizes JVM/codegen
+startup out of the per-query numbers. The paper's chain end to end is
+timed by perfbench/, not here.
 """
 
 from __future__ import annotations
@@ -39,41 +41,15 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    def run_calibration() -> float:
-        """Fixed synthetic workload — constant size, zero IO, two
-        shuffles — timed identically to the queries. Round-over-round
-        query comparisons divide by this constant: r6's record showed a
-        uniform ~19-80% warm inflation on plan-identical code (shared-
-        box weather), which raw seconds cannot distinguish from a real
-        plan regression. Calibrated ratios can (r6 verdict #3)."""
-        from pyspark.sql import functions as F
-
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 30_000_000, 1, 64)
-            .withColumn("k", F.col("id") % 100_000)
-            .groupBy("k")
-            .agg(F.sum("id").alias("s"), F.count("*").alias("c"))
-            .withColumn("b", F.col("s") % 97)
-            .groupBy("b")
-            .agg(F.sum("s").alias("ss"), F.sum("c").alias("cc"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        return time.perf_counter() - t0
-
-    # Warm-up: the first spec in SORTED order (same order as the timed
-    # loop) — registry registration order changes between rounds, and
-    # warming a registry-order spec would shift the JVM/codegen cold
-    # cost into whichever timed query runs first.
+    # Warm-up: the first spec in the timed loop's (sorted) order, so the
+    # JVM/codegen cold cost is not charged to whichever query runs first.
     try:
         run(specs[sorted(specs)[0]])
     except Exception:
         pass
     # Also spin up the Python worker pool (one per core): otherwise the
-    # first mapInPandas query's cold time is dominated by 32 worker
-    # forks, which is session setup, not query cost.
+    # first mapInPandas query's cold time is dominated by worker forks,
+    # which is session setup, not query cost.
     try:
         spark.range(spark.sparkContext.defaultParallelism).repartition(
             spark.sparkContext.defaultParallelism
@@ -83,195 +59,42 @@ def main() -> None:
     except Exception:
         pass
 
-    # Calibration, cold then warm (min-of-3): the constant every other
-    # number is expressed against.
-    cal_cold = round(run_calibration(), 4)
-    cal_runs = [run_calibration() for _ in range(3)]
-    cal_warm = round(min(cal_runs), 4)
-    cal_spread = round((max(cal_runs) - min(cal_runs)) / min(cal_runs), 3)
-
     # Per-query error isolation: one broken query must never zero out
-    # the whole benchmark (BENCH_r02 died whole on one AnalysisException).
-    # Each query runs cold once (headline, comparable to prior rounds:
-    # includes per-query analysis/codegen), then warm runs — the number
-    # that matters on a cluster where a plan compiles once and runs
-    # over 100 TB.
-    #
-    # Load control (r8 verdict directive #1): BENCH_r08's driver run
-    # landed on a contended box (40.1s warm total vs the 30.8s quiet-box
-    # sidecar) and nothing in the artifact said so. Now each entry's warm
-    # measurement RETRIES until its three fastest samples agree within
-    # max(0.5s, 5% of min) or the sample cap is hit; an entry that never
-    # converges is listed in `tainted_queries` and flips the top-level
-    # `tainted` flag, and 1-min load averages are recorded per entry —
-    # a contended run is visibly tainted instead of silently becoming
-    # the round's number.
-    #
-    # warm_spread is the PURE ratio (max-min)/min over the three fastest
-    # samples and warm_spread_abs the raw seconds (r8 advisor: one field
-    # holding absolute seconds below a 1s floor and a ratio above it
-    # silently compares different quantities across rounds); consumers
-    # apply any sub-second floor when flagging.
-    SPREAD_ABS_BOUND = 0.5
-    MAX_WARM_SAMPLES = 9
+    # the whole benchmark.
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
-    warm_spread: dict[str, float] = {}
-    warm_spread_abs: dict[str, float] = {}
-    warm_samples_n: dict[str, int] = {}
-    load_1m: dict[str, float] = {}
-    tainted_queries: list[str] = []
     errors: dict[str, str] = {}
     for name, spec in sorted(specs.items()):
         try:
             timings[name] = round(run(spec), 4)
-            ws = [run(spec) for _ in range(3)]
-            while True:
-                best3 = sorted(ws)[:3]
-                bound = max(SPREAD_ABS_BOUND, 0.05 * best3[0])
-                if best3[2] - best3[0] <= bound or len(ws) >= MAX_WARM_SAMPLES:
-                    break
-                ws.append(run(spec))
-            best3 = sorted(ws)[:3]
-            if best3[2] - best3[0] > max(SPREAD_ABS_BOUND, 0.05 * best3[0]):
-                tainted_queries.append(name)
-            warm[name] = round(best3[0], 4)
-            warm_spread[name] = round((best3[2] - best3[0]) / best3[0], 3)
-            warm_spread_abs[name] = round(best3[2] - best3[0], 4)
-            warm_samples_n[name] = len(ws)
-            load_1m[name] = round(os.getloadavg()[0], 2)
+            warm[name] = round(min(run(spec) for _ in range(3)), 4)
         except Exception as exc:  # noqa: BLE001 — record and keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"bench: {name} ERROR {errors[name]}", file=sys.stderr)
 
-    # Calibration AGAIN after the query loop (r10 verdict directive
-    # #7): the single up-front calibration cannot see contention that
-    # arrives mid-run — r10's driver run calibrated FASTER than the
-    # quiet-box sidecar while its queries ran ~29% slower, and
-    # converged per-entry spreads alone did not flag it. If pre/post
-    # calibration disagree by >20%, the whole run is tainted
-    # regardless of spread convergence, and the drift is a recorded
-    # field so a future judge adjudicates from the artifact alone.
-    cal_post_runs = [run_calibration() for _ in range(3)]
-    cal_post = round(min(cal_post_runs), 4)
-    # Guard the division (r11 advisor): a degenerate near-zero warm
-    # calibration (would take a broken workload, but then the ratio is
-    # meaningless anyway) must not ZeroDivisionError the whole bench.
-    # Drift taint is its own boolean field — never a pseudo-entry in
-    # tainted_queries, which holds real registry names only.
-    if cal_warm > 0.01:
-        cal_drift = round(abs(cal_post - cal_warm) / cal_warm, 3)
-    else:
-        cal_drift = -1.0  # sentinel: calibration itself is broken
-    drift_tainted = cal_drift > 0.20 or cal_drift < 0
-
-    total = round(sum(timings.values()), 4)
-
-    # Stage throughputs in records/sec for direct comparison against the
-    # reference's BASELINE.md numbers (relevance ~105 rec/s, dedup 10-50,
-    # location 5-20, embedding ~1000).
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    stage_inputs = {
-        "relevance": ("rel_keyword_extraction", n_docs),
-        "dedup": ("dedup_jaccard_pairs", n_docs),
-        "location": ("loc_fallback_resolution", n_events),
-        "embedding": ("emb_encode_profile", n_docs),
-    }
-    throughput = {
-        stage: round(n / timings[qname], 1)
-        for stage, (qname, n) in stage_inputs.items()
-        if qname in timings and timings[qname] > 0
-    }
-
-    # Per-query detail goes to a side file: BENCH_r05.json came back
-    # `parsed: null` because the 23-query inline maps outgrew the
-    # driver's tail-capture buffer (r5 verdict finding #4). The final
-    # stdout line stays compact: totals, throughputs, and the cold
-    # per-query map only (the driver contract requires `queries`).
-    # Artifact split (r11 verdict directive #3): the driver bench used
-    # to overwrite BENCH_DETAIL.json, clobbering the committed quiet-box
-    # sidecar that separates contention from regression. Run kind is an
-    # env knob: default "driver" -> BENCH_DETAIL.json (what the round
-    # driver records), "quiet" -> BENCH_QUIET.json (the builder's
-    # quiet-box reference, taken right after a round's changes land).
-    bench_kind = os.environ.get("SPARK_GRAFT_BENCH_KIND", "driver")
-    detail_name = "BENCH_QUIET.json" if bench_kind == "quiet" else "BENCH_DETAIL.json"
-
+    # Per-query maps go to a side file; the stdout line stays compact so
+    # a capture buffer never truncates it (`queries` is the cold map).
     detail = {
-        "run_kind": bench_kind,
         "queries_cold": timings,
         "queries_warm": warm,
-        # warm_spread is the pure (max-min)/min ratio over the 3 fastest
-        # samples; warm_spread_abs the raw seconds. Entries retried past
-        # 3 samples show warm_samples > 3; load_avg_1m is the box load
-        # right after each entry finished.
-        "warm_spread": warm_spread,
-        "warm_spread_abs": warm_spread_abs,
-        "warm_samples": warm_samples_n,
-        "load_avg_1m": load_1m,
-        "tainted": bool(tainted_queries) or drift_tainted,
-        "tainted_queries": tainted_queries,
-        # box-weather normalization: divide any round's warm time by its
-        # calibration_warm before comparing across rounds
-        "calibration": {
-            "cold": cal_cold,
-            "warm": cal_warm,
-            "spread": cal_spread,
-            # post = the same min-of-3 AFTER the query loop; drift =
-            # |post-warm|/warm; >0.20 taints the run (r10 directive #7)
-            "post": cal_post,
-            "drift": cal_drift,
-            "drift_tainted": drift_tainted,
-            "workload": "range(30M,64p) % 100k groupBy-agg -> %97 groupBy-agg, noop sink",
-        },
-        "queries_warm_calibrated": (
-            {n: round(t / cal_warm, 3) for n, t in warm.items()}
-            if cal_warm > 0.01
-            else {}
-        ),
         "errors": errors,
-        "throughput_rec_s": throughput,
         "sf": sf,
         "n_queries": len(timings),
     }
-    with open(os.path.join(REPO_DIR, detail_name), "w") as fh:
+    with open(os.path.join(REPO_DIR, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
     print(
         json.dumps(
             {
                 "metric": "bench_total_wall",
-                "value": total,
+                "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "queries": timings,
                 "total_warm": round(sum(warm.values()), 4),
-                "calibration_warm": cal_warm,
-                # pre/post calibration drift rule (r10 directive #7):
-                # drift > 0.20 -> tainted, independent of spreads
-                "calibration_post": cal_post,
-                "calibration_drift": cal_drift,
-                "drift_tainted": drift_tainted,
-                "tainted": bool(tainted_queries) or drift_tainted,
-                "tainted_queries": tainted_queries,
-                "load_avg_1m": round(os.getloadavg()[0], 2),
-                # The packed per-query warm/spread/load/samples arrays
-                # moved OUT of this line into BENCH_DETAIL.json
-                # (queries_warm / warm_spread_abs / load_avg_1m /
-                # warm_samples maps there): the r13 driver capture
-                # head-truncated the ~2.7 KB line and the r12/r13
-                # comparison died on `parsed: null` (r13 verdict
-                # directive #3 — "summary + totals" in the line). No
-                # number was dropped — cold seconds stay as `queries`
-                # (the driver contract), warm totals stay as
-                # `total_warm`, and the per-entry evidence lives in the
-                # committed detail artifact.
                 "n_errors": len(errors),
-                # truncated per-entry here (full text in BENCH_DETAIL.json)
-                # so a many-error run cannot re-bloat the line past the
-                # driver's capture buffer
+                # full text in BENCH_DETAIL.json
                 "errors": {n: e[:120] for n, e in errors.items()},
-                "throughput_rec_s": throughput,
                 "sf": sf,
             }
         )

@@ -17,7 +17,6 @@ gazetteer is a data change, not a code change.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..tables import values_dim
 
@@ -74,35 +73,11 @@ def borough_zip_dim(spark: SparkSession) -> DataFrame:
     return values_dim(spark, BOROUGH_ZIP_PREFIXES, "borough string, zip_prefix string")
 
 
-def neighborhood_dim(spark: SparkSession) -> DataFrame:
-    return values_dim(
-        spark,
-        NEIGHBORHOODS,
-        "neighborhood string, borough string, lat_min double, lat_max double,"
-        " lon_min double, lon_max double, zips array<string>",
-    )
-
-
-def neighborhood_zip_dim(spark: SparkSession) -> DataFrame:
-    """J4: exploded (neighborhood, zip) lookup."""
-    return neighborhood_dim(spark).select(
-        "neighborhood", "borough", F.explode("zips").alias("zip")
-    )
-
-
 # J7 (neighborhood -> borough) resolved at module load: the dim data is
 # static Python constants, so the dim-to-dim join is a dict lookup here
 # rather than an extra broadcast-join stage Janino has to compile into
 # every query that touches location enrichment.
 _NB_BOROUGH = {n[0]: n[1] for n in NEIGHBORHOODS}
-
-
-def subreddit_dim(spark: SparkSession) -> DataFrame:
-    """J5 + J7: subreddit -> neighborhood -> borough."""
-    rows = [(s, n, _NB_BOROUGH[n]) for s, n in SUBREDDITS]
-    return values_dim(
-        spark, rows, "subreddit string, neighborhood string, sub_borough string"
-    )
 
 
 def enrich_with_location(

@@ -1,4 +1,4 @@
-"""Text column expressions: tokenization, stopwords, Jaccard, shingles,
+"""Text column expressions: tokenization, stopwords, Jaccard,
 fingerprints — all native higher-order functions (SURVEY §2.8 families).
 
 The reference lowercases + keyword-scans text record-by-record in Python
@@ -51,22 +51,6 @@ def word_jaccard(a_tokens: Column, b_tokens: Column) -> Column:
         inter,
         F.size(a_tokens).cast("double") + F.size(b_tokens).cast("double") - inter,
     )
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of normalized text (MinHash input).
-    sequence+transform keeps it a single codegen'd expression; the
-    normalized string is bound to a lambda variable (one-element
-    transform) so the regexp runs once per row, not once per shingle."""
-
-    def _shingles(norm: Column) -> Column:
-        n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: norm.substr(i, F.lit(k)))
-        )
-
-    norm = F.regexp_replace(F.lower(text), "[^a-z0-9 ]", "")
-    return F.element_at(F.transform(F.array(norm), _shingles), 1)
 
 
 def fingerprint(text: Column) -> Column:

@@ -300,10 +300,9 @@ def grid_dbscan(
     # registry queries at sf0.01 AND sf1 while this one is 3-7x faster
     # (530->78s on cluster_geo_pipeline at sf1: fewer materializations
     # and one sum-probe per block instead of a per-round changed-count
-    # join). The previous in-line propagation loop now lives in
-    # tools/alt_twins.py as the INDEPENDENT implementation the sf1
-    # audit dual-plan-proves this path against — the recursive labeling
-    # is exactly the part the DuckDB oracle cannot check at sf1.
+    # join). Its fast path and distributed fallback are proven equal
+    # in tests/test_driver_fast_paths.py, and all three exact-DBSCAN
+    # queries keep their DuckDB oracles.
     from .dedup import connected_components
 
     cc = connected_components(
@@ -350,8 +349,8 @@ def cellgrid_assign(
     cells: DataFrame, key_mult: int = 100000, num: int = 12, den: int = 10
 ) -> DataFrame:
     """Corpus-size-independent geographic density clustering over
-    eps-grid micro-cells (the production scale path SCALE.md names for
-    the exact eps-graph DBSCAN's quadratic densification).
+    eps-grid micro-cells (the production scale path that avoids the
+    exact eps-graph DBSCAN's quadratic densification).
 
     Input: one row per occupied cell (cx, cy, w = point count).
     Output: (cx, cy, w, cid) — cid is the min core-cell key of the

@@ -840,8 +840,7 @@ def simhash_md5_pairs(
     # filter == filter-then-dedup. (On THIS corpus 97% of candidates
     # pass — 260.4M of 268.6M at sf1 — so the A/B was a tie, 89.9s vs
     # 90.1s warm; the reorder is kept for the general corpus where the
-    # Hamming cut, not blocking, does the work. Stage table: SCALE.md
-    # "dedup_simhash_md5 measured floor".)
+    # Hamming cut, not blocking, does the work.)
     return (
         a.join(b, ["c", "chunk"])
         .filter(F.col("id_a") < F.col("id_b"))

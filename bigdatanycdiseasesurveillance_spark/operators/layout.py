@@ -1,12 +1,11 @@
-"""Data-layout operators: Z-order (Morton) clustering keys and
-range-clustered writes.
+"""Data-layout operators: Z-order (Morton) clustering keys.
 
 Why this exists at 100 TB: parquet min/max pruning only helps on the
 column the file is sorted by. Sorting on a Z-value interleaving of two
 dimensions bounds BOTH dimensions inside every file/range — a query
 filtering on either column (or a box on both) prunes most files. This
 is the layout trick behind Delta/Iceberg Z-ORDER OPTIMIZE, expressed
-as plain columns + repartitionByRange so it works on any sink.
+as a plain column so a range-partitioned sort on it works on any sink.
 
 The Z-value itself is exact integer math: one `aggregate` fold over a
 precomputed power-of-two array literal (shift amounts cannot be
@@ -17,7 +16,7 @@ SQL engine with a list fold.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -47,25 +46,4 @@ def zvalue_sql(x: str, y: str, bits: int = 10) -> str:
         f"(acc, p) -> acc * 4"
         f" + 2 * (CASE WHEN ({x} & p) > 0 THEN 1 ELSE 0 END)"
         f" + (CASE WHEN ({y} & p) > 0 THEN 1 ELSE 0 END))"
-    )
-
-
-def zorder_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    bits: int = 10,
-    n_files: int = 32,
-) -> DataFrame:
-    """Cluster rows for writing: range-partition + sort by Z-value so
-    each output file covers a compact rectangle of (x, y) — both
-    columns get effective min/max pruning. One range shuffle (with the
-    sampling pass range partitioning implies); the sort is per
-    partition. Drop `zkey` after write if undesired.
-    """
-    z = zvalue(F.col(x_col), F.col(y_col), bits)
-    return (
-        df.withColumn("zkey", z)
-        .repartitionByRange(n_files, "zkey")
-        .sortWithinPartitions("zkey")
     )

@@ -15,7 +15,7 @@ half-eaten by the phone pattern).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (category, pattern, replacement) in redaction order
@@ -45,17 +45,6 @@ def redact_text(text: Column) -> Column:
     for _cat, pat, repl in PII_PATTERNS:
         cur = F.regexp_replace(cur, pat, repl)
     return cur
-
-
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach `redacted` plus per-category counts n_url/n_email/n_ip/
-    n_phone. One projection, codegen end to end."""
-    counts = pii_counts(F.col(text_col))
-    return df.select(
-        "*",
-        redact_text(F.col(text_col)).alias("redacted"),
-        *[counts[cat].alias(f"n_{cat}") for cat, _p, _r in PII_PATTERNS],
-    )
 
 
 def pii_sql_exprs(text_expr: str) -> tuple[str, dict[str, str]]:

@@ -1,10 +1,9 @@
 """Registry-wide physical-plan invariant sweep (r8 verdict directive
-#5): EXPLAIN.md pins ~34 headline plans; this sweeps ALL registry
-queries so a plan regression (a Spark version bump or an innocent
-refactor injecting a cartesian / unvetted nested-loop / row-Python
-node) fails CI, not the cluster. tools/plan_sweep.py is the CLI that
-writes the PLAN_SWEEP.json artifact; tests/test_plan_sweep.py runs the
-same loop inside pytest."""
+#5): this sweeps ALL registry queries so a plan regression (a Spark
+version bump or an innocent refactor injecting a cartesian / unvetted
+nested-loop / row-Python node) fails CI, not the cluster.
+tools/plan_sweep.py is the CLI that writes the PLAN_SWEEP.json
+artifact; tests/test_plan_sweep.py runs the same loop inside pytest."""
 
 from __future__ import annotations
 
@@ -64,7 +63,7 @@ BNLJ_ALLOWLIST = {
     "emb_quantize_recall",
     # distinct-signature mask tables, pre-blocked band candidates — the
     # bounded pair-generation shapes the r7/r8 judges re-read and
-    # justified in EXPLAIN.md:
+    # justified:
     "dedup_minhash_lsh",
     "dedup_minhash_md5",
     "dedup_prefix_jaccard",

@@ -359,10 +359,10 @@ def _cellgrid_oracle() -> str:
 )
 def cluster_geo_cellgrid(spark, sf_dir):
     """The PRODUCTION scale path for geographic density clustering —
-    the mitigation SCALE.md names for cluster_geo_pipeline's sf1 slow
-    tail (651.8s: the exact eps-graph densifies quadratically at fixed
-    geography). Points pre-aggregate into eps-grid micro-cells (count
-    per cell), density = weighted 8-neighborhood sum, core cells
+    the mitigation for cluster_geo_pipeline's sf1 slow tail (651.8s:
+    the exact eps-graph densifies quadratically at fixed geography).
+    Points pre-aggregate into eps-grid micro-cells (count per cell),
+    density = weighted 8-neighborhood sum, core cells
     cluster by grid adjacency, border cells attach to the min-labeled
     core neighbor. Every join and CC iteration is keyed by CELL, and
     the cell count is bounded by geography/eps^2 — corpus-size

@@ -1,4 +1,4 @@
-"""Batch sources (SURVEY §2.1 S1-S6, batch side).
+"""Batch sources (SURVEY §2.1 S2).
 
 The reference's file stage-transfer globs a directory, sniffs each file
 for "top-level JSON array vs JSONL", and parses record-by-record on the
@@ -62,23 +62,3 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFram
     """S2 (scale path): schema-first JSONL read — splittable, pushdown-
     friendly, the format a 100 TB bronze layer would actually use."""
     return spark.read.schema(schema).json(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
-    """S5: CSV source with explicit schema (the reference pulls official
-    respiratory CSVs via pandas; engine reads them distributed)."""
-    return spark.read.schema(schema).option("header", "true").csv(path)
-
-
-def parse_kafka_frame(kafka_df: DataFrame, schema: T.StructType) -> DataFrame:
-    """S1 consumer side: given the Kafka wire frame (key/value binary +
-    topic/partition/offset/timestamp), cast value to string, parse with
-    the explicit schema, and keep the stream metadata. Works identically
-    on readStream.format("kafka") output and batch test frames."""
-    return kafka_df.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("rec"),
-        F.col("topic"),
-        F.col("partition"),
-        F.col("offset"),
-        F.col("timestamp").alias("kafka_timestamp"),
-    ).select("rec.*", "topic", "partition", "offset", "kafka_timestamp")

@@ -1,11 +1,10 @@
-"""Batch sinks (SURVEY §2.1 S7-S14).
+"""Batch sinks (SURVEY §2.1 S10/S13).
 
 The reference's sinks are driver-side loops: timestamped JSON batch
-files (deduplication_consumer.py:328-360), psycopg2 bulk upsert with
-ON CONFLICT (psql_db_client.py:369-417), ChromaDB add with skip-existing
-(chromadb_client.py:60-162), CSV reports. Engine form: every sink is a
-`df.write`, upsert is a last-writer-wins window over old ∪ new, and
-skip-existing is a left-anti join — all distributed, no collect().
+files (deduplication_consumer.py:328-360) and per-row database writes
+(psql_db_client.py:369-417). Engine form: every sink is a distributed
+`df.write` — date-partitioned parquet, and versioned gold tables with
+compaction and retention — no collect().
 """
 
 from __future__ import annotations
@@ -13,8 +12,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def write_partitioned_parquet(
@@ -27,116 +25,6 @@ def write_partitioned_parquet(
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(path)
-
-
-def upsert_last_writer_wins(
-    spark: SparkSession,
-    new_df: DataFrame,
-    path: str,
-    keys: list[str],
-    order_col: str,
-) -> DataFrame:
-    """S11: the engine's ON CONFLICT (keys) DO UPDATE
-    (psql_db_client.py:369-417). Read existing ∪ new, keep the row with
-    the greatest order_col per key (ties: new side wins), rewrite.
-
-    At scale this is Delta/Iceberg MERGE territory; over plain parquet
-    the rewrite touches only the table being upserted, and the window
-    shuffles once on the key. Returns the merged frame as written.
-    """
-    if _exists(spark, path):
-        existing = spark.read.parquet(path).withColumn("__gen", F.lit(0))
-        union = existing.unionByName(new_df.withColumn("__gen", F.lit(1)))
-    else:
-        union = new_df.withColumn("__gen", F.lit(1))
-    w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("__gen"))
-    merged = (
-        union.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__gen")
-    )
-    tmp = path.rstrip("/") + ".__staged"
-    merged.write.mode("overwrite").parquet(tmp)
-    out = spark.read.parquet(tmp)
-    out.write.mode("overwrite").parquet(path)
-    _remove_dir(tmp)
-    return spark.read.parquet(path)
-
-
-def append_skip_existing(
-    spark: SparkSession, new_df: DataFrame, path: str, id_col: str
-) -> int:
-    """S12: append only ids not already present (the ChromaDB loader's
-    skip-existing, chromadb_client.py:77-102) — a broadcast-friendly
-    left-anti join on the id column instead of a driver-side set. Returns
-    the number of rows appended."""
-    if _exists(spark, path):
-        existing_ids = spark.read.parquet(path).select(id_col)
-        fresh = new_df.join(existing_ids, id_col, "left_anti")
-    else:
-        fresh = new_df
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(path)
-    return n
-
-
-def write_object_store(
-    df: DataFrame,
-    url: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "append",
-    fmt: str = "parquet",
-) -> None:
-    """S13: object-store sink (reference src/database/s3_uploader.py:35-89
-    uploads JSON batch files through a driver-side boto3 loop). Engine
-    form: one distributed `df.write` against any Hadoop-FS URL —
-    s3a://bucket/prefix, gs://, abfss://, file:/// — executors upload
-    their partitions in parallel; the driver never touches the data.
-
-    For s3a URLs the session is switched to the magic committer: task
-    commits complete multipart uploads instead of renaming (rename on S3
-    is a full copy — O(data) per commit — and non-atomic, the classic
-    object-store-sink failure mode). Other schemes keep their default
-    committers. JSON output mirrors the reference's batch-file layout;
-    parquet is the analytics-grade default."""
-    if fmt not in ("parquet", "json", "csv"):
-        raise ValueError(f"unsupported object-store format: {fmt}")
-    if url.startswith("s3a://"):
-        hconf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
-        hconf.set("fs.s3a.committer.name", "magic")
-        hconf.set("fs.s3a.committer.magic.enabled", "true")
-        # uploads buffer to disk, not heap — executor memory stays bounded
-        # no matter how large a partition's output file is
-        hconf.set("fs.s3a.fast.upload.buffer", "disk")
-    w = df.write.mode(mode).format(fmt)
-    if fmt == "csv":
-        w = w.option("header", "true")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.save(url)
-
-
-def to_kafka_frame(df: DataFrame, key_col: str) -> DataFrame:
-    """S7 (batch form): project any frame to the Kafka wire schema —
-    string key, to_json(struct(*)) value. `.write.format("kafka")`
-    consumes exactly this shape."""
-    payload = [c for c in df.columns if c != key_col]
-    return df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.to_json(F.struct(key_col, *payload)).alias("value"),
-    )
-
-
-def write_csv_report(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S14: CSV report sink (forecast/anomaly outputs)."""
-    df.write.mode(mode).option("header", "true").csv(path)
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    # local-fs check is enough for the harness; on a cluster this is a
-    # FileSystem.exists call against the same path
-    return os.path.exists(path)
 
 
 def _remove_dir(path: str) -> None:

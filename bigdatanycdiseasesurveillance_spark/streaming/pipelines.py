@@ -372,16 +372,6 @@ def kafka_source(
     )
 
 
-def kafka_sink(df: DataFrame, brokers: str, topic: str, key_col: str):
-    """S7: Kafka producer sink — to_json(struct(*)) value, keyed."""
-    return (
-        df.selectExpr(f"CAST({key_col} AS STRING) AS key", "to_json(struct(*)) AS value")
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-    )
-
-
 def streaming_relevance_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST1/ST5: relevance scoring on a document stream, aggregated into
     (is_relevant, severity) counts — the streaming form of the

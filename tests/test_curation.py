@@ -139,25 +139,6 @@ def test_zorder_bucket_locality_bound(spark, sf_dir):
         assert r["y_max"] - r["y_min"] <= 63, r
 
 
-def test_zorder_layout_clusters_and_sorts(spark):
-    from bigdatanycdiseasesurveillance_spark.operators.layout import zorder_layout
-
-    df = spark.range(2000).selectExpr("id % 37 AS x", "id % 53 AS y")
-    out = zorder_layout(df, "x", "y", bits=6, n_files=8)
-    parts = out.select("zkey").rdd.glom().map(
-        lambda rows: [r["zkey"] for r in rows]
-    ).collect()
-    ranges = []
-    for p in parts:
-        if not p:
-            continue
-        assert p == sorted(p)  # sorted within partition
-        ranges.append((p[0], p[-1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # range partitions are disjoint
-
-
 def test_streaming_session_window_equals_batch(spark, sf_dir):
     from bigdatanycdiseasesurveillance_spark.registry import all_specs
 

@@ -8,7 +8,6 @@ import os
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.domain.schemas import REDDIT_POST
-from bigdatanycdiseasesurveillance_spark.operators.ner import extract_locations
 from bigdatanycdiseasesurveillance_spark.pipeline import _observed, run_pipeline
 
 VOCAB = dict(
@@ -155,23 +154,3 @@ def test_pipeline_job_count(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= PIPELINE_MAX_JOBS
-
-
-def test_ner_operator_dictionary_fallback(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "meet me in wburg tomorrow"),
-            (2, "flushing and astoria are both in queens"),
-            (3, "no places here"),
-            (4, None),
-        ],
-        "id long, text string",
-    )
-    rows = {r["id"]: r for r in extract_locations(df).collect()}
-    backend = rows[1]["ner_backend"]
-    assert backend in ("spacy", "dictionary")
-    if backend == "dictionary":
-        assert rows[1]["extracted_locations"] == ["wburg"]
-        assert set(rows[2]["extracted_locations"]) == {"astoria", "flushing"}
-        assert rows[3]["extracted_locations"] == []
-        assert rows[4]["extracted_locations"] == []

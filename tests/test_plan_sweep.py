@@ -3,8 +3,8 @@ invariants the judge previously checked by hand — zero CartesianProduct
 anywhere, BroadcastNestedLoopJoin only on the vetted allowlist, zero
 row-at-a-time Python — asserted over EVERY registry plan, so the next
 Spark version bump or refactor-injected join regression fails CI
-instead of surfacing on a cluster. EXPLAIN.md's 34 pinned sections
-cover depth; this covers breadth."""
+instead of surfacing on a cluster. plans/shuffle_budget.json pins the
+per-query exchange counts."""
 
 from __future__ import annotations
 

@@ -329,13 +329,18 @@ def test_values_dims_plan_as_local_relation(spark, sf_dir):
     never Scan ExistingRDD: broadcasting a LocalTableScan is a driver-side
     collect with NO job, while createDataFrame's RDD form runs a
     32-task job per broadcast per query (the round-4 bench regression
-    root cause — SCALE.md ground rule 5)."""
+    root cause)."""
     from bigdatanycdiseasesurveillance_spark.domain import location as L
+    from bigdatanycdiseasesurveillance_spark.tables import values_dim
 
     for dim in (
-        L.subreddit_dim(spark),
-        L.neighborhood_dim(spark),
-        L.neighborhood_zip_dim(spark),
+        # the widest static dim: doubles and a string array per row
+        values_dim(
+            spark,
+            L.NEIGHBORHOODS,
+            "neighborhood string, borough string, lat_min double,"
+            " lat_max double, lon_min double, lon_max double, zips array<string>",
+        ),
         L.borough_zip_dim(spark),
     ):
         plan = executed_plan(dim)

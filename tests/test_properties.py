@@ -11,7 +11,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.functions.text_funcs import (
-    char_shingles,
     distinct_tokens,
     fingerprint,
     word_jaccard,
@@ -97,22 +96,6 @@ def test_unit_vectors_have_norm_one(spark, vecs):
     for r in out:
         assert not math.isnan(r["nn"])
         assert abs(r["nn"] - (1.0 if r["nonzero"] else 0.0)) < 1e-9
-
-
-@settings(**_SETTINGS)
-@given(st.lists(TEXT.filter(lambda t: len(t.strip()) >= 5), min_size=1, max_size=10))
-def test_shingles_subset_closure(spark, texts):
-    """Every 5-char shingle of a text is a substring of its normalized
-    form, and shingle arrays are distinct."""
-    df = spark.createDataFrame([(t,) for t in texts], "t string")
-    out = df.select(
-        char_shingles(F.col("t")).alias("sh"),
-        F.regexp_replace(F.lower(F.col("t")), "[^a-z0-9 ]", "").alias("norm"),
-    ).collect()
-    for r in out:
-        assert len(r["sh"]) == len(set(r["sh"]))
-        for s in r["sh"]:
-            assert s in r["norm"]
 
 
 def _mask_keys(s: str) -> set:

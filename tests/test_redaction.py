@@ -4,12 +4,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bigdatanycdiseasesurveillance_spark.operators.redaction import redact_pii
+from bigdatanycdiseasesurveillance_spark.operators.redaction import (
+    PII_PATTERNS,
+    pii_counts,
+    redact_text,
+)
 
 
 def _one(spark, text):
     df = spark.createDataFrame([(text,)], "text string")
-    return redact_pii(df).collect()[0]
+    counts = pii_counts(F.col("text"))
+    return df.select(
+        redact_text(F.col("text")).alias("redacted"),
+        *[counts[cat].alias(f"n_{cat}") for cat, _p, _r in PII_PATTERNS],
+    ).collect()[0]
 
 
 def test_each_category_redacts(spark):

@@ -1,6 +1,5 @@
-"""Sources/sinks (SURVEY §2.1): dual-format JSON reads, Kafka envelope
-parsing, upsert last-writer-wins, skip-existing append, Kafka wire
-projection, CSV round trip."""
+"""Sources/sinks (SURVEY §2.1): dual-format JSON reads, partitioned
+parquet, compaction, versioned gold tables and their retention."""
 
 from __future__ import annotations
 
@@ -13,17 +12,10 @@ from pyspark.sql import types as T
 
 from bigdatanycdiseasesurveillance_spark.domain.schemas import NYC_311, RSS_ARTICLE
 from bigdatanycdiseasesurveillance_spark.sources.readers import (
-    parse_kafka_frame,
-    read_csv,
     read_json_any,
     read_jsonl,
 )
 from bigdatanycdiseasesurveillance_spark.sources.sinks import (
-    append_skip_existing,
-    to_kafka_frame,
-    upsert_last_writer_wins,
-    write_csv_report,
-    write_object_store,
     write_partitioned_parquet,
 )
 
@@ -87,89 +79,6 @@ def test_read_jsonl_schema_first(spark, tmp_path):
     assert out.schema["scraped_at"].dataType == T.TimestampType()
 
 
-def test_parse_kafka_frame(spark):
-    payload = {"source": "rss", "title": "t1", "link": "l", "published": "p",
-               "summary": "s", "scraped_at": "2024-01-02T03:04:05"}
-    frame = spark.createDataFrame(
-        [
-            (
-                b"k1",
-                json.dumps(payload).encode(),
-                "rss-topic",
-                0,
-                7,
-                dt.datetime(2024, 1, 2),
-            )
-        ],
-        "key binary, value binary, topic string, partition int, offset long, timestamp timestamp",
-    )
-    out = parse_kafka_frame(frame, RSS_ARTICLE).collect()[0]
-    assert out["title"] == "t1"
-    assert out["topic"] == "rss-topic" and out["offset"] == 7
-
-
-def test_upsert_last_writer_wins(spark, tmp_path):
-    path = str(tmp_path / "events_tbl")
-    v1 = spark.createDataFrame(
-        [("a", 1, "old-a"), ("b", 1, "old-b")], "id string, ver int, val string"
-    )
-    upsert_last_writer_wins(spark, v1, path, keys=["id"], order_col="ver")
-    # higher version replaces; equal version -> new side wins; new key appends
-    v2 = spark.createDataFrame(
-        [("a", 2, "new-a"), ("b", 1, "tie-b"), ("c", 1, "new-c")],
-        "id string, ver int, val string",
-    )
-    merged = upsert_last_writer_wins(spark, v2, path, keys=["id"], order_col="ver")
-    got = {r["id"]: r["val"] for r in merged.collect()}
-    assert got == {"a": "new-a", "b": "tie-b", "c": "new-c"}
-    assert merged.count() == 3
-
-
-def test_append_skip_existing(spark, tmp_path):
-    path = str(tmp_path / "vectors_tbl")
-    first = spark.createDataFrame([("v1", 1.0), ("v2", 2.0)], "vec_id string, x double")
-    assert append_skip_existing(spark, first, path, "vec_id") == 2
-    again = spark.createDataFrame(
-        [("v2", 9.0), ("v3", 3.0)], "vec_id string, x double"
-    )
-    assert append_skip_existing(spark, again, path, "vec_id") == 1
-    table = spark.read.parquet(path)
-    assert table.count() == 3
-    # the existing v2 row was NOT overwritten (skip, not upsert)
-    assert table.filter("vec_id = 'v2'").collect()[0]["x"] == 2.0
-
-
-def test_write_object_store_file_scheme(spark, tmp_path):
-    """S13 sink through an explicit filesystem URL (the same Hadoop-FS
-    path a cluster points at s3a://bucket/prefix), partitioned + json
-    variant included."""
-    url = "file://" + str(tmp_path / "lake" / "events_gold")
-    df = spark.createDataFrame(
-        [("a", 1, "2024-01-01"), ("b", 2, "2024-01-02")], "k string, n int, d string"
-    )
-    write_object_store(df, url, partition_cols=["d"], mode="overwrite")
-    back = spark.read.parquet(url)
-    assert back.count() == 2 and set(back.columns) == {"k", "n", "d"}
-    jurl = "file://" + str(tmp_path / "lake" / "events_json")
-    write_object_store(df, jurl, mode="overwrite", fmt="json")
-    assert spark.read.json(jurl).count() == 2
-    try:
-        write_object_store(df, jurl, fmt="xml")
-        raise AssertionError("expected ValueError for unsupported format")
-    except ValueError:
-        pass
-
-
-def test_to_kafka_frame_roundtrip(spark):
-    df = spark.createDataFrame([("id1", 5, "t")], "id string, n int, s string")
-    wire = to_kafka_frame(df, "id")
-    assert wire.columns == ["key", "value"]
-    row = wire.collect()[0]
-    assert row["key"] == "id1"
-    back = json.loads(row["value"])
-    assert back == {"id": "id1", "n": 5, "s": "t"}
-
-
 def test_partitioned_parquet_prunes(spark, tmp_path):
     path = str(tmp_path / "part_tbl")
     df = spark.createDataFrame(
@@ -185,14 +94,6 @@ def test_partitioned_parquet_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "event_date" in plan.split(
         "PartitionFilters"
     )[1].split("]")[0], plan
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "report_csv")
-    df = spark.createDataFrame([("flu", 3, 1.5)], "disease string, cnt int, score double")
-    write_csv_report(df, path)
-    back = read_csv(spark, path, "disease string, cnt int, score double")
-    assert back.collect() == df.collect()
 
 
 def test_compact_table(spark, tmp_path):

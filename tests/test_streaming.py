@@ -117,48 +117,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert rows == {("2024-01-01 00:00:00", 2)}
 
 
-def test_foreachbatch_streaming_upsert(spark, sf_dir, tmp_path):
-    """S9+S11: foreachBatch as the streaming upsert sink — each
-    micro-batch merges into the target with last-writer-wins, so
-    replaying a batch (at-least-once delivery) cannot duplicate rows."""
-    from bigdatanycdiseasesurveillance_spark.sources.sinks import (
-        upsert_last_writer_wins,
-    )
-
-    target = str(tmp_path / "upsert_target")
-    src = P.stream_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "event_type"
-    )
-
-    def merge_batch(batch_df, batch_id):
-        upsert_last_writer_wins(
-            batch_df.sparkSession, batch_df, target, keys=["event_id"], order_col="ts"
-        )
-
-    q = (
-        src.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_src = table(spark, sf_dir, "events").count()
-    merged = spark.read.parquet(target)
-    assert merged.count() == n_src
-    # replay the same data through a fresh stream (simulated redelivery):
-    # the upsert keeps the row count stable
-    q2 = (
-        P.stream_table(spark, sf_dir, "events")
-        .select("event_id", "ts", "event_type")
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(target).count() == n_src
-
-
 def test_sessionize_multibatch_equals_batch(spark, tmp_path):
     """VERDICT guard: the update-mode memory-sink 'keep the max' rule
     must survive MULTI-batch input, not just the one-file availableNow

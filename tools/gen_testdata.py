@@ -2,11 +2,10 @@
 """Generate driver-shaped synthetic testdata at an arbitrary scale factor.
 
 The driver ships read-only parquet at sf in {0.001, 0.01, 0.1}
-(TESTDATA.md). Scale-audit sweeps need a 10x point (sf1) the driver does
-not provide, and /root/testdata is read-only — so this generator
-reproduces the SAME schema and value distributions (measured from the
-sf0.1 tables: vocabulary, ranges, category sets, key relationships) at
-any sf, under the repo (default .data/sf{sf}, gitignored).
+(TESTDATA.md). For any other sf this generator reproduces the SAME
+schema and value distributions (measured from the sf0.1 tables:
+vocabulary, ranges, category sets, key relationships), under the repo
+by default (.data/sf{sf}, gitignored).
 
 NOTE this is NOT the driver's generator: correctness sweeps compare the
 Spark engine against the DuckDB oracle ON THE SAME FILES, so exact
@@ -16,7 +15,7 @@ driver data) and the same distribution SHAPE (tiny dense vocabulary ->
 near-dup-heavy documents, Jan-2024 monotonic event stream, unit-norm
 64-dim embeddings, TPC-H-ish star schema).
 
-Usage: python tools/gen_testdata.py 1.0 [outdir]
+Usage: python tools/gen_testdata.py SF [OUTDIR]   (e.g. SF = 0.05)
 """
 
 from __future__ import annotations
@@ -250,7 +249,10 @@ def main(sf: float, outdir: str) -> None:
 
 
 if __name__ == "__main__":
-    sf = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
+    if len(sys.argv) < 2:
+        print("usage: python tools/gen_testdata.py SF [OUTDIR]", file=sys.stderr)
+        sys.exit(2)
+    sf = float(sys.argv[1])
     out = (
         sys.argv[2]
         if len(sys.argv) > 2
