@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import tokens
+from .sampling import hash_deviate
 
 
 def token_shingles(text: Column, n: int = 5) -> Column:
@@ -100,11 +101,7 @@ def cap_per_domain(
     """
     from pyspark.sql.window import Window
 
-    dev = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    dev = hash_deviate(F.col(id_col), salt)
     w = Window.partitionBy(domain_col).orderBy(dev, F.col(id_col))
     return df.withColumn("domain_rank", F.row_number().over(w)).withColumn(
         "keep", F.col("domain_rank") <= F.lit(cap)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.text_funcs import distinct_tokens, fingerprint, word_jaccard
 from ..functions.vectors import dot, unit
 from .bounded import bounded_collect, min_label_components
+from .setsim import md5_token_vocab_hashes, minhash_md5_set_candidates
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -299,15 +300,7 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    toks_only = sigs.select("id", "tok")
-    paired = (
-        cand.join(toks_only.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a")), "id_a")
-        .join(toks_only.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b")), "id_b")
-    )
-    j = word_jaccard(F.col("tok_a"), F.col("tok_b"))
-    return paired.select(
-        "id_a", "id_b", F.round(j, 4).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _verify_pairs(cand, sigs, threshold)
 
 
 def connected_components(
@@ -627,84 +620,28 @@ def minhash_md5_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
     threshold: float = 0.7,
 ) -> DataFrame:
     """M2 (oracle-replayable tier): MinHash-LSH whose hash family is
-    md5-derived — ``conv(substr(md5(seed || ':' || token),1,15),16,10)``
-    — which DuckDB reproduces bit-for-bit, so the ENTIRE pipeline
-    (signatures, banding, candidate join, exact-Jaccard verify) is
-    SQL-checkable end to end. The xxhash64 variant (minhash_lsh_pairs)
-    stays the throughput path; this one is the correctness witness for
-    the same algorithm.
+    md5-derived — ``sampling.hash_deviate(token, seed)`` — which DuckDB
+    reproduces bit-for-bit, so the ENTIRE pipeline (signatures,
+    banding, candidate join, exact-Jaccard verify) is SQL-checkable end
+    to end. The xxhash64 variant (minhash_lsh_pairs) stays the
+    throughput path; this one is the correctness witness for the same
+    algorithm, and the doc-level reference of the set-level contracts.
 
-    Shape: tokens explode once; the 16 per-seed hashes are parallel
-    column expressions over the exploded rows (each token hashed once
-    per seed — no per-seed re-tokenization); signature = groupBy min;
-    bands = fixed concat of signature slots; candidates = equi-join on
-    (band, band_signature); every candidate is exact-verified, so no
-    false positives survive.
+    Shape: setsim.minhash_md5_set_candidates keyed by doc id (16
+    per-seed hashes over the vocabulary, groupBy-min signatures, 4
+    bands, band equi-join on bare ids); every candidate is
+    exact-verified, so no false positives survive.
     """
-    toks, banded = _md5_bands(df, text_col, id_col, n_hashes, bands)
-    a = banded.select("band", "bsig", F.col("id").alias("id_a"))
-    b = banded.select("band", "bsig", F.col("id").alias("id_b"))
-    cand = (
-        a.join(b, ["band", "bsig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return _verify_pairs(cand, toks, threshold)
-
-
-def _md5_bands(df, text_col, id_col, n_hashes, bands):
-    """Shared MinHash-md5 band builder: (toks, banded) where banded is
-    (id, band, bsig). Used by the self-join pair path and the
-    incremental new-vs-existing cross path."""
-    rows_per_band = n_hashes // bands
     toks = df.select(
         F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
     )
-    tok_rows = toks.select("id", F.explode("tok").alias("t"))
-    # vocab-sized hashing: each (seed, token) md5 computed once over the
-    # distinct vocabulary and joined back — not once per (doc, token)
-    # row (see setsim.md5_token_vocab_hashes; bit-identical values)
-    from .setsim import md5_token_vocab_hashes
-
-    hashed = tok_rows.join(
-        md5_token_vocab_hashes(
-            tok_rows, "t", [(f"h{s}", f"{s}:") for s in range(n_hashes)]
-        ),
-        "t",
-    )
-    sig = hashed.groupBy("id").agg(
-        *[F.min(f"h{s}").alias(f"mh{s}") for s in range(n_hashes)]
-    )
-    # bare-id band join + distinct, tokens re-attached per candidate
-    # pair — same array-payload-off-the-shuffle device as
-    # minhash_lsh_pairs (measured there: ~10x at sf0.1)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bsig"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bsig")
-    return toks, banded
+    cand = minhash_md5_set_candidates(
+        toks.select(F.col("id").alias("mask"), F.explode("tok").alias("t"))
+    ).select(F.col("mask_a").alias("id_a"), F.col("mask_b").alias("id_b"))
+    return _verify_pairs(cand, toks, threshold)
 
 
 def _verify_pairs(cand, toks, threshold):
@@ -719,38 +656,6 @@ def _verify_pairs(cand, toks, threshold):
     return paired.select("id_a", "id_b", F.round(j, 4).alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-
-
-def minhash_md5_incremental_pairs(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Incremental-ingest dedup: near-dup pairs between a NEW batch and
-    the EXISTING corpus only — the band join probes new-side signatures
-    against old-side signatures, so no old x old (already deduped) or
-    new x new (the batch self-dedup is a separate, tiny call) work is
-    ever done. At 100 TB the old side's band table is a precomputed
-    artifact maintained at ingest (like the IVF centroids), so each
-    arriving batch costs hash(batch) + one equi-join against it.
-    Returns (id_a=new, id_b=old, jaccard)."""
-    toks_n, banded_n = _md5_bands(new_df, text_col, id_col, n_hashes, bands)
-    toks_o, banded_o = _md5_bands(old_df, text_col, id_col, n_hashes, bands)
-    cand = (
-        banded_n.select("band", "bsig", F.col("id").alias("id_a"))
-        .join(
-            banded_o.select("band", "bsig", F.col("id").alias("id_b")),
-            ["band", "bsig"],
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    toks = toks_n.unionByName(toks_o)
-    return _verify_pairs(cand, toks, threshold)
 
 
 def simhash_md5_pairs(
@@ -780,12 +685,10 @@ def simhash_md5_pairs(
         F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
     )
     tok_rows = toks.select("id", F.explode("tok").alias("t"))
-    # vocab-sized hashing: the "sim:" md5 runs once per distinct token,
+    # vocab-sized hashing: the "sim" md5 runs once per distinct token,
     # joined back to the occurrence rows (bit-identical values)
-    from .setsim import md5_token_vocab_hashes
-
     hashed = tok_rows.join(
-        md5_token_vocab_hashes(tok_rows, "t", [("h", "sim:")]), "t"
+        md5_token_vocab_hashes(tok_rows, "t", [("h", "sim")]), "t"
     ).select("id", "h")
     votes = hashed.groupBy("id").agg(
         F.count("*").alias("n"),

@@ -25,14 +25,17 @@ from pyspark.sql import functions as F
 _SCALE = 1 << 60  # 15 hex digits of md5 -> [0, 2^60)
 
 
+def md5_long(expr: Column) -> Column:
+    """The engine's one md5 -> integer hash: the first 15 hex digits of
+    md5(expr) as a long in [0, 2^60). DuckDB twin:
+    CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)."""
+    return F.conv(F.substring(F.md5(expr), 1, 15), 16, 10).cast("long")
+
+
 def hash_deviate(key: Column, salt: str) -> Column:
     """Uniform integer deviate in [0, 2^60) as a pure function of
     (salt, key). JVM-side md5; DuckDB replays it exactly."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{salt}:"), key.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    return md5_long(F.concat(F.lit(f"{salt}:"), key.cast("string")))
 
 
 def deviate_sql(key_expr: str, salt: str) -> str:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import distinct_tokens, word_jaccard
+from .sampling import hash_deviate, md5_long
 
 
 def _ceil_mul_div(sz, threshold: float):
@@ -138,6 +139,14 @@ def prefix_filter_jaccard_pairs(
 DIGEST_MOD = 1_000_003
 
 
+def weighted_digest(w: str, *keys: str):
+    """The order-insensitive pair digest: sum over rows of
+    w * (md5 of the ':'-joined keys mod DIGEST_MOD), mod DIGEST_MOD. An
+    aggregate Column; it is null over no rows, so callers coalesce."""
+    hv = md5_long(F.concat_ws(":", *[F.col(k).cast("string") for k in keys]))
+    return F.sum((F.col(w) * (hv % DIGEST_MOD)) % DIGEST_MOD) % DIGEST_MOD
+
+
 def mask_relation(
     df: DataFrame,
     text_col: str = "text",
@@ -233,32 +242,13 @@ def _pair_stats_row(g: DataFrame, cand: DataFrame, threshold: float = 0.7) -> Da
         F.col("mask").alias("mask_a"),
         F.col("mask").alias("mask_b"),
     )
-    terms = cross.unionByName(within).withColumn(
-        "hv",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("mask_a").cast("string"),
-                        F.col("mask_b").cast("string"),
-                        F.col("je4").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % DIGEST_MOD,
-    )
+    terms = cross.unionByName(within)
     stats = terms.agg(
         F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_pairs"),
         F.coalesce(F.sum(F.col("w") * F.col("je4")), F.lit(0))
         .cast("long")
         .alias("jaccard_sum_e4"),
-        F.coalesce(F.sum(F.expr("(w * hv) % {m}".format(m=DIGEST_MOD))) % DIGEST_MOD, F.lit(0))
+        F.coalesce(weighted_digest("w", "mask_a", "mask_b", "je4"), F.lit(0))
         .cast("long")
         .alias("pair_digest"),
     )
@@ -341,11 +331,7 @@ def jaccard_pair_stats(
 
 
 def minhash_md5_pair_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """MinHash-LSH (md5 hash family) candidate pairs, exact-verified and
     folded to the stats row. The FULL banding pipeline runs — per-seed
@@ -353,54 +339,7 @@ def minhash_md5_pair_stats(
     token sets; the oracle replays the identical hash family, so a
     banding bug changes the candidate set and goes red."""
     toks, g = _mask_groups(df, text_col, id_col)
-    rows_per_band = n_hashes // bands
-
-    gt = g.join(toks, g["rep"] == toks["id"]).select(
-        "mask", F.explode("tok").alias("t")
-    )
-    # vocab-sized hashing: each (seed, token) md5 computed once and
-    # joined back (md5_token_vocab_hashes), never once per set-token row
-    hashed = gt.join(
-        md5_token_vocab_hashes(
-            gt, "t", [(f"h{s}", f"{s}:") for s in range(n_hashes)]
-        ),
-        "t",
-    )
-    sig = hashed.groupBy("mask").agg(
-        *[F.min(f"h{s}").alias(f"mh{s}") for s in range(n_hashes)]
-    )
-    # one explode, not a bands-way union: a union re-evaluates the whole
-    # signature chain per branch, and the self-join would double that
-    # again. banded is (bands * n_sets) rows — checkpoint it so the two
-    # join sides share one materialization.
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{s}").cast("string")
-                        for s in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                ).alias("bsig"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = (
-        sig.select("mask", F.explode(band_structs).alias("bb"))
-        .select("mask", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig"))
-        .localCheckpoint(eager=False)
-    )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bsig"])
-        .filter(F.col("a.mask") < F.col("b.mask"))
-        .select(F.col("a.mask").alias("mask_a"), F.col("b.mask").alias("mask_b"))
-        .distinct()
-    )
-    return _pair_stats_row(g, cand)
+    return _pair_stats_row(g, minhash_md5_set_candidates(mask_token_rows(g, toks)))
 
 
 # ---------------------------------------------------------------------------
@@ -436,14 +375,18 @@ def mask_token_rows(g: DataFrame, toks: DataFrame) -> DataFrame:
     )
 
 
+MD5_MINHASH_HASHES = 16  # md5-MinHash signature length ...
+MD5_MINHASH_BANDS = 4  # ... split into 4 bands of 4 slots
+
+
 def md5_token_vocab_hashes(
-    tok_rows: DataFrame, tok_col: str = "t", prefixes=None
+    tok_rows: DataFrame, tok_col: str = "t", salts=None
 ) -> DataFrame:
     """Seeded md5 token hashes computed over the DISTINCT token
     vocabulary, not the token stream: one row per distinct token with
-    one hash column per (alias, prefix) pair — join back to the token
-    rows to attach them. "Hash the vocabulary, not the stream": md5
-    depends only on (prefix, token), so hashing per (carrier, token)
+    one hash_deviate column per (alias, salt) pair — join back to the
+    token rows to attach them. "Hash the vocabulary, not the stream":
+    md5 depends only on (salt, token), so hashing per (carrier, token)
     row repeats every hash once per occurrence; this computes each
     exactly once (vocab-sized work) and lets AQE broadcast the vocab
     table when it is small. Bit-identical values to the inline
@@ -454,8 +397,8 @@ def md5_token_vocab_hashes(
     structural win (occurrences x seeds -> vocab x seeds hash calls) is
     what matters at web-scale vocab-to-occurrence ratios.
 
-    prefixes: list of (column_alias, literal_prefix); defaults to the
-    16-seed MinHash family ("0:".."15:").
+    salts: list of (column_alias, salt); defaults to the MinHash
+    family, salts "0".."15".
 
     Deliberate double-scan: the vocab ``distinct()`` and the caller's
     join-back both recompute the tok_rows lineage (scan + tokenize +
@@ -467,43 +410,29 @@ def md5_token_vocab_hashes(
     stage — within noise — while the vocab-sized hashing win it enables
     is the measured -20% at sf1. Callers with a cheap, narrow tok_rows
     lineage may checkpoint at the call site; the helper stays lazy."""
-    if prefixes is None:
-        prefixes = [(f"h{s}", f"{s}:") for s in range(16)]
+    if salts is None:
+        salts = [(f"h{s}", str(s)) for s in range(MD5_MINHASH_HASHES)]
     vocab = tok_rows.select(tok_col).distinct()
     return vocab.select(
-        tok_col,
-        *[
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(p), F.col(tok_col))), 1, 15),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias(a)
-            for a, p in prefixes
-        ],
+        tok_col, *[hash_deviate(F.col(tok_col), salt).alias(a) for a, salt in salts]
     )
 
 
-def minhash_md5_set_bands(
-    mask_toks: DataFrame, n_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """md5-MinHash band rows (mask, band, bsig) over distinct token sets
-    — bit-identical to operators.dedup._md5_bands run on any document
-    carrying that set (same seeds, same concat format), so doc-level
-    oracles and set-level contracts agree exactly."""
-    rows_per_band = n_hashes // bands
+def minhash_md5_set_bands(mask_toks: DataFrame) -> DataFrame:
+    """md5-MinHash band rows (mask, band, bsig) over the (mask, t)
+    token rows: the one band builder. The key need not be a set mask —
+    operators.dedup.minhash_md5_pairs keys it by doc id — and the
+    banding depends only on the token set, so doc-level oracles and
+    set-level contracts agree exactly."""
+    rows_per_band = MD5_MINHASH_HASHES // MD5_MINHASH_BANDS
     # vocab-sized hashing (md5_token_vocab_hashes): bit-identical, but
     # each (seed, token) md5 runs once, not once per set-token row
-    hashed = mask_toks.join(
-        md5_token_vocab_hashes(
-            mask_toks, "t", [(f"h{s}", f"{s}:") for s in range(n_hashes)]
-        ),
-        "t",
-    )
+    hashed = mask_toks.join(md5_token_vocab_hashes(mask_toks), "t")
     sig = hashed.groupBy("mask").agg(
-        *[F.min(f"h{s}").alias(f"mh{s}") for s in range(n_hashes)]
+        *[F.min(f"h{s}").alias(f"mh{s}") for s in range(MD5_MINHASH_HASHES)]
     )
+    # one explode, not a bands-way union: a union re-evaluates the whole
+    # signature chain per branch
     banded = sig.select(
         "mask",
         F.explode(
@@ -519,7 +448,7 @@ def minhash_md5_set_bands(
                             ],
                         ).alias("bsig"),
                     )
-                    for b in range(bands)
+                    for b in range(MD5_MINHASH_BANDS)
                 ]
             )
         ).alias("bb"),
@@ -527,6 +456,19 @@ def minhash_md5_set_bands(
     # both sides of the band self-join (and any new-vs-old probe) read
     # this relation — one materialization, distinct-set-sized
     return banded.localCheckpoint(eager=False)
+
+
+def minhash_md5_set_candidates(mask_toks: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (mask_a < mask_b) that share at least
+    one md5-MinHash band: the band self-join, unverified."""
+    banded = minhash_md5_set_bands(mask_toks)
+    return (
+        banded.alias("a")
+        .join(banded.alias("b"), ["band", "bsig"])
+        .filter(F.col("a.mask") < F.col("b.mask"))
+        .select(F.col("a.mask").alias("mask_a"), F.col("b.mask").alias("mask_b"))
+        .distinct()
+    )
 
 
 def minhash_md5_set_dup_pairs(
@@ -537,12 +479,5 @@ def minhash_md5_set_dup_pairs(
     operators.dedup.minhash_md5_pairs (round(jaccard,4) >= t). Identical
     sets (jaccard 1.0) are NOT emitted here — they are the within-group
     terms callers weight by C(c, 2)."""
-    banded = minhash_md5_set_bands(mask_toks)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bsig"])
-        .filter(F.col("a.mask") < F.col("b.mask"))
-        .select(F.col("a.mask").alias("mask_a"), F.col("b.mask").alias("mask_b"))
-        .distinct()
-    )
+    cand = minhash_md5_set_candidates(mask_toks)
     return cand.withColumn("je4", je4_expr()).filter(F.col("je4") >= thresh_e4)

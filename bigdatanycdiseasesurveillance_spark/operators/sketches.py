@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import hash_deviate
+
 
 def misra_gries_candidates(items: DataFrame, col: str, k: int) -> DataFrame:
     """Per-partition Misra-Gries summaries, unioned and deduped.
@@ -88,8 +90,7 @@ def cms_bucket(col, d: int, width: int):
     SQL twin: CAST(('0x'||substr(md5('cms:{d}:'||x),1,15)) AS BIGINT) %
     width — DuckDB reproduces it bit-for-bit, so sketches built here are
     oracle-checkable exactly (same family as minhash_md5_pairs)."""
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(f"cms:{d}:"), col)), 1, 15), 16, 10)
-    return h.cast("long") % width
+    return hash_deviate(col, f"cms:{d}") % width
 
 
 def cms_table(items: DataFrame, col: str, width: int = 32, depth: int = 4) -> DataFrame:

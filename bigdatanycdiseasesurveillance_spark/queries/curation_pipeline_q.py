@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.sampling import hash_deviate
 from ..registry import register
 from ..tables import table, values_dim
 from .curation_q import _BENCH_MOD, _shingle_sql
@@ -125,7 +126,6 @@ def cur_full_pipeline(spark, sf_dir):
     null-skipping conditional sums (matching SUM over an empty frame).
     """
     from ..operators.curation import token_shingles
-    from ..operators.sampling import hash_deviate
     from ..tables import parallelize_scan
 
     # NOT rebalanced corpus-wide: an interleaved A/B (r13) measured the
@@ -321,13 +321,7 @@ def llm_prep_pipeline(spark, sf_dir):
             F.coalesce(F.col("canonical_id"), F.col("doc_id")).alias("canon"),
         )
     )
-    dev = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("gsplit:"), F.col("canon").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    dev = hash_deviate(F.col("canon"), "gsplit")
     split = canon.select(
         "doc_id",
         F.when(dev < F.lit(230584300921369408), "test")

@@ -209,35 +209,12 @@ def dedup_containment_pairs(spark, sf_dir):
         F.col("mask").alias("mask_a"),
         F.col("mask").alias("mask_b"),
     )
-    terms = cross.unionByName(within).withColumn(
-        "hv",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("source"),
-                        F.col("mask_a").cast("string"),
-                        F.col("mask_b").cast("string"),
-                        F.col("cmax_e4").cast("string"),
-                        F.col("cmin_e4").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % SS.DIGEST_MOD,
-    )
+    terms = cross.unionByName(within)
     stats = terms.groupBy("source").agg(
         F.sum("w").cast("long").alias("n_pairs"),
         F.sum(F.col("w") * F.col("cmax_e4")).cast("long").alias("contain_max_sum_e4"),
         F.sum(F.col("w") * F.col("cmin_e4")).cast("long").alias("contain_min_sum_e4"),
-        (
-            F.sum(F.expr(f"(w * hv) % {SS.DIGEST_MOD}")) % SS.DIGEST_MOD
-        )
+        SS.weighted_digest("w", "source", "mask_a", "mask_b", "cmax_e4", "cmin_e4")
         .cast("long")
         .alias("pair_digest"),
     )
@@ -519,9 +496,8 @@ def dedup_incremental_new_vs_old(spark, sf_dir):
     that stays flat as the corpus grows. Folded to the multiplicity-
     weighted stats row (n_new/old docs and sets, weighted pair count,
     exact fixed-point jaccard sum, order-insensitive digest): the pair
-    LIST is quadratic on template-heavy corpora (the r5 sf1 finding);
-    the per-doc pair stream stays available as
-    D.minhash_md5_incremental_pairs."""
+    LIST is quadratic on template-heavy corpora (the r5 sf1 finding).
+    operators.dedup.minhash_md5_pairs is the doc-level pair reference."""
     from ..operators import setsim as SS
 
     docs = table(spark, sf_dir, "documents")
@@ -548,11 +524,9 @@ def dedup_incremental_new_vs_old(spark, sf_dir):
         .agg(F.count("*").cast("long").alias("c"))
         .localCheckpoint(eager=False)
     )
-    # the md5-minhash band table feeds BOTH sides of the band join —
-    # materialize it once instead of signing the corpus twice (r14)
-    banded = SS.minhash_md5_set_bands(
-        SS.mask_token_rows(gm, toks)
-    ).localCheckpoint(eager=False)
+    # the md5-minhash band table feeds BOTH sides of the band join;
+    # minhash_md5_set_bands materializes it once
+    banded = SS.minhash_md5_set_bands(SS.mask_token_rows(gm, toks))
     cand = (
         banded.alias("bn")
         .join(F.broadcast(gn.select("mask")), "mask", "left_semi")
@@ -573,34 +547,12 @@ def dedup_incremental_new_vs_old(spark, sf_dir):
         .join(F.broadcast(go.select(F.col("mask").alias("mo"), F.col("c").alias("co"))), "mo")
         .select("mn", "mo", "je4", (F.col("cn") * F.col("co")).alias("w"))
     )
-    ht = q.withColumn(
-        "hv",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("mn").cast("string"),
-                        F.col("mo").cast("string"),
-                        F.col("je4").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % SS.DIGEST_MOD,
-    )
-    stats = ht.agg(
+    stats = q.agg(
         F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_pairs"),
         F.coalesce(F.sum(F.col("w") * F.col("je4")), F.lit(0))
         .cast("long")
         .alias("jaccard_sum_e4"),
-        F.coalesce(
-            F.sum(F.expr(f"(w * hv) % {SS.DIGEST_MOD}")) % SS.DIGEST_MOD, F.lit(0)
-        )
+        F.coalesce(SS.weighted_digest("w", "mn", "mo", "je4"), F.lit(0))
         .cast("long")
         .alias("pair_digest"),
     )
@@ -876,8 +828,8 @@ def _gold_scratch_dir(sf_dir: str, kind: str) -> str:
 
     Cross-process safety (r8 advisor finding): the shared dir is
     guarded by a non-blocking flock held for the process lifetime —
-    without it, a gate_one re-run concurrent with an audit would rmtree
-    the audit's mid-run gold versions. If another process holds the
+    without it, a gate_sim run concurrent with a benchmark run would
+    rmtree the other's mid-run gold versions. If another process holds the
     lock, fall back to a pid-suffixed dir cleaned up at exit (bounded
     litter: only under actual concurrency, and only until exit)."""
     import atexit

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import token_count, tokens
+from ..operators.sampling import md5_long
 from ..registry import register
 from ..tables import table, values_dim
 
@@ -210,7 +211,7 @@ def dq_rowhash_checksum(spark, sf_dir):
         F.unix_micros(F.col("ts")).cast("string"),
         F.round(F.col("value") * 100, 0).cast("long").cast("string"),
     )
-    h = F.conv(F.substring(F.md5(fingerprint), 1, 15), 16, 10).cast("long")
+    h = md5_long(fingerprint)
     return ev.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.bit_xor(h).alias("content_checksum"),

@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import tokens
+from ..operators.sampling import hash_deviate
 from ..registry import register
 from ..tables import table
 
@@ -420,11 +421,7 @@ def cur_importance_resampling(spark, sf_dir):
     feat = bg.select(
         "doc_id",
         "source",
-        (
-            F.conv(F.substring(F.md5(F.concat(F.lit("dsir:"), F.col("b"))), 1, 15), 16, 10)
-            .cast("long")
-            % 64
-        ).alias("bkt"),
+        (hash_deviate(F.col("b"), "dsir") % 64).alias("bkt"),
     )
     stats = feat.groupBy("bkt").agg(
         F.sum(F.when(F.col("source") == "src0", 1).otherwise(0)).alias("ct"),
@@ -438,17 +435,7 @@ def cur_importance_resampling(spark, sf_dir):
             - F.log((F.col("cr") + 1.0) / (F.col("tr") + 64))
         ).alias("logratio"),
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("gum:"), F.col("doc_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-        + 0.5
-    ) / 1000000.0
+    u = (hash_deviate(F.col("doc_id"), "gum") % 1000000 + 0.5) / 1000000.0
     return (
         feat.join(F.broadcast(lr), "bkt")
         .groupBy("doc_id", "source")

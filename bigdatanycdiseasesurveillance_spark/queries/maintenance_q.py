@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.sampling import md5_long
 from ..registry import register
 from ..tables import table, values_dim
 
@@ -226,8 +227,8 @@ def maint_compact_small_files(spark, sf_dir):
 
     def checksum(df):
         # order-insensitive content witness: XOR of per-row id hashes
-        h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        return df.select(h.cast("long").alias("h")).agg(
+        h = md5_long(F.col("event_id").cast("string"))
+        return df.select(h.alias("h")).agg(
             F.count("*").cast("long").alias("n"),
             F.expr("bit_xor(h)").alias("xor_h"),
         )

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.sampling import hash_deviate
 from ..registry import register
 from ..tables import table, values_dim
 
@@ -474,11 +475,7 @@ def dq_group_split_leakfree(spark, sf_dir):
         )
     )
     thr = 230584300921369408
-    dev = F.conv(
-        F.substring(F.md5(F.concat(F.lit("gsplit:"), F.col("canon").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    dev = hash_deviate(F.col("canon"), "gsplit")
     split = canon.select(
         "doc_id",
         F.when(dev < F.lit(thr), F.lit("test")).otherwise(F.lit("train")).alias("split"),

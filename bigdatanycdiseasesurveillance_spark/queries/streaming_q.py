@@ -144,13 +144,11 @@ def stream_hopping_counts(spark, sf_dir):
                    AS sum_cents
         FROM events GROUP BY user_id
     """,
-    tags=("streaming", "ST6", "state", "transformWithState"),
+    tags=("streaming", "ST6", "state"),
 )
 def stream_user_totals(spark, sf_dir):
-    """ST6, Spark-4 arbitrary-state tier: per-user lifetime totals via
-    keyed ValueState — transformWithStateInPandas where its protobuf
-    dependency exists, the applyInPandasWithState twin otherwise (same
-    keyed update-mode state machinery, identical result)."""
+    """ST6, arbitrary keyed state: per-user lifetime totals via
+    applyInPandasWithState in update mode."""
     return P.streaming_user_totals(spark, sf_dir)
 
 

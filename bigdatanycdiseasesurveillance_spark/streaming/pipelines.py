@@ -9,7 +9,8 @@ driver-RAM dedup state (deduplication_consumer.py:107-110). Here:
 - drain-and-stop      -> trigger(availableNow=True)          (ST4)
 - multi-sink fanout   -> independent writeStream queries     (ST5)
 - stateful dedup      -> withWatermark + dropDuplicates      (ST6)
-- custom state        -> applyInPandasWithState sessionizer  (ST6)
+- custom state        -> applyInPandasWithState sessionizer
+                         and per-user totals                 (ST6)
 - event-time windows  -> window() aggregation + watermark    (ST7)
 
 File-source streams stand in for Kafka topics (same DataFrame API
@@ -247,105 +248,38 @@ def streaming_sessionize(
     return out.groupBy("user_id").agg(F.max("n_sessions").alias("n_sessions"))
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    wire protocol; absent from this container (verified: the TWS driver
-    worker crashes importing google.protobuf.descriptor). The TWS path
-    below auto-activates where protobuf exists."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ST6 (Spark-4 arbitrary-state tier): per-user lifetime event count
-    and exact cents total via keyed ValueState. Primary implementation
-    is transformWithStateInPandas (the 4.x successor of
-    applyInPandasWithState: named state variables, TTL, timers); where
-    its protobuf dependency is missing the applyInPandasWithState form
-    below computes the identical result through the same keyed
-    update-mode state machinery. Both emit cumulative totals per
-    micro-batch; max() per user is the final emission under any batch
-    split (same convergence argument as streaming_sessionize). NOTE:
-    only the applyInPandasWithState tier is exercised by tests in this
-    container (protobuf absent); the TWS branch runs on clusters that
-    ship protobuf."""
+    """ST6 (arbitrary keyed state): per-user lifetime event count and
+    exact cents total via applyInPandasWithState in update mode. Each
+    micro-batch emits cumulative totals, so max() per user is the final
+    emission under any batch split (same convergence argument as
+    streaming_sessionize)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     src = stream_table(spark, sf_dir, "events").select(
         "user_id", F.round(F.col("value") * 100, 0).cast("long").alias("cents")
     )
-    out_schema = "user_id BIGINT, n_events BIGINT, sum_cents BIGINT"
-    if _tws_available():
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-        class UserTotals(StatefulProcessor):
-            def init(self, handle):
-                self._state = handle.getValueState("totals", "n BIGINT, cents BIGINT")
+    def fn(key, pdf_iter, state):
+        import pandas as _pd
 
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as _pd
-
-                n, cents = self._state.get() if self._state.exists() else (0, 0)
-                for pdf in rows:
-                    n += len(pdf)
-                    cents += int(pdf["cents"].sum())
-                self._state.update((n, cents))
-                yield _pd.DataFrame(
-                    [{"user_id": key[0], "n_events": n, "sum_cents": cents}]
-                )
-
-            def close(self):
-                pass
-
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        try:
-            prev_provider = spark.conf.get(provider_key)
-        except Exception:
-            prev_provider = None
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        n, cents = state.get if state.exists else (0, 0)
+        for pdf in pdf_iter:
+            n += len(pdf)
+            cents += int(pdf["cents"].sum())
+        state.update((n, cents))
+        yield _pd.DataFrame(
+            [{"user_id": key[0], "n_events": n, "sum_cents": cents}]
         )
-        try:
-            totals = src.groupBy("user_id").transformWithStateInPandas(
-                statefulProcessor=UserTotals(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-            out = _run_to_memory(totals, "update")
-        finally:
-            # RocksDB is required by TWS but must not leak to every later
-            # streaming query in the session.
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
-    else:
-        from pyspark.sql.streaming.state import GroupStateTimeout
 
-        def fn(key, pdf_iter, state):
-            import pandas as _pd
-
-            n, cents = state.get if state.exists else (0, 0)
-            for pdf in pdf_iter:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            state.update((n, cents))
-            yield _pd.DataFrame(
-                [{"user_id": key[0], "n_events": n, "sum_cents": cents}]
-            )
-
-        totals = src.groupBy("user_id").applyInPandasWithState(
-            fn,
-            out_schema,
-            "n BIGINT, cents BIGINT",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-        out = _run_to_memory(totals, "update")
+    totals = src.groupBy("user_id").applyInPandasWithState(
+        fn,
+        "user_id BIGINT, n_events BIGINT, sum_cents BIGINT",
+        "n BIGINT, cents BIGINT",
+        "update",
+        GroupStateTimeout.NoTimeout,
+    )
+    out = _run_to_memory(totals, "update")
     return out.groupBy("user_id").agg(
         F.max("n_events").cast("long").alias("n_events"),
         F.max("sum_cents").cast("long").alias("sum_cents"),

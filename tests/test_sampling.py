@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.operators.sampling import (
+    md5_long,
     sample_bernoulli,
     sample_stratified,
     train_test_split,
@@ -51,3 +54,15 @@ def test_stratified_respects_full_and_zero_rates(spark, sf_dir):
     got = {r["source"] for r in out.select("source").distinct().collect()}
     assert got == {"src0"}
     assert out.count() == docs.filter(F.col("source") == "src0").count()
+
+
+@pytest.mark.parametrize("value", ["", "fever cough", "fièvre 發燒 ☃", 9007199254740993])
+def test_md5_long_matches_duckdb_twin(spark, value):
+    """md5_long is the engine's one md5 -> long hash; every oracle
+    replays it as CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)."""
+    got = spark.range(1).select(md5_long(F.lit(value).cast("string"))).first()[0]
+    want = duckdb.sql(
+        "SELECT CAST(('0x' || substr(md5(CAST($v AS VARCHAR)), 1, 15)) AS BIGINT)",
+        params={"v": value},
+    ).fetchone()[0]
+    assert got == want and 0 <= got < 1 << 60

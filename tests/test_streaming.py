@@ -356,12 +356,8 @@ def test_outer_join_multibatch_timeout_emission(spark, tmp_path):
 
 
 def test_user_totals_state_tiers_agree(spark, sf_dir):
-    """stream_user_totals picks transformWithStateInPandas when its
-    protobuf dependency exists and the applyInPandasWithState twin
-    otherwise; whichever tier ran must equal the batch groupBy. (In
-    this container protobuf is absent — verified — so this exercises
-    the fallback; on a protobuf-bearing cluster the same assert covers
-    the TWS branch.)"""
+    """stream_user_totals' keyed applyInPandasWithState totals must
+    equal the batch groupBy."""
     from bigdatanycdiseasesurveillance_spark.registry import all_specs
     from bigdatanycdiseasesurveillance_spark.tables import table
 
@@ -382,38 +378,6 @@ def test_user_totals_state_tiers_agree(spark, sf_dir):
         .collect()
     }
     assert got == want
-
-
-def test_user_totals_tws_branch_equals_fallback(spark, sf_dir, monkeypatch):
-    """Explicit row for the transformWithStateInPandas tier (r11
-    verdict directive #5): when protobuf exists, FORCE the TWS branch
-    and pin it row-equal to the applyInPandasWithState twin; when it
-    does not (this container — pip install is out of scope for the
-    sandbox), skip WITH REASON so the untested branch is a visible,
-    reasoned skip instead of a silently half-covered test."""
-    import pytest
-
-    import bigdatanycdiseasesurveillance_spark.streaming.pipelines as P
-
-    if not P._tws_available():
-        pytest.skip(
-            "transformWithStateInPandas branch untestable here: its "
-            "state-server wire protocol imports google.protobuf, which "
-            "is not installed in this container and cannot be added "
-            "(no pip install in the sandbox). The branch is covered by "
-            "this same test on any protobuf-bearing cluster."
-        )
-    monkeypatch.setattr(P, "_tws_available", lambda: True)
-    tws = {
-        tuple(r)
-        for r in P.streaming_user_totals(spark, sf_dir).collect()
-    }
-    monkeypatch.setattr(P, "_tws_available", lambda: False)
-    fallback = {
-        tuple(r)
-        for r in P.streaming_user_totals(spark, sf_dir).collect()
-    }
-    assert tws == fallback
 
 
 def test_foreachbatch_upsert_writes_one_gold_version_per_batch(spark, sf_dir):

@@ -1,7 +1,11 @@
 """Simulate the driver's correctness gate: run every queries() entry and
 compare to oracle_sql() in DuckDB.
 
-Usage:  cd /tmp && python /root/repo/tools/gate_sim.py [sf_dir]
+Usage, from a directory outside the repo:
+    python <repo>/tools/gate_sim.py [sf_dir] [name...]
+
+Query names after sf_dir restrict the run to those queries.
+SPARK_GRAFT_CPUS sets local[N] (default 8).
 
 MUST run from OUTSIDE the repo (e.g. /tmp): the driver's executors do
 not have the repo on sys.path, so pandas-UDF closure-pickling bugs only
@@ -9,11 +13,14 @@ reproduce in that configuration. The script refuses to run from the
 repo root for that reason.
 """
 import os
-import sys, math, datetime
+import sys
 
 sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
 from pyspark.sql import SparkSession
+
+from gate_sim_lib import norm_rows
 
 if os.path.realpath(os.getcwd()) == os.path.realpath("/root/repo"):
     sys.exit("run from /tmp (or any non-repo cwd), not the repo root")
@@ -22,28 +29,6 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # optional: further argv entries restrict the sweep to those query names
 ONLY = set(sys.argv[2:])
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return None
-        r = round(v, 6)
-        return 0.0 if r == 0 else r  # collapse IEEE -0.0 (repr-sort hazard)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(norm_cell(x) for x in v)
-    return v
-
-
-def norm_rows(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(norm_cell(r[i]) for i in order) for r in rows), key=repr
-    )
 
 
 def main():

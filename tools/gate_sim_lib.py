@@ -1,5 +1,5 @@
-"""Row normalization shared by gate_sim.py and gate_one.py (mirrors the
-driver's order-insensitive compare)."""
+"""Row normalization shared by gate_sim.py and perfbench's output
+checks (an order-insensitive row compare)."""
 import datetime
 import math
 
