@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.sql_text import dlit, ident, slit
 from ..tables import values_dim
 
 # (borough, zip_prefix) — J2's zip-prefix lookup
@@ -102,7 +103,8 @@ def enrich_with_location(
     null signal for it — same as the reference's absent-field handling.
 
     Construction note: the cascade is assembled as ONE spark.sql
-    statement over a temp view of `records` (dims inline as VALUES →
+    statement over `records`, passed as spark.sql's DataFrame argument,
+    which makes and drops its own temp view (dims inline as VALUES →
     LocalRelation, so broadcasting them costs no job). PySpark Datasets
     analyze eagerly per transformation, so the previous ~15-op
     DataFrame chain paid ~15 rounds of growing-plan analysis (~0.7 s
@@ -113,20 +115,14 @@ def enrich_with_location(
     cols = records.columns
 
     def _sig(name: str, typ: str = "STRING") -> str:
-        return f"r.`{name}`" if name in cols else f"CAST(NULL AS {typ})"
+        return f"r.{ident(name)}" if name in cols else f"CAST(NULL AS {typ})"
 
     sub_c, zip_c, text_c = _sig(subreddit_col), _sig(zip_col), _sig(text_col)
     lat_c, lon_c = _sig(lat_col, "DOUBLE"), _sig(lon_col, "DOUBLE")
 
-    def _slit(v: str) -> str:
-        # Same escaping as tables.values_dim: Spark's parser interprets
-        # backslash escapes inside string literals, and a dim value with
-        # an apostrophe ("hell's kitchen") must not break the SQL.
-        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-
     def _values(rows, names) -> str:
         def lit(v):
-            return _slit(v) if isinstance(v, str) else repr(float(v)) + "D"
+            return slit(v) if isinstance(v, str) else dlit(v)
 
         body = ", ".join(
             "(" + ", ".join(lit(v) for v in r) + ")" for r in rows
@@ -135,7 +131,7 @@ def enrich_with_location(
 
     def _alias_case(pick) -> str:
         whens = " ".join(
-            f"WHEN instr(__text_lc, {_slit(a)}) > 0 THEN {_slit(pick(a, n))}"
+            f"WHEN instr(__text_lc, {slit(a)}) > 0 THEN {slit(pick(a, n))}"
             for a, n in ALIASES
         )
         return f"CASE {whens} ELSE NULL END"
@@ -145,19 +141,12 @@ def enrich_with_location(
     nz_rows = [(z, n[0], n[1]) for n in NEIGHBORHOODS for z in n[6]]
     bz_rows = [(p, b) for b, p in BOROUGH_ZIP_PREFIXES]
 
-    # uuid-suffixed view: a fixed name lets concurrent/nested enrichments
-    # in one session clobber each other's input between create and
-    # spark.sql, and leaks into session state. Analysis is eager, so the
-    # view can be dropped as soon as spark.sql returns the DataFrame.
-    import uuid
-
-    view = f"__loc_enrich_records_{uuid.uuid4().hex}"
-    records.createOrReplaceTempView(view)
-    out_cols = ", ".join(f"r.`{c}`" for c in cols)
+    out_cols = ", ".join(f"r.{ident(c)}" for c in cols)
     # the alias when-chain is computed ONCE in the `r` subquery:
     # inlining it into the three output expressions tripled the
     # generated-code size and was the dominant Janino-compile cost
-    out = spark.sql(f"""
+    return spark.sql(
+        f"""
         SELECT /*+ BROADCAST(s), BROADCAST(n), BROADCAST(z), BROADCAST(p) */
                {out_cols},
                COALESCE(s.sub_nbhd, n.geo_nbhd, z.zip_nbhd, r.__alias_nbhd)
@@ -174,7 +163,7 @@ def enrich_with_location(
             SELECT r.*,
                    {_alias_case(lambda a, n: n)} AS __alias_nbhd,
                    {_alias_case(lambda a, n: _NB_BOROUGH[n])} AS __alias_borough
-            FROM (SELECT r.*, lower({text_c}) AS __text_lc FROM {view} r) r
+            FROM (SELECT r.*, lower({text_c}) AS __text_lc FROM {{records}} r) r
         ) r
         LEFT JOIN ({_values(sub_rows, ["subreddit", "sub_nbhd", "sub_borough"])}) s
                ON lower({sub_c}) = s.subreddit
@@ -185,6 +174,6 @@ def enrich_with_location(
                ON {zip_c} = z.zip
         LEFT JOIN ({_values(bz_rows, ["zip_prefix", "pfx_borough"])}) p
                ON substring({zip_c}, 1, 3) = p.zip_prefix
-    """)
-    spark.catalog.dropTempView(view)
-    return out
+        """,
+        records=records,
+    )

@@ -10,40 +10,48 @@ projection, no row-at-a-time logic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ..functions.sql_text import ident, slit, with_columns
 
 
-def coalesce_timestamp(df: DataFrame, candidates: list[str]) -> Column:
+def coalesce_timestamp(columns: list[str], candidates: list[str]) -> str:
     """First non-null timestamp across candidate columns (missing
     columns are skipped) — psql_db_client.py:290-306's chain."""
-    cols = [
-        F.col(c).cast("timestamp") for c in candidates if c in df.columns
-    ]
-    return F.coalesce(*cols) if cols else F.lit(None).cast("timestamp")
+    cols = [f"CAST({ident(c)} AS TIMESTAMP)" for c in candidates if c in columns]
+    return f"coalesce({', '.join(cols)})" if cols else "CAST(NULL AS TIMESTAMP)"
 
 
-def synthesize_id(df: DataFrame, id_candidates: list[str], content_cols: list[str]) -> Column:
+def synthesize_id(columns: list[str], id_candidates: list[str], content_cols: list[str]) -> str:
     """First non-null id, else md5 of the concatenated content — the
     reference's synthetic-id fallback (psql_db_client.py:285-288)."""
-    cands = [F.col(c).cast("string") for c in id_candidates if c in df.columns]
-    content = F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in content_cols]))
-    return F.coalesce(*cands, content) if cands else content
+    cands = [f"CAST({ident(c)} AS STRING)" for c in id_candidates if c in columns]
+    parts = ", ".join(f"CAST({ident(c)} AS STRING)" for c in content_cols)
+    content = f"md5(concat_ws('|', {parts}))"
+    return f"coalesce({', '.join(cands + [content])})" if cands else content
 
 
-def classify_source(source_file: Column) -> Column:
+# (label, file-name substrings), first match wins
+_SOURCE_LABELS = (
+    ("reddit", ("reddit",)),
+    ("bluesky", ("bluesky",)),
+    ("rss", ("rss",)),
+    ("nyc_311", ("311",)),
+    ("nyc_press", ("press",)),
+    ("nyc_doh", ("covid", "respiratory")),
+)
+
+
+def classify_source(source_file: str) -> str:
     """Source label from the originating file name
     (psql_db_client.py:245-273)."""
-    f = F.lower(source_file)
-    return (
-        F.when(f.contains("reddit"), "reddit")
-        .when(f.contains("bluesky"), "bluesky")
-        .when(f.contains("rss"), "rss")
-        .when(f.contains("311"), "nyc_311")
-        .when(f.contains("press"), "nyc_press")
-        .when(f.contains("covid") | f.contains("respiratory"), "nyc_doh")
-        .otherwise("unknown")
+    f = f"lower({source_file})"
+    whens = " ".join(
+        "WHEN " + " OR ".join(f"contains({f}, {slit(k)})" for k in keys)
+        + f" THEN {slit(label)}"
+        for label, keys in _SOURCE_LABELS
     )
+    return f"CASE {whens} ELSE 'unknown' END"
 
 
 def normalize_events(
@@ -55,15 +63,17 @@ def normalize_events(
     source_file_col: str | None = None,
 ) -> DataFrame:
     """Produce the unified (id, timestamp, source, text_content) core of
-    the silver schema from any bronze source shape."""
+    the silver schema from any bronze source shape, as one projection
+    (one SQL statement, analysed once)."""
+    columns = df.columns
     cols = {
-        "timestamp": coalesce_timestamp(df, ts_candidates),
-        "id": synthesize_id(df, id_candidates, content_cols),
+        "timestamp": coalesce_timestamp(columns, ts_candidates),
+        "id": synthesize_id(columns, id_candidates, content_cols),
     }
-    if source_file_col and source_file_col in df.columns:
-        cols["source"] = classify_source(F.col(source_file_col))
-    if text_col and text_col in df.columns:
-        cols["text_content"] = F.col(text_col)
-    # one projection, analysed once (a withColumn chain re-analyses the
-    # growing plan per column)
-    return df.withColumns(cols)
+    if source_file_col and source_file_col in columns:
+        cols["source"] = classify_source(ident(source_file_col))
+    if text_col and text_col in columns:
+        cols["text_content"] = ident(text_col)
+    return df.sparkSession.sql(
+        f"SELECT {with_columns(columns, cols)} FROM {{df}}", df=df
+    )

@@ -1,2 +1,3 @@
-"""Column-expression helpers built only from pyspark.sql.functions —
-everything stays JVM-side inside whole-stage codegen."""
+"""Expression helpers built only from Spark's native functions —
+everything stays JVM-side inside whole-stage codegen. Most are Spark SQL
+text builders (see sql_text)."""

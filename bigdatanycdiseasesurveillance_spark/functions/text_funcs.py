@@ -8,8 +8,7 @@ helpers keep the same semantics as single Catalyst expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .sql_text import str_array
 
 # Small English stopword list used by quality scoring / language-id
 # heuristics; fixed order so derived arrays are deterministic.
@@ -18,27 +17,31 @@ STOPWORDS = (
     "for", "with", "at", "by", "from", "as", "it", "this", "that",
 )
 
+# Every helper below returns Spark SQL TEXT over the SQL text of its
+# argument (a column name, or any expression): callers splice it into a
+# statement, or wrap it as F.expr(helper("text")) for one Column. Text,
+# not Column objects: see functions.sql_text.
 
-def tokens(text: Column) -> Column:
+
+def tokens(text: str) -> str:
     """Whitespace tokens of lowercased text (empty tokens removed, so
     leading/trailing/double spaces don't shift counts)."""
-    return F.filter(F.split(F.lower(text), " "), lambda t: t != "")
+    return f"filter(split(lower({text}), ' '), t -> t != '')"
 
 
-def distinct_tokens(text: Column) -> Column:
-    return F.array_distinct(tokens(text))
+def distinct_tokens(text: str) -> str:
+    return f"array_distinct({tokens(text)})"
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
+def token_count(text: str) -> str:
+    return f"size({tokens(text)})"
 
 
-def stopword_count(text: Column) -> Column:
-    sw = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(sw, t)))
+def stopword_count(text: str) -> str:
+    return f"size(filter({tokens(text)}, t -> array_contains({str_array(STOPWORDS)}, t)))"
 
 
-def word_jaccard(a_tokens: Column, b_tokens: Column) -> Column:
+def word_jaccard(a_tokens: str, b_tokens: str) -> str:
     """Jaccard similarity of two distinct-token arrays.
 
     |A ∩ B| / (|A| + |B| - |A ∩ B|) — avoids array_union so only one
@@ -46,20 +49,18 @@ def word_jaccard(a_tokens: Column, b_tokens: Column) -> Column:
     try_divide: two EMPTY token sets have an undefined Jaccard -> NULL
     (ANSI mode would otherwise abort the whole job on one blank doc).
     """
-    inter = F.size(F.array_intersect(a_tokens, b_tokens)).cast("double")
-    return F.try_divide(
-        inter,
-        F.size(a_tokens).cast("double") + F.size(b_tokens).cast("double") - inter,
+    inter = f"CAST(size(array_intersect({a_tokens}, {b_tokens})) AS DOUBLE)"
+    return (
+        f"try_divide({inter}, CAST(size({a_tokens}) AS DOUBLE)"
+        f" + CAST(size({b_tokens}) AS DOUBLE) - {inter})"
     )
 
 
-def fingerprint(text: Column) -> Column:
+def fingerprint(text: str) -> str:
     """Deterministic document fingerprint: md5 of normalized text
     (normalize = lowercase, strip non-alphanumerics, collapse spaces).
     Reference analog: SHA-256 exact-dup hash
     (reference: src/spark_consumers/deduplication_consumer.py:138-148).
     """
-    norm = F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(text), "[^a-z0-9 ]", " ")), " +", " "
-    )
-    return F.md5(norm)
+    stripped = f"regexp_replace(lower({text}), '[^a-z0-9 ]', ' ')"
+    return f"md5(regexp_replace(trim({stripped}), ' +', ' '))"

@@ -19,9 +19,10 @@ label table — no step ever materializes O(n^2) pairs globally.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql_text import dlit
 from .bounded import bounded_collect, min_label_components
 
 # Small-corpus fast-path cap for the Lloyd loop: at or under this many
@@ -154,7 +155,7 @@ def kmeans_clusters(
     )
 
 
-def seeded_jitter(id_col: Column, seed: int = 42, scale: float = 0.02) -> Column:
+def seeded_jitter(id_expr: str, seed: int = 42, scale: float = 0.02) -> str:
     """M9: deterministic coordinate jitter in [-scale, scale) (the
     reference seeds numpy and adds uniform(-0.02, 0.02) so same-borough
     records don't collapse to one point,
@@ -162,10 +163,13 @@ def seeded_jitter(id_col: Column, seed: int = 42, scale: float = 0.02) -> Column
     row id — pure integer arithmetic, so ANY engine reproduces it
     bit-for-bit (np.random.uniform would differ per runtime); replayable
     on retries, unlike rand(). The id is reduced mod 2^31 first so the
-    multiply stays inside int64 at any id scale."""
-    m = F.lit(2147483648)
-    r = ((id_col % m) * F.lit(1103515245) + F.lit(12345 + seed)) % m
-    return (r.cast("double") / F.lit(2147483648.0)) * F.lit(2 * scale) - F.lit(scale)
+    multiply stays inside int64 at any id scale. Spark SQL text over the
+    SQL text of the id (2147483648 parses as a BIGINT literal)."""
+    r = f"((({id_expr}) % 2147483648) * 1103515245 + {12345 + seed}) % 2147483648"
+    return (
+        f"(CAST({r} AS DOUBLE) / {dlit(2147483648.0)}) * {dlit(2 * scale)}"
+        f" - {dlit(scale)}"
+    )
 
 
 def jitter_sql(id_expr: str, seed: int = 42, scale: float = 0.02) -> str:
@@ -377,10 +381,8 @@ def cellgrid_assign(
 
     spark = cells.sparkSession
     head = bounded_collect(
-        cells.select(
-            F.col("cx").cast("long").alias("cx"),
-            F.col("cy").cast("long").alias("cy"),
-            F.col("w").cast("long").alias("w"),
+        cells.selectExpr(
+            "CAST(cx AS BIGINT) AS cx", "CAST(cy AS BIGINT) AS cy", "CAST(w AS BIGINT) AS w"
         ),
         BOUNDED_CELLS_CAP,
         "cellgrid_assign: occupied-cell count exceeds the bounded-cells "

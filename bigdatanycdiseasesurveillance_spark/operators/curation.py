@@ -29,8 +29,9 @@ from ..functions.text_funcs import tokens
 from .sampling import hash_deviate
 
 
-def token_shingles(text: Column, n: int = 5) -> Column:
-    """Array of n-token shingles (space-joined) of lowercased text.
+def token_shingles(text: str, n: int = 5) -> Column:
+    """Array of n-token shingles (space-joined) of the lowercased text
+    that the SQL text `text` (a column name) evaluates to.
 
     The token array is bound to a lambda variable via a one-element
     transform so it materializes once per row; referencing the raw
@@ -48,7 +49,7 @@ def token_shingles(text: Column, n: int = 5) -> Column:
         )
         return F.slice(arr, 1, F.greatest(k, F.lit(0)))
 
-    return F.element_at(F.transform(F.array(tokens(text)), _shingles), 1)
+    return F.element_at(F.transform(F.array(F.expr(tokens(text))), _shingles), 1)
 
 
 def decontaminate(
@@ -69,11 +70,11 @@ def decontaminate(
     """
     c = corpus.select(
         F.col(id_col).alias("c_id"),
-        F.explode(F.array_distinct(token_shingles(F.col(text_col), n))).alias("sh"),
+        F.explode(F.array_distinct(token_shingles(text_col, n))).alias("sh"),
     )
     b = benchmark.select(
         F.col(id_col).alias("b_id"),
-        F.explode(F.array_distinct(token_shingles(F.col(text_col), n))).alias("sh"),
+        F.explode(F.array_distinct(token_shingles(text_col, n))).alias("sh"),
     )
     return (
         c.join(F.broadcast(b), "sh")
@@ -125,7 +126,7 @@ def repetition_signals(
     already-materialized array — bounded by document length, which a
     curation pipeline bounds upstream anyway.
     """
-    grams = token_shingles(F.col(text_col), n)
+    grams = token_shingles(text_col, n)
 
     def _sig(g: Column) -> Column:
         total = F.size(g)
@@ -173,7 +174,7 @@ def nb_quality_scores(docs: DataFrame, pos_source: str = "src0") -> DataFrame:
     """
     is_pos = F.col("source") == pos_source
     tok = docs.select(
-        "doc_id", "source", F.explode(tokens(F.col("text"))).alias("term")
+        "doc_id", "source", F.explode(F.expr(tokens("text"))).alias("term")
     )
     cnt = tok.groupBy("term").agg(
         F.sum(F.when(is_pos, 1).otherwise(0)).alias("pos_c"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql_text import dlit, ident
 from ..functions.text_funcs import distinct_tokens, fingerprint, word_jaccard
 from ..functions.vectors import dot, unit
 from .bounded import bounded_collect, min_label_components
@@ -38,7 +39,7 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     """M1: exact-duplicate groups by normalized-text hash. Returns one
     row per distinct content: (fp, canonical_id, dup_count)."""
     return (
-        df.select(fingerprint(F.col(text_col)).alias("fp"), F.col(id_col))
+        df.select(F.expr(fingerprint(text_col)).alias("fp"), F.col(id_col))
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("canonical_id"),
@@ -87,9 +88,9 @@ def jaccard_pairs(
         df,
         id_col,
         [F.col(source_col), F.floor(F.col(chars_col) / F.lit(char_bucket))],
-        {"tok": distinct_tokens(F.col(text_col))},
+        {"tok": F.expr(distinct_tokens(text_col))},
     )
-    j = word_jaccard(F.col("a_tok"), F.col("b_tok"))
+    j = F.expr(word_jaccard("a_tok", "b_tok"))
     return (
         pairs.select(
             F.col("a_id").alias("id_a"),
@@ -271,9 +272,6 @@ def minhash_lsh_pairs(
     uniform unless the corpus is degenerate, and a bucket's pairs are
     exactly those a (band, hash) equi-join would produce.
     """
-    sigs = df.select(
-        F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
-    ).withColumn("sig", F.expr(minhash_signature("tok", n_perm)))
     # candidates come from ONE (band, bucket) -> ids aggregate, expanded
     # to id_a < id_b: the signatures compute in a single stage (a bucket
     # self-join computed them once per join side), and the shuffle
@@ -281,26 +279,30 @@ def minhash_lsh_pairs(
     # document's token set once per band (8x) and again through the pair
     # dedup; tokens attach once per DISTINCT candidate pair afterward (2
     # narrow joins back to the signature table). Measured at sf0.1 with
-    # the bucket join: 258 s -> ~80 s, identical output.
+    # the bucket join: 258 s -> ~80 s, identical output. The whole
+    # operator is one statement (see functions.sql_text).
     bands_sql = ", ".join(
         f"named_struct('band', {b}, 'bucket', {h})"
         for b, h in enumerate(minhash_band_hashes("sig", n_perm, bands))
     )
-    cand = (
-        sigs.select("id", F.inline(F.expr(f"array({bands_sql})")))
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("id").alias("ids"))
-        .select(
-            F.inline(
-                F.expr(
-                    "flatten(transform(ids, a -> transform(filter(ids, b -> a < b),"
-                    " b -> named_struct('id_a', a, 'id_b', b))))"
-                )
-            )
+    return df.sparkSession.sql(
+        f"""
+        WITH toks AS (
+            SELECT id, tok, {minhash_signature("tok", n_perm)} AS sig
+            FROM (SELECT {ident(id_col)} AS id, {distinct_tokens(ident(text_col))} AS tok
+                  FROM {{df}})
+        ), cand AS (
+            SELECT DISTINCT id_a, id_b
+            FROM (SELECT inline(flatten(transform(ids, a -> transform(
+                             filter(ids, b -> a < b),
+                             b -> named_struct('id_a', a, 'id_b', b)))))
+                  FROM (SELECT band, bucket, collect_list(id) AS ids
+                        FROM (SELECT id, inline(array({bands_sql})) FROM toks)
+                        GROUP BY band, bucket))
         )
-        .distinct()
+        {_verify_pairs("cand", "toks", threshold)}""",
+        df=df,
     )
-    return _verify_pairs(cand, sigs, threshold)
 
 
 def connected_components(
@@ -339,7 +341,7 @@ def connected_components(
     # materializes this lazy checkpoint, and the loop's doubled edge list
     # is built from the checkpoint, not from `pairs`.
     checked = (
-        pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
+        pairs.selectExpr(f"{ident(id_a)} AS s", f"{ident(id_b)} AS d")
         .localCheckpoint(eager=False)
     )
 
@@ -497,7 +499,7 @@ def simhash_pairs(
     true Hamming distance. Returns (id_a, id_b, hamming)."""
     hashed = df.select(
         F.col(id_col).alias("id"),
-        F.transform(distinct_tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("th"),
+        F.transform(F.expr(distinct_tokens(text_col)), lambda t: F.xxhash64(t)).alias("th"),
     )
     sigs = hashed.select("id", simhash_signature("th", bits).alias("sig"))
     banded = sigs.select(
@@ -636,26 +638,26 @@ def minhash_md5_pairs(
     exact-verified, so no false positives survive.
     """
     toks = df.select(
-        F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
+        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
     )
     cand = minhash_md5_set_candidates(
         toks.select(F.col("id").alias("mask"), F.explode("tok").alias("t"))
     ).select(F.col("mask_a").alias("id_a"), F.col("mask_b").alias("id_b"))
-    return _verify_pairs(cand, toks, threshold)
+    return df.sparkSession.sql(
+        _verify_pairs("{cand}", "{toks}", threshold), cand=cand, toks=toks
+    )
 
 
-def _verify_pairs(cand, toks, threshold):
-    """Exact-Jaccard verification of bare-id candidate pairs (tokens
-    re-attached per pair, never shipped through the band shuffle)."""
-    paired = cand.join(
-        toks.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a")), "id_a"
-    ).join(
-        toks.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b")), "id_b"
-    )
-    j = word_jaccard(F.col("tok_a"), F.col("tok_b"))
-    return paired.select("id_a", "id_b", F.round(j, 4).alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
+def _verify_pairs(cand: str, toks: str, threshold: float) -> str:
+    """Exact-Jaccard verification of bare-id candidate pairs, as SQL
+    text over the relations named `cand` (id_a, id_b) and `toks` (id,
+    tok): tokens re-attach per pair, never shipped through the band
+    shuffle. Output (id_a, id_b, jaccard), jaccard rounded to 4."""
+    jaccard = f"round({word_jaccard('a.tok', 'b.tok')}, 4)"
+    return f"""
+        SELECT c.id_a, c.id_b, {jaccard} AS jaccard
+        FROM {cand} c JOIN {toks} a ON c.id_a = a.id JOIN {toks} b ON c.id_b = b.id
+        WHERE {jaccard} >= {dlit(threshold)}"""
 
 
 def simhash_md5_pairs(
@@ -682,7 +684,7 @@ def simhash_md5_pairs(
     """
     n_chunks = n_bits // chunk_bits
     toks = df.select(
-        F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
+        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
     )
     tok_rows = toks.select("id", F.explode("tok").alias("t"))
     # vocab-sized hashing: the "sim" md5 runs once per distinct token,

@@ -174,7 +174,7 @@ def sliding_chunks(
     from ..functions.text_funcs import tokens
 
     t = (
-        df.select(F.col(id_col), tokens(F.col(text_col)).alias("tok"))
+        df.select(F.col(id_col), F.expr(tokens(text_col)).alias("tok"))
         .withColumn("n", F.size("tok"))
         .filter(F.col("n") > 0)
     )

@@ -19,8 +19,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ..functions.sql_text import dlit, ident, str_array, with_columns
 
 # Keyword vocabularies play the role of the reference's disease /
 # symptom / hazard dictionaries (relevance_consumer.py:124-151). Order
@@ -31,9 +32,8 @@ SECONDARY_VOCAB = ("group", "batch", "query", "table", "row", "key", "data")
 HAZARD_VOCAB = ("error", "slow", "fail")
 
 
-def _matches(text_lc: Column, vocab: Sequence[str]) -> Column:
-    arr = F.array(*[F.lit(k) for k in vocab])
-    return F.filter(arr, lambda k: F.instr(text_lc, k) > 0)
+def _matches(text_lc: str, vocab: Sequence[str]) -> str:
+    return f"filter({str_array(vocab)}, k -> instr({text_lc}, k) > 0)"
 
 
 def extract_relevance(
@@ -54,30 +54,35 @@ def extract_relevance(
       (severity heuristic shape, relevance_consumer.py:243-249);
     - confidence: min(0.9, 0.25*n_primary + 0.1*n_secondary)
       (cap shape of relevance_consumer.py:251-264).
+
+    One SQL statement over `df` (batch or streaming); the matched
+    arrays repeat per output column, and codegen's subexpression
+    elimination computes each once per row.
     """
-    text_lc = F.lower(F.col(text_col))
+    text = ident(text_col)
+    text_lc = f"lower({text})"
     p = _matches(text_lc, primary)
     s = _matches(text_lc, secondary)
     h = _matches(text_lc, hazard)
-    n_p, n_s, n_h = F.size(p), F.size(s), F.size(h)
-    long_enough = F.length(F.col(text_col)) >= min_len
-    is_rel = long_enough & ((n_p > 0) | (n_s >= 2) | (n_h > 0))
-    severity = (
-        F.when(n_p >= 3, "severe")
-        .when(n_p >= 2, "moderate")
-        .otherwise("mild")
-    )
-    confidence = F.round(
-        F.least(F.lit(0.9), 0.25 * n_p.cast("double") + 0.1 * n_s.cast("double")), 2
-    )
-    return df.withColumns(
-        {
-            "matched_primary": F.array_join(p, ","),
-            "n_primary": n_p.cast("long"),
-            "n_secondary": n_s.cast("long"),
-            "n_hazard": n_h.cast("long"),
-            "is_relevant": is_rel,
-            "severity": severity,
-            "confidence": confidence,
-        }
+    n_p, n_s, n_h = f"size({p})", f"size({s})", f"size({h})"
+    cols = {
+        "matched_primary": f"array_join({p}, ',')",
+        "n_primary": f"CAST({n_p} AS BIGINT)",
+        "n_secondary": f"CAST({n_s} AS BIGINT)",
+        "n_hazard": f"CAST({n_h} AS BIGINT)",
+        "is_relevant": (
+            f"length({text}) >= {int(min_len)}"
+            f" AND ({n_p} > 0 OR {n_s} >= 2 OR {n_h} > 0)"
+        ),
+        "severity": (
+            f"CASE WHEN {n_p} >= 3 THEN 'severe'"
+            f" WHEN {n_p} >= 2 THEN 'moderate' ELSE 'mild' END"
+        ),
+        "confidence": (
+            f"round(least({dlit(0.9)}, {dlit(0.25)} * CAST({n_p} AS DOUBLE)"
+            f" + {dlit(0.1)} * CAST({n_s} AS DOUBLE)), 2)"
+        ),
+    }
+    return df.sparkSession.sql(
+        f"SELECT {with_columns(df.columns, cols)} FROM {{df}}", df=df
     )

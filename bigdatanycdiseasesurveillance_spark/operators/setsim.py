@@ -62,7 +62,7 @@ def prefix_filter_jaccard_pairs(
     4 (round-on-both-sides parity rule).
     """
     toks = df.select(
-        F.col(id_col).alias("id"), distinct_tokens(F.col(text_col)).alias("tok")
+        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
     ).filter(F.size("tok") > 0)
 
     tok_doc = toks.select("id", F.explode("tok").alias("t"))
@@ -97,7 +97,7 @@ def prefix_filter_jaccard_pairs(
         .distinct()
     )
 
-    j = word_jaccard(F.col("ta.stok"), F.col("tb.stok"))
+    j = F.expr(word_jaccard("ta.stok", "tb.stok"))
     return (
         cand.join(ordered.alias("ta"), F.col("id_a") == F.col("ta.id"))
         .join(ordered.alias("tb"), F.col("id_b") == F.col("tb.id"))
@@ -169,7 +169,7 @@ def mask_relation(
     toks = df.select(
         F.col(id_col).alias("id"),
         *extras,
-        distinct_tokens(F.col(text_col)).alias("tok"),
+        F.expr(distinct_tokens(text_col)).alias("tok"),
     )
     if not keep_empty:
         toks = toks.filter(F.size("tok") > 0)

@@ -16,7 +16,7 @@ from ..functions.text_funcs import stopword_count, tokens
 
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document token statistics (token counting for data budgets)."""
-    toks = tokens(F.col(text_col))
+    toks = F.expr(tokens(text_col))
     n = F.size(toks)
     total_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
@@ -24,7 +24,7 @@ def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("n_tokens", n.cast("long")).withColumn(
         "n_distinct_tokens", F.size(F.array_distinct(toks)).cast("long")
     ).withColumn(
-        "stop_cnt", stopword_count(F.col(text_col)).cast("long")
+        "stop_cnt", F.expr(stopword_count(text_col)).cast("long")
     ).withColumn(
         "avg_token_len",
         F.round(total_len.cast("double") / n.cast("double"), 4),
@@ -44,10 +44,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     d/n=0.3375, st/n=0.1875 -> 0.72625), where Spark's HALF_UP decimal
     rounding and DuckDB's double rounding disagree — caught by the sf1
     scale audit after three smaller SFs never hit a boundary."""
-    toks = tokens(F.col(text_col))
+    toks = F.expr(tokens(text_col))
     n = F.size(toks).cast("long")
     d = F.size(F.array_distinct(toks)).cast("long")
-    st = stopword_count(F.col(text_col)).cast("long")
+    st = F.expr(stopword_count(text_col)).cast("long")
     a = F.least(n, F.lit(60))
     s4 = F.least(st * 4, n)
     num = F.least(300 * n, 2 * a * n + 90 * d + 90 * s4)

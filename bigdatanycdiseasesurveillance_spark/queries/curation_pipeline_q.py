@@ -141,7 +141,7 @@ def cur_full_pipeline(spark, sf_dir):
         parallelize_scan(d.filter(is_bench))
         .select(
             F.explode(
-                F.array_distinct(token_shingles(F.col("text"), 5))
+                F.array_distinct(token_shingles("text", 5))
             ).alias("sh")
         )
         .distinct()
@@ -155,7 +155,7 @@ def cur_full_pipeline(spark, sf_dir):
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(token_shingles(F.col("text"), 5))
+                F.array_distinct(token_shingles("text", 5))
             ).alias("sh"),
         )
         .join(F.broadcast(bench_sh), "sh")
@@ -167,7 +167,7 @@ def cur_full_pipeline(spark, sf_dir):
     # all row-local signals in the scan stage; text is dropped before
     # the first exchange (guide §2.3: project before the exchange)
     tok = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
-    g2 = token_shingles(F.col("text"), 2)
+    g2 = token_shingles("text", 2)
     dup_frac = F.round(
         F.lit(1.0)
         - F.try_divide(
@@ -310,7 +310,7 @@ def llm_prep_pipeline(spark, sf_dir):
     from ..operators.packing import sliding_chunks
 
     docs = table(spark, sf_dir, "documents")
-    quality = docs.filter(F.size(_tokens(F.col("text"))) >= 30)
+    quality = docs.filter(F.size(F.expr(_tokens("text"))) >= 30)
     pairs = D.jaccard_pairs(quality, threshold=0.7)
     labels = D.connected_components(pairs)
     canon = (

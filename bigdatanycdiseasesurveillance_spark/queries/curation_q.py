@@ -472,7 +472,7 @@ def txt_token_entropy(spark, sf_dir):
     from ..functions.text_funcs import tokens
 
     d = table(spark, sf_dir, "documents")
-    tok = tokens(F.col("text"))
+    tok = F.expr(tokens("text"))
 
     def _ent(t):
         n = F.size(t).cast("double")
@@ -530,7 +530,7 @@ def agg_heavy_hitters(spark, sf_dir):
     from ..operators.sketches import heavy_hitters_exact
 
     d = table(spark, sf_dir, "documents")
-    items = d.select(F.explode(tokens(F.col("text"))).alias("token"))
+    items = d.select(F.explode(F.expr(tokens("text"))).alias("token"))
     return heavy_hitters_exact(items, "token", _HH_DENOM)
 
 
@@ -583,7 +583,7 @@ def mix_token_budget(spark, sf_dir):
     from ..operators.sampling import take_token_budget
 
     d = table(spark, sf_dir, "documents").withColumn(
-        "ntok", token_count(F.col("text")).cast("long")
+        "ntok", F.expr(token_count("text")).cast("long")
     )
     mixed = take_token_budget(
         d, "doc_id", "source", "ntok", _MIX_BUDGETS, default_budget=_MIX_DEFAULT
@@ -646,7 +646,7 @@ def cur_dedup_dividend(spark, sf_dir):
     from ..operators import dedup as D
 
     docs = table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", token_count(F.col("text")).alias("n_tokens"))
+    toks = docs.select("doc_id", F.expr(token_count("text")).alias("n_tokens"))
     pairs = D.jaccard_pairs(docs, threshold=0.7)
     labels = D.connected_components(pairs)
     canon = (
@@ -739,7 +739,7 @@ def cur_decontaminate_spans(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents").select(
-        "doc_id", tokens(F.col("text")).alias("tok")
+        "doc_id", F.expr(tokens("text")).alias("tok")
     )
     corpus = docs.filter(F.col("doc_id") % _BENCH_MOD != 0)
     bench_sh = (
@@ -893,7 +893,7 @@ def cur_gopher_rules(spark, sf_dir):
     from ..functions.text_funcs import STOPWORDS, tokens
 
     docs = table(spark, sf_dir, "documents")
-    tok = tokens(F.col("text"))
+    tok = F.expr(tokens("text"))
     sw = F.array(*[F.lit(s) for s in STOPWORDS[:10]])
     m = docs.select(
         tok.alias("tok"),
@@ -1071,7 +1071,7 @@ def cur_contamination_ngram_overlap(spark, sf_dir):
         (hash_deviate(F.col("doc_id"), "contam_bench") < _CONTAM_BENCH_CUT).alias(
             "is_bench"
         ),
-        tokens(F.col("text")).alias("tok"),
+        F.expr(tokens("text")).alias("tok"),
     )
     grams = tok.select(
         "doc_id",

@@ -758,12 +758,12 @@ def _merge_batch_labels(new, corpus_all, old_canon):
             F.col("doc_id").alias(f"{prefix}id"),
             F.col("source").alias(f"{prefix}src"),
             F.floor(F.col("n_chars") / 50).alias(f"{prefix}bkt"),
-            distinct_tokens(F.col("text")).alias(f"{prefix}tok"),
+            F.expr(distinct_tokens("text")).alias(f"{prefix}tok"),
         ).filter(F.size(f"{prefix}tok") > 0)
 
     a = side(new, "a_")
     b = side(corpus_all, "b_")
-    j = D.word_jaccard(F.col("a_tok"), F.col("b_tok"))
+    j = F.expr(D.word_jaccard("a_tok", "b_tok"))
     delta = (
         a.join(
             b,

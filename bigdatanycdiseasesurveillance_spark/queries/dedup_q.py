@@ -200,7 +200,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     # counts: a broken mask/verify path shows up as n_fp > 0
     ta = rep_toks.select(F.col("mask").alias("mask_a"), F.col("tok").alias("tok_a"))
     tb = rep_toks.select(F.col("mask").alias("mask_b"), F.col("tok").alias("tok_b"))
-    j = D.word_jaccard(F.col("tok_a"), F.col("tok_b"))
+    j = F.expr(D.word_jaccard("tok_a", "tok_b"))
     n_fp = (
         eb.join(ta, "mask_a")
         .join(tb, "mask_b")
@@ -478,17 +478,16 @@ def dedup_duplicate_groups(spark, sf_dir):
     from ..tables import parallelize_scan
 
     d = parallelize_scan(table(spark, sf_dir, "documents"))
-    toks = d.select(
-        "doc_id",
-        "source",
-        F.floor(F.col("n_chars") / F.lit(50)).alias("bkt"),
-        F.sort_array(distinct_tokens(F.col("text"))).alias("tok"),
-    ).filter(F.size("tok") > 0)
     gb = (
-        toks.groupBy("source", "bkt", "tok")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.count("*").cast("long").alias("c"),
+        spark.sql(
+            f"""
+            SELECT source, bkt, tok, min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS c
+            FROM (SELECT doc_id, source, floor(n_chars / 50) AS bkt,
+                         sort_array({distinct_tokens("text")}) AS tok
+                  FROM {{d}})
+            WHERE size(tok) > 0
+            GROUP BY source, bkt, tok""",
+            d=d,
         )
         # Round-robin spread BEFORE the checkpoint (r13): the pair
         # join's stream-side parallelism IS the checkpoint's partition
@@ -503,18 +502,12 @@ def dedup_duplicate_groups(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint(eager=False)  # feeds the pair join AND the rollup
     )
-    a = gb.select(
-        "source", "bkt", F.col("gid").alias("gid_a"), F.col("tok").alias("tok_a")
-    )
-    b = gb.select(
-        "source", "bkt", F.col("gid").alias("gid_b"), F.col("tok").alias("tok_b")
-    )
-    j = word_jaccard(F.col("tok_a"), F.col("tok_b"))
-    edges = (
-        a.join(b, ["source", "bkt"])
-        .filter(F.col("gid_a") < F.col("gid_b"))
-        .filter(F.round(j, 4) >= F.lit(0.7))
-        .select("gid_a", "gid_b")
+    edges = spark.sql(
+        f"""
+        SELECT a.gid AS gid_a, b.gid AS gid_b
+        FROM {{gb}} a JOIN {{gb}} b ON a.source = b.source AND a.bkt = b.bkt
+        WHERE a.gid < b.gid AND round({word_jaccard("a.tok", "b.tok")}, 4) >= 0.7D""",
+        gb=gb,
     )
     # Adaptive loop, NOT a fixed-step pin: the r7 bench corpus proved
     # the 'diameter <= 2 clique' premise wrong (sf0.1 measured d=7 —
@@ -522,18 +515,15 @@ def dedup_duplicate_groups(spark, sf_dir):
     # pointer-jumping compression gets the round count to O(log d),
     # which is both the spread fix and the 100 TB shape.
     labels = D.connected_components(edges, id_a="gid_a", id_b="gid_b")
-    lab = (
-        gb.select("gid", "c")
-        .join(labels.withColumnRenamed("doc_id", "gid"), "gid", "left")
-        .select(
-            "c",
-            F.coalesce(F.col("canonical_id"), F.col("gid")).alias("comp"),
-        )
-    )
-    return (
-        lab.groupBy(F.col("comp").alias("canonical_id"))
-        .agg(F.sum("c").cast("long").alias("group_size"))
-        .filter(F.col("group_size") > 1)
+    return spark.sql(
+        """
+        SELECT comp AS canonical_id, CAST(sum(c) AS BIGINT) AS group_size
+        FROM (SELECT g.c, coalesce(l.canonical_id, g.gid) AS comp
+              FROM {gb} g LEFT JOIN {labels} l ON g.gid = l.doc_id)
+        GROUP BY comp
+        HAVING group_size > 1""",
+        gb=gb,
+        labels=labels,
     )
 
 
@@ -601,7 +591,7 @@ def dedup_sorted_neighborhood(spark, sf_dir):
         "doc_id",
         "source",
         F.substring(norm, 1, 12).alias("sk"),
-        distinct_tokens(F.col("text")).alias("tok"),
+        F.expr(distinct_tokens("text")).alias("tok"),
     )
     w = Window.partitionBy("source").orderBy("sk", "doc_id")
     # window exprs evaluate in their own Project (generators can't host
@@ -627,7 +617,7 @@ def dedup_sorted_neighborhood(spark, sf_dir):
             )
         ).alias("c"),
     ).filter(F.col("c.nid").isNotNull())
-    j = F.round(word_jaccard(F.col("tok"), F.col("c.ntok")), 4)
+    j = F.round(F.expr(word_jaccard("tok", "c.ntok")), 4)
     return (
         led.select(
             F.least("doc_id", "c.nid").alias("id_a"),
@@ -738,10 +728,10 @@ def dedup_snm_multikey(spark, sf_dir):
         .dropDuplicates(["id_a", "id_b"])
     )
     tok = docs.select(
-        F.col("doc_id").alias("tid"), distinct_tokens(F.col("text")).alias("tok")
+        F.col("doc_id").alias("tid"), F.expr(distinct_tokens("text")).alias("tok")
     )
     j = F.round(
-        word_jaccard(F.col("tok_a"), F.col("tok_b")), 4
+        F.expr(word_jaccard("tok_a", "tok_b")), 4
     )
     return (
         cand.join(tok.select(F.col("tid").alias("id_a"), F.col("tok").alias("tok_a")), "id_a")
@@ -804,7 +794,7 @@ def dedup_cross_source_snm(spark, sf_dir):
     sel = docs.select(
         "doc_id",
         F.substring(norm, 1, 12).alias("sk"),
-        distinct_tokens(F.col("text")).alias("tok"),
+        F.expr(distinct_tokens("text")).alias("tok"),
     )
     bkey = F.substring(F.col("sk"), 1, 2)
     wd = sel.withColumn("bkey", bkey)
@@ -826,7 +816,7 @@ def dedup_cross_source_snm(spark, sf_dir):
             F.array(*[F.col("rn") + k for k in (1, 2, 3)])
         ).alias("rn"),
     )
-    j = F.round(word_jaccard(F.col("tok_l"), F.col("tok")), 4)
+    j = F.round(F.expr(word_jaccard("tok_l", "tok")), 4)
     return (
         probes.join(ranked, "rn")
         .select(

@@ -21,6 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..domain.location import NEIGHBORHOODS
+from ..functions.sql_text import dlit, slit
 from ..operators import clustering as C
 from ..operators.clustering import jitter_sql
 from ..registry import register
@@ -30,27 +31,32 @@ _EPS = 0.03
 _MIN_SAMPLES = 3
 
 
-def _min_bbox_neighborhood() -> "F.Column":
-    """MIN(neighborhood) over the static bboxes containing (x, y), as a
-    pure column expression — the NEIGHBORHOODS dim is 8 in-code
-    constants, so the bbox containment test needs no join at all. least
-    skips NULLs, so this is exactly the broadcast-bbox-join +
-    groupBy(point) MIN(neighborhood) it replaces (r13: that groupBy was
-    a corpus-wide exchange whose only job was collapsing the rare
-    shared-edge multi-match); NULL means "in no bbox" (the old inner
-    join's drop)."""
-    return F.least(
-        *[
-            F.when(
-                (F.col("x") >= F.lit(lat_min))
-                & (F.col("x") <= F.lit(lat_max))
-                & (F.col("y") >= F.lit(lon_min))
-                & (F.col("y") <= F.lit(lon_max)),
-                F.lit(name),
-            )
-            for name, _b, lat_min, lat_max, lon_min, lon_max, _z in NEIGHBORHOODS
-        ]
-    )
+# (x, y) of a purchase event: the user_id lattice plus the exact
+# integer-LCG jitter, as Spark SQL text over an events row
+_POINT_X = (
+    f"{dlit(40.60)} + CAST(user_id % 37 AS DOUBLE) / {dlit(100.0)}"
+    f" + ({C.seeded_jitter('event_id', seed=7)})"
+)
+_POINT_Y = (
+    f"{dlit(-74.00)} + CAST(user_id % 23 AS DOUBLE) / {dlit(100.0)}"
+    f" + ({C.seeded_jitter('event_id', seed=8)})"
+)
+
+
+def _min_bbox_neighborhood() -> str:
+    """MIN(neighborhood) over the static bboxes containing (x, y), as
+    Spark SQL text — the NEIGHBORHOODS dim is 8 in-code constants, so
+    the bbox containment test needs no join at all. least skips NULLs,
+    so this is exactly the broadcast-bbox-join + groupBy(point)
+    MIN(neighborhood) it replaces (r13: that groupBy was a corpus-wide
+    exchange whose only job was collapsing the rare shared-edge
+    multi-match); NULL means "in no bbox" (the old inner join's
+    drop)."""
+    return "least(" + ", ".join(
+        f"CASE WHEN x >= {dlit(lat_min)} AND x <= {dlit(lat_max)}"
+        f" AND y >= {dlit(lon_min)} AND y <= {dlit(lon_max)} THEN {slit(name)} END"
+        for name, _b, lat_min, lat_max, lon_min, lon_max, _z in NEIGHBORHOODS
+    ) + ")"
 
 
 def _geo_oracle() -> str:
@@ -165,25 +171,13 @@ def cluster_geo_pipeline(spark, sf_dir):
     size, centroid, and its dominant neighborhood (deterministic mode:
     max count, ties alphabetical)."""
     ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    jittered = ev.select(
-        "event_id",
-        (
-            F.lit(40.60)
-            + (F.col("user_id") % 37).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=7)
-        ).alias("x"),
-        (
-            F.lit(-74.00)
-            + (F.col("user_id") % 23).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=8)
-        ).alias("y"),
-    )
+    jittered = ev.selectExpr("event_id", f"{_POINT_X} AS x", f"{_POINT_Y} AS y")
     # a point on the exact shared edge of two bboxes matches both —
     # MIN(neighborhood) keeps membership single-valued on both engines;
     # the static 8-bbox dim evaluates as a least/when expression, so
     # there is no join and no per-point exchange here (r13)
     located = jittered.withColumn(
-        "neighborhood", _min_bbox_neighborhood()
+        "neighborhood", F.expr(_min_bbox_neighborhood())
     ).filter(F.col("neighborhood").isNotNull())
     assigned = C.grid_dbscan(
         located, eps=_EPS, min_samples=_MIN_SAMPLES, id_col="event_id"
@@ -372,18 +366,7 @@ def cluster_geo_cellgrid(spark, sf_dir):
     100 TB job runs. Contract is integer-pure (cell keys, counts,
     bounding boxes) — no float summation order anywhere."""
     ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    pts = ev.select(
-        (
-            F.lit(40.60)
-            + (F.col("user_id") % 37).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=7)
-        ).alias("x"),
-        (
-            F.lit(-74.00)
-            + (F.col("user_id") % 23).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=8)
-        ).alias("y"),
-    )
+    pts = ev.selectExpr(f"{_POINT_X} AS x", f"{_POINT_Y} AS y")
     cells = (
         pts.select(
             F.floor(F.col("x") / _CG_EPS).cast("long").alias("cx"),
@@ -522,20 +505,7 @@ def cluster_geo_pipeline_cellgrid(spark, sf_dir):
     at sf1, r5 audit). Profile stays integer-pure (cell counts, point
     counts, integer bounding box) plus the deterministic dominant
     neighborhood (max per-cluster point count, ties alphabetical)."""
-    ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    jittered = ev.select(
-        "event_id",
-        (
-            F.lit(40.60)
-            + (F.col("user_id") % 37).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=7)
-        ).alias("x"),
-        (
-            F.lit(-74.00)
-            + (F.col("user_id") % 23).cast("double") / 100.0
-            + C.seeded_jitter(F.col("event_id"), seed=8)
-        ).alias("y"),
-    )
+    ev = table(spark, sf_dir, "events")
     # bbox containment as a pure expression (no join, no per-point
     # exchange — see _min_bbox_neighborhood); cnb is the ONLY
     # corpus-sized aggregation (map-side combinable), and cells derives
@@ -543,55 +513,61 @@ def cluster_geo_pipeline_cellgrid(spark, sf_dir):
     # the corpus crosses exactly one exchange in this whole query (r13;
     # before: bbox groupBy + two point-level groupBys over a
     # point-level checkpoint)
-    located = jittered.withColumn(
-        "neighborhood", _min_bbox_neighborhood()
-    ).filter(F.col("neighborhood").isNotNull())
-    pc = located.select(
-        F.floor(F.col("x") / _CG_EPS).cast("long").alias("cx"),
-        F.floor(F.col("y") / _CG_EPS).cast("long").alias("cy"),
-        "neighborhood",
+    cnb = spark.sql(
+        f"""
+        SELECT cx, cy, neighborhood, CAST(count(*) AS BIGINT) AS nw
+        FROM (
+            SELECT CAST(floor(x / {dlit(_CG_EPS)}) AS BIGINT) AS cx,
+                   CAST(floor(y / {dlit(_CG_EPS)}) AS BIGINT) AS cy,
+                   neighborhood
+            FROM (
+                SELECT x, y, {_min_bbox_neighborhood()} AS neighborhood
+                FROM (SELECT {_POINT_X} AS x, {_POINT_Y} AS y
+                      FROM {{ev}} WHERE event_type = 'purchase')
+            )
+            WHERE neighborhood IS NOT NULL
+        )
+        GROUP BY cx, cy, neighborhood""",
+        ev=ev,
+    ).localCheckpoint(eager=False)  # cell-sized; feeds cells AND prof
+    cells = spark.sql(
+        "SELECT cx, cy, CAST(sum(nw) AS BIGINT) AS w FROM {cnb} GROUP BY cx, cy",
+        cnb=cnb,
     )
-    cnb = (
-        pc.groupBy("cx", "cy", "neighborhood")
-        .agg(F.count("*").cast("long").alias("nw"))
-        .localCheckpoint(eager=False)  # cell-sized; feeds cells AND prof
-    )
-    cells = cnb.groupBy("cx", "cy").agg(F.sum("nw").cast("long").alias("w"))
     # cellgrid_assign returns a LocalRelation (r13 driver-side cell
     # cascade) — both consumers (profile join, stats rollup) re-read it
     # for free, so the previous two-consumer localCheckpoint would only
     # add an RDD conversion
     assigned = C.cellgrid_assign(cells, key_mult=_CG_KEY)
-    prof = (
-        assigned.join(cnb, ["cx", "cy"])
-        .groupBy("cid", "neighborhood")
-        .agg(F.sum("nw").alias("cnt"))
-    )
-    w = Window.partitionBy("cid").orderBy(F.desc("cnt"), F.asc("neighborhood"))
-    top = (
-        prof.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cid", F.col("neighborhood").alias("top_neighborhood"))
-    )
-    return (
-        assigned.groupBy("cid")
-        .agg(
-            F.count("*").cast("long").alias("n_cells"),
-            F.sum("w").cast("long").alias("n_points"),
-            F.min("cx").cast("long").alias("min_cx"),
-            F.max("cx").cast("long").alias("max_cx"),
-            F.min("cy").cast("long").alias("min_cy"),
-            F.max("cy").cast("long").alias("max_cy"),
+    # dominant neighborhood: max per-cluster point count, ties
+    # alphabetical
+    return spark.sql(
+        """
+        WITH prof AS (
+            SELECT a.cid, c.neighborhood, sum(c.nw) AS cnt
+            FROM {assigned} a JOIN {cnb} c ON a.cx = c.cx AND a.cy = c.cy
+            GROUP BY a.cid, c.neighborhood
+        ), top AS (
+            SELECT cid, neighborhood AS top_neighborhood
+            FROM (SELECT cid, neighborhood,
+                         row_number() OVER (PARTITION BY cid
+                                            ORDER BY cnt DESC, neighborhood ASC) AS rn
+                  FROM prof)
+            WHERE rn = 1
         )
-        .join(F.broadcast(top), "cid")
-        .select(
-            F.col("cid").alias("cluster_id"),
-            "n_cells",
-            "n_points",
-            "top_neighborhood",
-            "min_cx",
-            "max_cx",
-            "min_cy",
-            "max_cy",
-        )
+        SELECT /*+ BROADCAST(t) */ s.cid AS cluster_id, s.n_cells, s.n_points,
+               t.top_neighborhood, s.min_cx, s.max_cx, s.min_cy, s.max_cy
+        FROM (
+            SELECT cid,
+                   CAST(count(*) AS BIGINT) AS n_cells,
+                   CAST(sum(w) AS BIGINT) AS n_points,
+                   CAST(min(cx) AS BIGINT) AS min_cx,
+                   CAST(max(cx) AS BIGINT) AS max_cx,
+                   CAST(min(cy) AS BIGINT) AS min_cy,
+                   CAST(max(cy) AS BIGINT) AS max_cy
+            FROM {assigned} GROUP BY cid
+        ) s
+        JOIN top t ON s.cid = t.cid""",
+        assigned=assigned,
+        cnb=cnb,
     )

@@ -90,9 +90,9 @@ def search_bm25_topk(spark, sf_dir):
     # checkpointed one-pass-each variant slightly SLOWER (med 0.84 s vs
     # 0.80 s) because the two materializations run sequentially.
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
     qterms = tok.filter(F.col("term").isin(*_QUERY_TERMS))
-    dl = docs.select("doc_id", token_count(F.col("text")).alias("doclen"))
+    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
     stats = dl.agg(
         F.count("*").alias("n"), F.avg("doclen").alias("avg_len")
     )
@@ -429,9 +429,9 @@ def _bm25_scored(spark, sf_dir):
     """Shared BM25 scoring frame (doc_id, bm25) — stage 1 of the
     two-stage retrieval pipeline; identical math to search_bm25_topk."""
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
     qterms = tok.filter(F.col("term").isin(*_QUERY_TERMS))
-    dl = docs.select("doc_id", token_count(F.col("text")).alias("doclen"))
+    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
     stats = dl.agg(F.count("*").alias("n"), F.avg("doclen").alias("avg_len"))
     dfq = qterms.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -587,8 +587,8 @@ def search_rm3_expansion(spark, sf_dir):
     the feedback set and expansion terms are k-row broadcasts; df/tf
     shuffles are term-keyed partial aggregations."""
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    dl = docs.select("doc_id", token_count(F.col("text")).alias("doclen"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
+    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
     stats = dl.agg(F.count("*").alias("n"), F.avg("doclen").alias("avg_len"))
 
     def bm25_scores(qterm_df):

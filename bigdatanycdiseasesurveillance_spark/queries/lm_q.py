@@ -59,7 +59,7 @@ def txt_unigram_logprob(spark, sf_dir):
     Improbable-token documents score low and get filtered by the
     curation tier."""
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
     uni = tok.groupBy("term").agg(F.count("*").alias("c"))
     tot = uni.agg(F.sum("c").alias("n"))
     return (
@@ -399,7 +399,7 @@ def cur_importance_resampling(spark, sf_dir):
     TakeOrderedAndProject. Docs with <2 tokens carry no bigram features
     and are excluded (no features = no importance evidence)."""
     docs = table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
+    t = F.expr(tokens("text"))
 
     def _bigrams(l):
         n = F.size(l)
@@ -502,7 +502,7 @@ def cur_perplexity_buckets(spark, sf_dir):
     from pyspark.sql import Window
 
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
     cnt = tok.groupBy("term").agg(F.count("*").alias("c"))
     # total token count attached via a window over the vocab-sized
     # frame (31 rows) — no 1-row crossJoin needed
@@ -602,7 +602,7 @@ def cur_tokenizer_fertility(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     d = docs.select(
         "lang",
-        F.size(tokens(F.col("text"))).cast("long").alias("n_words"),
+        F.size(F.expr(tokens("text"))).cast("long").alias("n_words"),
         F.size(
             F.regexp_extract_all("text", F.lit(_BPE_PAT), F.lit(0))
         ).cast("long").alias("n_pretokens"),

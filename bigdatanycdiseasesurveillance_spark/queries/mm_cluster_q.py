@@ -181,12 +181,10 @@ def cluster_dbscan_jittered(spark, sf_dir):
     form: an exact integer-LCG jitter (seeded_jitter) both engines
     replay bit-for-bit, feeding the same grid-DBSCAN path."""
     emb = table(spark, sf_dir, "embeddings")
-    pts = emb.select(
+    pts = emb.selectExpr(
         "vec_id",
-        (F.col("embedding")[0].cast("double") + C.seeded_jitter(F.col("vec_id"), seed=42))
-        .alias("x"),
-        (F.col("embedding")[1].cast("double") + C.seeded_jitter(F.col("vec_id"), seed=43))
-        .alias("y"),
+        f"CAST(embedding[0] AS DOUBLE) + ({C.seeded_jitter('vec_id', seed=42)}) AS x",
+        f"CAST(embedding[1] AS DOUBLE) + ({C.seeded_jitter('vec_id', seed=43)}) AS y",
     )
     assigned = C.grid_dbscan(pts, eps=0.05, min_samples=4)
     return C.cluster_profiles(assigned, pts).orderBy(F.desc("size"), F.asc("cluster_id"))

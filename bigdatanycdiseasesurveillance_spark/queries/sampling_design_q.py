@@ -1543,7 +1543,7 @@ def txt_ngram_novelty_curve(spark, sf_dir):
     d = docs.select(
         "source",
         hash_deviate(F.col("doc_id"), "novel").alias("__dev"),
-        F.explode(token_shingles(F.col("text"), n=3)).alias("g"),
+        F.explode(token_shingles("text", n=3)).alias("g"),
     ).select(
         "source", F.expr(f"__dev div {_VG_DECILE}").alias("dec"), "g"
     )

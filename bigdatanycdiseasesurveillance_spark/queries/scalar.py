@@ -108,7 +108,7 @@ def scalar_hash_fingerprint(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        fingerprint(F.col("text")).alias("fp"),
+        F.expr(fingerprint("text")).alias("fp"),
         F.sha2(F.col("text"), 256).alias("text_sha"),
     )
 

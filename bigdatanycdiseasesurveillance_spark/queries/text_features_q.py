@@ -65,7 +65,7 @@ def txt_tfidf_top_terms(spark, sf_dir):
     broadcast, and N is a one-row broadcast — the corpus itself is
     touched exactly twice (tf pass, df pass), both map-side combined."""
     d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "source", F.explode(tokens(F.col("text"))).alias("term"))
+    tok = d.select("doc_id", "source", F.explode(F.expr(tokens("text"))).alias("term"))
     n = d.agg(F.countDistinct("doc_id").alias("n"))
     dfq = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     tf = tok.groupBy("source", "term").agg(F.count("*").alias("tf"))
@@ -132,7 +132,7 @@ def txt_bigram_pmi(spark, sf_dir):
     token array (no self-join on position), pair and unigram counts
     are map-side-combined groupBys, and the unigram table broadcasts —
     per-corpus cost is two exploded passes, nothing quadratic."""
-    d = table(spark, sf_dir, "documents").select(tokens(F.col("text")).alias("toks"))
+    d = table(spark, sf_dir, "documents").select(F.expr(tokens("text")).alias("toks"))
     big = (
         d.filter(F.size("toks") >= 2)
         .select(
@@ -269,7 +269,7 @@ def txt_distinct_ngrams(spark, sf_dir):
     same tokenized scan; distinct counting shuffles on the gram key
     with map-side partials."""
     t = table(spark, sf_dir, "documents").select(
-        "source", tokens(F.col("text")).alias("tok")
+        "source", F.expr(tokens("text")).alias("tok")
     )
     per_n = []
     for n in (1, 2, 3):
@@ -327,7 +327,7 @@ def txt_zipf_slope(spark, sf_dir):
     once on (source, token); the regression is regr_slope over the
     vocabulary-sized ranked table."""
     t = table(spark, sf_dir, "documents").select(
-        "source", F.explode(tokens(F.col("text"))).alias("tok")
+        "source", F.explode(F.expr(tokens("text"))).alias("tok")
     )
     freq = t.groupBy("source", "tok").agg(F.count("*").cast("long").alias("f"))
     w = Window.partitionBy("source").orderBy(F.desc("f"), F.asc("tok"))
@@ -374,7 +374,7 @@ def txt_skipgram_cooc(spark, sf_dir):
     transform+element_at (no positional self-join), then one explode ->
     groupBy with map-side combine. Cut at count >= {_SG_MIN} like the
     PMI query."""
-    t = table(spark, sf_dir, "documents").select(tokens(F.col("text")).alias("tok"))
+    t = table(spark, sf_dir, "documents").select(F.expr(tokens("text")).alias("tok"))
 
     def pair_lambda(off):
         # single-parameter lambda: a two-arg lambda would be read by

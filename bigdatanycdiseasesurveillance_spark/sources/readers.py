@@ -18,8 +18,9 @@ JSONL/Parquet-partitioned and read via `spark.read.schema(s).json` —
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.sql_text import ident, slit
 
 
 def read_json_any(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -27,34 +28,40 @@ def read_json_any(spark: SparkSession, path: str, schema: T.StructType) -> DataF
     files in one pass. Each file is one row of whole text; a top-level
     '[' selects array parsing, anything else is split into lines and
     parsed per line. Malformed lines/elements yield null structs and are
-    dropped (the reference skips them with try/except per record)."""
-    raw = spark.read.text(path, wholetext=True).select(
-        F.col("value"),
-        F.input_file_name().alias("source_path"),
-    )
-    trimmed = F.ltrim(F.col("value"))
-    arr_schema = T.ArrayType(schema)
-    as_array = F.from_json(trimmed, arr_schema)
+    dropped (the reference skips them with try/except per record).
+
+    The parse is one SQL statement over the whole-text scan (see
+    functions.sql_text for why text, not Column calls)."""
+    raw = spark.read.text(path, wholetext=True)
+    fields = ", ".join(f"{ident(f.name)}: {f.dataType.simpleString()}" for f in schema)
+    record = f"struct<{fields}>"
     # PERMISSIVE from_json yields an all-null struct (not NULL) for a
     # malformed line, so parse with a corrupt-record column and filter
-    # on it instead of isNotNull
-    corrupt = T.StructType(schema.fields + [T.StructField("_corrupt", T.StringType())])
-    as_lines = F.transform(
-        F.filter(
-            F.split(F.col("value"), "\n"),
-            lambda ln: F.startswith(F.ltrim(ln), F.lit("{")),
-        ),
-        lambda ln: F.from_json(ln, corrupt, {"columnNameOfCorruptRecord": "_corrupt"}),
-    )
-    as_lines = F.transform(
-        F.filter(as_lines, lambda rec: rec["_corrupt"].isNull()),
-        lambda rec: rec.dropFields("_corrupt"),
-    )
-    records = F.when(F.startswith(trimmed, F.lit("[")), as_array).otherwise(as_lines)
-    return (
-        raw.select(F.explode(records).alias("rec"), "source_path")
-        .filter(F.col("rec").isNotNull())
-        .select("rec.*", "source_path")
+    # on it instead of IS NOT NULL; named_struct then drops that column
+    # again (a struct's dropFields has no SQL form)
+    with_corrupt = f"struct<{fields}, _corrupt: string>"
+    rebuilt = ", ".join(f"{slit(f.name)}, rec.{ident(f.name)}" for f in schema)
+    return spark.sql(
+        f"""
+        SELECT rec.*, source_path FROM (
+            SELECT explode(
+                       CASE WHEN startswith(ltrim(value), '[')
+                            THEN from_json(ltrim(value), {slit(f"array<{record}>")})
+                            ELSE transform(
+                                filter(
+                                    transform(
+                                        filter(split(value, '\\n'),
+                                               ln -> startswith(ltrim(ln), {slit("{")})),
+                                        ln -> from_json(ln, {slit(with_corrupt)},
+                                                        map('columnNameOfCorruptRecord', '_corrupt'))),
+                                    rec -> rec._corrupt IS NULL),
+                                rec -> named_struct({rebuilt}))
+                       END) AS rec,
+                   input_file_name() AS source_path
+            FROM {{raw}}
+        )
+        WHERE rec IS NOT NULL""",
+        raw=raw,
     )
 
 

@@ -27,6 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sql_text import slit, str_array
 from ..functions.time_funcs import epoch_sec
 from ..tables import normalize_timestamps, table
 
@@ -83,6 +84,7 @@ def _run_to_memory(
     click_purchase_join / click_abandonment (event-keyed join state),
     ingest_dedup (corpus-sized fp anti-join shares the query),
     foreachbatch_upsert (per-batch user-keyed shuffles)."""
+    import shutil
     import tempfile
 
     spark = stream_df.sparkSession
@@ -90,12 +92,15 @@ def _run_to_memory(
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    # the memory sink holds the result once the availableNow run ends,
+    # so the checkpoint is not needed after it, on any path out
+    ckpt = tempfile.mkdtemp(prefix="bdnds_ckpt_")
     try:
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bdnds_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
@@ -103,6 +108,7 @@ def _run_to_memory(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 
@@ -494,13 +500,13 @@ def streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "complete", state_partitions=4)
 
 
-def _prefix_fp(text_col, k: int = 8):
+def _prefix_fp(text: str, k: int = 8):
     """Lead-in fingerprint: md5 of the first k whitespace tokens of the
     normalized text — the boilerplate/header dedup key (full-text md5
     catches only byte-exact copies; templated corpora share lead-ins)."""
     from ..functions.text_funcs import tokens
 
-    return F.md5(F.concat_ws(" ", F.slice(tokens(text_col), 1, k)))
+    return F.expr(f"md5(concat_ws(' ', slice({tokens(text)}, 1, {k})))")
 
 
 def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,10 +527,10 @@ def streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing = (
         _table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 != 0)
-        .select(_prefix_fp(F.col("text")).alias("fp"))
+        .select(_prefix_fp("text").alias("fp"))
         .distinct()
     )
-    fresh = src.withColumn("fp", _prefix_fp(F.col("text"))).join(
+    fresh = src.withColumn("fp", _prefix_fp("text")).join(
         existing, "fp", "left_anti"
     )
     agg = fresh.groupBy("source").agg(F.count("*").cast("long").alias("n_new"))
@@ -637,33 +643,25 @@ def streaming_surveillance_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.relevance import extract_relevance
 
     src = stream_table(spark, sf_dir, "documents")
-    rel = extract_relevance(src).filter(F.col("is_relevant"))
+    rel = extract_relevance(src)
     zips = ["11102", "11211", "10027", "10003", "10463", "11354", "99999", "10550"]
-    zarr = "array(" + ", ".join(f"'{z}'" for z in zips) + ")"
     alias_case = "CASE " + " ".join(
-        f"WHEN instr(lower(text), '{a}') > 0 THEN '{_NB_BOROUGH[n]}'"
+        f"WHEN instr(lower(text), {slit(a)}) > 0 THEN {slit(_NB_BOROUGH[n])}"
         for a, n in ALIASES
     ) + " ELSE NULL END"
-    with_sig = rel.selectExpr(
-        "doc_id",
-        "severity",
-        f"element_at({zarr}, CAST(doc_id % 8 + 1 AS INT)) AS zip",
-        f"{alias_case} AS alias_borough",
-    )
-    bz = F.broadcast(
-        borough_zip_dim(spark).select(
-            F.col("zip_prefix").alias("__zp"),
-            F.col("borough").alias("pfx_borough"),
-        )
-    )
-    enriched = with_sig.join(
-        bz, F.substring(F.col("zip"), 1, 3) == F.col("__zp"), "left"
-    ).withColumn(
-        "borough",
-        F.coalesce(F.col("pfx_borough"), F.col("alias_borough"), F.lit("unknown")),
-    )
-    agg = enriched.groupBy("borough", "severity").agg(
-        F.count("*").cast("long").alias("cnt")
+    agg = spark.sql(
+        f"""
+        SELECT /*+ BROADCAST(p) */
+               coalesce(p.borough, r.alias_borough, 'unknown') AS borough,
+               r.severity, CAST(count(*) AS BIGINT) AS cnt
+        FROM (SELECT severity,
+                     element_at({str_array(zips)}, CAST(doc_id % 8 + 1 AS INT)) AS zip,
+                     {alias_case} AS alias_borough
+              FROM {{rel}} WHERE is_relevant) r
+        LEFT JOIN {{bz}} p ON substring(r.zip, 1, 3) = p.zip_prefix
+        GROUP BY coalesce(p.borough, r.alias_borough, 'unknown'), r.severity""",
+        rel=rel,
+        bz=borough_zip_dim(spark),
     )
     # state key space = boroughs x severities (~18 rows at any corpus
     # size) — size the state layout to the key space, not the cluster

@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.sql_text import dlit, ident, slit
 from .session import apply_runtime_confs
 
 TABLE_NAMES = (
@@ -88,13 +89,16 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
       reinterpretation (wall clock == instant), keeping hash parity with
       the DuckDB oracle's naive read.
     """
+    exprs = {}
     for field in df.schema.fields:
         simple = field.dataType.simpleString()
         if field.name == "ts" and simple == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+            exprs["ts"] = "timestamp_micros(ts DIV 1000)"
         elif simple == "timestamp_ntz":
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    return df
+            exprs[field.name] = f"CAST({ident(field.name)} AS TIMESTAMP)"
+    if not exprs:
+        return df
+    return df.withColumns({name: F.expr(e) for name, e in exprs.items()})
 
 
 def parallelize_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -116,8 +120,10 @@ def parallelize_scan(df: DataFrame, min_partitions: int | None = None) -> DataFr
     # undercounts splits for multi-row-group files; the only effect is
     # one extra cheap round-robin shuffle on inputs small enough that
     # the rebalance helps the downstream Python/codegen work anyway.
+    # _jdf.inputFiles() is one round trip: PySpark's inputFiles() lists
+    # the returned Java array element by element, one round trip each
     try:
-        n_files = len(df.inputFiles())
+        n_files = len(df._jdf.inputFiles())
     except Exception:
         return df
     if n_files == 0 or n_files >= target:
@@ -148,11 +154,9 @@ def values_dim(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
         if isinstance(v, str):
-            # Spark's SQL parser interprets backslash escapes inside
-            # string literals (unlike ANSI) — double them first
-            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+            return slit(v)
         if isinstance(v, float):
-            return repr(v) + "D"
+            return dlit(v)
         if isinstance(v, int):
             return str(v)
         if isinstance(v, (list, tuple)):

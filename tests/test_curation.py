@@ -27,7 +27,7 @@ def test_token_shingles_exact_and_short(spark):
     )
     out = {
         r["id"]: r["sh"]
-        for r in df.select("id", token_shingles(F.col("text"), 3).alias("sh")).collect()
+        for r in df.select("id", token_shingles("text", 3).alias("sh")).collect()
     }
     assert out[1] == ["a b c", "b c d"]
     assert out[2] == []  # shorter than n -> empty, never [1, 0] descent
@@ -110,7 +110,7 @@ def test_prefix_filter_join_is_exact(spark):
         word_jaccard,
     )
 
-    t = df.select(F.col("doc_id").alias("id"), distinct_tokens("text").alias("tok"))
+    t = df.select(F.col("doc_id").alias("id"), F.expr(distinct_tokens("text")).alias("tok"))
     brute = (
         t.alias("a")
         .crossJoin(t.alias("b"))
@@ -118,7 +118,7 @@ def test_prefix_filter_join_is_exact(spark):
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(word_jaccard(F.col("a.tok"), F.col("b.tok")), 4).alias("j"),
+            F.round(F.expr(word_jaccard("a.tok", "b.tok")), 4).alias("j"),
         )
         .filter(F.col("j") >= 0.6)
     )

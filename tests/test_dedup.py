@@ -166,7 +166,7 @@ def test_certification_band_replay_equals_operator_buckets(spark):
     from pyspark.sql import functions as F
 
     sigs = docs.select(
-        F.col("doc_id").alias("id"), D.distinct_tokens(F.col("text")).alias("tok")
+        F.col("doc_id").alias("id"), F.expr(D.distinct_tokens("text")).alias("tok")
     ).select(
         "id", F.expr(D.minhash_signature("tok")).alias("sig")
     ).select(

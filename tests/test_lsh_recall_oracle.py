@@ -115,7 +115,7 @@ def test_simhash_containment_and_pigeonhole_recall(spark, sf_dir):
         docs.select(
             F.col("doc_id"),
             F.transform(
-                distinct_tokens(F.col("text")), lambda t: F.xxhash64(t)
+                F.expr(distinct_tokens("text")), lambda t: F.xxhash64(t)
             ).alias("th"),
         )
         .select("doc_id", simhash_signature("th").alias("sig"))

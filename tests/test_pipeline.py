@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.domain.schemas import REDDIT_POST
@@ -116,6 +117,36 @@ def test_pipeline_counts_all_irrelevant(spark, tmp_path):
     res = _run(spark, tmp_path, posts)
     assert (res.n_bronze, res.n_unique, res.n_relevant) == (5, 2, 0)
     _assert_counts_match_silver(spark, res)
+
+
+@pytest.mark.parametrize(
+    "files",
+    [
+        {"b.jsonl": '{"post_id": "p9", "text": "flu\nnot a record'},
+        {"a.json": "[]"},
+        {"a.json": ""},
+        {},
+    ],
+    ids=["malformed_lines_only", "empty_array", "empty_file", "empty_dir"],
+)
+def test_pipeline_counts_empty_bronze(spark, tmp_path, files):
+    """A bronze corpus without one valid record writes no silver row, so
+    the adaptive plan drops both observations; the counts are 0."""
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    for name, text in files.items():
+        (bronze / name).write_text(text)
+    res = run_pipeline(
+        spark,
+        str(bronze),
+        str(tmp_path / "out"),
+        REDDIT_POST,
+        ts_candidates=["created_utc", "scraped_at"],
+        id_candidates=["post_id"],
+        **VOCAB,
+    )
+    assert (res.n_bronze, res.n_unique, res.n_relevant) == (0, 0, 0)
+    assert spark.read.parquet(res.gold_daily_path).count() == 0
 
 
 def test_observation_without_row_raises(spark):

@@ -517,7 +517,7 @@ def test_novelty_curve_invariants(spark, sf_dir):
     distinct = {
         r["source"]: r["n"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("source", F.explode(token_shingles(F.col("text"), n=3)).alias("g"))
+        .select("source", F.explode(token_shingles("text", n=3)).alias("g"))
         .groupBy("source")
         .agg(F.countDistinct("g").alias("n"))
         .collect()

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.streaming import pipelines as P
@@ -496,3 +498,32 @@ def test_run_to_memory_state_partitions_override_and_restore(spark, sf_dir):
         .collect()
     }
     assert out == exp
+
+
+def _checkpoint_dirs() -> set[str]:
+    import tempfile
+
+    return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("bdnds_ckpt_")}
+
+
+def test_run_to_memory_removes_its_checkpoint(spark, sf_dir):
+    """A drain leaves no checkpoint directory behind: the memory sink
+    holds the result once the availableNow run ends."""
+    before = _checkpoint_dirs()
+    src = P.stream_table(spark, sf_dir, "events").select("event_id")
+    out = P._run_to_memory(src, "append")
+    assert out.count() == table(spark, sf_dir, "events").count()
+    assert _checkpoint_dirs() - before == set()
+
+
+def test_run_to_memory_removes_its_checkpoint_when_start_fails(spark, sf_dir):
+    """A drain whose query fails to start cleans up too: complete mode
+    needs an aggregate, so start() raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    before = _checkpoint_dirs()
+    src = P.stream_table(spark, sf_dir, "events").select("event_id")
+    with pytest.raises(AnalysisException):
+        P._run_to_memory(src, "complete")
+    assert _checkpoint_dirs() - before == set()
