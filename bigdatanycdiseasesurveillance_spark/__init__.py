@@ -18,8 +18,10 @@ Architecture (see SURVEY.md for the operator blueprint):
                    tokenization) built from pyspark.sql.functions only.
 - ``sources/``   — batch/streaming source builders (parquet, JSON with
                    explicit schemas, Kafka, JDBC).
-- ``streaming/`` — Structured Streaming pipelines (availableNow drain,
-                   watermarked dedup/aggregation, stateful ops).
+- ``streaming/`` — Structured Streaming plumbing the registered drains
+                   share (file-source streams, the availableNow
+                   drain, the Kafka source); the drains themselves
+                   are query functions in ``queries/``.
 - ``plans/``     — plan inspection helpers (explain, pushdown asserts).
 
 Everything is DataFrame/Spark-SQL first: Catalyst handles pushdown,

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..streaming.pipelines import _run_to_memory, stream_table
 from ..tables import table
 
 # Shared DuckDB CTE: tokens, and n-token shingles via list_slice.
@@ -335,16 +336,40 @@ _SESSION_ORACLE = f"""
 def win_session_window(spark, sf_dir):
     """Built-in session windows in batch mode: gap-based sessions per
     user via F.session_window (the same operator Structured Streaming
-    uses for stateful sessionization — streaming_sessionize is the
+    uses for stateful sessionization — stream_sessionize is the
     custom-state twin). Oracle replays it with lag-based island
     detection. Session end = last event + gap, per Spark's contract."""
-    e = table(spark, sf_dir, "events")
+    return _sessions(table(spark, sf_dir, "events"))
+
+
+@register(
+    "stream_session_window",
+    oracle=_SESSION_ORACLE,
+    tags=("streaming", "session", "ST7"),
+)
+def stream_session_window(spark, sf_dir):
+    """ST7 built-in tier, streaming: the same session_window aggregation
+    over the event stream, run as a Structured Streaming query —
+    engine-managed gap-based session state instead of the custom
+    applyInPandasWithState sessionizer. Complete mode + availableNow
+    drain, like stream_daily_counts, so the final table carries every
+    closed-and-open session. Must equal the batch island detection
+    exactly."""
+    return _run_to_memory(_sessions(stream_table(spark, sf_dir, "events")), "complete")
+
+
+def _sessions(events):
+    """(user_id, session_start, session_end, n_events, sum_value) per
+    gap-based session window; the frame of both session-window specs."""
     return (
-        e.groupBy(
+        events.groupBy(
             "user_id", F.session_window("ts", f"{_GAP_HOURS} hours").alias("sw")
         )
         .agg(
             F.count("*").cast("long").alias("n_events"),
+            # decimal accumulation, matching the shared oracle
+            # (_SESSION_ORACLE): double money sums are summation-
+            # order-dependent
             F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
             .cast("double")
             .alias("sum_value"),
@@ -357,22 +382,6 @@ def win_session_window(spark, sf_dir):
             "sum_value",
         )
     )
-
-
-@register(
-    "stream_session_window",
-    oracle=_SESSION_ORACLE,
-    tags=("streaming", "session", "ST7"),
-)
-def stream_session_window(spark, sf_dir):
-    """ST7 built-in tier, streaming: the same session_window aggregation
-    run as a Structured Streaming query (complete mode, availableNow
-    drain) — engine-managed session state instead of the custom
-    applyInPandasWithState sessionizer. Must equal the batch island
-    detection exactly."""
-    from ..streaming.pipelines import streaming_session_windows
-
-    return streaming_session_windows(spark, sf_dir, gap_hours=_GAP_HOURS)
 
 
 _Z_BITS = 10

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from ..functions.text_funcs import distinct_tokens
 from ..operators import dedup as D
 from ..registry import register
+from ..sources.sinks import scratch_dir
 from ..tables import table
 
 
@@ -815,51 +816,6 @@ def _group_contract(labels):
     )
 
 
-_GOLD_LOCKS: dict[str, tuple[int, int]] = {}  # dir -> (owner pid, held flock fd)
-
-
-def _gold_scratch_dir(sf_dir: str, kind: str) -> str:
-    """Deterministic scratch location for a persisted-gold query's
-    artifact: one directory per (query kind, dataset), REUSED across
-    processes — the md5 sf tag plus the start-of-run rmtree already
-    gives deterministic reruns, and a pid suffix would leave one
-    orphaned artifact per process behind (r7 advisor finding:
-    repeated audit/bench runs accumulating unbounded /tmp litter).
-
-    Cross-process safety (r8 advisor finding): the shared dir is
-    guarded by a non-blocking flock held for the process lifetime —
-    without it, a gate_sim run concurrent with a benchmark run would
-    rmtree the other's mid-run gold versions. If another process holds the
-    lock, fall back to a pid-suffixed dir cleaned up at exit (bounded
-    litter: only under actual concurrency, and only until exit)."""
-    import atexit
-    import fcntl
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = os.path.join(tempfile.gettempdir(), f"bdnds_{kind}_{tag}")
-    # the pid check matters under fork: a forked child inherits
-    # _GOLD_LOCKS but must NOT treat the parent's lock as its own
-    if _GOLD_LOCKS.get(d, (None,))[0] != os.getpid():
-        fd = None
-        try:
-            # os.open inside the try: another user's 0600 lock file must
-            # fall back too (EACCES), not crash the query (r9 review)
-            fd = os.open(d + ".lock", os.O_CREAT | os.O_RDWR, 0o600)
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            _GOLD_LOCKS[d] = (os.getpid(), fd)  # held until process exit
-        except OSError:
-            if fd is not None:
-                os.close(fd)
-            d = f"{d}_{os.getpid()}"
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-    shutil.rmtree(d, ignore_errors=True)  # deterministic reruns
-    return d
-
-
 @register(
     "dedup_incremental_groups",
     oracle=_incremental_groups_oracle(),
@@ -942,7 +898,7 @@ def inc_groups_two_batch(spark, sf_dir):
     batch1 = docs.filter(F.col("doc_id") % 5 == 4)
     batch2 = docs.filter(F.col("doc_id") % 5 == 0)
 
-    gold_dir = _gold_scratch_dir(sf_dir, "incgold")
+    gold_dir = scratch_dir(sf_dir, "incgold")
 
     # version 1: base-corpus labels, persisted
     base_pairs = D.jaccard_pairs(base, threshold=0.7)
@@ -1020,7 +976,7 @@ def inc_groups_compacted(spark, sf_dir):
         docs.filter(F.col("doc_id") % 5 == 4),
     ]
 
-    gold_dir = _gold_scratch_dir(sf_dir, "incgoldc")
+    gold_dir = scratch_dir(sf_dir, "incgoldc")
 
     # version 1: base-corpus labels, persisted
     base_pairs = D.jaccard_pairs(base, threshold=0.7)

@@ -236,9 +236,15 @@ def agg_hopping_windows(spark, sf_dir):
     every 3 hours — each event lands in exactly window/slide = 2
     groups. Spark's window() explodes the assignment map-side, then
     it's an ordinary partial-agg shuffle on (window, type)."""
-    ev = table(spark, sf_dir, "events")
+    return hopping_counts(table(spark, sf_dir, "events"))
+
+
+def hopping_counts(events):
+    """(win_start, event_type, cnt) over 6-hour windows every 3 hours;
+    the frame of agg_hopping_windows and, over the watermarked event
+    stream, of stream_hopping_counts."""
     return (
-        ev.groupBy(
+        events.groupBy(
             F.window("ts", "6 hours", "3 hours").alias("w"), "event_type"
         )
         .agg(F.count("*").cast("long").alias("cnt"))

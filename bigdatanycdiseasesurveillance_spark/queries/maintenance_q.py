@@ -27,6 +27,13 @@ from pyspark.sql import functions as F
 
 from ..operators.sampling import md5_long
 from ..registry import register
+from ..sources.sinks import (
+    latest_gold_version,
+    read_latest_gold,
+    scratch_dir,
+    vacuum_gold_versions,
+    write_gold_version,
+)
 from ..tables import table, values_dim
 
 _SPLIT = "2024-01-16"  # base/delta boundary for incremental merge
@@ -212,10 +219,8 @@ def maint_compact_small_files(spark, sf_dir):
     files problem this solves (per-file open cost, scan-split floor)
     is the same failure mode tables.parallelize_scan works around at
     read time — compaction is the write-side, durable fix."""
-    import tempfile
-
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="bdnds_compact_")
+    base = scratch_dir(sf_dir, "compact")
     frag_dir = f"{base}/frag"
     comp_dir = f"{base}/compact"
     e.repartition(16).write.mode("overwrite").parquet(frag_dir)
@@ -278,12 +283,10 @@ def maint_erasure_propagation(spark, sf_dir):
     side never shuffles); the rewrite is partition-parallel, and on a
     date-partitioned table only partitions containing subject rows
     need rewriting (min/max pruning on the audit scan)."""
-    import tempfile
-
     e = table(spark, sf_dir, "events")
     subjects = e.filter(F.col("user_id") % 31 == 0).select("user_id").distinct()
     cleaned = e.join(F.broadcast(subjects), "user_id", "left_anti")
-    out_dir = tempfile.mkdtemp(prefix="bdnds_erase_") + "/clean"
+    out_dir = scratch_dir(sf_dir, "erase") + "/clean"
     cleaned.write.mode("overwrite").parquet(out_dir)
     after = spark.read.parquet(out_dir)
     residual = after.join(F.broadcast(subjects), "user_id", "inner").count()
@@ -380,16 +383,7 @@ def maint_vacuum_gold(spark, sf_dir):
     app.py:206-210, can never reclaim space safely because nothing
     marks a file committed). Self-verifying-constant oracle — the
     FFD-packing precedent."""
-    import tempfile
-
-    from ..sources.sinks import (
-        latest_gold_version,
-        read_latest_gold,
-        vacuum_gold_versions,
-        write_gold_version,
-    )
-
-    gold = tempfile.mkdtemp(prefix="bdnds_vacuum_gold_")
+    gold = scratch_dir(sf_dir, "vacuum_gold")
     latest = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")

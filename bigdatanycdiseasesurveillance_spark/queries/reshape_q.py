@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.sinks import scratch_dir
 from ..tables import table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -183,10 +184,8 @@ def src_schema_evolution_merge(spark, sf_dir):
     Scale: mergeSchema reconciles footers at planning time; the scan
     itself stays columnar with per-file projections — no rewrite of old
     snapshots when a column is added."""
-    import tempfile
-
     e = table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="bdnds_schemaevo_")
+    base = scratch_dir(sf_dir, "schemaevo")
     e.select("event_id", "ts", "user_id").write.mode("overwrite").parquet(
         f"{base}/v=1"
     )

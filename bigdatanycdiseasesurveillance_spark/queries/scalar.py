@@ -277,7 +277,20 @@ def scalar_variant_try_paths(spark, sf_dir):
     is the messy-data contract a 100 TB semi-structured ingest
     actually needs: one parse per row, then any number of typed probes
     that can't abort the job on a malformed record."""
-    e = table(spark, sf_dir, "events")
+    return variant_probe_counts(
+        table(spark, sf_dir, "events"),
+        ["event_type", "kind"],
+        F.min(F.schema_of_variant("v")).alias("variant_schema"),
+    )
+
+
+def variant_probe_counts(events, keys, *extra_aggs):
+    """The coercion matrix over `keys`: the event_id % 4 shapes of
+    props' `k` (int / nested object / non-numeric string / numeric
+    string) parsed once into VARIANT column `v` with its `kind`, probed
+    with three typed try_variant_get paths, and counted. The frame of
+    scalar_variant_try_paths and, over the event stream, of
+    stream_variant_ingest."""
     kv = F.get_json_object(F.col("props"), "$.k")
     kind = (F.col("event_id") % 4).cast("bigint")
     mp = (
@@ -286,25 +299,22 @@ def scalar_variant_try_paths(spark, sf_dir):
         .when(kind == 2, F.concat(F.lit('{"k": "lvl'), kv, F.lit('"}')))
         .otherwise(F.concat(F.lit('{"k": "'), kv, F.lit('"}')))
     )
-    parsed = e.select(
-        "event_type",
-        kind.alias("kind"),
-        F.parse_json(mp).alias("v"),
-    )
-    probed = parsed.select(
+    probed = events.select(
+        "event_type", kind.alias("kind"), F.parse_json(mp).alias("v")
+    ).select(
         "event_type",
         "kind",
+        "v",
         F.try_variant_get("v", "$.k", "bigint").alias("k_int"),
         F.try_variant_get("v", "$.k.nested", "bigint").alias("k_nested"),
         F.try_variant_get("v", "$.absent", "bigint").alias("k_absent"),
-        F.schema_of_variant("v").alias("sch"),
     )
-    return probed.groupBy("event_type", "kind").agg(
+    return probed.groupBy(*keys).agg(
         F.count("*").cast("long").alias("cnt"),
         F.count("k_int").cast("long").alias("n_int"),
         F.coalesce(F.sum("k_int"), F.lit(0)).cast("long").alias("sum_int"),
         F.count("k_nested").cast("long").alias("n_nested"),
         F.coalesce(F.sum("k_nested"), F.lit(0)).cast("long").alias("sum_nested"),
         F.count("k_absent").cast("long").alias("n_absent"),
-        F.min("sch").alias("variant_schema"),
+        *extra_aggs,
     )

@@ -9,7 +9,12 @@ compaction and retention — no collect().
 
 from __future__ import annotations
 
+import atexit
+import fcntl
+import hashlib
 import os
+import shutil
+import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,8 +33,6 @@ def write_partitioned_parquet(
 
 
 def _remove_dir(path: str) -> None:
-    import shutil
-
     shutil.rmtree(path, ignore_errors=True)
 
 
@@ -101,6 +104,44 @@ def read_latest_gold(spark: SparkSession, base_dir: str) -> DataFrame:
     if v == 0:
         raise FileNotFoundError(f"no gold versions under {base_dir}")
     return spark.read.parquet(os.path.join(base_dir, f"version={v}"))
+
+
+_SCRATCH_LOCKS: dict[str, tuple[int, int]] = {}  # dir -> (owner pid, held flock fd)
+
+
+def scratch_dir(sf_dir: str, kind: str) -> str:
+    """The scratch directory a query writes its intermediate tables,
+    gold versions or checkpoints under: one `bdnds_{kind}_{tag}` dir
+    per (kind, dataset), reused by every call and every process, so
+    repeated runs leave the same names behind instead of a new dir per
+    call. The dir is removed here (the caller's first write recreates
+    it), so each call starts clean and reruns are deterministic; a
+    frame the previous call of the same kind returned over it is gone.
+
+    Cross-process safety: the dir is guarded by a non-blocking flock
+    held for the process lifetime, so a run cannot remove another run's
+    mid-run files. If another process holds the lock, or the lock file
+    cannot be opened, the call falls back to a pid-suffixed dir that is
+    removed at exit."""
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    d = os.path.join(tempfile.gettempdir(), f"bdnds_{kind}_{tag}")
+    # the pid check matters under fork: a forked child inherits
+    # _SCRATCH_LOCKS but must NOT treat the parent's lock as its own
+    if _SCRATCH_LOCKS.get(d, (None,))[0] != os.getpid():
+        fd = None
+        try:
+            # os.open inside the try: another user's 0600 lock file must
+            # fall back too (EACCES), not crash the query
+            fd = os.open(d + ".lock", os.O_CREAT | os.O_RDWR, 0o600)
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            _SCRATCH_LOCKS[d] = (os.getpid(), fd)  # held until process exit
+        except OSError:
+            if fd is not None:
+                os.close(fd)
+            d = f"{d}_{os.getpid()}"
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+    shutil.rmtree(d, ignore_errors=True)
+    return d
 
 
 def vacuum_gold_versions(

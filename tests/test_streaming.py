@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from bigdatanycdiseasesurveillance_spark.queries import streaming_extra_q as SX
+from bigdatanycdiseasesurveillance_spark.queries import streaming_q as SQ
 from bigdatanycdiseasesurveillance_spark.streaming import pipelines as P
 from bigdatanycdiseasesurveillance_spark.tables import table
 
@@ -19,7 +21,7 @@ def test_stream_batch_schema_parity(spark, sf_dir):
 def test_streaming_daily_equals_batch(spark, sf_dir):
     got = {
         (r["day"], r["event_type"]): r["cnt"]
-        for r in P.streaming_daily_counts(spark, sf_dir).collect()
+        for r in SQ.stream_daily_counts(spark, sf_dir).collect()
     }
     want = {
         (r["day"], r["event_type"]): r["cnt"]
@@ -34,7 +36,7 @@ def test_streaming_daily_equals_batch(spark, sf_dir):
 
 
 def test_sessionize_positive_counts(spark, sf_dir):
-    out = P.streaming_sessionize(spark, sf_dir).collect()
+    out = SQ.stream_sessionize(spark, sf_dir).collect()
     assert len(out) > 0
     assert all(r["n_sessions"] >= 1 for r in out)
 
@@ -152,9 +154,9 @@ def test_sessionize_multibatch_equals_batch(spark, tmp_path):
         .parquet(str(d) + "/*")
     )
     sessions = src.groupBy("user_id").applyInPandasWithState(
-        P._make_sessionizer(gap_min * 60.0),
-        P.SESSION_SCHEMA,
-        P.SESSION_STATE_SCHEMA,
+        SQ._make_sessionizer(gap_min * 60.0),
+        SQ.SESSION_SCHEMA,
+        SQ.SESSION_STATE_SCHEMA,
         "update",
         GroupStateTimeout.NoTimeout,
     )
@@ -247,7 +249,7 @@ def test_stream_stream_join_equals_batch_range_join(spark, sf_dir):
     join on the same drained input."""
     got = {
         (r["user_id"], r["n_attributed"])
-        for r in P.streaming_click_purchase_join(spark, sf_dir).collect()
+        for r in SQ.stream_click_attribution(spark, sf_dir).collect()
     }
     ev = table(spark, sf_dir, "events")
     c = ev.filter(F.col("event_type") == "click").select(
@@ -311,31 +313,7 @@ def test_outer_join_multibatch_timeout_emission(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d) + "/*")
     )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"
-        ),
-        "leftOuter",
-    )
+    joined = SQ._click_purchase_join(src, "leftOuter")
     name = f"oj_{_uuid.uuid4().hex[:8]}"
     q = (
         joined.writeStream.format("memory")
@@ -382,25 +360,20 @@ def test_user_totals_state_tiers_agree(spark, sf_dir):
     assert got == want
 
 
-def test_foreachbatch_upsert_writes_one_gold_version_per_batch(spark, sf_dir):
+def test_foreachbatch_upsert_writes_one_gold_version_per_batch(spark, sf_dir, tmp_path):
     """The foreachBatch MERGE must actually cross micro-batch
     boundaries: 4 staged files + maxFilesPerTrigger=1 -> 4 committed
     gold versions, and the final version equals the batch
     last-writer-wins result."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from bigdatanycdiseasesurveillance_spark.sources.sinks import (
         latest_gold_version,
     )
-    from bigdatanycdiseasesurveillance_spark.streaming.pipelines import (
-        streaming_foreachbatch_upsert,
-    )
     from bigdatanycdiseasesurveillance_spark.tables import table
 
-    gold = tempfile.mkdtemp(prefix="bdnds_test_gold_")
-    out = streaming_foreachbatch_upsert(spark, sf_dir, gold_dir=gold)
+    gold = str(tmp_path / "gold")
+    out = SX.stream_foreachbatch_upsert(spark, sf_dir, gold_dir=gold)
     assert latest_gold_version(gold) == 4
 
     e = table(spark, sf_dir, "events")
@@ -419,28 +392,21 @@ def test_foreachbatch_upsert_writes_one_gold_version_per_batch(spark, sf_dir):
     assert got == want
 
 
-def test_foreachbatch_upsert_checkpoint_prevents_reprocessing(spark, sf_dir):
+def test_foreachbatch_upsert_checkpoint_prevents_reprocessing(spark, sf_dir, tmp_path):
     """Exactly-once contract: a second availableNow drain with the SAME
     checkpoint and the SAME staged source commits NOTHING new — the
     committed offsets cover every file, so the gold version count is
     unchanged (a reprocessing bug would append versions 5..8)."""
-    import tempfile
-
     from bigdatanycdiseasesurveillance_spark.sources.sinks import (
         latest_gold_version,
     )
-    from bigdatanycdiseasesurveillance_spark.streaming.pipelines import (
-        streaming_foreachbatch_upsert,
-    )
 
-    gold = tempfile.mkdtemp(prefix="bdnds_test_gold2_")
-    stage = tempfile.mkdtemp(prefix="bdnds_test_stage2_")
-    ckpt = tempfile.mkdtemp(prefix="bdnds_test_ckpt2_")
-    streaming_foreachbatch_upsert(
+    gold, stage, ckpt = (str(tmp_path / d) for d in ("gold", "stage", "ckpt"))
+    SX.stream_foreachbatch_upsert(
         spark, sf_dir, gold_dir=gold, stage_dir=stage, checkpoint_dir=ckpt
     )
     assert latest_gold_version(gold) == 4
-    streaming_foreachbatch_upsert(
+    SX.stream_foreachbatch_upsert(
         spark, sf_dir, gold_dir=gold, stage_dir=stage, checkpoint_dir=ckpt
     )
     assert latest_gold_version(gold) == 4
@@ -455,14 +421,11 @@ def test_restart_recovery_counts_and_structure(spark, sf_dir):
     restart would double-count the re-sent third and fail here."""
     from pyspark.sql import functions as F
 
-    from bigdatanycdiseasesurveillance_spark.streaming.pipelines import (
-        streaming_restart_recovery,
-    )
     from bigdatanycdiseasesurveillance_spark.tables import table
 
     got = {
         (r["event_type"], r["n_distinct_events"])
-        for r in streaming_restart_recovery(spark, sf_dir).collect()
+        for r in SQ.stream_restart_recovery(spark, sf_dir).collect()
     }
     want = {
         (r["event_type"], r["n"])
@@ -527,3 +490,18 @@ def test_run_to_memory_removes_its_checkpoint_when_start_fails(spark, sf_dir):
     with pytest.raises(AnalysisException):
         P._run_to_memory(src, "complete")
     assert _checkpoint_dirs() - before == set()
+
+
+def test_drains_leave_no_temp_view(spark, sf_dir):
+    """The memory sink registers a temp view; a drain drops it once the
+    returned frame has resolved it, and that frame (and one derived
+    from it) still reads the sink's rows."""
+    before = spark.catalog.listTables()
+    src = P.stream_table(spark, sf_dir, "events").select("event_id")
+    n_rows = P._run_to_memory(src, "append").count()
+    counts = SQ.stream_dedup_counts(spark, sf_dir).collect()
+    SQ.stream_restart_recovery(spark, sf_dir)
+    assert spark.catalog.listTables() == before
+    ev = table(spark, sf_dir, "events")
+    assert n_rows == ev.count()
+    assert sum(r["n_distinct_events"] for r in counts) == ev.select("event_id").distinct().count()
