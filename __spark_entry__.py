@@ -34,9 +34,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query."""
-    return {
-        name: spec.oracle
-        for name, spec in all_specs().items()
-        if spec.oracle is not None
-    }
+    """DuckDB-equivalent SQL for every query."""
+    return {name: spec.oracle for name, spec in all_specs().items()}

@@ -75,14 +75,15 @@ def _any_contains(text_lc: Column, words: tuple[str, ...]) -> Column:
     return cond
 
 
-def analyze_health_relevance(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the reference UDF's six outputs as native columns:
+def analyze_health_relevance(df: DataFrame) -> DataFrame:
+    """Append the reference UDF's six outputs of the `text` column as
+    native columns:
     (diseases, symptoms, severity, confidence, is_relevant, reason).
     Arrays are emitted as comma-joined strings in vocabulary order (the
     reference json-dumps a Python set for symptoms — nondeterministic
     order; the engine pins dictionary order so results hash stably)."""
-    text_lc = F.lower(F.trim(F.col(text_col)))
-    long_enough = F.length(F.trim(F.col(text_col))) >= 5
+    text_lc = F.lower(F.trim(F.col("text")))
+    long_enough = F.length(F.trim(F.col("text"))) >= 5
 
     diseases = F.filter(
         F.array(

@@ -81,15 +81,7 @@ def borough_zip_dim(spark: SparkSession) -> DataFrame:
 _NB_BOROUGH = {n[0]: n[1] for n in NEIGHBORHOODS}
 
 
-def enrich_with_location(
-    records: DataFrame,
-    spark: SparkSession,
-    subreddit_col: str = "subreddit",
-    lat_col: str = "latitude",
-    lon_col: str = "longitude",
-    zip_col: str = "zip",
-    text_col: str = "text",
-) -> DataFrame:
+def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
     """The full fallback cascade (location_consumer.py:329-372), as four
     broadcast left joins + coalesce:
 
@@ -98,8 +90,9 @@ def enrich_with_location(
     3. zip -> neighborhood (J4), zip prefix -> borough (J2);
     4. text alias scan (J6) — first alias contained in lowercased text.
 
-    Adds: neighborhood, borough, location_source. Sources that lack one
-    of the signal columns (e.g. reddit posts have no zip) contribute a
+    Adds: neighborhood, borough, location_source. The signal columns are
+    subreddit, latitude, longitude, zip and text; sources that lack one
+    of them (e.g. reddit posts have no zip) contribute a
     null signal for it — same as the reference's absent-field handling.
 
     Construction note: the cascade is assembled as ONE spark.sql
@@ -117,8 +110,8 @@ def enrich_with_location(
     def _sig(name: str, typ: str = "STRING") -> str:
         return f"r.{ident(name)}" if name in cols else f"CAST(NULL AS {typ})"
 
-    sub_c, zip_c, text_c = _sig(subreddit_col), _sig(zip_col), _sig(text_col)
-    lat_c, lon_c = _sig(lat_col, "DOUBLE"), _sig(lon_col, "DOUBLE")
+    sub_c, zip_c, text_c = _sig("subreddit"), _sig("zip"), _sig("text")
+    lat_c, lon_c = _sig("latitude", "DOUBLE"), _sig("longitude", "DOUBLE")
 
     def _values(rows, names) -> str:
         def lit(v):

@@ -22,6 +22,8 @@ public, index-friendly string format).
 from __future__ import annotations
 
 _BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"
+# geohash characters (6 -> cells of about 1.2 km x 0.6 km)
+GEOHASH_PRECISION = 6
 
 
 def _bit(var: str, j: int) -> str:
@@ -29,15 +31,15 @@ def _bit(var: str, j: int) -> str:
     return f"(CAST(floor({var} / {1 << j}.0) AS BIGINT) % 2)"
 
 
-def geohash_stages(
-    lat_expr: str, lon_expr: str, precision: int = 6
-) -> tuple[str, str, str, str]:
-    """Return (cx_sql, cy_sql, value_sql, char_sql).
+def geohash_stages(lat_expr: str, lon_expr: str) -> tuple[str, str, str, str]:
+    """Return (cx_sql, cy_sql, value_sql, char_sql) of a
+    GEOHASH_PRECISION-character geohash.
 
     value_sql references columns named gh_cx / gh_cy; char_sql
     references gh_v. Callers chain them as projections (Spark
     withColumn, SQL CTEs) so each piece is computed once.
     """
+    precision = GEOHASH_PRECISION
     total_bits = precision * 5
     lon_bits = (total_bits + 1) // 2  # lon first -> gets the extra bit
     lat_bits = total_bits // 2
@@ -66,9 +68,10 @@ def geohash_stages(
     return cx, cy, value, " || ".join(chars)
 
 
-def geohash_py(lat: float, lon: float, precision: int = 6) -> str:
+def geohash_py(lat: float, lon: float) -> str:
     """Pure-Python twin of the generated SQL (tests pin both against
     the public geohash definition)."""
+    precision = GEOHASH_PRECISION
     total_bits = precision * 5
     lon_bits = (total_bits + 1) // 2
     lat_bits = total_bits // 2

@@ -29,24 +29,16 @@ from pyspark.sql import functions as F
 # float error crosses the half-cent rounding boundary (the r7 sf1 audit
 # caught tpch_q3 flipping a cent RUN TO RUN on this class). CAVEAT: the
 # cast QUANTIZES inputs to 2 decimal places before summing — lossless
-# for money columns, lossy for anything with >2dp. Callers with
-# finer-grained values must pass a wider `value_decimal` (e.g.
-# "decimal(24,9)") or None to keep the raw double path.
-DEFAULT_VALUE_DECIMAL = "decimal(14,2)"
+# for money columns, lossy for anything with >2dp.
+VALUE_DECIMAL = "decimal(14,2)"
 
 
-def _exact_sum(value_col: str, value_decimal: str | None) -> Column:
-    if value_decimal is None:
-        return F.sum(value_col)
-    return F.sum(F.col(value_col).cast(value_decimal))
+def _exact_sum(value_col: str) -> Column:
+    return F.sum(F.col(value_col).cast(VALUE_DECIMAL))
 
 
 def daily_counts(
-    df: DataFrame,
-    ts_col: str,
-    keys: Sequence[str],
-    value_col: str | None = None,
-    value_decimal: str | None = DEFAULT_VALUE_DECIMAL,
+    df: DataFrame, ts_col: str, keys: Sequence[str], value_col: str | None = None
 ) -> DataFrame:
     """A1/A2: per-day, per-key counts (+ optional value sum).
 
@@ -54,15 +46,14 @@ def daily_counts(
     (reference: src/database/psql_db_client.py:194-209) with
     date_trunc replacing time_bucket.
 
-    `total_value` sums `value_col` AFTER casting to `value_decimal`
-    (order-independent exact accumulation; see DEFAULT_VALUE_DECIMAL —
-    inputs are quantized to that scale, so widen it or pass None for
-    >2dp values).
+    `total_value` sums `value_col` AFTER casting to VALUE_DECIMAL
+    (order-independent exact accumulation; inputs are quantized to that
+    scale).
     """
     aggs = [F.count("*").alias("cnt")]
     if value_col is not None:
         aggs.append(
-            F.round(_exact_sum(value_col, value_decimal), 2)
+            F.round(_exact_sum(value_col), 2)
             .cast("double")
             .alias("total_value")
         )
@@ -80,13 +71,13 @@ def hourly_series(df: DataFrame, ts_col: str) -> DataFrame:
     )
 
 
-def top_n(df: DataFrame, keys: Sequence[str], n: int = 10) -> DataFrame:
-    """A3/O1: top-N distribution with deterministic tie-breaking
+def top_n(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """A3/O1: top-10 distribution with deterministic tie-breaking
     (reference: src/dashboard/app.py:72-195 ORDER BY count DESC LIMIT 10).
     """
     out = df.groupBy(*keys).agg(F.count("*").alias("cnt"))
     order = [F.desc("cnt")] + [F.asc(k) for k in keys]
-    return out.orderBy(*order).limit(n)
+    return out.orderBy(*order).limit(10)
 
 
 def group_summary(df: DataFrame, keys: Sequence[str], ts_col: str) -> DataFrame:
@@ -98,49 +89,37 @@ def group_summary(df: DataFrame, keys: Sequence[str], ts_col: str) -> DataFrame:
     )
 
 
-def global_stats(
-    df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    id_col: str,
-    value_decimal: str | None = DEFAULT_VALUE_DECIMAL,
-) -> DataFrame:
+def global_stats(df: DataFrame, ts_col: str, value_col: str, id_col: str) -> DataFrame:
     """A6/A9: single-row global stats
     (reference: src/database/psql_db_client.py:461-509).
 
-    `avg_value` averages over the `value_decimal`-quantized exact sum
-    (see DEFAULT_VALUE_DECIMAL caveat for >2dp inputs)."""
+    `avg_value` averages over the VALUE_DECIMAL-quantized exact sum
+    (see its caveat for >2dp inputs)."""
     return df.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct(id_col).alias("n_distinct_ids"),
         F.min(ts_col).alias("min_ts"),
         F.max(ts_col).alias("max_ts"),
         F.round(
-            _exact_sum(value_col, value_decimal).cast("double") / F.count(F.lit(1)),
+            _exact_sum(value_col).cast("double") / F.count(F.lit(1)),
             4,
         ).alias("avg_value"),
     )
 
 
-def mean_std_per_group(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    value_decimal: str | None = DEFAULT_VALUE_DECIMAL,
-) -> DataFrame:
+def mean_std_per_group(df: DataFrame, keys: Sequence[str], value_col: str) -> DataFrame:
     """A7: historical mean/std per group feeding z-score risk
     (reference: src/analysis/disease_outbreak_forecaster.py:374-375).
 
-    `mean_value` uses the `value_decimal`-quantized exact sum while
+    `mean_value` uses the VALUE_DECIMAL-quantized exact sum while
     `std_value` intentionally keeps the RAW double path (its result is
     a generic irrational — a 4dp-boundary landing has measure zero,
     unlike finite-decimal means), so with >2dp inputs the mean is over
-    quantized values and the std over raw ones; widen `value_decimal`
-    or pass None if that asymmetry matters for your column."""
+    quantized values and the std over raw ones."""
     return df.groupBy(*keys).agg(
         F.count("*").alias("cnt"),
         F.round(
-            _exact_sum(value_col, value_decimal).cast("double") / F.count(F.lit(1)),
+            _exact_sum(value_col).cast("double") / F.count(F.lit(1)),
             4,
         ).alias("mean_value"),
         F.round(F.stddev_samp(value_col), 4).alias("std_value"),

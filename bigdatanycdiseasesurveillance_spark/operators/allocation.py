@@ -28,10 +28,9 @@ def largest_remainder_allocation(
     weight_col: str,
     budget: int,
     order_col: str,
-    out_base: str = "alloc_base",
     out_col: str = "alloc",
 ) -> DataFrame:
-    """df + integer `out_base` (floor share) and `out_col` (final
+    """df + integer `alloc_base` (floor share) and `out_col` (final
     allocation; Σ out_col == budget exactly). `weight_col` must be a
     non-negative BIGINT with a positive total; `order_col` breaks
     remainder ties deterministically (ascending)."""
@@ -51,14 +50,14 @@ def largest_remainder_allocation(
             # only compared (rank order), never summed.
             F.expr(
                 f"(CAST({budget} AS DECIMAL(38,0)) * {weight_col}) div __tw"
-            ).alias(out_base),
+            ).alias("alloc_base"),
             F.expr(
                 f"(CAST({budget} AS DECIMAL(38,0)) * {weight_col}) % __tw"
             ).alias("__rem"),
         )
         .drop("__tw")
     )
-    extra = b.agg((F.lit(budget) - F.sum(out_base)).alias("__extra"))
+    extra = b.agg((F.lit(budget) - F.sum("alloc_base")).alias("__extra"))
     ranked = b.crossJoin(F.broadcast(extra)).withColumn(
         "__rk",
         F.row_number().over(Window.orderBy(F.desc("__rem"), F.asc(order_col))),
@@ -67,10 +66,10 @@ def largest_remainder_allocation(
         ranked.withColumn(
             out_col,
             (
-                F.col(out_base)
+                F.col("alloc_base")
                 + F.when(F.col("__rk") <= F.col("__extra"), 1).otherwise(0)
             ).cast("long"),
         )
-        .withColumn(out_base, F.col(out_base).cast("long"))
+        .withColumn("alloc_base", F.col("alloc_base").cast("long"))
         .drop("__rem", "__rk", "__extra")
     )

@@ -133,30 +133,14 @@ def _lloyd_head(pts: DataFrame, dim_names: list[str]):
     return pids, cols
 
 
-def kmeans_clusters(
-    emb: DataFrame,
-    k: int = 5,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """M8: Spark ML KMeans over the embedding column (seeded, like the
-    reference's KMeans(random_state=42) at spatial_clustering.py:367).
-    Returns (vec_id, cluster_id)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = emb.select(
-        F.col(id_col), array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(feats)
-    return model.transform(feats).select(
-        F.col(id_col), F.col("prediction").cast("long").alias("cluster_id")
-    )
+# lloyd_kmeans_2d's cluster count and fixed iteration count, shared
+# with its DuckDB replay (queries/mm_cluster_q._kmeans_assign_cte)
+KMEANS_K = 5
+KMEANS_ITERS = 8
 
 
-def seeded_jitter(id_expr: str, seed: int = 42, scale: float = 0.02) -> str:
-    """M9: deterministic coordinate jitter in [-scale, scale) (the
+def seeded_jitter(id_expr: str, seed: int = 42) -> str:
+    """M9: deterministic coordinate jitter in [-0.02, 0.02) (the
     reference seeds numpy and adds uniform(-0.02, 0.02) so same-borough
     records don't collapse to one point,
     spatial_clustering.py:249-263). Engine form: a 31-bit LCG on the
@@ -166,39 +150,29 @@ def seeded_jitter(id_expr: str, seed: int = 42, scale: float = 0.02) -> str:
     multiply stays inside int64 at any id scale. Spark SQL text over the
     SQL text of the id (2147483648 parses as a BIGINT literal)."""
     r = f"((({id_expr}) % 2147483648) * 1103515245 + {12345 + seed}) % 2147483648"
-    return (
-        f"(CAST({r} AS DOUBLE) / {dlit(2147483648.0)}) * {dlit(2 * scale)}"
-        f" - {dlit(scale)}"
-    )
+    return f"(CAST({r} AS DOUBLE) / {dlit(2147483648.0)}) * {dlit(0.04)} - {dlit(0.02)}"
 
 
-def jitter_sql(id_expr: str, seed: int = 42, scale: float = 0.02) -> str:
+def jitter_sql(id_expr: str, seed: int = 42) -> str:
     """The DuckDB-equivalent expression of seeded_jitter (exact integer
     LCG, identical double result)."""
     return (
         f"(((({id_expr}) % 2147483648) * 1103515245 + {12345 + seed}) % 2147483648)"
-        f" / 2147483648.0 * {2 * scale} - {scale}"
+        f" / 2147483648.0 * 0.04 - 0.02"
     )
 
 
-def lloyd_kmeans_2d(
-    points: DataFrame,
-    k: int = 5,
-    iters: int = 8,
-    x_col: str = "x",
-    y_col: str = "y",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """M8, deterministic variant: Lloyd's k-means on 2-D points (the
-    reference clusters geographic coordinates,
-    spatial_clustering.py:342-378) — lloyd_kmeans_nd with d = 2, whose
-    SQL-replayable semantics the DuckDB oracle replays exactly. Returns
-    (id, cluster_id)."""
+def lloyd_kmeans_2d(points: DataFrame) -> DataFrame:
+    """M8, deterministic variant: Lloyd's k-means (KMEANS_K clusters,
+    KMEANS_ITERS iterations) on 2-D (vec_id, x, y) points (the reference
+    clusters geographic coordinates, spatial_clustering.py:342-378) —
+    lloyd_kmeans_nd with d = 2, whose SQL-replayable semantics the
+    DuckDB oracle replays exactly. Returns (vec_id, cluster_id)."""
     assigned, _ = lloyd_kmeans_nd(
-        points, [x_col, y_col], k=k, iters=iters, id_col=id_col
+        points, ["x", "y"], k=KMEANS_K, iters=KMEANS_ITERS, id_col="vec_id"
     )
     return assigned.select(
-        F.col("pid").alias(id_col), F.col("cluster_id").cast("long").alias("cluster_id")
+        F.col("pid").alias("vec_id"), F.col("cluster_id").cast("long").alias("cluster_id")
     )
 
 
@@ -206,11 +180,9 @@ def grid_dbscan(
     points: DataFrame,
     eps: float,
     min_samples: int = 5,
-    x_col: str = "x",
-    y_col: str = "y",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """M7: density clustering with DBSCAN semantics on 2-D points.
+    """M7: density clustering with DBSCAN semantics on 2-D (x, y) points.
 
     1. cell id = (floor(x/eps), floor(y/eps)) — every eps-neighbor pair
        shares a cell or touches an adjacent one;
@@ -228,10 +200,10 @@ def grid_dbscan(
     """
     pts = points.select(
         F.col(id_col).alias("pid"),
-        F.col(x_col).cast("double").alias("x"),
-        F.col(y_col).cast("double").alias("y"),
-        F.floor(F.col(x_col) / eps).cast("long").alias("cx"),
-        F.floor(F.col(y_col) / eps).cast("long").alias("cy"),
+        F.col("x").cast("double").alias("x"),
+        F.col("y").cast("double").alias("y"),
+        F.floor(F.col("x") / eps).cast("long").alias("cx"),
+        F.floor(F.col("y") / eps).cast("long").alias("cy"),
     )
     offsets = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
     # Explicit cell-key partitioning on BOTH join inputs (r14, the r13
@@ -338,10 +310,10 @@ def grid_dbscan(
     )
 
 
-def cluster_profiles(assigned: DataFrame, points: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """A8/M14 rollup: per-cluster size + centroid (the reference's
-    pandas value_counts profile, natively)."""
-    joined = assigned.filter(F.col("cluster_id") >= 0).join(points, id_col)
+def cluster_profiles(assigned: DataFrame, points: DataFrame) -> DataFrame:
+    """A8/M14 rollup: per-cluster size + centroid of points joined on
+    vec_id (the reference's pandas value_counts profile, natively)."""
+    joined = assigned.filter(F.col("cluster_id") >= 0).join(points, "vec_id")
     return joined.groupBy("cluster_id").agg(
         F.count("*").alias("size"),
         F.round(F.avg("x"), 4).alias("centroid_x"),
@@ -349,9 +321,7 @@ def cluster_profiles(assigned: DataFrame, points: DataFrame, id_col: str = "vec_
     )
 
 
-def cellgrid_assign(
-    cells: DataFrame, key_mult: int = 100000, num: int = 12, den: int = 10
-) -> DataFrame:
+def cellgrid_assign(cells: DataFrame, key_mult: int = 100000) -> DataFrame:
     """Corpus-size-independent geographic density clustering over
     eps-grid micro-cells (the production scale path that avoids the
     exact eps-graph DBSCAN's quadratic densification).
@@ -359,8 +329,8 @@ def cellgrid_assign(
     Input: one row per occupied cell (cx, cy, w = point count).
     Output: (cx, cy, w, cid) — cid is the min core-cell key of the
     cluster, -1 for noise. Core rule: weighted 8-neighborhood density
-    at least (num/den)x the corpus mean, in exact integers
-    (den*dens*C >= num*cnt*N), so the contract is replayable and stays
+    at least 1.2x the corpus mean, in exact integers
+    (10*dens*C >= 12*cnt*N), so the contract is replayable and stays
     meaningful at any corpus density — an absolute min_pts saturates to
     one giant cluster as data grows on fixed geography. Every join and
     CC iteration is keyed by CELL; the cell count is bounded by
@@ -412,7 +382,7 @@ def cellgrid_assign(
             if q in cw:
                 yield q
 
-    # core rule in exact integers: den*dens*c >= num*cnt*n, where
+    # core rule in exact integers: 10*dens*c >= 12*cnt*n, where
     # dens/cnt are the weighted sum / count of the occupied 8-
     # neighborhood (self included) — identical to the previous
     # dens-join + tot-crossJoin formulation
@@ -422,7 +392,7 @@ def cellgrid_assign(
         for q in neighbors(x, y):
             dens += cw[q]
             cnt += 1
-        if den * dens * c >= num * cnt * n:
+        if 10 * dens * c >= 12 * cnt * n:
             core.append((x, y))
     # k = cx*key_mult + cy is injective iff the OCCUPIED cy span stays
     # under key_mult (negative cy is fine — geo callers floor

@@ -52,15 +52,10 @@ def token_shingles(text: str, n: int = 5) -> Column:
     return F.element_at(F.transform(F.array(F.expr(tokens(text))), _shingles), 1)
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-) -> DataFrame:
-    """Flag corpus documents sharing any n-token shingle with a
-    benchmark document (test-set contamination scan).
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Flag corpus documents sharing any 5-token shingle with a
+    benchmark document (test-set contamination scan); both sides are
+    (doc_id, text) rows.
 
     Returns one row per contaminated corpus doc:
     (doc_id, n_hit_shingles, n_bench_docs) — how many distinct shingles
@@ -69,12 +64,12 @@ def decontaminate(
     side is broadcast (benchmarks are small by construction).
     """
     c = corpus.select(
-        F.col(id_col).alias("c_id"),
-        F.explode(F.array_distinct(token_shingles(text_col, n))).alias("sh"),
+        F.col("doc_id").alias("c_id"),
+        F.explode(F.array_distinct(token_shingles("text", 5))).alias("sh"),
     )
     b = benchmark.select(
-        F.col(id_col).alias("b_id"),
-        F.explode(F.array_distinct(token_shingles(text_col, n))).alias("sh"),
+        F.col("doc_id").alias("b_id"),
+        F.explode(F.array_distinct(token_shingles("text", 5))).alias("sh"),
     )
     return (
         c.join(F.broadcast(b), "sh")
@@ -86,15 +81,9 @@ def decontaminate(
     )
 
 
-def cap_per_domain(
-    df: DataFrame,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    cap: int = 100,
-    salt: str = "cap",
-) -> DataFrame:
+def cap_per_domain(df: DataFrame, cap: int = 100) -> DataFrame:
     """Deterministic per-domain quota: keep at most `cap` documents per
-    domain, chosen by md5-hash deviate of the id (stable across runs,
+    `source`, chosen by md5-hash deviate of the doc_id (stable across runs,
     partitionings, and cluster sizes — unlike rand(seed)).
 
     Adds `keep` (boolean) and `domain_rank`. One shuffle on the domain
@@ -102,21 +91,18 @@ def cap_per_domain(
     """
     from pyspark.sql.window import Window
 
-    dev = hash_deviate(F.col(id_col), salt)
-    w = Window.partitionBy(domain_col).orderBy(dev, F.col(id_col))
+    dev = hash_deviate(F.col("doc_id"), "cap")
+    w = Window.partitionBy("source").orderBy(dev, F.col("doc_id"))
     return df.withColumn("domain_rank", F.row_number().over(w)).withColumn(
         "keep", F.col("domain_rank") <= F.lit(cap)
     )
 
 
-def repetition_signals(
-    df: DataFrame,
-    text_col: str = "text",
-    n: int = 2,
-) -> DataFrame:
-    """Gopher-style repetition quality signals, per document:
+def repetition_signals(df: DataFrame) -> DataFrame:
+    """Gopher-style repetition quality signals of the `text` column,
+    per document:
 
-    - n_grams:        total n-token shingles
+    - n_grams:        total 2-token shingles
     - dup_gram_frac:  1 - distinct/total (mass in repeated n-grams)
     - top_gram_share: occurrences of the most frequent n-gram / total
 
@@ -126,7 +112,7 @@ def repetition_signals(
     already-materialized array — bounded by document length, which a
     curation pipeline bounds upstream anyway.
     """
-    grams = token_shingles(text_col, n)
+    grams = token_shingles("text", 2)
 
     def _sig(g: Column) -> Column:
         total = F.size(g)
@@ -156,10 +142,10 @@ def repetition_signals(
     ).drop("_sig")
 
 
-def nb_quality_scores(docs: DataFrame, pos_source: str = "src0") -> DataFrame:
+def nb_quality_scores(docs: DataFrame) -> DataFrame:
     """Multinomial Naive-Bayes quality classifier (the GPT-3 / CCNet
-    filter step): positive seed = documents whose ``source`` equals
-    ``pos_source``, negative = the rest. Returns one row per non-empty
+    filter step): positive seed = documents whose ``source`` is
+    ``src0``, negative = the rest. Returns one row per non-empty
     document: (doc_id, source, n_tokens, quality_logodds, quality_keep)
     where quality_logodds is the Laplace-smoothed class log-odds rounded
     to 4 decimals and quality_keep = rounded log-odds > 0.
@@ -172,7 +158,7 @@ def nb_quality_scores(docs: DataFrame, pos_source: str = "src0") -> DataFrame:
     BEFORE the keep/drop compare so the label cannot split on float
     summation order across engines or layouts.
     """
-    is_pos = F.col("source") == pos_source
+    is_pos = F.col("source") == "src0"
     tok = docs.select(
         "doc_id", "source", F.explode(F.expr(tokens("text"))).alias("term")
     )

@@ -35,14 +35,15 @@ from .bounded import bounded_collect, min_label_components
 from .setsim import md5_token_vocab_hashes, minhash_md5_set_candidates
 
 
-def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """M1: exact-duplicate groups by normalized-text hash. Returns one
-    row per distinct content: (fp, canonical_id, dup_count)."""
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
+    """M1: exact-duplicate groups of (doc_id, text) rows by
+    normalized-text hash. Returns one row per distinct content:
+    (fp, canonical_id, dup_count)."""
     return (
-        df.select(F.expr(fingerprint(text_col)).alias("fp"), F.col(id_col))
+        df.select(F.expr(fingerprint("text")).alias("fp"), F.col("doc_id"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("canonical_id"),
+            F.min("doc_id").alias("canonical_id"),
             F.count("*").alias("dup_count"),
         )
     )
@@ -73,22 +74,15 @@ def _blocked_pairs(
     return a.join(b, cond)
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    chars_col: str = "n_chars",
-    threshold: float = 0.7,
-    char_bucket: int = 50,
-) -> DataFrame:
-    """M2-class n-gram (word) Jaccard near-dup pairs, blocked by
-    (source, length bucket). Returns (id_a, id_b, jaccard)."""
+def jaccard_pairs(df: DataFrame) -> DataFrame:
+    """M2-class n-gram (word) Jaccard near-dup pairs of (doc_id, text,
+    source, n_chars) rows, blocked by (source, 50-char length bucket).
+    Returns (id_a, id_b, jaccard), jaccard >= JACCARD_DUP_THRESHOLD."""
     pairs = _blocked_pairs(
         df,
-        id_col,
-        [F.col(source_col), F.floor(F.col(chars_col) / F.lit(char_bucket))],
-        {"tok": F.expr(distinct_tokens(text_col))},
+        "doc_id",
+        [F.col("source"), F.floor(F.col("n_chars") / F.lit(50))],
+        {"tok": F.expr(distinct_tokens("text"))},
     )
     j = F.expr(word_jaccard("a_tok", "b_tok"))
     return (
@@ -97,19 +91,11 @@ def jaccard_pairs(
             F.col("b_id").alias("id_b"),
             F.round(j, 4).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_DUP_THRESHOLD)
     )
 
 
-def jaccard_pairs_gemm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    chars_col: str = "n_chars",
-    threshold: float = 0.7,
-    char_bucket: int = 50,
-) -> DataFrame:
+def jaccard_pairs_gemm(df: DataFrame) -> DataFrame:
     """jaccard_pairs via per-block binary GEMM (applyInPandas).
 
     Same blocking and output contract as jaccard_pairs; the pair work
@@ -121,6 +107,7 @@ def jaccard_pairs_gemm(
     exactly: lower, split on single spaces, drop empties, distinct.
     """
     schema = "id_a long, id_b long, jaccard double"
+    threshold = JACCARD_DUP_THRESHOLD
 
     def block_pairs(pdf):  # closure: executors don't import this repo
         import numpy as np
@@ -130,10 +117,10 @@ def jaccard_pairs_gemm(
         m = len(pdf)
         if m < 2:
             return empty
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["doc_id"].to_numpy()
         token_sets = [
             frozenset(t for t in (s or "").lower().split(" ") if t)
-            for s in pdf[text_col]
+            for s in pdf["text"]
         ]
         vocab = {}
         for ts in token_sets:
@@ -164,10 +151,10 @@ def jaccard_pairs_gemm(
         )
 
     blocked = df.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.col(source_col).alias("__blk_src"),
-        F.floor(F.col(chars_col) / F.lit(char_bucket)).alias("__blk_len"),
+        F.col("doc_id"),
+        F.col("text"),
+        F.col("source").alias("__blk_src"),
+        F.floor(F.col("n_chars") / F.lit(50)).alias("__blk_len"),
     )
     # explicit block-key repartition before the groupBy — same AQE-
     # coalescing guard as embedding_cosine_pairs_gemm (see there): the
@@ -192,6 +179,14 @@ MINHASH_BANDS = 8
 SIMHASH_BITS = 64
 SIMHASH_CHUNKS = 4
 
+# Near-duplicate cut-offs: word Jaccard for the text tiers, rounded
+# cosine for the embedding tier.
+JACCARD_DUP_THRESHOLD = 0.7
+COSINE_DUP_THRESHOLD = 0.35
+# Row-chunk of embedding_cosine_pairs_gemm's per-block matmul (peak
+# memory chunk x block rows; results do not depend on it).
+GEMM_CHUNK = 4096
+
 # connected_components small-graph cap: a pair list at or under this
 # many rows is labeled driver-side in one collect (~3 MB of long pairs —
 # the broadcast-relation size class) instead of running the multi-round
@@ -204,37 +199,34 @@ SMALL_GRAPH_PAIRS = 200_000
 CC_MAX_STEPS = 20
 
 
-def minhash_band_hashes(
-    sig_expr: str = "sig", n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS
-) -> list[str]:
+def minhash_band_hashes(n_perm: int = MINHASH_N_PERM, bands: int = MINHASH_BANDS) -> list[str]:
     """SQL text per band: xxhash64 over that band's signature slots of
-    the array<long> `sig_expr`. Bucket collision <=> band-hash equality,
+    the array<long> column `sig`. Bucket collision <=> band-hash equality,
     so this is both the production bucket key and the certification's
     hit predicate."""
     rows_per_band = n_perm // bands
     return [
         "xxhash64("
-        + ", ".join(f"{sig_expr}[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
         + ")"
         for b in range(bands)
     ]
 
 
-def simhash_chunk_structs(
-    sig_col: str = "sig", bits: int = SIMHASH_BITS, chunks: int = SIMHASH_CHUNKS
-) -> list[Column]:
-    """struct(chunk, ckey) per 16-bit signature chunk — the blocking
-    key layout shared by simhash_pairs and its certification."""
-    chunk_bits = bits // chunks
+def simhash_chunk_structs() -> list[Column]:
+    """struct(chunk, ckey) per 16-bit chunk of the long column `sig` —
+    the blocking key layout shared by simhash_pairs and its
+    certification."""
+    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     return [
         F.struct(
             F.lit(c).alias("chunk"),
-            F.shiftright(F.col(sig_col), c * chunk_bits)
+            F.shiftright(F.col("sig"), c * chunk_bits)
             .bitwiseAND(F.lit(mask))
             .alias("ckey"),
         )
-        for c in range(chunks)
+        for c in range(SIMHASH_CHUNKS)
     ]
 
 
@@ -255,13 +247,11 @@ def minhash_signature(tokens_expr: str, n_perm: int = MINHASH_N_PERM) -> str:
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_perm: int = MINHASH_N_PERM,
     bands: int = MINHASH_BANDS,
-    threshold: float = 0.7,
+    threshold: float = JACCARD_DUP_THRESHOLD,
 ) -> DataFrame:
-    """M2: MinHash-LSH near-dup detection. shingle -> minhash -> band ->
+    """M2: MinHash-LSH near-dup detection over (doc_id, text) rows. shingle -> minhash -> band ->
     bucket -> verify. With 32 perms in 8 bands of 4, pairs with Jaccard
     0.7 collide in >=1 band w.p. ~0.97; all candidates are then verified
     with exact Jaccard so the output has no false positives. Returns
@@ -283,14 +273,13 @@ def minhash_lsh_pairs(
     # operator is one statement (see functions.sql_text).
     bands_sql = ", ".join(
         f"named_struct('band', {b}, 'bucket', {h})"
-        for b, h in enumerate(minhash_band_hashes("sig", n_perm, bands))
+        for b, h in enumerate(minhash_band_hashes(n_perm, bands))
     )
     return df.sparkSession.sql(
         f"""
         WITH toks AS (
             SELECT id, tok, {minhash_signature("tok", n_perm)} AS sig
-            FROM (SELECT {ident(id_col)} AS id, {distinct_tokens(ident(text_col))} AS tok
-                  FROM {{df}})
+            FROM (SELECT doc_id AS id, {distinct_tokens("text")} AS tok FROM {{df}})
         ), cand AS (
             SELECT DISTINCT id_a, id_b
             FROM (SELECT inline(flatten(transform(ids, a -> transform(
@@ -484,28 +473,22 @@ def simhash_signature(hashes_expr: str, bits: int = 64) -> Column:
     return F.expr(simhash_signature_sql(hashes_expr, bits))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = SIMHASH_BITS,
-    max_hamming: int = 8,
-) -> DataFrame:
-    """M2/M3-class SimHash near-dup pairs. Blocking: split the 64-bit
+def simhash_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
+    """M2/M3-class SimHash near-dup pairs of (doc_id, text) rows. Blocking: split the 64-bit
     signature into (max_hamming/16+1... practical: 4) 16-bit chunks —
     pairs within Hamming<=max_hamming must agree on >=1 chunk when
     max_hamming < 4*? (pigeonhole holds for max_hamming <= 3 with 4
     chunks; larger budgets trade recall). Candidates verified with the
     true Hamming distance. Returns (id_a, id_b, hamming)."""
     hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.expr(distinct_tokens(text_col)), lambda t: F.xxhash64(t)).alias("th"),
+        F.col("doc_id").alias("id"),
+        F.transform(F.expr(distinct_tokens("text")), lambda t: F.xxhash64(t)).alias("th"),
     )
-    sigs = hashed.select("id", simhash_signature("th", bits).alias("sig"))
+    sigs = hashed.select("id", simhash_signature("th", SIMHASH_BITS).alias("sig"))
     banded = sigs.select(
         "id",
         "sig",
-        F.explode(F.array(*simhash_chunk_structs("sig", bits))).alias("cc"),
+        F.explode(F.array(*simhash_chunk_structs())).alias("cc"),
     ).select("id", "sig", "cc.chunk", "cc.ckey")
     a = banded.select("chunk", "ckey", F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     b = banded.select("chunk", "ckey", F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -521,19 +504,14 @@ def simhash_pairs(
     )
 
 
-def embedding_cosine_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """M3: embedding-cosine near-dup pairs within blocks. The block
-    column stands in for an LSH bucket (BucketedRandomProjectionLSH
-    would generate it for unblocked corpora). Returns
-    (id_a, id_b, cosine_sim)."""
+def embedding_cosine_pairs(emb: DataFrame) -> DataFrame:
+    """M3: embedding-cosine near-dup pairs of (vec_id, label, embedding)
+    rows within label blocks. The block column stands in for an LSH
+    bucket (BucketedRandomProjectionLSH would generate it for unblocked
+    corpora). Returns (id_a, id_b, cosine_sim), cosine_sim >=
+    COSINE_DUP_THRESHOLD."""
     side = emb.select(
-        F.col(id_col).alias("id"), F.col(block_col).alias("blk"), unit(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), F.col("label").alias("blk"), unit(F.col("embedding")).alias("v")
     )
     a = side.select(F.col("id").alias("id_a"), F.col("blk"), F.col("v").alias("v_a"))
     b = side.select(F.col("id").alias("id_b"), F.col("blk"), F.col("v").alias("v_b"))
@@ -541,16 +519,11 @@ def embedding_cosine_pairs(
     sim = dot(F.col("v_a"), F.col("v_b"))
     return pairs.select(
         "id_a", "id_b", F.round(sim, 4).alias("cosine_sim")
-    ).filter(F.col("cosine_sim") >= threshold)
+    ).filter(F.col("cosine_sim") >= COSINE_DUP_THRESHOLD)
 
 
 def embedding_cosine_pairs_gemm(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    threshold: float = 0.35,
-    chunk: int = 4096,
+    emb: DataFrame, block_col: str = "label", threshold: float = COSINE_DUP_THRESHOLD
 ) -> DataFrame:
     """embedding_cosine_pairs via per-block numpy GEMM (applyInPandas)
     — the production kernel; the expression variant above is its
@@ -567,21 +540,22 @@ def embedding_cosine_pairs_gemm(
     cosine rounded to 4 BEFORE the threshold compare.
 
     Scale: one task per block; chunked GEMM bounds peak memory at
-    chunk x m without changing results. Blocks beyond single-task
+    GEMM_CHUNK x m without changing results. Blocks beyond single-task
     memory shard through the blocked expression variant.
     """
     schema = "id_a long, id_b long, cosine_sim double"
+    chunk = GEMM_CHUNK
 
     def pairs_block(pdf):  # closure: executors don't import this repo
         import numpy as np
         import pandas as _pd
 
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
         m = len(ids)
         if m < 2:
             return _pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []})
-        M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         norms = np.linalg.norm(M, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
         M /= norms
@@ -611,20 +585,15 @@ def embedding_cosine_pairs_gemm(
     # semdedup pair stage ran 2 tasks, 0.52s, on 32 idle cores).
     spread = emb.sparkSession.sparkContext.defaultParallelism
     return (
-        emb.select(id_col, block_col, vec_col)
+        emb.select("vec_id", block_col, "embedding")
         .repartition(spread, block_col)
         .groupBy(block_col)
         .applyInPandas(pairs_block, schema)
     )
 
 
-def minhash_md5_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """M2 (oracle-replayable tier): MinHash-LSH whose hash family is
+def minhash_md5_pairs(df: DataFrame) -> DataFrame:
+    """M2 (oracle-replayable tier), over (doc_id, text) rows: MinHash-LSH whose hash family is
     md5-derived — ``sampling.hash_deviate(token, seed)`` — which DuckDB
     reproduces bit-for-bit, so the ENTIRE pipeline (signatures,
     banding, candidate join, exact-Jaccard verify) is SQL-checkable end
@@ -638,13 +607,13 @@ def minhash_md5_pairs(
     exact-verified, so no false positives survive.
     """
     toks = df.select(
-        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
+        F.col("doc_id").alias("id"), F.expr(distinct_tokens("text")).alias("tok")
     )
     cand = minhash_md5_set_candidates(
         toks.select(F.col("id").alias("mask"), F.explode("tok").alias("t"))
     ).select(F.col("mask_a").alias("id_a"), F.col("mask_b").alias("id_b"))
     return df.sparkSession.sql(
-        _verify_pairs("{cand}", "{toks}", threshold), cand=cand, toks=toks
+        _verify_pairs("{cand}", "{toks}", JACCARD_DUP_THRESHOLD), cand=cand, toks=toks
     )
 
 
@@ -660,15 +629,8 @@ def _verify_pairs(cand: str, toks: str, threshold: float) -> str:
         WHERE {jaccard} >= {dlit(threshold)}"""
 
 
-def simhash_md5_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bits: int = 48,
-    chunk_bits: int = 16,
-    max_hamming: int = 8,
-) -> DataFrame:
-    """M2 (oracle-replayable tier): SimHash whose per-token hashes are
+def simhash_md5_pairs(df: DataFrame) -> DataFrame:
+    """M2 (oracle-replayable tier), over (doc_id, text) rows: SimHash whose per-token hashes are
     md5-derived, so signatures, chunk blocking, and Hamming verify all
     replay bit-for-bit in DuckDB (the xxhash64 simhash_pairs stays the
     throughput path). 48-bit signature (top bit headroom keeps every
@@ -682,15 +644,16 @@ def simhash_md5_pairs(
     reassembles with shiftleft; candidates come from a 3-way chunk
     equi-join, verified by bit_count(xor).
     """
+    n_bits, chunk_bits = 48, 16
     n_chunks = n_bits // chunk_bits
     toks = df.select(
-        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
+        F.col("doc_id").alias("id"), F.expr(distinct_tokens("text")).alias("tok")
     )
     tok_rows = toks.select("id", F.explode("tok").alias("t"))
     # vocab-sized hashing: the "sim" md5 runs once per distinct token,
     # joined back to the occurrence rows (bit-identical values)
     hashed = tok_rows.join(
-        md5_token_vocab_hashes(tok_rows, "t", [("h", "sim")]), "t"
+        md5_token_vocab_hashes(tok_rows, [("h", "sim")]), "t"
     ).select("id", "h")
     votes = hashed.groupBy("id").agg(
         F.count("*").alias("n"),
@@ -749,7 +712,7 @@ def simhash_md5_pairs(
     return (
         a.join(b, ["c", "chunk"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(ham <= max_hamming)
+        .filter(ham <= 8)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", ham.cast("long").alias("hamming"))
     )

@@ -41,15 +41,10 @@ def md5_dim_sql(text_expr: str, dim_expr: str) -> str:
     )
 
 
-def encode_documents(
-    docs: DataFrame,
-    text_col: str = "text",
-    dim: int = 384,
-    model_name: str = "all-MiniLM-L6-v2",
-    out_col: str = "embedding",
-    dtype: str = "float32",
-) -> DataFrame:
-    """Append an L2-normalized embedding column. One mapInPandas pass;
+def encode_documents(docs: DataFrame, dim: int = 384, dtype: str = "float32") -> DataFrame:
+    """Append an L2-normalized `embedding` column of the `text` column
+    (all-MiniLM-L6-v2 where sentence-transformers is installed, the md5
+    stand-in otherwise). One mapInPandas pass;
     the model/encoder initializes once per worker (not per batch).
     dtype="float64" keeps full precision for oracle-replayable paths."""
     from ..tables import parallelize_scan
@@ -58,7 +53,7 @@ def encode_documents(
     # (single-row-group parquet = ONE split) doesn't serialize it
     docs = parallelize_scan(docs)
     elem = T.DoubleType() if dtype == "float64" else T.FloatType()
-    fields = docs.schema.fields + [T.StructField(out_col, T.ArrayType(elem))]
+    fields = docs.schema.fields + [T.StructField("embedding", T.ArrayType(elem))]
     out_schema = T.StructType(fields)
     cols = docs.columns
 
@@ -73,7 +68,7 @@ def encode_documents(
         try:  # production path, absent in this container
             from sentence_transformers import SentenceTransformer  # type: ignore
 
-            model = SentenceTransformer(model_name)
+            model = SentenceTransformer("all-MiniLM-L6-v2")
         except Exception:
             model = None
 
@@ -104,20 +99,20 @@ def encode_documents(
 
         np_dtype = "float64" if dtype == "float64" else "float32"
         for pdf in batch_iter:
-            texts = pdf[text_col].fillna("").tolist()
+            texts = pdf["text"].fillna("").tolist()
             if model is not None:
                 vecs = model.encode(texts, normalize_embeddings=True)
             else:
                 vecs = pseudo_encode(texts)
             pdf = pdf[cols].copy()
-            pdf[out_col] = [v.astype(np_dtype) for v in vecs]
+            pdf["embedding"] = [v.astype(np_dtype) for v in vecs]
             yield pdf
 
     return docs.mapInPandas(encode_batches, out_schema)
 
 
-def embedding_profile(encoded: DataFrame, group_col: str = "lang") -> DataFrame:
-    """Per-group embedding sanity profile: count, dim, mean L2 norm
+def embedding_profile(encoded: DataFrame) -> DataFrame:
+    """Per-`lang` embedding sanity profile: count, dim, mean L2 norm
     (≈1.0 for a normalized encoder) — the aggregate the loader logs
     (embedding_consumer.py:296-301), distributed."""
     norm = F.sqrt(
@@ -127,7 +122,7 @@ def embedding_profile(encoded: DataFrame, group_col: str = "lang") -> DataFrame:
             lambda s, x: s + x,
         )
     )
-    return encoded.groupBy(group_col).agg(
+    return encoded.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.min(F.size("embedding")).cast("long").alias("dim"),
         F.round(F.avg(norm), 4).alias("mean_l2_norm"),

@@ -40,10 +40,11 @@ K, W = 8, 4  # gram size, window size -> guarantee threshold k+w-1 = 11
 B, M = 257, 1_000_000_007  # polynomial base / modulus (exact in int64)
 
 
-def winnow_set(text_col: Column, k: int = K, w: int = W) -> Column:
+def winnow_set(text_col: Column) -> Column:
     """Distinct winnowed fingerprints of a text column as array<long>.
     Pure column expressions; exact integer arithmetic both Spark and
     DuckDB reproduce bit-for-bit."""
+    k, w = K, W
 
     empty = F.array().cast("array<long>")
 
@@ -87,23 +88,21 @@ def winnow_set(text_col: Column, k: int = K, w: int = W) -> Column:
     return F.transform(F.array(F.split(text_col, "")), with_chars)[0]
 
 
-def winnow_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = K, w: int = W
-) -> DataFrame:
-    """(id, fingerprint) rows — one row per distinct winnowed
-    fingerprint per document. Column-expression path (oracle-parity)."""
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
+    """(doc_id, fingerprint) rows of (doc_id, text) rows — one row per
+    distinct winnowed fingerprint per document. Column-expression path
+    (oracle-parity)."""
     return df.select(
-        F.col(id_col), F.explode(winnow_set(F.col(text_col), k, w)).alias("fingerprint")
+        F.col("doc_id"), F.explode(winnow_set(F.col("text"))).alias("fingerprint")
     )
 
 
-def winnow_fingerprints_rolling(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = K, w: int = W
-) -> DataFrame:
+def winnow_fingerprints_rolling(df: DataFrame) -> DataFrame:
     """Same contract as winnow_fingerprints, O(len) per doc: one
     multiply/add/subtract per slide instead of refolding k chars per
     gram. Arrow-batched mapInPandas — the long-document hot path."""
-    schema = f"{id_col} long, fingerprint long"
+    schema = "doc_id long, fingerprint long"
+    k, w = K, W
 
     def gen(batches):  # closure: executors never import this repo
         import pandas as _pd
@@ -111,7 +110,7 @@ def winnow_fingerprints_rolling(
         bk = pow(B, k, M)  # drop-term weight for the sliding update
         for pdf in batches:
             ids, fps = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 s = text or ""
                 if len(s) < k + w - 1:
                     continue
@@ -131,26 +130,18 @@ def winnow_fingerprints_rolling(
                         seen.add(m)
                         ids.append(doc_id)
                         fps.append(m)
-            yield _pd.DataFrame({id_col: ids, "fingerprint": fps})
+            yield _pd.DataFrame({"doc_id": ids, "fingerprint": fps})
 
     from ..tables import parallelize_scan
 
     # rolling hash is Python-per-doc — rebalance single-split scans
-    return parallelize_scan(df.select(id_col, text_col)).mapInPandas(gen, schema)
+    return parallelize_scan(df.select("doc_id", "text")).mapInPandas(gen, schema)
 
 
-def fingerprint_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_shared: int = 3,
-    max_df: int = 50,
-    k: int = K,
-    w: int = W,
-) -> DataFrame:
-    """Near-dup/containment candidate pairs: docs sharing >= min_shared
-    winnowed fingerprints, after dropping fingerprints present in more
-    than max_df docs (common-shingle cutoff — no discriminating signal,
+def fingerprint_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup/containment candidate pairs of (doc_id, text) rows: docs
+    sharing >= 3 winnowed fingerprints, after dropping fingerprints
+    present in more than 50 docs (common-shingle cutoff — no discriminating signal,
     quadratic buckets). Bucketed equi-join on the fingerprint: shuffle
     is linear in the fingerprint table, never all-pairs.
     Returns (id_a, id_b, n_shared)."""
@@ -166,22 +157,22 @@ def fingerprint_pairs(
     # two of them broadcast-exchange futures — was re-computing the
     # whole winnow pass (profiled r14: three single-task 3.4-4.8 s jobs
     # inside dedup_fingerprint_pairs' 13 s warm time; ~1.5 s after).
-    fps = winnow_fingerprints(
-        parallelize_scan(df.select(id_col, text_col)), text_col, id_col, k, w
-    ).localCheckpoint(eager=False)
+    fps = winnow_fingerprints(parallelize_scan(df.select("doc_id", "text"))).localCheckpoint(
+        eager=False
+    )
     rare = (
         fps.groupBy("fingerprint")
         .agg(F.count("*").alias("df_count"))
-        .filter(F.col("df_count") <= max_df)
+        .filter(F.col("df_count") <= 50)
         .select("fingerprint")
     )
     kept = fps.join(rare, "fingerprint")
-    a = kept.select(F.col("fingerprint"), F.col(id_col).alias("id_a"))
-    b = kept.select(F.col("fingerprint"), F.col(id_col).alias("id_b"))
+    a = kept.select(F.col("fingerprint"), F.col("doc_id").alias("id_a"))
+    b = kept.select(F.col("fingerprint"), F.col("doc_id").alias("id_b"))
     return (
         a.join(b, "fingerprint")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )

@@ -29,21 +29,15 @@ from pyspark.sql import functions as F
 EPOCH_DAY = "2024-01-01"
 
 
-def linear_forecast(
-    daily: DataFrame,
-    keys: list[str],
-    day_col: str = "day",
-    value_col: str = "cnt",
-    horizon: int = 7,
-) -> DataFrame:
-    """Per-group OLS forecast for the next `horizon` days, clipped at 0
-    (the reference clips predictions at 0:
+def linear_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-group OLS forecast of a (keys..., day, cnt) daily series for
+    the next 7 days, clipped at 0 (the reference clips predictions at 0:
     disease_outbreak_forecaster.py:84-86). Returns
     (keys..., horizon_day, predicted)."""
-    x = F.datediff(F.col(day_col), F.lit(EPOCH_DAY).cast("date")).cast("double")
+    x = F.datediff(F.col("day"), F.lit(EPOCH_DAY).cast("date")).cast("double")
     fit = daily.groupBy(*keys).agg(
-        F.regr_slope(F.col(value_col).cast("double"), x).alias("slope"),
-        F.regr_intercept(F.col(value_col).cast("double"), x).alias("icpt"),
+        F.regr_slope(F.col("cnt").cast("double"), x).alias("slope"),
+        F.regr_intercept(F.col("cnt").cast("double"), x).alias("icpt"),
         F.max(x).alias("mx"),
     )
     horizons = fit.select(
@@ -51,7 +45,7 @@ def linear_forecast(
         "slope",
         "icpt",
         "mx",
-        F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("horizon_day"),
+        F.explode(F.sequence(F.lit(1), F.lit(7))).alias("horizon_day"),
     )
     pred = F.round(
         F.greatest(
@@ -65,14 +59,9 @@ def linear_forecast(
     )
 
 
-def seasonal_dow_forecast(
-    daily: DataFrame,
-    keys: list[str],
-    day_col: str = "day",
-    value_col: str = "cnt",
-    horizon: int = 7,
-) -> DataFrame:
-    """Additive weekly-seasonal forecast — Prophet's weekly-seasonality
+def seasonal_dow_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
+    """Additive weekly-seasonal 7-day forecast of a (keys..., day, cnt)
+    daily series — Prophet's weekly-seasonality
     niche (disease_outbreak_forecaster.py:56-126's weekly_seasonality)
     in closed form: per-group day-of-week means give the seasonal
     component, OLS over the deseasonalized series gives the trend, and
@@ -83,12 +72,12 @@ def seasonal_dow_forecast(
     broadcasts). Day-of-week is (days since 1970-01-01) % 7 on both
     engines, so no locale/weekstart ambiguity. Returns
     (keys..., forecast_day, horizon_day, predicted >= 0)."""
-    x = F.datediff(F.col(day_col), F.to_date(F.lit("1970-01-01"))).cast("long")
+    x = F.datediff(F.col("day"), F.to_date(F.lit("1970-01-01"))).cast("long")
     base = daily.select(
         *keys,
         x.alias("idx"),
         (x % 7).alias("dow"),
-        F.col(value_col).cast("double").alias("y"),
+        F.col("cnt").cast("double").alias("y"),
     )
     dowm = base.groupBy(*keys, "dow").agg(F.avg("y").alias("dow_mean"))
     gm = base.groupBy(*keys).agg(F.avg("y").alias("gmean"))
@@ -110,7 +99,7 @@ def seasonal_dow_forecast(
         *keys,
         "slope",
         "icpt",
-        F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("h"),
+        F.explode(F.sequence(F.lit(1), F.lit(7))).alias("h"),
         F.col("mx"),
     ).select(
         *keys,

@@ -26,13 +26,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_dim_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """J2/J4/J5/J6: equi-join against a small dimension, broadcast so the
-    fact side never shuffles (reference dict lookups, e.g.
+def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
+    """J2/J4/J5/J6: inner equi-join against a small dimension, broadcast
+    so the fact side never shuffles (reference dict lookups, e.g.
     src/spark_consumers/nyc_neighborhoods.py:176-187)."""
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def full_outer_compare(
@@ -55,20 +53,14 @@ def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     return left.join(right, on, "left_semi")
 
 
-def range_band_join(
-    fact: DataFrame,
-    bands: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-) -> DataFrame:
+def range_band_join(fact: DataFrame, bands: DataFrame, value_col: str) -> DataFrame:
     """J3: point-in-range join against a small band dimension — the
     point-in-bbox shape (reference:
     src/spark_consumers/nyc_neighborhoods.py:190-205 linear scan).
     Broadcast nested-loop: each executor scans its fact partition against
     the in-memory bands; no shuffle of the fact side. Interval convention
-    [lo, hi)."""
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
+    [lo, hi) over the bands' `lo` and `hi` columns."""
+    cond = (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
     return fact.join(F.broadcast(bands), cond, "left")
 
 

@@ -92,12 +92,13 @@ def decode_media(media: DataFrame) -> DataFrame:
     return parallelize_scan(media).mapInPandas(_make_decoder(), DECODED_SCHEMA)
 
 
-def resize_plan(decoded: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning as native column math (the scale factor / target
-    dims don't need Python): preserves aspect ratio, never upscales."""
+def resize_plan(decoded: DataFrame) -> DataFrame:
+    """Resize planning to a 256-pixel longest side as native column math
+    (the scale factor / target dims don't need Python): preserves aspect
+    ratio, never upscales."""
     scale = F.least(
         F.lit(1.0),
-        F.lit(float(max_side))
+        F.lit(256.0)
         / F.greatest(F.col("width"), F.col("height"), F.lit(1)).cast("double"),
     )
     return decoded.withColumn("scale", F.round(scale, 4)).withColumn(
@@ -105,15 +106,15 @@ def resize_plan(decoded: DataFrame, max_side: int = 256) -> DataFrame:
     ).withColumn("target_h", F.floor(F.col("height") * scale).cast("long"))
 
 
-def frame_sample(decoded: DataFrame, every_k: int = 10) -> DataFrame:
-    """Frame sampling for video rows: native sequence() — the sampled
+def frame_sample(decoded: DataFrame) -> DataFrame:
+    """Every-10th-frame sampling for video rows: native sequence() — the sampled
     index list is plan-side; only actual frame extraction would be a
     mapInPandas decode."""
     return decoded.withColumn(
         "sampled_frames",
         F.when(
             F.col("media_type") == "video",
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_k)),
+            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(10)),
         ).otherwise(F.array().cast("array<long>")),
     ).withColumn("n_sampled", F.size("sampled_frames").cast("long"))
 

@@ -26,51 +26,40 @@ from pyspark.sql import functions as F
 
 from .ranking import bucketed_running_sum
 
+# tokens per training sequence
+PACK_BUDGET = 256
 
-def pack_concat_chunks(
-    df: DataFrame,
-    n_tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    budget: int = 256,
-    bucket=None,
-) -> DataFrame:
-    """Concat-and-chunk accounting: each doc's half-open token span
-    [start_tok, end_tok) in the global stream, and the chunk ids it
-    touches. A doc spans `last_chunk - first_chunk + 1` sequences.
+
+def pack_concat_chunks(df: DataFrame) -> DataFrame:
+    """Concat-and-chunk accounting of (doc_id, n_tokens) rows: each
+    doc's half-open token span [start_tok, end_tok) in the global
+    stream, and the PACK_BUDGET-token chunk ids it touches. A doc spans
+    `last_chunk - first_chunk + 1` sequences.
 
     The global running sum uses the bucketed device
     (operators/ranking.py, r10 verdict directive #5): rows bucket by
-    4096-id ranges (or a caller-supplied `bucket` column for
-    non-numeric ids), sum locally per bucket, and add prefix-summed
+    4096-id ranges, sum locally per bucket, and add prefix-summed
     bucket offsets computed on the control plane — value-identical to
     `SUM(n) OVER (ORDER BY id ROWS UNBOUNDED PRECEDING)` (the oracle's
     form) with no single-partition window. Chunk ids are exact integer
     `div` arithmetic on the non-negative token offsets."""
-    if bucket is None:
-        # The default bucket assumes a numeric id: under non-ANSI configs
-        # a non-numeric id casts to NULL and the rank join would silently
-        # drop rows (ANSI mode throws instead, masking the hazard). Gate
-        # on the schema type so the failure is loud and identical on all
-        # configs; callers with string/uuid ids supply `bucket=`.
-        dtype = df.schema[id_col].dataType.simpleString()
-        if dtype not in (
-            "tinyint",
-            "smallint",
-            "int",
-            "bigint",
-        ) and not dtype.startswith("decimal"):
-            raise ValueError(
-                f"pack_concat_chunks: default bucketing needs an integer "
-                f"id column, got {id_col}:{dtype}; pass an explicit "
-                f"bucket= expression (non-decreasing along {id_col})"
-            )
-        bucket = F.expr(f"CAST({id_col} AS BIGINT) div 4096")
-    wd = df.select(id_col, F.col(n_tokens_col).cast("long").alias("n_tokens"))
+    # The bucket assumes a numeric id: under non-ANSI configs a
+    # non-numeric id casts to NULL and the rank join would silently drop
+    # rows (ANSI mode throws instead, masking the hazard). Gate on the
+    # schema type so the failure is loud and identical on all configs.
+    dtype = df.schema["doc_id"].dataType.simpleString()
+    if dtype not in ("tinyint", "smallint", "int", "bigint") and not dtype.startswith("decimal"):
+        raise ValueError(
+            f"pack_concat_chunks: bucketing needs an integer id column, got doc_id:{dtype}"
+        )
+    bucket = F.expr("CAST(doc_id AS BIGINT) div 4096")
+    wd = df.select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
     summed = bucketed_running_sum(
-        wd, bucket, [F.asc(id_col)], "n_tokens", out_col="end_tok"
+        wd, bucket, [F.asc("doc_id")], "n_tokens", out_col="end_tok"
     )
+    budget = PACK_BUDGET
     return summed.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         (F.col("end_tok") - F.col("n_tokens")).alias("start_tok"),
         "end_tok",
@@ -87,17 +76,13 @@ PACK_SCHEMA = (
 )
 
 
-def pack_greedy_ffd(
-    df: DataFrame,
-    n_tokens_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    budget: int = 256,
-    n_buckets: int = 8,
-) -> DataFrame:
-    """First-fit-decreasing packing within hash buckets. Docs larger
-    than the budget get a dedicated pack (flagged by pack_slot = -1).
+def pack_greedy_ffd(df: DataFrame) -> DataFrame:
+    """First-fit-decreasing packing of (doc_id, n_tokens) rows into
+    PACK_BUDGET-token packs within 8 hash buckets. Docs larger than the
+    budget get a dedicated pack (flagged by pack_slot = -1).
     Deterministic: bucket = crc-free md5-independent pmod of the id,
     FFD order = (tokens desc, id). pack_id = bucket * 2^40 + local."""
+    budget = PACK_BUDGET
 
     def pack_bucket(key, pdf):
         # closure: executors don't have this repo on sys.path.
@@ -144,23 +129,17 @@ def pack_greedy_ffd(
         )
 
     prepared = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(n_tokens_col).cast("long").alias("n_tokens"),
-        F.pmod(F.col(id_col).cast("long"), F.lit(n_buckets))
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.pmod(F.col("doc_id").cast("long"), F.lit(8))
         .cast("int")
         .alias("bucket"),
     )
     return prepared.groupBy("bucket").applyInPandas(pack_bucket, PACK_SCHEMA)
 
 
-def sliding_chunks(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    size: int = 64,
-    stride: int = 48,
-) -> DataFrame:
-    """Overlapping sliding-window chunking — the LLM-prep step between
+def sliding_chunks(df: DataFrame, size: int = 64, stride: int = 48) -> DataFrame:
+    """Overlapping sliding-window chunking of (doc_id, text) rows — the LLM-prep step between
     cleaning and packing (long-context corpora are chunked with overlap
     so no span is split mid-context; RAG indexing uses the same layout).
 
@@ -174,20 +153,20 @@ def sliding_chunks(
     from ..functions.text_funcs import tokens
 
     t = (
-        df.select(F.col(id_col), F.expr(tokens(text_col)).alias("tok"))
+        df.select(F.col("doc_id"), F.expr(tokens("text")).alias("tok"))
         .withColumn("n", F.size("tok"))
         .filter(F.col("n") > 0)
     )
     n_chunks = F.floor((F.col("n") - 1) / stride) + 1
     c = t.select(
-        id_col,
+        "doc_id",
         "tok",
         "n",
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     )
     start = F.col("chunk_idx") * stride
     return c.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         start.cast("long").alias("start_tok"),
         F.least(F.lit(size), F.col("n") - start).cast("long").alias("chunk_len"),

@@ -38,17 +38,16 @@ def _matches(text_lc: str, vocab: Sequence[str]) -> str:
 
 def extract_relevance(
     df: DataFrame,
-    text_col: str = "text",
     primary: Sequence[str] = PRIMARY_VOCAB,
     secondary: Sequence[str] = SECONDARY_VOCAB,
     hazard: Sequence[str] = HAZARD_VOCAB,
-    min_len: int = 5,
 ) -> DataFrame:
-    """Append relevance columns mirroring the reference's rules:
+    """Append relevance columns of the `text` column mirroring the
+    reference's rules:
 
     - relevance rule: primary>0 OR secondary>=2 OR hazard>0
       (relevance_consumer.py:217-240);
-    - min-length guard: len(text) < min_len -> not relevant
+    - min-length guard: len(text) < 5 -> not relevant
       (relevance_consumer.py:211-212);
     - severity: 3+ primary 'severe', 2 'moderate', else 'mild'
       (severity heuristic shape, relevance_consumer.py:243-249);
@@ -59,7 +58,7 @@ def extract_relevance(
     arrays repeat per output column, and codegen's subexpression
     elimination computes each once per row.
     """
-    text = ident(text_col)
+    text = ident("text")
     text_lc = f"lower({text})"
     p = _matches(text_lc, primary)
     s = _matches(text_lc, secondary)
@@ -71,7 +70,7 @@ def extract_relevance(
         "n_secondary": f"CAST({n_s} AS BIGINT)",
         "n_hazard": f"CAST({n_h} AS BIGINT)",
         "is_relevant": (
-            f"length({text}) >= {int(min_len)}"
+            f"length({text}) >= 5"
             f" AND ({n_p} > 0 OR {n_s} >= 2 OR {n_h} > 0)"
         ),
         "severity": (

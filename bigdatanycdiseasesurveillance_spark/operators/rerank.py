@@ -31,19 +31,14 @@ def ce_sql(query: str, id_expr: str = "doc_id") -> str:
     )
 
 
-def cross_encoder_scores(
-    candidates: DataFrame,
-    query_text: str,
-    id_col: str = "doc_id",
-    out_col: str = "ce_score",
-) -> DataFrame:
-    """Append a pairwise (query, doc) relevance score to a K-row
-    candidate frame. Real path: a sentence-transformers CrossEncoder
+def cross_encoder_scores(candidates: DataFrame, query_text: str) -> DataFrame:
+    """Append a pairwise (query, doc) relevance score `ce_score` to a
+    K-row candidate frame keyed by doc_id. Real path: a sentence-transformers CrossEncoder
     held as a per-worker singleton; hermetic path: md5('ce:' || query
     || ':' || doc_id) scaled to [0, 1) — deterministic and
     SQL-replayable."""
     cols = candidates.columns
-    schema = candidates.schema.simpleString()[7:-1] + f",{out_col} double"
+    schema = candidates.schema.simpleString()[7:-1] + ",ce_score double"
 
     def score_batches(batch_iter):
         import hashlib
@@ -73,10 +68,10 @@ def cross_encoder_scores(
                         >> 4
                     )
                     / CE_SCALE
-                    for i in pdf[id_col]
+                    for i in pdf["doc_id"]
                 ]
             pdf = pdf[cols].copy()
-            pdf[out_col] = scores
+            pdf["ce_score"] = scores
             yield pdf
 
     return candidates.mapInPandas(score_batches, schema)

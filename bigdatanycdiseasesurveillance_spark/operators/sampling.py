@@ -46,29 +46,20 @@ def deviate_sql(key_expr: str, salt: str) -> str:
     )
 
 
-def sample_bernoulli(
-    df: DataFrame, key_col: str, rate: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep each row with probability `rate`, deterministically by key.
-    No shuffle — the predicate evaluates inside the scan stage and at
-    100 TB composes with partition pruning (filter first, then sample)."""
-    return df.filter(
-        hash_deviate(F.col(key_col), salt) < F.lit(int(rate * _SCALE))
-    )
-
-
 def sample_stratified(
     df: DataFrame,
     key_col: str,
     stratum_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    salt: str = "strat",
 ) -> DataFrame:
     """Per-stratum rates (`sampleBy` analog, but layout-independent):
     e.g. keep 100% of a rare source and 5% of a dominant one — the
-    canonical rebalancing step before training-data mixing."""
-    dev = hash_deviate(F.col(key_col), salt)
+    canonical rebalancing step before training-data mixing. Each row is
+    kept deterministically by key, with no shuffle: the predicate
+    evaluates inside the scan stage and at 100 TB composes with
+    partition pruning (filter first, then sample)."""
+    dev = hash_deviate(F.col(key_col), "strat")
     threshold = F.lit(int(default_rate * _SCALE))
     for stratum, rate in rates.items():
         threshold = (
@@ -78,14 +69,12 @@ def sample_stratified(
     return df.filter(dev < threshold)
 
 
-def train_test_split(
-    df: DataFrame, key_col: str, test_rate: float = 0.1, salt: str = "split"
-) -> DataFrame:
+def train_test_split(df: DataFrame, key_col: str, test_rate: float = 0.1) -> DataFrame:
     """Tag every row 'train' or 'test' — disjoint and exhaustive by
     construction (one deviate, one threshold), unlike two independent
     sample() calls which can overlap or leak. Downstream filters on the
     tag; the tag costs one md5 per row and no shuffle."""
-    dev = hash_deviate(F.col(key_col), salt)
+    dev = hash_deviate(F.col(key_col), "split")
     return df.withColumn(
         "split",
         F.when(dev < F.lit(int(test_rate * _SCALE)), F.lit("test")).otherwise(
@@ -101,7 +90,6 @@ def take_token_budget(
     tokens_col: str,
     budgets: dict[str, int],
     default_budget: int = 0,
-    salt: str = "mix",
 ) -> DataFrame:
     """Data mixing by token budget: per stratum, keep documents (in
     deterministic deviate order) while the RUNNING token total before
@@ -116,7 +104,7 @@ def take_token_budget(
     """
     from pyspark.sql.window import Window
 
-    dev = hash_deviate(F.col(key_col), salt)
+    dev = hash_deviate(F.col(key_col), "mix")
     w = (
         Window.partitionBy(stratum_col)
         .orderBy(dev, F.col(key_col))

@@ -50,19 +50,20 @@ def _ceil_mul_div(sz, threshold: float):
     return F.floor((sz * F.lit(num) + F.lit(den - 1)) / F.lit(den)).cast("int")
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """All pairs with word-Jaccard >= threshold, exactly.
+# prefix_filter_jaccard_pairs' Jaccard cut-off
+PREFIX_JACCARD_THRESHOLD = 0.7
+
+
+def prefix_filter_jaccard_pairs(df: DataFrame) -> DataFrame:
+    """All pairs of (doc_id, text) rows with word-Jaccard >=
+    PREFIX_JACCARD_THRESHOLD, exactly.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to
     4 (round-on-both-sides parity rule).
     """
+    threshold = PREFIX_JACCARD_THRESHOLD
     toks = df.select(
-        F.col(id_col).alias("id"), F.expr(distinct_tokens(text_col)).alias("tok")
+        F.col("doc_id").alias("id"), F.expr(distinct_tokens("text")).alias("tok")
     ).filter(F.size("tok") > 0)
 
     tok_doc = toks.select("id", F.explode("tok").alias("t"))
@@ -147,15 +148,9 @@ def weighted_digest(w: str, *keys: str):
     return F.sum((F.col(w) * (hv % DIGEST_MOD)) % DIGEST_MOD) % DIGEST_MOD
 
 
-def mask_relation(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    extra_cols: tuple = (),
-    keep_empty: bool = False,
-):
-    """(toks, masks): toks = (id, tok array, *extra); masks = (id, mask,
-    *extra) — one row per document, mask = the token-set bitmask under
+def mask_relation(df: DataFrame, extra_cols: tuple = (), keep_empty: bool = False):
+    """(toks, masks) of (doc_id, text) rows: toks = (id, tok array,
+    *extra); masks = (id, mask, *extra) — one row per document, mask = the token-set bitmask under
     the alphabetical token dictionary. Raises when the vocabulary
     exceeds 63 tokens (mask kernel domain — see the module rationale:
     tiny-vocab corpora are exactly where pair emitters explode).
@@ -167,9 +162,9 @@ def mask_relation(
 
     extras = [F.col(c) if isinstance(c, str) else c for c in extra_cols]
     toks = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         *extras,
-        F.expr(distinct_tokens(text_col)).alias("tok"),
+        F.expr(distinct_tokens("text")).alias("tok"),
     )
     if not keep_empty:
         toks = toks.filter(F.size("tok") > 0)
@@ -197,11 +192,11 @@ def mask_relation(
     return toks, masks
 
 
-def _mask_groups(df: DataFrame, text_col: str, id_col: str):
+def _mask_groups(df: DataFrame):
     """(toks, g): toks = (id, tok array); g = one row per distinct
     non-empty token set: (mask, c, rep). Raises when the vocabulary
     exceeds 63 tokens (mask kernel domain)."""
-    toks, masks = mask_relation(df, text_col, id_col)
+    toks, masks = mask_relation(df)
     g = masks.groupBy("mask").agg(
         F.count("*").cast("long").alias("c"), F.min("id").alias("rep")
     )
@@ -261,12 +256,7 @@ def _pair_stats_row(g: DataFrame, cand: DataFrame, threshold: float = 0.7) -> Da
     )
 
 
-def jaccard_pair_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
+def jaccard_pair_stats(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold, folded to the stats row.
 
     Candidates come from the SAME prefix-filter scheme as
@@ -274,7 +264,7 @@ def jaccard_pair_stats(
     frequency order), run over the distinct-set relation; the oracle is
     brute force over all set pairs — so a prefix-filter recall bug goes
     red on n_pairs/digest, which is the point of the surface."""
-    toks, g = _mask_groups(df, text_col, id_col)
+    toks, g = _mask_groups(df)
 
     gt = g.join(toks, g["rep"] == toks["id"]).select(
         "mask", F.explode("tok").alias("t")
@@ -330,15 +320,13 @@ def jaccard_pair_stats(
     return _pair_stats_row(g, cand, threshold)
 
 
-def minhash_md5_pair_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_md5_pair_stats(df: DataFrame) -> DataFrame:
     """MinHash-LSH (md5 hash family) candidate pairs, exact-verified and
     folded to the stats row. The FULL banding pipeline runs — per-seed
     md5 hashes, groupBy-min signatures, band equi-join — over distinct
     token sets; the oracle replays the identical hash family, so a
     banding bug changes the candidate set and goes red."""
-    toks, g = _mask_groups(df, text_col, id_col)
+    toks, g = _mask_groups(df)
     return _pair_stats_row(g, minhash_md5_set_candidates(mask_token_rows(g, toks)))
 
 
@@ -379,11 +367,9 @@ MD5_MINHASH_HASHES = 16  # md5-MinHash signature length ...
 MD5_MINHASH_BANDS = 4  # ... split into 4 bands of 4 slots
 
 
-def md5_token_vocab_hashes(
-    tok_rows: DataFrame, tok_col: str = "t", salts=None
-) -> DataFrame:
-    """Seeded md5 token hashes computed over the DISTINCT token
-    vocabulary, not the token stream: one row per distinct token with
+def md5_token_vocab_hashes(tok_rows: DataFrame, salts=None) -> DataFrame:
+    """Seeded md5 hashes of the `t` column computed over the DISTINCT
+    token vocabulary, not the token stream: one row per distinct token with
     one hash_deviate column per (alias, salt) pair — join back to the
     token rows to attach them. "Hash the vocabulary, not the stream":
     md5 depends only on (salt, token), so hashing per (carrier, token)
@@ -412,10 +398,8 @@ def md5_token_vocab_hashes(
     lineage may checkpoint at the call site; the helper stays lazy."""
     if salts is None:
         salts = [(f"h{s}", str(s)) for s in range(MD5_MINHASH_HASHES)]
-    vocab = tok_rows.select(tok_col).distinct()
-    return vocab.select(
-        tok_col, *[hash_deviate(F.col(tok_col), salt).alias(a) for a, salt in salts]
-    )
+    vocab = tok_rows.select("t").distinct()
+    return vocab.select("t", *[hash_deviate(F.col("t"), salt).alias(a) for a, salt in salts])
 
 
 def minhash_md5_set_bands(mask_toks: DataFrame) -> DataFrame:
@@ -471,13 +455,11 @@ def minhash_md5_set_candidates(mask_toks: DataFrame) -> DataFrame:
     )
 
 
-def minhash_md5_set_dup_pairs(
-    mask_toks: DataFrame, thresh_e4: int = 7000
-) -> DataFrame:
+def minhash_md5_set_dup_pairs(mask_toks: DataFrame) -> DataFrame:
     """Verified near-dup DISTINCT-SET pairs (mask_a < mask_b, je4) from
     the md5-MinHash band join: the set-level image of
-    operators.dedup.minhash_md5_pairs (round(jaccard,4) >= t). Identical
+    operators.dedup.minhash_md5_pairs (round(jaccard,4) >= 0.7). Identical
     sets (jaccard 1.0) are NOT emitted here — they are the within-group
     terms callers weight by C(c, 2)."""
     cand = minhash_md5_set_candidates(mask_toks)
-    return cand.withColumn("je4", je4_expr()).filter(F.col("je4") >= thresh_e4)
+    return cand.withColumn("je4", je4_expr()).filter(F.col("je4") >= 7000)

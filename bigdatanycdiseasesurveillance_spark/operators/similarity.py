@@ -25,17 +25,20 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine, dot, unit
 
+# ivf_search's top-k
+IVF_TOPK = 10
+
 
 def brute_force_topk(
     emb: DataFrame,
     query_vec: list[float],
     k: int = 10,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     where: Column | None = None,
     extra_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector. The query
+    """Exact cosine top-k of the `embedding` column against a literal
+    query vector. The query
     vector is a literal array, so the comparison is a scan + ordered
     top-k — no join, no shuffle of the corpus, TakeOrderedAndProject
     keeps only k rows per partition. extra_cols carries metadata
@@ -43,7 +46,7 @@ def brute_force_topk(
     # one parsed expression, not len(vec) Py4J literal calls
     q = F.expr("array(" + ", ".join(repr(float(x)) + "D" for x in query_vec) + ")")
     scored = emb if where is None else emb.filter(where)
-    sim = cosine(as_double(F.col(vec_col)), as_double(q))
+    sim = cosine(as_double(F.col("embedding")), as_double(q))
     carried = [F.col(c) for c in (extra_cols or [])]
     return (
         scored.select(F.col(id_col), *carried, F.round(sim, 4).alias("cosine_sim"))
@@ -52,14 +55,9 @@ def brute_force_topk(
     )
 
 
-def knn_per_block(
-    emb: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-) -> DataFrame:
-    """Top-k neighbors for EVERY vector within its block (IVF cell).
+def knn_per_block(emb: DataFrame) -> DataFrame:
+    """Top-3 neighbors for EVERY vector of (vec_id, label, embedding)
+    rows within its label block (IVF cell).
     Block equi-join keeps the pair space per-cell; the ranking window
     partitions on the left id so the top-k never leaves the executors.
     Returns (vec_id, neighbor_id, cosine_sim, rank).
@@ -73,11 +71,11 @@ def knn_per_block(
     from .skew import salted_join
 
     side = emb.select(
-        F.col(id_col).alias("id"), F.col(block_col).alias("blk"), unit(F.col(vec_col)).alias("u")
+        F.col("vec_id").alias("id"), F.col("label").alias("blk"), unit(F.col("embedding")).alias("u")
     )
     a = side.select(F.col("id").alias("vec_id"), "blk", F.col("u").alias("v_a"))
     b = side.select(F.col("id").alias("neighbor_id"), "blk", F.col("u").alias("v_b"))
-    pairs = salted_join(a, b, on="blk", salt=8, left_salt_from=["vec_id"]).filter(
+    pairs = salted_join(a, b, on="blk", left_salt_from=["vec_id"]).filter(
         F.col("vec_id") != F.col("neighbor_id")
     )
     sim = F.round(dot(F.col("v_a"), F.col("v_b")), 4)
@@ -85,7 +83,7 @@ def knn_per_block(
     return (
         pairs.select("vec_id", "neighbor_id", sim.alias("sim"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select(
             "vec_id",
             "neighbor_id",
@@ -95,13 +93,7 @@ def knn_per_block(
     )
 
 
-def knn_per_block_gemm(
-    emb: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-) -> DataFrame:
+def knn_per_block_gemm(emb: DataFrame) -> DataFrame:
     """knn_per_block via per-cell numpy GEMM (applyInPandas).
 
     The pure-DataFrame knn join materializes BOTH 64-dim arrays for
@@ -115,25 +107,25 @@ def knn_per_block_gemm(
     Scale: one task per cell; m×m fits memory for IVF-sized cells
     (m ≤ ~20k). Bigger cells shard via the blocked pure-SQL variant.
     """
-    schema = f"{id_col} long, neighbor_id long, cosine_sim double, rank long"
+    schema = "vec_id long, neighbor_id long, cosine_sim double, rank long"
 
     def topk_block(pdf):  # closure: executors don't import this repo
         import numpy as np
         import pandas as _pd
 
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         m = len(ids)
         if m < 2:
             return _pd.DataFrame(
-                {id_col: [], "neighbor_id": [], "cosine_sim": [], "rank": []}
+                {"vec_id": [], "neighbor_id": [], "cosine_sim": [], "rank": []}
             )
-        M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         norms = np.linalg.norm(M, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
         M /= norms
         S = np.round(M @ M.T, 4)
         np.fill_diagonal(S, -np.inf)
-        kk = min(k, m - 1)
+        kk = min(3, m - 1)
         out_id, out_nb, out_sim, out_rank = [], [], [], []
         for i in range(m):
             order = np.lexsort((ids, -S[i]))[:kk]
@@ -143,7 +135,7 @@ def knn_per_block_gemm(
             out_rank.extend(range(1, kk + 1))
         return _pd.DataFrame(
             {
-                id_col: out_id,
+                "vec_id": out_id,
                 "neighbor_id": out_nb,
                 "cosine_sim": out_sim,
                 "rank": out_rank,
@@ -156,21 +148,20 @@ def knn_per_block_gemm(
     # coalescing starves the cores
     spread = emb.sparkSession.sparkContext.defaultParallelism
     return (
-        emb.select(id_col, block_col, vec_col)
-        .repartition(spread, block_col)
-        .groupBy(block_col)
+        emb.select("vec_id", "label", "embedding")
+        .repartition(spread, "label")
+        .groupBy("label")
         .applyInPandas(topk_block, schema)
     )
 
 
-def ivf_centroids(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", cell_col: str = "label"
-) -> DataFrame:
-    """Per-cell centroids as element-wise means: posexplode -> groupBy
-    (cell, pos) -> avg -> re-assemble ordered array. Fully distributed;
-    output is n_cells rows (broadcastable)."""
+def ivf_centroids(emb: DataFrame) -> DataFrame:
+    """Per-cell centroids of (label, embedding) rows as element-wise
+    means: posexplode -> groupBy (cell, pos) -> avg -> re-assemble
+    ordered array. Fully distributed; output is n_cells rows
+    (broadcastable)."""
     exploded = emb.select(
-        F.col(cell_col).alias("cell"), F.posexplode(as_double(F.col(vec_col)))
+        F.col("label").alias("cell"), F.posexplode(as_double(F.col("embedding")))
     ).toDF("cell", "pos", "val")
     dims = exploded.groupBy("cell", "pos").agg(F.avg("val").alias("m"))
     return dims.groupBy("cell").agg(
@@ -180,20 +171,14 @@ def ivf_centroids(
     )
 
 
-def ivf_build(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    path: str | None = None,
-) -> DataFrame:
+def ivf_build(emb: DataFrame, path: str | None = None) -> DataFrame:
     """BUILD-time IVF index step: compute the per-cell centroid table
     once, over the whole corpus. At 100 TB this is the one full scan you
     pay at index-build; pass `path` to persist the n_cells-row result as
     parquet so every subsequent query reads the tiny table instead of
     re-deriving it. Returns the centroid DataFrame (read back from
     `path` when persisted)."""
-    cents = ivf_centroids(emb, id_col, vec_col, cell_col)
+    cents = ivf_centroids(emb)
     if path is not None:
         cents.write.mode("overwrite").parquet(path)
         return emb.sparkSession.read.parquet(path)
@@ -203,16 +188,13 @@ def ivf_build(
 def ivf_search(
     emb: DataFrame,
     query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
     nprobe: int = 1,
     where: Column | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF search: rank cells by centroid similarity to the query, scan
-    only the nprobe closest cells, exact top-k inside them. The
+    """IVF search over label cells: rank cells by centroid similarity to
+    the query, scan only the nprobe closest cells, exact top-IVF_TOPK
+    inside them. The
     centroid table is tiny (collected to pick cells — n_cells rows, not
     data rows), and the data-side scan is a partition-pruned filter.
 
@@ -223,7 +205,7 @@ def ivf_search(
     cents = (
         centroids
         if centroids is not None
-        else ivf_centroids(emb, id_col, vec_col, cell_col)
+        else ivf_centroids(emb)
     )
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     ranked = (
@@ -232,10 +214,10 @@ def ivf_search(
         .limit(nprobe)
     )
     probe_cells = [r["cell"] for r in ranked.collect()]
-    cond = F.col(cell_col).isin(probe_cells)
+    cond = F.col("label").isin(probe_cells)
     if where is not None:
         cond = cond & where
-    return brute_force_topk(emb, query_vec, k, id_col, vec_col, where=cond)
+    return brute_force_topk(emb, query_vec, IVF_TOPK, where=cond)
 
 
 def rp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
@@ -254,39 +236,27 @@ def rp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
     return sig
 
 
-def rp_lsh_pairs(
-    emb: DataFrame,
-    planes: list[list[float]],
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rp_lsh_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     """M3 at scale: embedding near-dup pairs WITHOUT a precomputed block
     column — random-projection buckets bound the candidate set (the
     unblocked-corpus replacement for label blocking / Spark ML's
     BucketedRandomProjectionLSH), then exact cosine verifies. Returns
-    (id_a, id_b, cosine_sim)."""
+    (id_a, id_b, cosine_sim), cosine_sim >= 0.3."""
     side = emb.select(
-        F.col(id_col).alias("id"),
-        rp_signature(F.col(vec_col), planes).alias("bucket"),
-        unit(F.col(vec_col)).alias("u"),
+        F.col("vec_id").alias("id"),
+        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        unit(F.col("embedding")).alias("u"),
     )
     a = side.select(F.col("id").alias("id_a"), "bucket", F.col("u").alias("v_a"))
     b = side.select(F.col("id").alias("id_b"), "bucket", F.col("u").alias("v_b"))
     pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
     sim = F.round(dot(F.col("v_a"), F.col("v_b")), 4)
     return pairs.select("id_a", "id_b", sim.alias("cosine_sim")).filter(
-        F.col("cosine_sim") >= threshold
+        F.col("cosine_sim") >= 0.3
     )
 
 
-def hard_negatives(
-    emb: DataFrame,
-    planes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def hard_negatives(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Contrastive-pair mining: for each anchor, the most cosine-similar
     vector with a DIFFERENT label among its RP-LSH bucket mates — the
     "hard negative" a contrastive trainer wants (similar surface,
@@ -301,10 +271,10 @@ def hard_negatives(
     struct orderings.
     """
     side = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("lbl"),
-        rp_signature(F.col(vec_col), planes).alias("bucket"),
-        unit(F.col(vec_col)).alias("u"),
+        F.col("vec_id").alias("id"),
+        F.col("label").alias("lbl"),
+        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        unit(F.col("embedding")).alias("u"),
     )
     a = side.select(
         F.col("id").alias("id_a"), F.col("lbl").alias("lbl_a"), "bucket",
@@ -323,20 +293,14 @@ def hard_negatives(
         .groupBy("id_a")
         .agg(F.max(F.struct(F.col("sim"), (-F.col("id_b")).alias("nid"))).alias("m"))
         .select(
-            F.col("id_a").alias(id_col),
+            F.col("id_a").alias("vec_id"),
             (-F.col("m.nid")).cast("long").alias("hard_neg_id"),
             F.col("m.sim").alias("cosine_sim"),
         )
     )
 
 
-def rp_lsh_multiprobe_pairs(
-    emb: DataFrame,
-    planes: list[list[float]],
-    threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rp_lsh_multiprobe_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     """Multi-probe RP-LSH: each vector probes its own bucket AND every
     1-bit-flip neighbor, so pairs whose signatures differ in at most one
     hyperplane sign also become candidates — the standard recall lever
@@ -352,9 +316,9 @@ def rp_lsh_multiprobe_pairs(
     """
     nbits = len(planes)
     side = emb.select(
-        F.col(id_col).alias("id"),
-        rp_signature(F.col(vec_col), planes).alias("bucket"),
-        unit(F.col(vec_col)).alias("u"),
+        F.col("vec_id").alias("id"),
+        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        unit(F.col("embedding")).alias("u"),
     )
     probes = F.array(
         F.col("bucket"),
@@ -373,19 +337,13 @@ def rp_lsh_multiprobe_pairs(
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", F.round(dot(F.col("v_a"), F.col("v_b")), 4).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
+        .filter(F.col("cosine_sim") >= 0.3)
         .distinct()
     )
     return pairs
 
 
-def quantize_recall_gemm(
-    corpus: DataFrame,
-    q: DataFrame,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_recall_gemm(corpus: DataFrame, q: DataFrame) -> DataFrame:
     """Per-corpus-vector int8-quantization fidelity vs a fixed query
     vector, as one Arrow-batched numpy pass (mapInPandas) — the kernel
     behind emb_quantize_recall. `q` is the 1-row broadcast side carrying
@@ -403,11 +361,8 @@ def quantize_recall_gemm(
     tests/test_curation.py — and the dot/norm summation-order drift is
     absorbed by the same round-to-4 the oracle applies.
     """
-    schema = (
-        f"{id_col} long, {label_col} int, cos_exact double, "
-        "cos_quant double, abs_err double"
-    )
-    joined = corpus.select(id_col, label_col, vec_col).crossJoin(F.broadcast(q))
+    schema = "vec_id long, label int, cos_exact double, cos_quant double, abs_err double"
+    joined = corpus.select("vec_id", "label", "embedding").crossJoin(F.broadcast(q))
 
     def batches(it):  # closure: executors don't import this repo
         import numpy as np
@@ -416,7 +371,7 @@ def quantize_recall_gemm(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            E = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             qd = np.asarray(pdf["qd"].iloc[0], dtype=np.float64)
             qdq = np.asarray(pdf["qdq"].iloc[0], dtype=np.float64)
             scales = np.maximum(np.abs(E).max(axis=1) / 127.0, 1e-30)[:, None]
@@ -427,8 +382,8 @@ def quantize_recall_gemm(
             )
             yield _pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
-                    label_col: pdf[label_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "label": pdf["label"].to_numpy(),
                     # + 0.0 collapses IEEE -0.0 (same device as the
                     # expression formulation)
                     "cos_exact": np.round(ce, 4) + 0.0,

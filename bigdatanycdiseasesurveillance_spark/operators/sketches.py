@@ -93,7 +93,12 @@ def cms_bucket(col, d: int, width: int):
     return hash_deviate(col, f"cms:{d}") % width
 
 
-def cms_table(items: DataFrame, col: str, width: int = 32, depth: int = 4) -> DataFrame:
+# count-min sketch shape: CMS_DEPTH hash rows of CMS_WIDTH counters
+CMS_WIDTH = 32
+CMS_DEPTH = 4
+
+
+def cms_table(items: DataFrame, col: str) -> DataFrame:
     """Count-min sketch in relational form: one row per (d, bucket) with
     its counter. Mergeable: the sketch of a union of corpora is SUM(cnt)
     grouped by (d, bucket) over the per-corpus sketches — the same
@@ -104,6 +109,7 @@ def cms_table(items: DataFrame, col: str, width: int = 32, depth: int = 4) -> Da
     the whole point of sketching a 100 TB column whose exact groupBy
     would shuffle billions of distinct keys.
     """
+    width, depth = CMS_WIDTH, CMS_DEPTH
     v = F.col(col).cast("string")
     buckets = items.select(
         *[cms_bucket(v, d, width).alias(f"b{d}") for d in range(depth)]
@@ -124,13 +130,12 @@ def cms_table(items: DataFrame, col: str, width: int = 32, depth: int = 4) -> Da
     return stacked.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("cnt"))
 
 
-def cms_estimates(
-    queries: DataFrame, col: str, cms: DataFrame, width: int = 32, depth: int = 4
-) -> DataFrame:
+def cms_estimates(queries: DataFrame, col: str, cms: DataFrame) -> DataFrame:
     """Point-query estimates against a built sketch: est(x) = min over
     depth rows of counter[d][bucket_d(x)] (0 when a bucket is absent —
     only possible for items outside the sketched corpus). The sketch is
     depth x width rows, so the join broadcasts; query volume streams."""
+    width, depth = CMS_WIDTH, CMS_DEPTH
     v = F.col(col).cast("string")
     qb = queries.select(
         F.col(col),

@@ -18,16 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# ways each join key is split
+SALT_WAYS = 8
+
 
 def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt: int = 8,
-    left_salt_from: list[str] | None = None,
-    how: str = "inner",
+    left: DataFrame, right: DataFrame, on: str, left_salt_from: list[str] | None = None
 ) -> DataFrame:
-    """Equi-join `left.on == right.on` with SALT-way key splitting.
+    """Inner equi-join `left.on == right.on` with SALT_WAYS-way key
+    splitting.
 
     The left side gets a deterministic salt in [0, salt) hashed from
     `left_salt_from` (defaults to all left columns — any stable unique-ish
@@ -35,6 +34,7 @@ def salted_join(
     equals the plain join, but each (key, salt) shuffle bucket carries
     ~1/salt of a hot key's rows.
     """
+    salt = SALT_WAYS
     salt_cols = left_salt_from or left.columns
     lhs = left.withColumn(
         "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(salt)).cast("int")
@@ -42,5 +42,5 @@ def salted_join(
     rhs = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    out = lhs.join(rhs, [on, "__salt"], how)
+    out = lhs.join(rhs, [on, "__salt"], "inner")
     return out.drop("__salt")

@@ -14,9 +14,10 @@ from pyspark.sql import functions as F
 from ..functions.text_funcs import stopword_count, tokens
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token statistics (token counting for data budgets)."""
-    toks = F.expr(tokens(text_col))
+def token_stats(df: DataFrame) -> DataFrame:
+    """Per-document token statistics of the `text` column (token
+    counting for data budgets)."""
+    toks = F.expr(tokens("text"))
     n = F.size(toks)
     total_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
@@ -24,15 +25,15 @@ def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("n_tokens", n.cast("long")).withColumn(
         "n_distinct_tokens", F.size(F.array_distinct(toks)).cast("long")
     ).withColumn(
-        "stop_cnt", F.expr(stopword_count(text_col)).cast("long")
+        "stop_cnt", F.expr(stopword_count("text")).cast("long")
     ).withColumn(
         "avg_token_len",
         F.round(total_len.cast("double") / n.cast("double"), 4),
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality score in [0,1] from length / stopword ratio /
+def quality_score(df: DataFrame) -> DataFrame:
+    """Heuristic quality score in [0,1] of the `text` column from length / stopword ratio /
     token diversity (the classic pretraining-corpus filters).
 
     Arithmetic is EXACT integer fixed-point: with n tokens, d distinct,
@@ -44,10 +45,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     d/n=0.3375, st/n=0.1875 -> 0.72625), where Spark's HALF_UP decimal
     rounding and DuckDB's double rounding disagree — caught by the sf1
     scale audit after three smaller SFs never hit a boundary."""
-    toks = F.expr(tokens(text_col))
+    toks = F.expr(tokens("text"))
     n = F.size(toks).cast("long")
     d = F.size(F.array_distinct(toks)).cast("long")
-    st = F.expr(stopword_count(text_col)).cast("long")
+    st = F.expr(stopword_count("text")).cast("long")
     a = F.least(n, F.lit(60))
     s4 = F.least(st * 4, n)
     num = F.least(300 * n, 2 * a * n + 90 * d + 90 * s4)
@@ -101,14 +102,14 @@ def char_trigrams(text_col: Column) -> Column:
     return F.element_at(F.transform(F.array(_norm_text(text_col)), _grams), 1)
 
 
-def langid_trigram(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    profile_size: int = 50,
-) -> DataFrame:
-    """Trigram language-ID: learn per-language profiles (top-N most
-    frequent trigrams over the labeled corpus), then classify each doc
+# trigrams per language profile
+LANGID_PROFILE_SIZE = 50
+
+
+def langid_trigram(docs: DataFrame) -> DataFrame:
+    """Trigram language-ID over (doc_id, lang, text) rows: learn
+    per-language profiles (the LANGID_PROFILE_SIZE most frequent
+    trigrams over the labeled corpus), then classify each doc
     by profile overlap. Returns (doc_id, lang, predicted_lang, score).
 
     Fully distributed: profile building is explode+groupBy+rank (the
@@ -117,7 +118,7 @@ def langid_trigram(
     argmax ties break on language asc.
     """
     grams = docs.select(
-        "doc_id", F.col(label_col).alias("lang"), F.explode(char_trigrams(F.col(text_col))).alias("g")
+        "doc_id", "lang", F.explode(char_trigrams(F.col("text"))).alias("g")
     )
     # both the profile build and the scoring join consume the exploded
     # gram stream — persist it so normalization+explode runs one scan,
@@ -127,7 +128,7 @@ def langid_trigram(
     w = Window.partitionBy("lang").orderBy(F.desc("freq"), F.asc("g"))
     profiles = (
         freq.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= profile_size)
+        .filter(F.col("rn") <= LANGID_PROFILE_SIZE)
         .select(F.col("lang").alias("profile_lang"), "g")
     )
     scored = (
@@ -148,12 +149,7 @@ def langid_trigram(
     )
 
 
-def langid_trigram_fast(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    profile_size: int = 50,
-) -> DataFrame:
+def langid_trigram_fast(docs: DataFrame) -> DataFrame:
     """langid_trigram with the scoring phase as mapInPandas.
 
     The join formulation explodes every document into ~L trigram rows
@@ -182,9 +178,7 @@ def langid_trigram_fast(
     # profile build is Python-per-doc too — rebalance single-split
     # scans; lazily checkpointed so the SAME materialized partitions
     # feed the scoring pass below (one scan+rebalance, not two)
-    src0 = parallelize_scan(
-        docs.select("doc_id", F.col(label_col).alias("lang"), F.col(text_col).alias("text"))
-    ).localCheckpoint(eager=False)
+    src0 = parallelize_scan(docs.select("doc_id", "lang", "text")).localCheckpoint(eager=False)
 
     def partial_counts(batch_iter):  # map-side combine in Python
         from collections import Counter
@@ -214,7 +208,7 @@ def langid_trigram_fast(
     w = Window.partitionBy("lang").orderBy(F.desc("freq"), F.asc("g"))
     profile_rows = (
         freq.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= profile_size)
+        .filter(F.col("rn") <= LANGID_PROFILE_SIZE)
         .groupBy("lang")
         .agg(F.collect_list("g").alias("grams"))
         .collect()

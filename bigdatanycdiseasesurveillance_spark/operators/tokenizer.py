@@ -32,11 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _token_seqs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _token_seqs(df: DataFrame) -> DataFrame:
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda t: t != F.lit("")
+        F.split(F.lower(F.col("text")), " "), lambda t: t != F.lit("")
     )
-    return df.select(F.col(id_col).alias("doc_id"), toks.alias("tok")).filter(
+    return df.select(F.col("doc_id"), toks.alias("tok")).filter(
         F.size("tok") > 0
     )
 
@@ -81,13 +81,14 @@ def _merge_fold(a_col, b_col):
     return lambda tok: F.aggregate(tok, F.array().cast("array<string>"), step)
 
 
-def bpe_merge_steps(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    steps: int = 3,
-) -> DataFrame:
-    """Run `steps` BPE merge iterations; returns one row per step:
+# merge iterations of bpe_merge_steps, shared with its DuckDB replay
+# (queries/lm_q._bpe_oracle)
+BPE_STEPS = 3
+
+
+def bpe_merge_steps(df: DataFrame) -> DataFrame:
+    """Run BPE_STEPS merge iterations over (doc_id, text) rows; returns
+    one row per step:
     (step, merge_a, merge_b, pair_count, corpus_tokens_after).
 
     The loop runs over DISTINCT token sequences with multiplicity, not
@@ -106,13 +107,13 @@ def bpe_merge_steps(
     annihilating the corpus through a join against zero rows."""
     spark = df.sparkSession
     seqs = (
-        _token_seqs(df, text_col, id_col)
+        _token_seqs(df)
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("mult"))
         .localCheckpoint(eager=False)
     )
     rows: list[tuple] = []
-    for k in range(1, steps + 1):
+    for k in range(1, BPE_STEPS + 1):
         best = (
             _adjacent_pairs(seqs)
             .groupBy("a", "b")

@@ -39,42 +39,25 @@ def lag_features(
     return out
 
 
-def rolling_stats(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    value_col: str,
-    window_rows: int = 7,
-) -> DataFrame:
-    """W2: trailing-N-rows mean/std
+def rolling_stats(df: DataFrame, keys: Sequence[str], order_col: str, value_col: str) -> DataFrame:
+    """W2: trailing-7-rows mean/std
     (reference: src/analysis/disease_outbreak_forecaster.py:323-325,
     rowsBetween(-6, 0))."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(order_col)
-        .rowsBetween(-(window_rows - 1), 0)
-    )
-    return df.withColumn(
-        f"roll_avg_{window_rows}", F.round(F.avg(value_col).over(w), 4)
-    ).withColumn(
-        f"roll_std_{window_rows}", F.round(F.stddev_samp(value_col).over(w), 4)
+    w = Window.partitionBy(*keys).orderBy(order_col).rowsBetween(-6, 0)
+    return df.withColumn("roll_avg_7", F.round(F.avg(value_col).over(w), 4)).withColumn(
+        "roll_std_7", F.round(F.stddev_samp(value_col).over(w), 4)
     )
 
 
-def expanding_zscore(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    value_col: str,
-    z_threshold: float = 1.5,
-) -> DataFrame:
+def expanding_zscore(df: DataFrame, keys: Sequence[str], order_col: str, value_col: str) -> DataFrame:
     """W3/M13: expanding-window z-score EXCLUDING the current row — the
     reference's anomaly detector (reference:
     src/analysis/anomaly_detection.py:36-56: shift(1).expanding().mean()
     /.std(), std==0 -> percent-change>100% rule, first row z=0).
 
     Frame is unboundedPreceding..-1, the exact translation of
-    shift(1).expanding(); z and the fallback rule follow the reference.
+    shift(1).expanding(); z (anomaly above 1.5) and the fallback rule
+    follow the reference.
     """
     w = (
         Window.partitionBy(*keys)
@@ -91,7 +74,7 @@ def expanding_zscore(
         hist_mean.isNotNull() & (hist_mean != 0), (v - hist_mean) / hist_mean
     ).otherwise(F.lit(0.0))
     is_anom = F.when(
-        hist_std.isNotNull() & (hist_std > 0), z_raw > z_threshold
+        hist_std.isNotNull() & (hist_std > 0), z_raw > 1.5
     ).otherwise(pct_change > 1.0)
     return (
         df.withColumn("hist_mean", F.round(hist_mean, 4))

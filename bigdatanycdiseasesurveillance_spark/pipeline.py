@@ -55,12 +55,12 @@ def run_pipeline(
     *,
     ts_candidates: list[str],
     id_candidates: list[str],
-    text_col: str = "text",
     primary_vocab=None,
     secondary_vocab=None,
     hazard_vocab=None,
 ) -> PipelineResult:
-    """Ingest a bronze JSON directory and materialize silver + gold.
+    """Ingest a bronze JSON directory of posts with a `text` field and
+    materialize silver + gold.
 
     Mirrors the reference's 4-stage chain (relevance -> dedup ->
     location -> load) as one lineage; the dedup tier here is the exact
@@ -77,8 +77,8 @@ def run_pipeline(
         bronze,
         ts_candidates=ts_candidates,
         id_candidates=id_candidates,
-        content_cols=[text_col],
-        text_col=text_col,
+        content_cols=["text"],
+        text_col="text",
         source_file_col="source_path",
     )
     kwargs = {}
@@ -86,8 +86,8 @@ def run_pipeline(
         kwargs = dict(
             primary=primary_vocab, secondary=secondary_vocab, hazard=hazard_vocab
         )
-    analyzed = extract_relevance(normalized, text_col=text_col, **kwargs)
-    located = enrich_with_location(analyzed, spark, text_col=text_col)
+    analyzed = extract_relevance(normalized, **kwargs)
+    located = enrich_with_location(analyzed, spark)
 
     # exact-dedup tier: canonical = lowest id per normalized-text
     # fingerprint; is_duplicate marks the rest (kept, flagged — the
@@ -95,7 +95,7 @@ def run_pipeline(
     # the window partitions by the fingerprint expression itself, so the
     # three columns are one projection; codegen's subexpression
     # elimination computes the shared fingerprint once per row
-    fp = fingerprint(ident(text_col))
+    fp = fingerprint(ident("text"))
     silver_cols = with_columns(
         located.columns,
         {

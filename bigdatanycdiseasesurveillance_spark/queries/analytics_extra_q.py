@@ -88,7 +88,7 @@ def ts_seasonal_dow_forecast(spark, sf_dir):
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("cnt"))
     )
-    return seasonal_dow_forecast(daily, keys=["event_type"], horizon=7)
+    return seasonal_dow_forecast(daily, keys=["event_type"])
 
 
 @register(

@@ -54,7 +54,7 @@ def agg_hourly_series(spark, sf_dir):
 )
 def agg_top_event_types(spark, sf_dir):
     """A3/O1: top-N distribution with deterministic tie-break."""
-    return agg.top_n(table(spark, sf_dir, "events"), ["event_type"], 10)
+    return agg.top_n(table(spark, sf_dir, "events"), ["event_type"])
 
 
 @register(

@@ -246,7 +246,7 @@ def join_salted_skew(spark, sf_dir):
         )
     )
     joined = salted_join(
-        ev.select("event_type", "value"), dim, on="event_type", salt=8,
+        ev.select("event_type", "value"), dim, on="event_type",
         left_salt_from=["event_type", "value"],
     )
     # decimal accumulation: exact regardless of summation order, so the

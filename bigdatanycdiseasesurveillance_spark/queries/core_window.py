@@ -60,7 +60,7 @@ def win_lag_features(spark, sf_dir):
 )
 def win_rolling_7d(spark, sf_dir):
     """W2: trailing 7-row mean/std (rolling forecast features)."""
-    return win.rolling_stats(_daily(spark, sf_dir), ["event_type"], "day", "cnt", 7)
+    return win.rolling_stats(_daily(spark, sf_dir), ["event_type"], "day", "cnt")
 
 
 @register(
@@ -102,7 +102,7 @@ def win_anomaly_zscore(spark, sf_dir):
     z-score excluding the current row, std=0 -> pct-change rule, plus
     M12 risk bands (reference: src/analysis/anomaly_detection.py:34-75;
     disease_outbreak_forecaster.py:128-145)."""
-    out = win.expanding_zscore(_daily(spark, sf_dir), ["event_type"], "day", "cnt", 1.5)
+    out = win.expanding_zscore(_daily(spark, sf_dir), ["event_type"], "day", "cnt")
     z = F.col("z_score")
     return out.withColumn(
         "risk_level",

@@ -311,7 +311,7 @@ def llm_prep_pipeline(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     quality = docs.filter(F.size(F.expr(_tokens("text"))) >= 30)
-    pairs = D.jaccard_pairs(quality, threshold=0.7)
+    pairs = D.jaccard_pairs(quality)
     labels = D.connected_components(pairs)
     canon = (
         quality.select("doc_id")

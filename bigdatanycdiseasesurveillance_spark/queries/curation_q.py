@@ -66,7 +66,7 @@ def cur_decontaminate(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % _BENCH_MOD == 0)
     corpus = d.filter(F.col("doc_id") % _BENCH_MOD != 0)
-    return decontaminate(corpus, bench, n=5)
+    return decontaminate(corpus, bench)
 
 
 _CAP = 15
@@ -138,7 +138,7 @@ def txt_repetition_signals(spark, sf_dir):
     from ..operators.curation import repetition_signals
 
     d = table(spark, sf_dir, "documents")
-    return repetition_signals(d, n=2).select(
+    return repetition_signals(d).select(
         "doc_id", "n_grams", "dup_gram_frac", "top_gram_share"
     )
 
@@ -656,7 +656,7 @@ def cur_dedup_dividend(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.expr(token_count("text")).alias("n_tokens"))
-    pairs = D.jaccard_pairs(docs, threshold=0.7)
+    pairs = D.jaccard_pairs(docs)
     labels = D.connected_components(pairs)
     canon = (
         toks.join(labels, "doc_id", "left")

@@ -848,7 +848,7 @@ def dedup_incremental_groups(spark, sf_dir):
     old = docs.filter(F.col("doc_id") % 5 != 0)
 
     # (1) the maintained artifact: existing groups over the old corpus
-    old_pairs = D.jaccard_pairs(old, threshold=0.7)
+    old_pairs = D.jaccard_pairs(old)
     old_labels = D.connected_components(old_pairs)  # only paired docs
     old_canon = (
         old.select("doc_id")
@@ -901,7 +901,7 @@ def inc_groups_two_batch(spark, sf_dir):
     gold_dir = scratch_dir(sf_dir, "incgold")
 
     # version 1: base-corpus labels, persisted
-    base_pairs = D.jaccard_pairs(base, threshold=0.7)
+    base_pairs = D.jaccard_pairs(base)
     base_labels = D.connected_components(base_pairs)
     base_canon = (
         base.select("doc_id")
@@ -979,7 +979,7 @@ def inc_groups_compacted(spark, sf_dir):
     gold_dir = scratch_dir(sf_dir, "incgoldc")
 
     # version 1: base-corpus labels, persisted
-    base_pairs = D.jaccard_pairs(base, threshold=0.7)
+    base_pairs = D.jaccard_pairs(base)
     base_labels = D.connected_components(base_pairs)
     base_canon = (
         base.select("doc_id")

@@ -62,7 +62,7 @@ def dedup_jaccard_pairs(spark, sf_dir):
     once; pair intersections are one matrix multiply per block); the
     pure-DataFrame jaccard_pairs computes the same result and is
     cross-checked in tests/test_dedup.py."""
-    return D.jaccard_pairs_gemm(table(spark, sf_dir, "documents"), threshold=0.7)
+    return D.jaccard_pairs_gemm(table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -174,7 +174,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     )
     bh = sigs.select(
         "mask",
-        *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))],
+        *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes())],
     ).localCheckpoint(eager=False)
     # blocked exact pairs (the ground truth), multiplicity-weighted —
     # the SAME relation the oracle recomputes; read by the recall AND
@@ -317,7 +317,7 @@ def dedup_simhash(spark, sf_dir):
     # the operator's chunk layout (r6 advisor finding)
     chunked = sigs.select(
         "mask",
-        F.explode(F.array(*D.simhash_chunk_structs("sig"))).alias("cc"),
+        F.explode(F.array(*D.simhash_chunk_structs())).alias("cc"),
     ).select("mask", "cc.chunk", "cc.ckey")
     emitted = (
         chunked.alias("a")

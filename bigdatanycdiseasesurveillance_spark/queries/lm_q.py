@@ -228,10 +228,10 @@ def cur_quality_classifier(spark, sf_dir):
     summation order."""
     from ..operators.curation import nb_quality_scores
 
-    return nb_quality_scores(table(spark, sf_dir, "documents"), pos_source="src0")
+    return nb_quality_scores(table(spark, sf_dir, "documents"))
 
 
-def _bpe_oracle(steps: int = 3) -> str:
+def _bpe_oracle() -> str:
     """Relational replay of the BPE loop over DISTINCT token sequences
     with multiplicity (mirroring the engine's collapse — the doc-level
     replay materialized the full corpus token stream per step and OOM'd
@@ -240,6 +240,8 @@ def _bpe_oracle(steps: int = 3) -> str:
     argmax, and the disjoint mark-and-drop merge (equal to the engine's
     greedy fold because candidate pairs require a <> b — see
     operators/tokenizer.py's determinism contract)."""
+    from ..operators.tokenizer import BPE_STEPS
+
     parts = [
         """
         WITH s0 AS (
@@ -255,7 +257,7 @@ def _bpe_oracle(steps: int = 3) -> str:
             )
         )"""
     ]
-    for k in range(1, steps + 1):
+    for k in range(1, BPE_STEPS + 1):
         p = k - 1
         parts.append(
             """
@@ -298,14 +300,14 @@ def _bpe_oracle(steps: int = 3) -> str:
                (SELECT cnt FROM b{k}) AS pair_count,
                (SELECT CAST(SUM(len(tok) * mult) AS BIGINT) FROM s{k})
                    AS corpus_tokens_after""".format(k=k)
-        for k in range(1, steps + 1)
+        for k in range(1, BPE_STEPS + 1)
     ]
     return "".join(parts) + " UNION ALL ".join(selects)
 
 
 @register(
     "tok_bpe_merges",
-    oracle=_bpe_oracle(3),
+    oracle=_bpe_oracle(),
     tags=("tokenizer", "bpe", "lm", "training-data"),
 )
 def tok_bpe_merges(spark, sf_dir):
@@ -322,7 +324,7 @@ def tok_bpe_merges(spark, sf_dir):
     the merge table."""
     from ..operators.tokenizer import bpe_merge_steps
 
-    return bpe_merge_steps(table(spark, sf_dir, "documents"), steps=3)
+    return bpe_merge_steps(table(spark, sf_dir, "documents"))
 
 
 @register(

@@ -10,10 +10,11 @@ from ..registry import register
 from ..tables import table
 
 
-def _kmeans_assign_cte(k: int = 5, iters: int = 8) -> str:
-    """The lloyd_kmeans_2d replay as a CTE chain ending in s{iters}
-    (pid, x, y, cid) — shared by the kmeans profile oracle and the
-    SemDeDup oracle."""
+def _kmeans_assign_cte() -> str:
+    """The lloyd_kmeans_2d replay as a CTE chain ending in
+    s{KMEANS_ITERS} (pid, x, y, cid) — shared by the kmeans profile
+    oracle and the SemDeDup oracle."""
+    k, iters = C.KMEANS_K, C.KMEANS_ITERS
     parts = [
         """WITH pts AS (
             SELECT vec_id AS pid,
@@ -45,18 +46,18 @@ def _kmeans_assign_cte(k: int = 5, iters: int = 8) -> str:
     return "".join(parts)
 
 
-def _kmeans_oracle(k: int = 5, iters: int = 8) -> str:
+def _kmeans_oracle() -> str:
     """Replay lloyd_kmeans_2d exactly: deterministic smallest-id init,
     nearest-centroid assignment with ties to the smallest cluster id,
     per-iteration centroid means rounded to 6 decimals (so cross-engine
     float-sum drift cannot compound), fixed iteration count."""
-    return _kmeans_assign_cte(k, iters) + """
+    return _kmeans_assign_cte() + """
         SELECT CAST(cid AS BIGINT) AS cluster_id,
                CAST(COUNT(*) AS BIGINT) AS size,
                ROUND(AVG(x), 4) AS centroid_x,
                ROUND(AVG(y), 4) AS centroid_y
         FROM s{t} GROUP BY cid
-        """.format(t=iters)
+        """.format(t=C.KMEANS_ITERS)
 
 
 @register(
@@ -69,16 +70,15 @@ def cluster_kmeans_profile(spark, sf_dir):
     iterations, smallest-id init) over the 2-D embedding projection —
     the reference clusters geographic coordinates
     (spatial_clustering.py:342-378). Per-cluster size + centroid.
-    The Spark ML KMeans operator (parallel init, not SQL-replayable)
-    remains available as operators.clustering.kmeans_clusters with
-    invariant tests."""
+    (Spark ML's KMeans is not used: its parallel init is not
+    SQL-replayable.)"""
     emb = table(spark, sf_dir, "embeddings")
     pts = emb.select(
         "vec_id",
         F.col("embedding")[0].cast("double").alias("x"),
         F.col("embedding")[1].cast("double").alias("y"),
     )
-    assigned = C.lloyd_kmeans_2d(pts, k=5, iters=8)
+    assigned = C.lloyd_kmeans_2d(pts)
     return (
         assigned.join(pts, "vec_id")
         .groupBy("cluster_id")
@@ -325,7 +325,7 @@ _SEMDEDUP_T = 0.35
 
 
 def _semdedup_oracle() -> str:
-    return _kmeans_assign_cte(5, 8) + f"""
+    return _kmeans_assign_cte() + f"""
         , emb AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         ), sim_pairs AS (
@@ -373,7 +373,7 @@ def dedup_semdedup_profile(spark, sf_dir):
         F.col("embedding")[0].cast("double").alias("x"),
         F.col("embedding")[1].cast("double").alias("y"),
     )
-    assigned = C.lloyd_kmeans_2d(pts, k=5, iters=8)
+    assigned = C.lloyd_kmeans_2d(pts)
     from ..operators.dedup import embedding_cosine_pairs_gemm
 
     embc = emb.join(assigned, "vec_id")

@@ -44,7 +44,7 @@ def pack_concat_chunks_spans(spark, sf_dir):
     """GPT-style concat-and-chunk packing accounting: each doc's token
     span in the concatenated stream and the 256-token training chunks
     it lands in. One cumulative-sum window — fully SQL-replayable."""
-    return pack_concat_chunks(_with_tokens(spark, sf_dir), budget=256)
+    return pack_concat_chunks(_with_tokens(spark, sf_dir))
 
 
 @register(
@@ -81,7 +81,7 @@ def pack_greedy_ffd_profile(spark, sf_dir):
     by bucket), then one summary row the oracle value-checks. The
     per-pack fill profile stays available via operators/packing.py and
     tests/test_packing.py."""
-    packed = pack_greedy_ffd(_with_tokens(spark, sf_dir), budget=256)
+    packed = pack_greedy_ffd(_with_tokens(spark, sf_dir))
     ps = packed.groupBy("pack_id").agg(
         F.sum("n_tokens").alias("ptok"),
         F.count("*").alias("ndocs"),

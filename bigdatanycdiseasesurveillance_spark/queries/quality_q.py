@@ -464,7 +464,7 @@ def dq_group_split_leakfree(spark, sf_dir):
     # labeling and the audit join below — without it the quadratic pair
     # join is planned and executed once per consumer (2-3x; CC's own
     # edge materialization covers only its branch)
-    pairs = D.jaccard_pairs(docs, threshold=0.7).localCheckpoint(eager=False)
+    pairs = D.jaccard_pairs(docs).localCheckpoint(eager=False)
     labels = D.connected_components(pairs)
     canon = (
         docs.select("doc_id")

@@ -1809,8 +1809,9 @@ def samp_srswor_profile(spark, sf_dir):
     n = 5,000): the n smallest md5 deviates over the whole corpus ARE
     a uniform n-subset (every key gets an i.i.d. uniform deviate; the
     bottom-n of an exchangeable order is equally likely to be any
-    n-set), so fixed-SIZE sampling — which Bernoulli designs like
-    sample_bernoulli can only hit in expectation — becomes a top-k on
+    n-set), so fixed-SIZE sampling — which a Bernoulli design (keep
+    each key whose deviate is under rate x 2^60) can only hit in
+    expectation — becomes a top-k on
     a pure function of the data, reproducible across engines, cluster
     shapes, and reruns. Emits the per-source realized-vs-expected
     representation profile (share of sample vs share of population,

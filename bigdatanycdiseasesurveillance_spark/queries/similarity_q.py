@@ -9,23 +9,30 @@ from ..registry import register
 from ..tables import table, values_dim
 
 
-_QUERY_VEC: dict[tuple[str, int], list[float]] = {}
+_QUERY_VEC: dict[str, list[float]] = {}
+
+# the md5 stand-in encoder's width in the embedding queries and their
+# oracles
+_EMB_DIM = 64
+# product quantization: subspaces x sub-vector dims (= 64), codewords
+# per subspace, Lloyd iterations, and the ADC search's top-k — shared
+# by emb_pq_codebook / emb_pq_adc_search and their oracles
+PQ_SUBSPACES, PQ_SUB_DIM, PQ_CODES, PQ_ITERS, PQ_TOPK = 4, 16, 4, 4, 10
 
 
-def _query_vec(spark, sf_dir, vec_id: int = 0) -> list[float]:
-    """Collect the query vector once per (dataset, id) — it is an input
-    to the search, not part of it; re-collecting per run charged an
-    extra scan job to every ANN query."""
-    key = (sf_dir, vec_id)
-    if key not in _QUERY_VEC:
+def _query_vec(spark, sf_dir) -> list[float]:
+    """Collect the query vector (vec_id 0) once per dataset — it is an
+    input to the search, not part of it; re-collecting per run charged
+    an extra scan job to every ANN query."""
+    if sf_dir not in _QUERY_VEC:
         row = (
             table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == vec_id)
+            .filter(F.col("vec_id") == 0)
             .select("embedding")
             .first()
         )
-        _QUERY_VEC[key] = [float(x) for x in row["embedding"]]
-    return _QUERY_VEC[key]
+        _QUERY_VEC[sf_dir] = [float(x) for x in row["embedding"]]
+    return _QUERY_VEC[sf_dir]
 
 
 @register(
@@ -48,7 +55,7 @@ def _query_vec(spark, sf_dir, vec_id: int = 0) -> list[float]:
 def ann_cosine_topk(spark, sf_dir):
     """M5: exact brute-force cosine top-10 for a query vector (vec 0) —
     one scan + TakeOrderedAndProject, cosine fully in codegen."""
-    qv = _query_vec(spark, sf_dir, 0)
+    qv = _query_vec(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(emb, qv, k=10, where=F.col("vec_id") != 0)
 
@@ -85,7 +92,7 @@ def ann_knn_per_label(spark, sf_dir):
     GEMM formulation (one Arrow transfer per vector, BLAS pair work);
     the pure-DataFrame knn_per_block variant computes the same result
     and is cross-checked in tests/test_similarity.py."""
-    return S.knn_per_block_gemm(table(spark, sf_dir, "embeddings"), k=3)
+    return S.knn_per_block_gemm(table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -125,9 +132,9 @@ def ann_ivf_search(spark, sf_dir):
     per dataset and memoized (a deployment persists it as parquet);
     query time touches only the tiny centroid table plus the pruned
     corpus scan."""
-    qv = _query_vec(spark, sf_dir, 0)
+    qv = _query_vec(spark, sf_dir)
     return S.ivf_search(
-        table(spark, sf_dir, "embeddings"), qv, k=10, nprobe=2,
+        table(spark, sf_dir, "embeddings"), qv, nprobe=2,
         where=F.col("vec_id") != 0,
         centroids=_ivf_index(spark, sf_dir),
     )
@@ -162,13 +169,13 @@ def _ivf_index(spark, sf_dir):
     return _IVF_INDEX[key]
 
 
-def _emb_oracle_cte(dim: int = 64) -> str:
+def _emb_oracle_cte() -> str:
     """Shared oracle prelude: the md5 pseudo-encoder replayed in SQL
     (md5_dim_sql is the single source of the formula)."""
     from ..operators.embeddings import md5_dim_sql
 
     return f"""
-        WITH dims AS (SELECT unnest(range({dim})) AS d),
+        WITH dims AS (SELECT unnest(range({_EMB_DIM})) AS d),
         raw AS (
             SELECT dd.doc_id, dd.lang, dims.d,
                    {md5_dim_sql('dd.text', 'dims.d')} AS x
@@ -179,8 +186,8 @@ def _emb_oracle_cte(dim: int = 64) -> str:
 
 @register(
     "emb_encode_profile",
-    oracle=_emb_oracle_cte(64)
-    + """
+    oracle=_emb_oracle_cte()
+    + f"""
         , vec AS (
             SELECT doc_id, lang,
                    sqrt(sum(x * x)) AS nrm,
@@ -189,7 +196,7 @@ def _emb_oracle_cte(dim: int = 64) -> str:
         )
         SELECT lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(64 AS BIGINT) AS dim,
+               CAST({_EMB_DIM} AS BIGINT) AS dim,
                ROUND(AVG(1.0), 4) AS mean_l2_norm,
                ROUND(AVG(x0 / nrm), 4) AS mean_dim0
         FROM vec GROUP BY lang
@@ -206,7 +213,7 @@ def emb_encode_profile(spark, sf_dir):
     from ..operators.embeddings import embedding_profile, encode_documents
 
     docs = table(spark, sf_dir, "documents")
-    return embedding_profile(encode_documents(docs, dim=64, dtype="float64"), "lang")
+    return embedding_profile(encode_documents(docs, dim=_EMB_DIM, dtype="float64"))
 
 
 @register(
@@ -230,7 +237,7 @@ def ann_filtered_search(spark, sf_dir):
     query(where={borough/severity}) (chromadb_client.py:194-306) is a
     plain filter() fused into the similarity scan — predicates push to
     the parquet scan, then cosine + TakeOrdered run on the survivors."""
-    qv = _query_vec(spark, sf_dir, 0)
+    qv = _query_vec(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(
         emb,
@@ -286,7 +293,7 @@ def ann_rp_lsh_pairs(spark, sf_dir):
     the candidate pairs (near-dups agree on sign bits), exact cosine
     verifies — the unblocked-corpus scale path for embedding dedup."""
     emb = table(spark, sf_dir, "embeddings")
-    return S.rp_lsh_pairs(emb, _RP_PLANES, threshold=0.3)
+    return S.rp_lsh_pairs(emb, _RP_PLANES)
 
 
 _SEARCH_QUERY_TEXT = "sample document text zero"
@@ -296,7 +303,7 @@ def _search_by_text_oracle() -> str:
     from ..operators.embeddings import md5_dim_sql
 
     return (
-        _emb_oracle_cte(64)
+        _emb_oracle_cte()
         + f"""
         , q AS (
             SELECT d, {md5_dim_sql(f"'{_SEARCH_QUERY_TEXT}'", "d")} AS qx
@@ -332,9 +339,9 @@ def search_documents_by_text(spark, sf_dir):
     from ..operators.embeddings import encode_documents
 
     docs = table(spark, sf_dir, "documents")
-    encoded = encode_documents(docs, dim=64, dtype="float64")
+    encoded = encode_documents(docs, dim=_EMB_DIM, dtype="float64")
     qdf = values_dim(spark, [("q", _SEARCH_QUERY_TEXT)], "qid string, text string")
-    qvec = list(encode_documents(qdf, dim=64, dtype="float64").first()["embedding"])
+    qvec = list(encode_documents(qdf, dim=_EMB_DIM, dtype="float64").first()["embedding"])
     return S.brute_force_topk(
         encoded,
         qvec,
@@ -378,7 +385,7 @@ def ann_composite_filter_search(spark, sf_dir):
             ]
         }
     )
-    qv = _query_vec(spark, sf_dir, 0)
+    qv = _query_vec(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(
         emb, qv, k=10, where=where & (F.col("vec_id") != 0), extra_cols=["label"]
@@ -479,7 +486,7 @@ def ann_rp_multiprobe_pairs(spark, sf_dir):
     exact-cosine verify. Strict superset of ann_rp_lsh_pairs'
     candidates at ~9x probe fan on one side of the same equi-join."""
     emb = table(spark, sf_dir, "embeddings")
-    return S.rp_lsh_multiprobe_pairs(emb, _RP_PLANES, threshold=0.3)
+    return S.rp_lsh_multiprobe_pairs(emb, _RP_PLANES)
 
 
 def _pq_train_ctes(m: int, sub_dim: int, k: int, iters: int) -> str:
@@ -519,12 +526,13 @@ def _pq_train_ctes(m: int, sub_dim: int, k: int, iters: int) -> str:
     return "".join(parts)
 
 
-def _pq_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4, iters: int = 4) -> str:
+def _pq_oracle() -> str:
     """Generated relational replay of the PQ codebook training: per
     subspace, the d-dim Lloyd chain (smallest-id init, nearest centroid
     with ties to the smallest cid, means rounded to 6 per iteration,
     fixed iters), then per-code stats measured against the FINAL
     rounded centroids — the same literals the engine measures against."""
+    n_sub, sub_dim, k, iters = PQ_SUBSPACES, PQ_SUB_DIM, PQ_CODES, PQ_ITERS
     parts = ["WITH "]
     finals = []
     for m in range(n_sub):
@@ -592,7 +600,7 @@ def emb_pq_codebook(spark, sf_dir):
     from ..operators.clustering import lloyd_kmeans_nd
 
     emb = table(spark, sf_dir, "embeddings")
-    n_sub, sub_dim, k, iters = 4, 16, 4, 4
+    n_sub, sub_dim, k, iters = PQ_SUBSPACES, PQ_SUB_DIM, PQ_CODES, PQ_ITERS
     pts64 = _pq_projection(emb, n_sub * sub_dim)
     out = None
     for m in range(n_sub):
@@ -639,12 +647,12 @@ def emb_pq_codebook(spark, sf_dir):
     return out
 
 
-def _pq_adc_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4,
-                   iters: int = 4, topk: int = 10) -> str:
+def _pq_adc_oracle() -> str:
     """ADC search replay: the PQ training chains (_pq_train_ctes, as in
     _pq_oracle), a FINAL-centroid assignment per subspace
     (codes), the query vector's per-subspace distance table over the
     same rounded centroids, and the top-k by summed table lookups."""
+    n_sub, sub_dim, k, iters = PQ_SUBSPACES, PQ_SUB_DIM, PQ_CODES, PQ_ITERS
     parts = ["WITH "]
     for m in range(n_sub):
         lead = "" if m == 0 else ", "
@@ -678,7 +686,7 @@ def _pq_adc_oracle(n_sub: int = 4, sub_dim: int = 16, k: int = 4,
         f" SELECT f0.pid AS vec_id, ROUND({adc}, 4) AS adc_dist"
         f" FROM f0 JOIN t0 ON t0.cid = f0.code {joins}"
         f" WHERE f0.pid <> 0"
-        f" ORDER BY adc_dist, vec_id LIMIT {topk}"
+        f" ORDER BY adc_dist, vec_id LIMIT {PQ_TOPK}"
     )
     return "".join(parts)
 
@@ -714,7 +722,7 @@ def emb_pq_adc_search(spark, sf_dir):
     from ..operators.clustering import lloyd_kmeans_nd
 
     emb = table(spark, sf_dir, "embeddings")
-    n_sub, sub_dim, k, iters, topk = 4, 16, 4, 4, 10
+    n_sub, sub_dim, k, iters = PQ_SUBSPACES, PQ_SUB_DIM, PQ_CODES, PQ_ITERS
     dims = [f"e{j}" for j in range(sub_dim)]
     pts64 = _pq_projection(emb, n_sub * sub_dim)
 
@@ -787,5 +795,5 @@ def emb_pq_adc_search(spark, sf_dir):
         .selectExpr("pid", *lut_exprs)
         .selectExpr("pid AS vec_id", f"ROUND({adc}, 4) AS adc_dist")
         .orderBy("adc_dist", "vec_id")
-        .limit(topk)
+        .limit(PQ_TOPK)
     )

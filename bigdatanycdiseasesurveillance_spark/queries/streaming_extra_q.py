@@ -92,23 +92,28 @@ def stream_cms_partials(spark, sf_dir):
     # key space = depth x width sketch cells (128 rows, FIXED by the
     # sketch dimensions regardless of stream volume)
     return _run_to_memory(
-        cms_table(src, "user_key", width=32, depth=4), "complete", state_partitions=4
+        cms_table(src, "user_key"), "complete", state_partitions=4
     )
 
 
-def _prefix_fp(text: str, k: int = 8):
-    """Lead-in fingerprint: md5 of the first k whitespace tokens of the
-    normalized text — the boilerplate/header dedup key (full-text md5
-    catches only byte-exact copies; templated corpora share lead-ins)."""
+# tokens in the lead-in fingerprint
+_PREFIX_TOKENS = 8
+
+
+def _prefix_fp(text: str):
+    """Lead-in fingerprint: md5 of the first _PREFIX_TOKENS whitespace
+    tokens of the normalized text — the boilerplate/header dedup key
+    (full-text md5 catches only byte-exact copies; templated corpora
+    share lead-ins)."""
     from ..functions.text_funcs import tokens
 
-    return F.expr(f"md5(concat_ws(' ', slice({tokens(text)}, 1, {k})))")
+    return F.expr(f"md5(concat_ws(' ', slice({tokens(text)}, 1, {_PREFIX_TOKENS})))")
 
 
-# first-8-token lead-in key (the DuckDB twin of _prefix_fp)
+# the lead-in key's DuckDB twin
 _PREFIX_FP_SQL = (
     "md5(array_to_string(list_slice(list_filter(string_split(lower(text), ' '),"
-    " t -> t <> ''), 1, 8), ' '))"
+    f" t -> t <> ''), 1, {_PREFIX_TOKENS}), ' '))"
 )
 
 

@@ -113,7 +113,7 @@ _NORM_SQL = (
             SELECT lang, g, COUNT(*) AS freq FROM grams GROUP BY 1, 2
         ), prof AS (
             SELECT lang AS profile_lang, g FROM freq
-            QUALIFY row_number() OVER (PARTITION BY lang ORDER BY freq DESC, g) <= 50
+            QUALIFY row_number() OVER (PARTITION BY lang ORDER BY freq DESC, g) <= {TA.LANGID_PROFILE_SIZE}
         ), scored AS (
             SELECT gr.doc_id, gr.lang, p.profile_lang, COUNT(*) AS score
             FROM grams gr JOIN prof p USING (g)
@@ -273,12 +273,14 @@ def rel_health_domain(spark, sf_dir):
     )
 
 
-def _winnow_fps_cte(k: int = 8, w: int = 4, b: int = 257, m: int = 1_000_000_007) -> str:
+def _winnow_fps_cte() -> str:
     """Shared oracle CTE: per-doc winnowed fingerprints, replaying
     operators.fingerprint.winnow_set bit-for-bit (exact integer
-    polynomial hashes). Gram hashes materialize ONCE per doc (unnest of
+    polynomial hashes, with its gram size, window, base and modulus). Gram hashes materialize ONCE per doc (unnest of
     one list_transform), windows via a frame-bounded MIN — the same
     no-refold structure the Spark side pins with lambda bindings."""
+    from ..operators.fingerprint import B as b, K as k, M as m, W as w
+
     return f"""
         WITH gs AS (
             SELECT doc_id,

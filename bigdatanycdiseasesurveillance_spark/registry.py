@@ -1,9 +1,8 @@
 """Query registry — the single source of truth for the driver contract.
 
 Every operator the engine claims (SURVEY.md §2) registers here as a named
-spec: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus, when the
-semantics are SQL-expressible, the equivalent ANSI SQL the DuckDB oracle
-runs on the same parquet tables. ``__spark_entry__.py`` exposes the
+spec: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus the
+equivalent ANSI SQL the DuckDB oracle runs on the same parquet tables. ``__spark_entry__.py`` exposes the
 registry verbatim.
 
 The registry order is the registration order: ``queries/__init__.py``
@@ -38,8 +37,7 @@ SparkFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: SparkFn
-    oracle: str | None = None  # ANSI SQL for DuckDB; None → rows-only check
-    doc: str = ""
+    oracle: str  # ANSI SQL for DuckDB
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
 
@@ -48,16 +46,12 @@ _REGISTRY: dict[str, QuerySpec] = {}
 
 
 def register(
-    name: str,
-    oracle: str | None = None,
-    doc: str = "",
-    tags: tuple[str, ...] = (),
-    bench: bool = False,
+    name: str, oracle: str, tags: tuple[str, ...] = (), bench: bool = False
 ) -> Callable[[SparkFn], SparkFn]:
     def deco(fn: SparkFn) -> SparkFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), tags, bench)
+        _REGISTRY[name] = QuerySpec(name, fn, oracle, tags, bench)
         return fn
 
     return deco

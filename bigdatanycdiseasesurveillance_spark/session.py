@@ -64,7 +64,8 @@ LOCAL_FS_CONFS = {
 _JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 
 # Runtime-settable confs every query applies defensively even when the
-# session is created by an external driver (runtime confs only).
+# session is created by an external driver (runtime confs only); the
+# factory below starts its sessions with them.
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     # runtime-settable; externally-created sessions otherwise default to
@@ -154,27 +155,17 @@ def get_spark(app_name: str = "bdnds-engine", master: str | None = None) -> Spar
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(map=RUNTIME_CONFS)
+        # the factory's own planner settings, beyond RUNTIME_CONFS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # launch-time confs
+        .config("spark.default.parallelism", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # UI off by default (bench hygiene; tools/profile_query.py reads
-        # per-job times from the event log); SPARK_GRAFT_UI=1/true/yes
-        # turns it on for interactive inspection. Normalized:
-        # spark.ui.enabled accepts only true/false, so a raw "1" would
-        # throw INVALID_CONF_VALUE at SparkContext creation.
-        .config(
-            "spark.ui.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_UI", "").lower() in ("1", "true", "yes")
-            else "false",
-        )
+        # no UI: tools/profile_query.py and perfbench read per-job times
+        # from the event log
+        .config("spark.ui.enabled", "false")
     )
     if SparkContext._gateway is None:  # this call launches the JVM
         builder = builder.config("spark.driver.extraClassPath", local_fs_jar())

@@ -11,8 +11,8 @@ file parses on an executor, and the output carries the same
 
 Scale note: whole-text reads make one task per file, which matches the
 scraper output shape (many small files). A 100 TB corpus would be
-JSONL/Parquet-partitioned and read via `spark.read.schema(s).json` —
-`read_jsonl` below is that path.
+JSONL/Parquet-partitioned and read schema-first with
+`spark.read.schema(s).json`.
 """
 
 from __future__ import annotations
@@ -63,9 +63,3 @@ def read_json_any(spark: SparkSession, path: str, schema: T.StructType) -> DataF
         WHERE rec IS NOT NULL""",
         raw=raw,
     )
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S2 (scale path): schema-first JSONL read — splittable, pushdown-
-    friendly, the format a 100 TB bronze layer would actually use."""
-    return spark.read.schema(schema).json(path)

@@ -17,8 +17,8 @@ Each drain is one registered query function (queries/streaming_q.py,
 queries/streaming_extra_q.py, curation_q.stream_session_window), built
 from the same frame function as its batch twin where it has one. This
 module holds what they share: `stream_table` (a file-source stream
-standing in for a Kafka topic — same DataFrame API surface;
-`kafka_source` builds the real thing) and `_run_to_memory`, which
+standing in for a Kafka topic — same DataFrame API surface) and
+`_run_to_memory`, which
 drains a stream and returns a *batch* DataFrame of the final result, so
 a drain is checked against a SQL oracle like any batch query.
 """
@@ -116,23 +116,3 @@ def _run_to_memory(
         shutil.rmtree(ckpt, ignore_errors=True)
         spark.catalog.dropTempView(name)
     return out
-
-
-def kafka_source(
-    spark: SparkSession,
-    brokers: str,
-    topics: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """S1: the reference's Kafka source shape (6 topics, value cast to
-    string — relevance_consumer.py:364-373). Not exercised in tests (no
-    broker in the harness); the value-parsing contract is the same
-    from_json path the file sources use."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topics)
-        .option("startingOffsets", starting_offsets)
-        .load()
-        .selectExpr("CAST(value AS STRING) AS json_str", "timestamp")
-    )

@@ -101,7 +101,7 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     return df.withColumns({name: F.expr(e) for name, e in exprs.items()})
 
 
-def parallelize_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def parallelize_scan(df: DataFrame) -> DataFrame:
     """Round-robin rebalance a scan whose split count starves the cores.
 
     Spark's parallelism unit for parquet is the row group; the bench
@@ -114,7 +114,7 @@ def parallelize_scan(df: DataFrame, min_partitions: int | None = None) -> DataFr
     trivially cheap anyway.
     """
     sess = df.sparkSession
-    target = min_partitions or sess.sparkContext.defaultParallelism
+    target = sess.sparkContext.defaultParallelism
     # probe via inputFiles (ms) — df.rdd.getNumPartitions() costs
     # ~0.3s of RDD-conversion per distinct plan. File count slightly
     # undercounts splits for multi-row-group files; the only effect is

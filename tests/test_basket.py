@@ -109,22 +109,26 @@ def test_rolling_median_is_robust_center(spark, sf_dir):
             assert r["med7"] == expect, (r, frame)
 
 
-def test_cms_split_merge_identity(spark, sf_dir):
+def test_cms_split_merge_identity(spark, sf_dir, monkeypatch):
     """CMS mergeability: the sketch of the full corpus must equal the
     (d, bucket)-wise SUM of the sketches of any disjoint split — the
     algebra that lets per-day sketch partials answer range queries at
     100 TB without re-scanning raw keys."""
     from pyspark.sql import functions as F
 
+    from bigdatanycdiseasesurveillance_spark.operators import sketches
     from bigdatanycdiseasesurveillance_spark.operators.sketches import cms_table
     from bigdatanycdiseasesurveillance_spark.tables import table
+
+    monkeypatch.setattr(sketches, "CMS_WIDTH", 16)
+    monkeypatch.setattr(sketches, "CMS_DEPTH", 3)
 
     e = table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("k"), "event_id"
     )
-    full = cms_table(e, "k", width=16, depth=3)
-    half_a = cms_table(e.filter(F.col("event_id") % 2 == 0), "k", width=16, depth=3)
-    half_b = cms_table(e.filter(F.col("event_id") % 2 == 1), "k", width=16, depth=3)
+    full = cms_table(e, "k")
+    half_a = cms_table(e.filter(F.col("event_id") % 2 == 0), "k")
+    half_b = cms_table(e.filter(F.col("event_id") % 2 == 1), "k")
     merged = (
         half_a.unionByName(half_b)
         .groupBy("d", "bucket")

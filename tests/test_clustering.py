@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.operators import clustering as C
-from bigdatanycdiseasesurveillance_spark.tables import table
 
 
 def _fixture(spark):
@@ -43,14 +42,6 @@ def test_dbscan_cross_cell_merge(spark):
     out = C.grid_dbscan(pts, eps=1.0, min_samples=2)
     ids = {r["cluster_id"] for r in out.collect()}
     assert ids == {0}
-
-
-def test_kmeans_partitions_everything(spark, sf_dir):
-    emb = table(spark, sf_dir, "embeddings")
-    assigned = C.kmeans_clusters(emb, k=5, seed=42)
-    assert assigned.count() == emb.count()
-    assert assigned.select("cluster_id").distinct().count() <= 5
-    assert assigned.filter(F.col("cluster_id").isNull()).count() == 0
 
 
 def test_cellgrid_conserves_points_and_partitions_cells(spark, sf_dir):

@@ -122,17 +122,20 @@ def test_skyline_is_exact_pareto_frontier(spark, sf_dir):
     assert got == expect and got
 
 
-def test_geohash_sql_matches_python_twin(spark):
+def test_geohash_sql_matches_python_twin(spark, monkeypatch):
     """The generated closed-form geohash SQL must equal the Python twin
     (itself pinned to the canonical u4pruydqqvj test vector) across a
     lat/lon grid including cell-edge values."""
+    from bigdatanycdiseasesurveillance_spark.functions import geohash
     from bigdatanycdiseasesurveillance_spark.functions.geohash import (
         geohash_py,
         geohash_stages,
     )
     from bigdatanycdiseasesurveillance_spark.tables import values_dim
 
-    assert geohash_py(57.64911, 10.40744, 11) == "u4pruydqqvj"
+    with monkeypatch.context() as m:
+        m.setattr(geohash, "GEOHASH_PRECISION", 11)
+        assert geohash_py(57.64911, 10.40744) == "u4pruydqqvj"
     pts = [
         (40.7484, -73.9857),
         (-90.0, -180.0),
@@ -141,7 +144,7 @@ def test_geohash_sql_matches_python_twin(spark):
         (40.60, -74.00),
         (-33.8688, 151.2093),
     ]
-    cx, cy, value, chars = geohash_stages("lat", "lon", precision=6)
+    cx, cy, value, chars = geohash_stages("lat", "lon")
     df = (
         values_dim(
             spark, [(float(a), float(b)) for a, b in pts], "lat double, lon double"
@@ -152,7 +155,7 @@ def test_geohash_sql_matches_python_twin(spark):
     )
     got = {(r["lat"], r["lon"]): r["gh"] for r in df.collect()}
     for a, b in pts:
-        assert got[(a, b)] == geohash_py(a, b, 6), (a, b)
+        assert got[(a, b)] == geohash_py(a, b), (a, b)
 
 
 def test_semdedup_partitions_each_cluster(spark, sf_dir):

@@ -44,7 +44,7 @@ def test_decontaminate_flags_exact_benchmark_copy(spark):
             (2, "totally different words here now indeed", "c"),
         ],
     )
-    rows = {r["doc_id"]: r for r in decontaminate(corpus, bench, n=5).collect()}
+    rows = {r["doc_id"]: r for r in decontaminate(corpus, bench).collect()}
     assert set(rows) == {1}
     assert rows[1]["n_hit_shingles"] == 2
     assert rows[1]["n_bench_docs"] == 1
@@ -76,7 +76,7 @@ def test_cap_per_domain_quota_and_determinism(spark):
 
 def test_repetition_signals_hand_computed(spark):
     df = _docs(spark, [(1, "a b a b a", "s"), (2, "x y z w", "s")])
-    out = {r["doc_id"]: r for r in repetition_signals(df, n=2).collect()}
+    out = {r["doc_id"]: r for r in repetition_signals(df).collect()}
     # doc 1 bigrams: [a b, b a, a b, b a] -> 4 total, 2 distinct
     assert out[1]["n_grams"] == 4
     assert out[1]["dup_gram_frac"] == 0.5
@@ -87,7 +87,9 @@ def test_repetition_signals_hand_computed(spark):
     assert abs(out[2]["top_gram_share"] - 0.3333) < 1e-9
 
 
-def test_prefix_filter_join_is_exact(spark):
+def test_prefix_filter_join_is_exact(spark, monkeypatch):
+    from bigdatanycdiseasesurveillance_spark.operators import setsim as SS
+
     # cross-"source" near-dups that (source, length)-blocked dedup
     # cannot see; brute force is the ground truth.
     rows = [
@@ -100,9 +102,10 @@ def test_prefix_filter_join_is_exact(spark):
         (7, "one two three four five six seven", "s2"),
     ]
     df = _docs(spark, rows)
+    monkeypatch.setattr(SS, "PREFIX_JACCARD_THRESHOLD", 0.6)
     got = sorted(
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in prefix_filter_jaccard_pairs(df, threshold=0.6).collect()
+        for r in prefix_filter_jaccard_pairs(df).collect()
     )
 
     from bigdatanycdiseasesurveillance_spark.functions.text_funcs import (
@@ -153,7 +156,7 @@ def test_prefix_filter_join_plan_has_no_cartesian(spark, sf_dir):
     any CartesianProduct/BroadcastNestedLoop would mean the prefix
     scheme silently degenerated to all-pairs."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    df = prefix_filter_jaccard_pairs(docs, threshold=0.7)
+    df = prefix_filter_jaccard_pairs(docs)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
@@ -198,7 +201,7 @@ def test_pair_stats_matches_pair_list(spark):
     ]
     df = _docs(spark, rows)
 
-    pairs = prefix_filter_jaccard_pairs(df, threshold=0.7).collect()
+    pairs = prefix_filter_jaccard_pairs(df).collect()
     stats = jaccard_pair_stats(df, threshold=0.7).collect()[0]
     assert stats["n_docs"] == 8
     assert stats["n_sets"] == 6  # docs 1,2,8 share one token set
@@ -335,7 +338,7 @@ def test_nb_quality_classifier_separates_seed_tokens(spark):
             (4, "spam junk noise", "srcZ"),  # neg-like holdout -> drop
         ],
     )
-    rows = {r["doc_id"]: r for r in nb_quality_scores(docs, "src0").collect()}
+    rows = {r["doc_id"]: r for r in nb_quality_scores(docs).collect()}
     assert rows[3]["quality_keep"] is True
     assert rows[4]["quality_keep"] is False
     assert rows[1]["quality_keep"] is True and rows[2]["quality_keep"] is False

@@ -21,7 +21,7 @@ def test_minhash_pairs_are_verified_jaccard(spark, sf_dir):
     # exact pairs within (source, bucket) blocks
     exact = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.jaccard_pairs(docs, threshold=0.7).collect()
+        for r in D.jaccard_pairs(docs).collect()
     }
     lsh_pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows}
     # any LSH pair that satisfies the blocking constraint must be in the
@@ -58,27 +58,26 @@ def test_simhash_identical_docs_zero_hamming(spark):
 
 def test_embedding_pairs_symmetric_threshold(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
-    pairs = D.embedding_cosine_pairs(emb, threshold=0.35).collect()
+    pairs = D.embedding_cosine_pairs(emb).collect()
     assert all(r["cosine_sim"] >= 0.35 for r in pairs)
     assert all(r["id_a"] < r["id_b"] for r in pairs)
 
 
-def test_embedding_pairs_gemm_equals_expression_twin(spark, sf_dir):
+def test_embedding_pairs_gemm_equals_expression_twin(spark, sf_dir, monkeypatch):
     """The production GEMM kernel must match the interpreted
     zip_with/aggregate expression formulation exactly — same pairs,
     same rounded similarities (the langid fast-vs-DataFrame device).
     A tiny chunk size forces the chunked-GEMM path across chunk
     boundaries."""
+    monkeypatch.setattr(D, "GEMM_CHUNK", 7)
     emb = table(spark, sf_dir, "embeddings")
     expr = {
         (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in D.embedding_cosine_pairs(emb, threshold=0.35).collect()
+        for r in D.embedding_cosine_pairs(emb).collect()
     }
     gemm = {
         (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in D.embedding_cosine_pairs_gemm(
-            emb, threshold=0.35, chunk=7
-        ).collect()
+        for r in D.embedding_cosine_pairs_gemm(emb, threshold=0.35).collect()
     }
     # key sets exact; values tolerate ONE 4-decimal rounding step for
     # summation-order drift straddling a rounding boundary — the same
@@ -89,7 +88,7 @@ def test_embedding_pairs_gemm_equals_expression_twin(spark, sf_dir):
         assert abs(v - expr[k]) <= 1.0001e-4, (k, v, expr[k])
 
 
-def test_embedding_pairs_gemm_duplicate_ids_and_zero_norms(spark):
+def test_embedding_pairs_gemm_duplicate_ids_and_zero_norms(spark, monkeypatch):
     """Two contract edges the sf fixtures can't reach: (1) a block
     holding DUPLICATE vec_ids must not emit an id_a == id_b pair (the
     triangle filter compares ids, not positions); (2) a zero vector
@@ -102,8 +101,9 @@ def test_embedding_pairs_gemm_duplicate_ids_and_zero_norms(spark):
         (3, 0, [0.0, 0.0, 0.0, 0.0]),  # zero-norm vector
     ]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    expr = D.embedding_cosine_pairs(df, threshold=0.35).collect()
-    gemm = D.embedding_cosine_pairs_gemm(df, threshold=0.35, chunk=2).collect()
+    expr = D.embedding_cosine_pairs(df).collect()
+    monkeypatch.setattr(D, "GEMM_CHUNK", 2)
+    gemm = D.embedding_cosine_pairs_gemm(df, threshold=0.35).collect()
     for out in (expr, gemm):
         assert all(r["id_a"] < r["id_b"] for r in out)
         assert all(not math.isnan(r["cosine_sim"]) for r in out)
@@ -170,7 +170,7 @@ def test_certification_band_replay_equals_operator_buckets(spark):
     ).select(
         "id", F.expr(D.minhash_signature("tok")).alias("sig")
     ).select(
-        "id", *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes("sig"))]
+        "id", *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes())]
     )
     rows = {r["id"]: [r[f"bh{b}"] for b in range(D.MINHASH_BANDS)] for r in sigs.collect()}
     ids = sorted(rows)
@@ -230,8 +230,8 @@ def test_jaccard_gemm_equals_dataframe_variant(spark, sf_dir):
     from bigdatanycdiseasesurveillance_spark.tables import table
 
     docs = table(spark, sf_dir, "documents")
-    a = sorted(map(tuple, jaccard_pairs(docs, threshold=0.7).collect()))
-    b = sorted(map(tuple, jaccard_pairs_gemm(docs, threshold=0.7).collect()))
+    a = sorted(map(tuple, jaccard_pairs(docs).collect()))
+    b = sorted(map(tuple, jaccard_pairs_gemm(docs).collect()))
     assert a == b
 
 

@@ -21,10 +21,8 @@ SYMPTOMS = ("fever", "cough", "vomiting", "rash", "fatigue")
 HAZARDS = ("outbreak", "contamination")
 
 
-def _relevance(df, text_col="text"):
-    return extract_relevance(
-        df, text_col=text_col, primary=DISEASES, secondary=SYMPTOMS, hazard=HAZARDS
-    )
+def _relevance(df):
+    return extract_relevance(df, primary=DISEASES, secondary=SYMPTOMS, hazard=HAZARDS)
 
 
 def test_relevance_golden_rules(spark):
@@ -177,7 +175,7 @@ def test_bronze_to_silver_slice(spark, tmp_path):
     assert got["p2"] == ("Williamsburg", "mild")
 
     # exact-dedup tier: p1 and p3 share normalized text -> one group of 2
-    groups = exact_dedup_groups(relevant, text_col="text", id_col="id")
+    groups = exact_dedup_groups(relevant.withColumnRenamed("id", "doc_id"))
     dup = groups.filter(F.col("dup_count") > 1).collect()
     assert len(dup) == 1 and dup[0]["canonical_id"] == "p1"
 

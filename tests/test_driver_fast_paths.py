@@ -56,7 +56,7 @@ def _cc(spark, sf_dir):
 
 
 def _lloyd_2d(spark, sf_dir):
-    return _collect(C.lloyd_kmeans_2d(_pts_2d(spark), k=5, iters=8))
+    return _collect(C.lloyd_kmeans_2d(_pts_2d(spark)))
 
 
 def _lloyd_nd(spark, sf_dir):

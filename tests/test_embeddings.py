@@ -47,7 +47,10 @@ def test_embedding_profile_shape(spark, sf_dir):
     assert sum(r["n_docs"] for r in prof) == 60
 
 
-def test_salted_join_equals_plain_join(spark, sf_dir):
+def test_salted_join_equals_plain_join(spark, sf_dir, monkeypatch):
+    from bigdatanycdiseasesurveillance_spark.operators import skew
+
+    monkeypatch.setattr(skew, "SALT_WAYS", 4)
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     dim = spark.createDataFrame(
         [("click", 1.0), ("view", 2.0), ("purchase", 3.0), ("error", 4.0), ("signup", 5.0)],
@@ -56,7 +59,7 @@ def test_salted_join_equals_plain_join(spark, sf_dir):
     plain = ev.join(dim, "event_type").groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("wv")
     )
-    salted = salted_join(ev, dim, "event_type", salt=4).groupBy("event_type").agg(
+    salted = salted_join(ev, dim, "event_type").groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum(F.col("value") * F.col("weight")), 2).alias("wv")
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
@@ -68,7 +71,7 @@ def test_salted_join_spreads_hot_key(spark):
         F.lit("hot").alias("k"), F.col("id").alias("payload")
     )
     dim = spark.createDataFrame([("hot", 9.9)], "k string, w double")
-    out = salted_join(hot, dim, "k", salt=8, left_salt_from=["payload"])
+    out = salted_join(hot, dim, "k", left_salt_from=["payload"])
     assert out.count() == 1000
     # salt derived from payload hash: verify ~uniform spread across 8 values
     from bigdatanycdiseasesurveillance_spark.operators.skew import F as _F  # noqa: F401

@@ -51,6 +51,6 @@ def test_short_text_has_no_fingerprints(spark):
 
 def test_pair_generation_is_bucketed_and_thresholded(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
-    pairs = FP.fingerprint_pairs(docs, min_shared=3).collect()
+    pairs = FP.fingerprint_pairs(docs).collect()
     assert all(r["id_a"] < r["id_b"] for r in pairs)
     assert all(r["n_shared"] >= 3 for r in pairs)

@@ -23,13 +23,13 @@ def _tokens(spark, sf_dir):
 
 def test_ffd_packs_every_doc_exactly_once(spark, sf_dir):
     src = _tokens(spark, sf_dir)
-    packed = pack_greedy_ffd(src, budget=BUDGET)
+    packed = pack_greedy_ffd(src)
     assert packed.count() == src.count()
     assert packed.select("doc_id").distinct().count() == src.count()
 
 
 def test_ffd_no_pack_exceeds_budget(spark, sf_dir):
-    packed = pack_greedy_ffd(_tokens(spark, sf_dir), budget=BUDGET)
+    packed = pack_greedy_ffd(_tokens(spark, sf_dir))
     over = (
         packed.filter(F.col("pack_slot") >= 0)  # oversize docs are solo
         .groupBy("pack_id")
@@ -45,7 +45,7 @@ def test_ffd_utilization_near_optimal(spark, sf_dir):
     total packs <= ceil(total_tokens / budget) + n_buckets slack (each
     bucket can strand at most ~1 partial pack vs global packing)."""
     src = _tokens(spark, sf_dir).filter(F.col("n_tokens") <= BUDGET)
-    packed = pack_greedy_ffd(src, budget=BUDGET, n_buckets=8)
+    packed = pack_greedy_ffd(src)
     n_packs = packed.select("pack_id").distinct().count()
     total = src.agg(F.sum("n_tokens")).collect()[0][0]
     lower = math.ceil(total / BUDGET)
@@ -56,7 +56,7 @@ def test_concat_chunks_spans_are_contiguous(spark, sf_dir):
     """Start/end spans must tile the token stream with no gaps and the
     chunk math must agree with the spans."""
     rows = (
-        pack_concat_chunks(_tokens(spark, sf_dir), budget=BUDGET)
+        pack_concat_chunks(_tokens(spark, sf_dir))
         .orderBy("doc_id")
         .collect()
     )

@@ -77,7 +77,7 @@ def test_global_window_counter_and_enforcement(spark, sf_dir):
     limited = injected.filter(F.col("rn") <= 3)
     assert plan_invariants(limited)["global_window"] >= 1
 
-    spec = QuerySpec("fake_global_window", lambda s, d: injected, None, "", ())
+    spec = QuerySpec("fake_global_window", lambda s, d: injected, "", ())
     orig = sweep_mod.load_shuffle_budget
     # no pin: unallowlisted nonzero count is violation-grade on its own
     sweep_mod.load_shuffle_budget = lambda: {"sf_dir": sf_dir, "budget": {}}
@@ -171,7 +171,7 @@ def test_corrupt_budget_file_is_a_violation_not_an_abort(spark, sf_dir):
         raise json.JSONDecodeError("boom", "{", 0)  # a ValueError
 
     spec = QuerySpec(
-        "tiny_ok", lambda s, d: s.range(5).groupBy("id").count(), None, "", ()
+        "tiny_ok", lambda s, d: s.range(5).groupBy("id").count(), "", ()
     )
     orig = sweep_mod.load_shuffle_budget
     sweep_mod.load_shuffle_budget = corrupt

@@ -150,23 +150,26 @@ def test_gemm_pairs_equal_expression_pairs_any_vectors(spark, rows):
     kernel and the zip_with/aggregate expression formulation must emit
     the same (id_a, id_b, rounded-cosine) set — including across chunk
     boundaries (chunk=3) and degenerate 1-member blocks."""
-    from bigdatanycdiseasesurveillance_spark.operators.dedup import (
-        embedding_cosine_pairs,
-        embedding_cosine_pairs_gemm,
-    )
+    from unittest import mock
+
+    from bigdatanycdiseasesurveillance_spark.operators import dedup as D
 
     data = [(i, blk, v) for i, (blk, v) in enumerate(rows)]
     df = spark.createDataFrame(
         data, "vec_id long, label int, embedding array<float>"
     )
-    expr = {
-        (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in embedding_cosine_pairs(df, threshold=-2.0).collect()
-    }
-    gemm = {
-        (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in embedding_cosine_pairs_gemm(df, threshold=-2.0, chunk=3).collect()
-    }
+    # (a fixture monkeypatch would outlive one hypothesis example)
+    with mock.patch.object(D, "COSINE_DUP_THRESHOLD", -2.0), mock.patch.object(
+        D, "GEMM_CHUNK", 3
+    ):
+        expr = {
+            (r["id_a"], r["id_b"]): r["cosine_sim"]
+            for r in D.embedding_cosine_pairs(df).collect()
+        }
+        gemm = {
+            (r["id_a"], r["id_b"]): r["cosine_sim"]
+            for r in D.embedding_cosine_pairs_gemm(df, threshold=-2.0).collect()
+        }
     assert set(gemm) == set(expr)
     for k, v in gemm.items():
         # both sides round to 4; tolerate ONE rounding step for the

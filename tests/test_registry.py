@@ -14,9 +14,9 @@ from bigdatanycdiseasesurveillance_spark.registry import _REGISTRY, all_specs, r
 def test_register_rejects_duplicate_name():
     name = "__test_registry_duplicate__"
     try:
-        register(name)(lambda spark, sf_dir: None)
+        register(name, "SELECT 1")(lambda spark, sf_dir: None)
         with pytest.raises(ValueError, match="duplicate query name"):
-            register(name)(lambda spark, sf_dir: None)
+            register(name, "SELECT 1")(lambda spark, sf_dir: None)
     finally:
         _REGISTRY.pop(name, None)
 

@@ -8,11 +8,15 @@ from pyspark.sql import functions as F
 
 from bigdatanycdiseasesurveillance_spark.operators.sampling import (
     md5_long,
-    sample_bernoulli,
     sample_stratified,
     train_test_split,
 )
 from bigdatanycdiseasesurveillance_spark.tables import table
+
+
+def _sample(docs, rate):
+    """Every stratum at one rate: a plain hash-deviate sample by doc_id."""
+    return sample_stratified(docs, "doc_id", "source", {}, default_rate=rate)
 
 
 def test_sample_membership_is_layout_independent(spark, sf_dir):
@@ -20,11 +24,8 @@ def test_sample_membership_is_layout_independent(spark, sf_dir):
     the property that makes 100 TB reruns reproducible and is exactly
     where df.sample(seed=...) fails."""
     docs = table(spark, sf_dir, "documents")
-    a = {r["doc_id"] for r in sample_bernoulli(docs, "doc_id", 0.3).collect()}
-    b = {
-        r["doc_id"]
-        for r in sample_bernoulli(docs.repartition(17), "doc_id", 0.3).collect()
-    }
+    a = {r["doc_id"] for r in _sample(docs, 0.3).collect()}
+    b = {r["doc_id"] for r in _sample(docs.repartition(17), 0.3).collect()}
     assert a == b and 0 < len(a) < docs.count()
 
 
@@ -41,8 +42,8 @@ def test_nested_samples_are_monotone(spark, sf_dir):
     the deviate construction gives nested samples for free, so a 1%
     debug corpus is always inside the 10% dev corpus."""
     docs = table(spark, sf_dir, "documents")
-    small = {r["doc_id"] for r in sample_bernoulli(docs, "doc_id", 0.1).collect()}
-    big = {r["doc_id"] for r in sample_bernoulli(docs, "doc_id", 0.4).collect()}
+    small = {r["doc_id"] for r in _sample(docs, 0.1).collect()}
+    big = {r["doc_id"] for r in _sample(docs, 0.4).collect()}
     assert small <= big
 
 

@@ -22,14 +22,15 @@ def test_ivf_nprobe_all_equals_brute_force(spark, sf_dir):
     qv, _ = _qvec(spark, sf_dir)
     n_cells = emb.select("label").distinct().count()
     brute = S.brute_force_topk(emb, qv, k=10).collect()
-    ivf = S.ivf_search(emb, qv, k=10, nprobe=n_cells).collect()
+    ivf = S.ivf_search(emb, qv, nprobe=n_cells).collect()
     assert [r["vec_id"] for r in brute] == [r["vec_id"] for r in ivf]
 
 
-def test_ivf_subset_of_probed_cells(spark, sf_dir):
+def test_ivf_subset_of_probed_cells(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(S, "IVF_TOPK", 5)
     emb = table(spark, sf_dir, "embeddings")
     qv, _ = _qvec(spark, sf_dir)
-    got = S.ivf_search(emb, qv, k=5, nprobe=1).collect()
+    got = S.ivf_search(emb, qv, nprobe=1).collect()
     assert len(got) == 5
     labels = {
         r["label"]
@@ -46,8 +47,8 @@ def test_ivf_build_artifact_roundtrip(spark, sf_dir, tmp_path):
     emb = table(spark, sf_dir, "embeddings")
     qv, _ = _qvec(spark, sf_dir)
     cents = S.ivf_build(emb, path=str(tmp_path / "ivf_centroids"))
-    with_artifact = S.ivf_search(emb, qv, k=10, nprobe=2, centroids=cents).collect()
-    inline = S.ivf_search(emb, qv, k=10, nprobe=2).collect()
+    with_artifact = S.ivf_search(emb, qv, nprobe=2, centroids=cents).collect()
+    inline = S.ivf_search(emb, qv, nprobe=2).collect()
     assert [(r["vec_id"], r["cosine_sim"]) for r in with_artifact] == [
         (r["vec_id"], r["cosine_sim"]) for r in inline
     ]
@@ -55,7 +56,7 @@ def test_ivf_build_artifact_roundtrip(spark, sf_dir, tmp_path):
 
 def test_knn_rank_contract(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
-    out = S.knn_per_block(emb, k=3)
+    out = S.knn_per_block(emb)
     per = out.groupBy("vec_id").count().agg(F.max("count")).first()[0]
     assert per <= 3
     assert out.filter(F.col("vec_id") == F.col("neighbor_id")).count() == 0
@@ -72,8 +73,8 @@ def test_knn_gemm_equals_dataframe_variant(spark, sf_dir):
 
     emb = table(spark, sf_dir, "embeddings")
     cols = ["vec_id", "neighbor_id", "cosine_sim", "rank"]
-    a = sorted(map(tuple, knn_per_block(emb, k=3).select(cols).collect()))
-    b = sorted(map(tuple, knn_per_block_gemm(emb, k=3).select(cols).collect()))
+    a = sorted(map(tuple, knn_per_block(emb).select(cols).collect()))
+    b = sorted(map(tuple, knn_per_block_gemm(emb).select(cols).collect()))
     assert a == b
 
 
@@ -133,11 +134,11 @@ def test_multiprobe_recall_superset(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
     single = {
         (r["id_a"], r["id_b"])
-        for r in rp_lsh_pairs(emb, _RP_PLANES, threshold=0.3).collect()
+        for r in rp_lsh_pairs(emb, _RP_PLANES).collect()
     }
     multi = {
         (r["id_a"], r["id_b"])
-        for r in rp_lsh_multiprobe_pairs(emb, _RP_PLANES, threshold=0.3).collect()
+        for r in rp_lsh_multiprobe_pairs(emb, _RP_PLANES).collect()
     }
     assert single <= multi
     assert len(multi) >= len(single)

@@ -8,13 +8,9 @@ import json
 import os
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bigdatanycdiseasesurveillance_spark.domain.schemas import NYC_311, RSS_ARTICLE
-from bigdatanycdiseasesurveillance_spark.sources.readers import (
-    read_json_any,
-    read_jsonl,
-)
+from bigdatanycdiseasesurveillance_spark.sources.readers import read_json_any
 from bigdatanycdiseasesurveillance_spark.sources.sinks import (
     write_partitioned_parquet,
 )
@@ -69,14 +65,6 @@ def test_read_json_any_nested_struct(spark, tmp_path):
     row = out.collect()[0]
     assert row["location"]["zip"] == "11102"
     assert row["type"] == "Rodent"
-
-
-def test_read_jsonl_schema_first(spark, tmp_path):
-    p = tmp_path / "r.jsonl"
-    p.write_text("\n".join(json.dumps(r) for r in RSS_RECORDS))
-    out = read_jsonl(spark, str(p), RSS_ARTICLE)
-    assert out.count() == 6
-    assert out.schema["scraped_at"].dataType == T.TimestampType()
 
 
 def test_partitioned_parquet_prunes(spark, tmp_path):
