@@ -26,15 +26,27 @@ from pyspark.sql import functions as F
 
 # Exact-accumulation type for money-style value columns: summing DOUBLE
 # is summation-order-dependent, and at large row counts the accumulated
-# float error crosses the half-cent rounding boundary (the r7 sf1 audit
+# float error crosses the half-cent rounding boundary (an sf1 audit
 # caught tpch_q3 flipping a cent RUN TO RUN on this class). CAVEAT: the
 # cast QUANTIZES inputs to 2 decimal places before summing — lossless
 # for money columns, lossy for anything with >2dp.
 VALUE_DECIMAL = "decimal(14,2)"
 
+# The two money devices, as Spark SQL text over the SQL text of their
+# argument (callers splice it into a statement, or wrap it as
+# F.expr(exact_sum("value")) for one Column), each defined only here.
 
-def _exact_sum(value_col: str) -> Column:
-    return F.sum(F.col(value_col).cast(VALUE_DECIMAL))
+
+def exact_sum(value: str) -> str:
+    """Order-independent exact sum of a money column (VALUE_DECIMAL)."""
+    return f"sum(CAST({value} AS {VALUE_DECIMAL}))"
+
+
+def cents(value: str) -> str:
+    """Exact integer hundredths of a 2-dp double — money in cents, a
+    fraction in percent — so comparisons and sums over it are BIGINT
+    arithmetic that no summation order can change."""
+    return f"CAST(round({value} * 100) AS BIGINT)"
 
 
 def daily_counts(
@@ -53,7 +65,7 @@ def daily_counts(
     aggs = [F.count("*").alias("cnt")]
     if value_col is not None:
         aggs.append(
-            F.round(_exact_sum(value_col), 2)
+            F.round(F.expr(exact_sum(value_col)), 2)
             .cast("double")
             .alias("total_value")
         )
@@ -101,7 +113,7 @@ def global_stats(df: DataFrame, ts_col: str, value_col: str, id_col: str) -> Dat
         F.min(ts_col).alias("min_ts"),
         F.max(ts_col).alias("max_ts"),
         F.round(
-            _exact_sum(value_col).cast("double") / F.count(F.lit(1)),
+            F.expr(exact_sum(value_col)).cast("double") / F.count(F.lit(1)),
             4,
         ).alias("avg_value"),
     )
@@ -119,7 +131,7 @@ def mean_std_per_group(df: DataFrame, keys: Sequence[str], value_col: str) -> Da
     return df.groupBy(*keys).agg(
         F.count("*").alias("cnt"),
         F.round(
-            _exact_sum(value_col).cast("double") / F.count(F.lit(1)),
+            F.expr(exact_sum(value_col)).cast("double") / F.count(F.lit(1)),
             4,
         ).alias("mean_value"),
         F.round(F.stddev_samp(value_col), 4).alias("std_value"),

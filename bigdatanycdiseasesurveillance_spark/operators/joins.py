@@ -1,21 +1,16 @@
-"""Join operators (SURVEY.md §2.3, J1-J11 + as-of / range joins).
+"""As-of join (SURVEY.md §2.3).
 
 The reference performs every join as a Python dict lookup or pandas
 merge (reference: src/spark_consumers/nyc_neighborhoods.py:176-241;
-src/dashboard/app_upgraded.py:580-629). Here each shape is a native
-Spark join so Catalyst picks broadcast-hash vs sort-merge and AQE can
-re-plan at runtime:
-
-- dimension lookups  -> broadcast hash equi-join (dim ships to executors,
-  fact table never shuffles);
-- outer comparisons  -> full_outer equi-join on grouped (small) inputs;
-- skip-existing      -> left_anti; membership -> left_semi;
-- point-in-range     -> broadcast nested-loop with range predicates
-  (J3's point-in-bbox shape);
-- as-of              -> union + last(ignoreNulls) window: ONE shuffle on
-  the join key, no per-row probing; this is the scalable Spark as-of
-  pattern (equivalent to DuckDB ASOF JOIN semantics: match the latest
-  right row with right_ts <= left_ts).
+src/dashboard/app_upgraded.py:580-629). The J1-J11 shapes are plain
+``df.join`` calls in queries/core_join.py — broadcast dimension
+lookups, a full-outer compare, left_anti / left_semi, a broadcast
+nested-loop range join — so Catalyst picks broadcast-hash vs sort-merge
+and AQE can re-plan at runtime. The as-of join is the one shape with an
+algorithm behind it: union + last(ignoreNulls) window, ONE shuffle on
+the join key, no per-row probing; the scalable Spark as-of pattern
+(equivalent to DuckDB ASOF JOIN semantics: match the latest right row
+with right_ts <= left_ts).
 """
 
 from __future__ import annotations
@@ -24,44 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on) -> DataFrame:
-    """J2/J4/J5/J6: inner equi-join against a small dimension, broadcast
-    so the fact side never shuffles (reference dict lookups, e.g.
-    src/spark_consumers/nyc_neighborhoods.py:176-187)."""
-    return fact.join(F.broadcast(dim), on, "inner")
-
-
-def full_outer_compare(
-    left: DataFrame, right: DataFrame, keys: Sequence[str], fill: float = 0.0
-) -> DataFrame:
-    """J1: official-vs-informal outer merge with zero-fill
-    (reference: src/dashboard/app_upgraded.py:580-629 pd.merge outer)."""
-    return left.join(right, list(keys), "full_outer").na.fill(fill)
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """J11: skip-existing anti-join
-    (reference: src/database/chromadb_client.py:77-102)."""
-    return left.join(right, on, "left_anti")
-
-
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    """Membership (left semi) — implicit in reference filter-by-IDs
-    (reference: src/analysis/spatial_clustering.py:496-519)."""
-    return left.join(right, on, "left_semi")
-
-
-def range_band_join(fact: DataFrame, bands: DataFrame, value_col: str) -> DataFrame:
-    """J3: point-in-range join against a small band dimension — the
-    point-in-bbox shape (reference:
-    src/spark_consumers/nyc_neighborhoods.py:190-205 linear scan).
-    Broadcast nested-loop: each executor scans its fact partition against
-    the in-memory bands; no shuffle of the fact side. Interval convention
-    [lo, hi) over the bands' `lo` and `hi` columns."""
-    cond = (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
-    return fact.join(F.broadcast(bands), cond, "left")
 
 
 def as_of_join(

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import stopword_count, tokens
+from ..functions.text_funcs import normalized, stopword_count, tokens
 
 
 def token_stats(df: DataFrame) -> DataFrame:
@@ -74,13 +74,7 @@ def quality_score(df: DataFrame) -> DataFrame:
     )
 
 
-def _norm_text(text_col: Column) -> Column:
-    return F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(text_col), "[^a-z0-9 ]", " ")), " +", " "
-    )
-
-
-def char_trigrams(text_col: Column) -> Column:
+def char_trigrams(text: str) -> Column:
     """Distinct character trigrams of normalized text (empty array if
     the text is shorter than 3 chars — Spark's sequence() would count
     DOWN for a negative span, so the guard matters).
@@ -99,7 +93,7 @@ def char_trigrams(text_col: Column) -> Column:
             F.array().cast("array<string>")
         )
 
-    return F.element_at(F.transform(F.array(_norm_text(text_col)), _grams), 1)
+    return F.element_at(F.transform(F.array(F.expr(normalized(text))), _grams), 1)
 
 
 # trigrams per language profile
@@ -118,7 +112,7 @@ def langid_trigram(docs: DataFrame) -> DataFrame:
     argmax ties break on language asc.
     """
     grams = docs.select(
-        "doc_id", "lang", F.explode(char_trigrams(F.col("text"))).alias("g")
+        "doc_id", "lang", F.explode(char_trigrams("text")).alias("g")
     )
     # both the profile build and the scoring join consume the exploded
     # gram stream — persist it so normalization+explode runs one scan,
@@ -166,7 +160,7 @@ def langid_trigram_fast(docs: DataFrame) -> DataFrame:
     _spaces = _re.compile(r" +")
 
     def trigrams(text: str) -> set:
-        # mirrors _norm_text + char_trigrams exactly (shared by both
+        # mirrors text_funcs.normalized + char_trigrams exactly (shared by both
         # closures below; cloudpickle ships it by value)
         norm = _spaces.sub(" ", _non_alnum.sub(" ", (text or "").lower())).strip()
         if len(norm) < 3:

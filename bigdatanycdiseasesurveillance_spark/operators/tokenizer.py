@@ -31,12 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import tokens
+
 
 def _token_seqs(df: DataFrame) -> DataFrame:
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda t: t != F.lit("")
-    )
-    return df.select(F.col("doc_id"), toks.alias("tok")).filter(
+    return df.select(F.col("doc_id"), F.expr(tokens("text")).alias("tok")).filter(
         F.size("tok") > 0
     )
 

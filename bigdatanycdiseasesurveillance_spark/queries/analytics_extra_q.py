@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents, exact_sum
 from ..registry import register
 from ..tables import table
 
@@ -298,7 +299,7 @@ def agg_grouping_sets(spark, sf_dir):
     return e.groupingSets([["event_type"], ["dow"], []], "event_type", "dow").agg(
         F.grouping_id().cast("long").alias("gid"),
         F.count("*").cast("long").alias("n_events"),
-        F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
+        F.round(F.expr(exact_sum("value")), 2)
             .cast("double")
             .alias("sum_value"),
     )
@@ -484,8 +485,8 @@ def agg_rfm_segments(spark, sf_dir):
     with NTILE(4) semantics under a user_id tiebreak so the buckets are
     deterministic on both engines. The oracle states the naive form
     (three global NTILE(4) windows); the engine computes the SAME
-    quartiles with the bucketed-rank device (operators/ranking.py,
-    r10 verdict directive #1) — users scale linearly with the corpus
+    quartiles with the bucketed-rank device (operators/ranking.py)
+    — users scale linearly with the corpus
     (15,000 x sf), so an unpartitioned ntile would funnel every user
     row through one task, three times. Each dimension range-buckets by
     a coarse monotone key (recency day / frequency / $100 monetary
@@ -504,9 +505,7 @@ def agg_rfm_segments(spark, sf_dir):
         .agg(
             F.max(F.date_trunc("day", "ts").cast("date")).alias("last_day"),
             F.count("*").cast("long").alias("frequency"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-            .cast("long")
-            .alias("monetary_cents"),
+            F.expr(f"sum({cents('value')})").cast("long").alias("monetary_cents"),
         )
         .crossJoin(F.broadcast(mx))
         .select(

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, unit
+from ..operators.aggregations import exact_sum
 from ..registry import register
 from ..tables import table
 
@@ -200,9 +201,9 @@ def risk_composite(spark, sf_dir):
             F.count("*").cast("long").alias("total"),
             # exact decimal sum -> one deterministic double division: a
             # double AVG's order-dependent last bits can flip the rounded
-            # risk_score on a boundary (r7 sf1-audit bug class)
+            # risk_score on a boundary (an sf1 audit's bug class)
             (
-                F.sum(F.col("value").cast("decimal(14,2)")).cast("double")
+                F.expr(exact_sum("value")).cast("double")
                 / F.count(F.lit(1))
             ).alias("sev"),
             F.count(F.when(F.col("day") > F.date_sub(F.col("max_day"), 7), 1))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents
 from ..registry import register
 from ..tables import table
 
@@ -294,24 +295,22 @@ def attr_multi_touch(spark, sf_dir):
             F.row_number().over(wp.orderBy(F.desc("cts"), F.desc("cid"))),
         )
     )
-    cents = F.round(F.col("value") * 100).cast("long") * F.lit(1000000)
+    micro = f"{cents('value')} * 1000000"
     credits = touch.select(
         F.explode(
             F.filter(
                 F.array(
                     F.struct(
                         F.lit("linear").alias("model"),
-                        F.expr(
-                            "CAST(ROUND(value * 100) AS BIGINT) * 1000000 DIV n"
-                        ).alias("credit"),
+                        F.expr(f"{micro} DIV n").alias("credit"),
                     ),
                     F.struct(
                         F.lit("first").alias("model"),
-                        F.when(F.col("rn_asc") == 1, cents).alias("credit"),
+                        F.when(F.col("rn_asc") == 1, F.expr(micro)).alias("credit"),
                     ),
                     F.struct(
                         F.lit("last").alias("model"),
-                        F.when(F.col("rn_desc") == 1, cents).alias("credit"),
+                        F.when(F.col("rn_desc") == 1, F.expr(micro)).alias("credit"),
                     ),
                 ),
                 lambda s: s.credit.isNotNull(),

@@ -222,7 +222,7 @@ def agg_rollup_daily(spark, sf_dir):
     return ev.rollup("day", "event_type").agg(
         F.grouping_id().cast("long").alias("gid"),
         F.count("*").alias("cnt"),
-        F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
+        F.round(F.expr(agg.exact_sum("value")), 2)
         .cast("double")
         .alias("total_value"),
     )

@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.time_funcs import epoch_sec
-from ..operators import joins as J
 from ..operators import aggregations as agg
+from ..operators.joins import as_of_join
 from ..registry import register
 from ..tables import table, values_dim
 
@@ -27,12 +27,11 @@ from ..tables import table, values_dim
 def join_region_customers(spark, sf_dir):
     """J2-shape: two chained broadcast dimension lookups then aggregate.
     nation/region broadcast — the fact (customer) side never shuffles
-    for the join, only for the final tiny aggregation."""
+    for the join, only for the final tiny aggregation (reference dict
+    lookups, e.g. src/spark_consumers/nyc_neighborhoods.py:176-187)."""
     c, n, r = table(spark, sf_dir, "customer"), table(spark, sf_dir, "nation"), table(spark, sf_dir, "region")
-    joined = J.broadcast_dim_join(
-        J.broadcast_dim_join(c, n, c.c_nationkey == n.n_nationkey),
-        r,
-        F.col("n_regionkey") == r.r_regionkey,
+    joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
+        F.broadcast(r), F.col("n_regionkey") == r.r_regionkey
     )
     return joined.groupBy("r_name").agg(
         F.count("*").alias("n_customers"),
@@ -71,7 +70,7 @@ def join_daily_compare(spark, sf_dir):
     e = ev.filter(F.col("event_type") == "error").groupBy(day).agg(
         F.count("*").alias("error_cnt")
     )
-    merged = J.full_outer_compare(p, e, ["day"], 0)
+    merged = p.join(e, ["day"], "full_outer").na.fill(0)
     return merged.withColumn("diff", F.col("purchase_cnt") - F.col("error_cnt"))
 
 
@@ -90,14 +89,21 @@ def join_daily_compare(spark, sf_dir):
 )
 def join_quantity_bands(spark, sf_dir):
     """J3: point-in-range broadcast join against a literal band dim (the
-    point-in-bbox shape). Broadcast nested-loop — fact side streams."""
+    point-in-bbox shape; reference:
+    src/spark_consumers/nyc_neighborhoods.py:190-205 linear scan).
+    Broadcast nested-loop: each executor scans its fact partition
+    against the in-memory bands, so the fact side never shuffles.
+    Bands are [lo, hi)."""
     li = table(spark, sf_dir, "lineitem")
     bands = values_dim(
         spark,
         [("low", 0.0, 15.0), ("mid", 15.0, 30.0), ("high", 30.0, 45.0), ("top", 45.0, 100.0)],
         "band string, lo double, hi double",
     )
-    joined = J.range_band_join(li, bands, "l_quantity")
+    q = F.col("l_quantity")
+    joined = li.join(
+        F.broadcast(bands), (q >= F.col("lo")) & (q < F.col("hi")), "left"
+    )
     return joined.groupBy("band").agg(
         F.count("*").alias("cnt"), F.round(F.avg("l_quantity"), 4).alias("avg_qty")
     )
@@ -115,14 +121,15 @@ def join_quantity_bands(spark, sf_dir):
     tags=("join", "J11", "anti"),
 )
 def join_customers_no_orders(spark, sf_dir):
-    """J11: anti-join (skip-existing). Customers with no orders, by
+    """J11: anti-join (skip-existing; reference:
+    src/database/chromadb_client.py:77-102). Customers with no orders, by
     nation. orders side is reduced to distinct keys before the anti-join."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey")).distinct()
     n = table(spark, sf_dir, "nation")
-    inactive = J.anti_join(c, o, "c_custkey")
+    inactive = c.join(o, "c_custkey", "left_anti")
     return (
-        J.broadcast_dim_join(inactive, n, inactive.c_nationkey == n.n_nationkey)
+        inactive.join(F.broadcast(n), inactive.c_nationkey == n.n_nationkey)
         .groupBy("n_name")
         .agg(F.count("*").alias("n_inactive"))
     )
@@ -139,11 +146,13 @@ def join_customers_no_orders(spark, sf_dir):
     tags=("join", "semi"),
 )
 def join_active_customers_semi(spark, sf_dir):
-    """Left-semi membership join: customers with at least one order."""
+    """Left-semi membership join: customers with at least one order
+    (the reference filters by id lists, e.g.
+    src/analysis/spatial_clustering.py:496-519)."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     return (
-        J.semi_join(c, o, "c_custkey")
+        c.join(o, "c_custkey", "left_semi")
         .groupBy("c_mktsegment")
         .agg(F.count("*").alias("n_active"))
     )
@@ -170,7 +179,7 @@ def join_asof_purchase_click(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type")
     p = ev.filter(F.col("event_type") == "purchase").drop("event_type")
     c = ev.filter(F.col("event_type") == "click").drop("event_type")
-    out = J.as_of_join(p, c, "user_id", "ts", "ts", ["event_id", "ts"], tiebreak="event_id")
+    out = as_of_join(p, c, "user_id", "ts", "ts", ["event_id", "ts"], tiebreak="event_id")
     return out.select(
         "event_id",
         "user_id",

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import exact_sum
 from ..operators.sampling import deviate_sql, hash_deviate
 from ..registry import register
 from ..tables import table
@@ -74,14 +75,14 @@ def txt_chunk_boilerplate(spark, sf_dir):
     text is rebuilt in chunk order (md5 digest proves the rebuild, so the
     oracle checks content, not just counts).
 
-    Scale shape (r13 rework): the chunk array stays DOC-LOCAL — only
+    Scale shape: the chunk array stays DOC-LOCAL — only
     distinct (doc_id, chunk) pairs enter the support shuffle, the
     per-doc boiler sets come back as an output-sized frame joined on
     doc_id (AQE broadcasts it when small), and the document is rebuilt
     by a pure array filter in chunk order with NO per-doc
     collect_list/sort shuffle. One corpus-sized exchange (chunk
-    support) where the previous formulation had three (support +
-    chunk-key flag join + doc-key rebuild). No all-pairs stage
+    support), not three (support + chunk-key flag join + doc-key
+    rebuild). No all-pairs stage
     anywhere — at 100 TB the chunk-support table is the only global
     state and it shrinks with the HAVING filter before the join.
     """
@@ -93,7 +94,7 @@ def txt_chunk_boilerplate(spark, sf_dir):
     # guard n_chunks == 0: Spark's sequence(0, -1) yields a DESCENDING
     # [0, -1] where DuckDB's range(0, 0) is empty — empty docs must
     # produce zero chunks on both engines (and zero-chunk docs emit no
-    # output row, exactly as the previous posexplode dropped them)
+    # output row, as a posexplode would drop them)
     chunk_arr = F.when(
         n_chunks > 0,
         F.transform(
@@ -101,12 +102,12 @@ def txt_chunk_boilerplate(spark, sf_dir):
             lambda i: F.array_join(F.slice(w, i * _CHUNK + 1, _CHUNK), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # One materialization for THREE consumers (r13): the final join's
-    # stream side plus dchunks' two aggregations each re-planned the
-    # scan + round-robin rebalance (the plan carried 3 identical
-    # Scan parquet + Exchange subtrees that ReusedExchange did not
-    # deduplicate — measured as three ~0.45s single-task rebalance map
-    # jobs at sf0.1). The lazy checkpoint runs that subtree once.
+    # One materialization for THREE consumers: without it the final
+    # join's stream side plus dchunks' two aggregations each re-plan the
+    # scan + round-robin rebalance (3 identical Scan parquet + Exchange
+    # subtrees that ReusedExchange does not deduplicate — measured as
+    # three ~0.45s single-task rebalance map jobs at sf0.1). The lazy
+    # checkpoint runs that subtree once.
     base = (
         docs.select("doc_id", chunk_arr.alias("ch"))
         .filter(F.size("ch") > 0)
@@ -252,7 +253,7 @@ def samp_group_reservoir(spark, sf_dir):
         F.md5(
             F.array_join(F.sort_array(F.collect_list("event_id")), ",")
         ).alias("ids_md5"),
-        F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
+        F.round(F.expr(exact_sum("value")), 2)
             .cast("double")
             .alias("sum_value"),
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import token_count
 from ..operators.sampling import hash_deviate
 from ..registry import register
 from ..tables import table, values_dim
@@ -111,9 +112,9 @@ def cur_full_pipeline(spark, sf_dir):
     -> token budget, each stage with the registry's proven salts and
     thresholds; emits (stage, n_docs, n_tokens) after every cut.
 
-    SINGLE-PASS formulation (r13): the previous union-of-six-aggregates
-    recomputed the whole upstream chain per stage row (188-operator
-    plan, ~22 exchanges, the corpus scanned six times). Here each doc
+    SINGLE-PASS formulation: a union of six aggregates would recompute
+    the whole upstream chain per stage row (188-operator plan, ~22
+    exchanges, the corpus scanned six times). Here each doc
     carries staged survival flags l1..l5 computed in ONE pass — the
     stage windows become conditional ranks / running sums over the
     SAME rows (a rank among survivors == sum of survivor indicators up
@@ -128,7 +129,7 @@ def cur_full_pipeline(spark, sf_dir):
     from ..operators.curation import token_shingles
     from ..tables import parallelize_scan
 
-    # NOT rebalanced corpus-wide: an interleaved A/B (r13) measured the
+    # NOT rebalanced corpus-wide: an interleaved A/B measured the
     # round-robin text shuffle costing more than the parallelism it buys
     # on this query (med 2.83s vs 2.11s) — only the 1/23-sized bench
     # slice below is worth spreading
@@ -166,7 +167,6 @@ def cur_full_pipeline(spark, sf_dir):
 
     # all row-local signals in the scan stage; text is dropped before
     # the first exchange (guide §2.3: project before the exchange)
-    tok = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
     g2 = token_shingles("text", 2)
     dup_frac = F.round(
         F.lit(1.0)
@@ -181,7 +181,7 @@ def cur_full_pipeline(spark, sf_dir):
         "source",
         "n_chars",
         F.md5(F.lower(F.trim(F.col("text")))).alias("fp"),
-        F.size(tok).cast("long").alias("ntok"),
+        F.expr(token_count("text")).cast("long").alias("ntok"),
         (dup_frac.isNull() | (dup_frac <= _MAX_DUP_FRAC)).alias("dup_ok"),
     )
 
@@ -305,12 +305,11 @@ def llm_prep_pipeline(spark, sf_dir):
     Scale: each stage keeps its own proven plan (blocked pair join,
     pointer-jumping CC, hash split, shuffle-free chunk explode); the
     composition adds no new shuffle beyond its stages'."""
-    from ..functions.text_funcs import tokens as _tokens
     from ..operators import dedup as D
     from ..operators.packing import sliding_chunks
 
     docs = table(spark, sf_dir, "documents")
-    quality = docs.filter(F.size(F.expr(_tokens("text"))) >= 30)
+    quality = docs.filter(F.expr(token_count("text")) >= 30)
     pairs = D.jaccard_pairs(quality)
     labels = D.connected_components(pairs)
     canon = (

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import exact_sum
 from ..registry import register
 from ..streaming.pipelines import _run_to_memory, stream_table
 from ..tables import table
@@ -370,7 +371,7 @@ def _sessions(events):
             # decimal accumulation, matching the shared oracle
             # (_SESSION_ORACLE): double money sums are summation-
             # order-dependent
-            F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
+            F.round(F.expr(exact_sum("value")), 2)
             .cast("double")
             .alias("sum_value"),
         )
@@ -889,16 +890,16 @@ def cur_gopher_rules(spark, sf_dir):
     token count runs over the distinct-token array inside codegen);
     the rule unpivot is a constant-width stack; the profile is one
     map-side-combinable aggregate over 6 x n rows. At 100 TB this is
-    a single scan. Bound ENFORCED (r11 verdict directive #2): the
-    most-frequent-token expression is O(unique x length) per document,
-    so it now runs inside a lazily-evaluated CASE gated on the Gopher
-    word-count window itself — docs outside [50, 100000] words never
-    evaluate it (Spark's CaseWhen and DuckDB's CASE both evaluate the
-    value branch only on condition match), and Gopher semantics define
-    repetition_cap as fail for such docs anyway (they are rejected by
-    the word-count rules before repetition is ever consulted). Worst
-    per-doc cost is therefore capped by the 100k-word gate constant,
-    not the corpus's largest document."""
+    a single scan. Bound ENFORCED: the most-frequent-token expression is
+    O(unique x length) per document, so it runs inside a
+    lazily-evaluated CASE gated on the Gopher word-count window itself —
+    docs outside [50, 100000] words never evaluate it (Spark's CaseWhen
+    and DuckDB's CASE both evaluate the value branch only on condition
+    match), and Gopher semantics define repetition_cap as fail for such
+    docs anyway (they are rejected by the word-count rules before
+    repetition is ever consulted). Worst per-doc cost is therefore
+    capped by the 100k-word gate constant, not the corpus's largest
+    document."""
     from ..functions.text_funcs import STOPWORDS, tokens
 
     docs = table(spark, sf_dir, "documents")
@@ -915,7 +916,7 @@ def cur_gopher_rules(spark, sf_dir):
         "n_words",
         "stop_cnt",
         "n_uniq",
-        # enforced bound (r11 directive #2): the O(unique x length)
+        # enforced bound: the O(unique x length)
         # scan only evaluates inside the Gopher word-count window —
         # CaseWhen is lazy per row, so out-of-gate docs cost nothing
         F.when(

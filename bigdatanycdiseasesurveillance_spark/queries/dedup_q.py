@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import distinct_tokens, normalized, word_jaccard
 from ..operators import dedup as D
 from ..registry import register
 from ..tables import table
@@ -166,7 +167,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     # Constants AND the band-hash construction are imported from the
     # operator module (D.MINHASH_*, D.minhash_band_hashes) so the
     # certification replays the production layout verbatim — layout
-    # drift is structurally impossible (r6 advisor finding), and
+    # drift is structurally impossible, and
     # tests/test_dedup.py pins replay == D.minhash_lsh_pairs buckets.
     bands = D.MINHASH_BANDS
     sigs = rep_toks.select(
@@ -314,7 +315,7 @@ def dedup_simhash(spark, sf_dir):
     # the operator's chunk blocking, verbatim, over distinct sets —
     # built by the SAME helper the production simhash_pairs uses
     # (D.simhash_chunk_structs), so the certification cannot drift from
-    # the operator's chunk layout (r6 advisor finding)
+    # the operator's chunk layout
     chunked = sigs.select(
         "mask",
         F.explode(F.array(*D.simhash_chunk_structs())).alias("cc"),
@@ -461,7 +462,7 @@ def dedup_duplicate_groups(spark, sf_dir):
     quadratic (templated corpora) — this is the operator a 100 TB dedup
     pipeline actually materializes.
 
-    r13: runs the connectivity at the DISTINCT-SET-GROUP level, exactly
+    Runs the connectivity at the DISTINCT-SET-GROUP level, exactly
     the collapse its own oracle performs (see the oracle comment
     above): docs sharing (source, length-bucket, token SET) are
     mutually jaccard-1.0 connected, so replacing them with one node
@@ -474,7 +475,6 @@ def dedup_duplicate_groups(spark, sf_dir):
     group's min); group_size = sum of member counts; singleton
     components fall to the same > 1 filter.
     """
-    from ..functions.text_funcs import distinct_tokens, word_jaccard
     from ..tables import parallelize_scan
 
     d = parallelize_scan(table(spark, sf_dir, "documents"))
@@ -489,7 +489,7 @@ def dedup_duplicate_groups(spark, sf_dir):
             GROUP BY source, bkt, tok""",
             d=d,
         )
-        # Round-robin spread BEFORE the checkpoint (r13): the pair
+        # Round-robin spread BEFORE the checkpoint: the pair
         # join's stream-side parallelism IS the checkpoint's partition
         # count, and AQE's byte-based coalescing shrinks this small-
         # BYTES frame to 1-2 partitions while its pair work is
@@ -509,7 +509,7 @@ def dedup_duplicate_groups(spark, sf_dir):
         WHERE a.gid < b.gid AND round({word_jaccard("a.tok", "b.tok")}, 4) >= 0.7D""",
         gb=gb,
     )
-    # Adaptive loop, NOT a fixed-step pin: the r7 bench corpus proved
+    # Adaptive loop, NOT a fixed-step pin: the bench corpus proved
     # the 'diameter <= 2 clique' premise wrong (sf0.1 measured d=7 —
     # a 3-step pin failed its convergence assert, loudly). The loop's
     # pointer-jumping compression gets the round count to O(log d),
@@ -579,14 +579,8 @@ def dedup_sorted_neighborhood(spark, sf_dir):
     w-1 rows — the window semantics are unchanged."""
     from pyspark.sql import Window
 
-    from ..functions.text_funcs import distinct_tokens, word_jaccard
-
     docs = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")),
-        " +",
-        " ",
-    )
+    norm = F.expr(normalized("text"))
     sel = docs.select(
         "doc_id",
         "source",
@@ -685,20 +679,14 @@ def dedup_snm_multikey(spark, sf_dir):
     Scale shape: two window sorts (one shuffle each on source), union,
     a pair-level dropDuplicates on ~6n rows, and one token re-attach
     join pair — no self-join, candidate count independent of skew.
-    The single-key r10 entry (dedup_sorted_neighborhood) carries token
+    The single-key entry (dedup_sorted_neighborhood) carries token
     payloads through the window because it verifies inline; here the
     verify is shared across passes, so candidates travel as bare id
     pairs and tokens re-attach once (the band-join device)."""
     from pyspark.sql import Window
 
-    from ..functions.text_funcs import distinct_tokens, word_jaccard
-
     docs = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")),
-        " +",
-        " ",
-    )
+    norm = F.expr(normalized("text"))
     base = docs.select("doc_id", "source", norm.alias("norm"))
 
     def snm_pass(key_col):
@@ -783,14 +771,8 @@ def dedup_cross_source_snm(spark, sf_dir):
     anywhere."""
     from pyspark.sql import Window
 
-    from ..functions.text_funcs import distinct_tokens, word_jaccard
-
     docs = table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")),
-        " +",
-        " ",
-    )
+    norm = F.expr(normalized("text"))
     sel = docs.select(
         "doc_id",
         F.substring(norm, 1, 12).alias("sk"),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents
 from ..operators.bounded import bounded_collect
 from ..registry import register
 from ..tables import table, values_dim
@@ -101,7 +102,7 @@ def graph_triangle_count(spark, sf_dir):
     # Close via the oriented wedge equi-join + left-semi against the
     # edge set. An adjacency-intersect close (collect sorted
     # out-neighbor lists, |adj(a) ∩ adj(b)| per edge) was A/B-tested at
-    # sf1 IN-ROUND (r9): it wins 1.9x with AQE off, but under the
+    # sf1: it wins 1.9x with AQE off, but under the
     # engine session (AQE on, which coalesces the wedge shuffle and
     # picks the semi-join strategy) the wedge close is ~1.3x FASTER
     # (60.5s vs 91.6s first-run close at sf1) — array-carrying shuffles
@@ -387,11 +388,13 @@ def tree_subtree_rollup(spark, sf_dir):
     (the oracle's recursive descendant walk materializes n x depth
     rows — fine for the oracle, wrong at 1e9 nodes). The per-level
     scalar emptiness probe is the CC-convergence precedent."""
-    cents = F.round(F.col("value") * 100).cast("long")
     nodes = (
         table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").cast("long").alias("node"))
-        .agg(F.sum(cents).alias("sub_v"), F.lit(1).cast("long").alias("n"))
+        .agg(
+            F.expr(f"sum({cents('value')})").alias("sub_v"),
+            F.lit(1).cast("long").alias("n"),
+        )
         .withColumn(
             "parent",
             F.when(F.col("node") > 0, F.expr("(node - 1) DIV 2")),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import token_count, tokens
+from ..operators.aggregations import cents
 from ..operators.sampling import md5_long
 from ..registry import register
 from ..tables import table, values_dim
@@ -84,7 +85,7 @@ def search_bm25_topk(spark, sf_dir):
     """Lexical ranked retrieval: Okapi BM25 (k1=1.2, b=0.75) top-10 for
     a fixed 3-term query. Postings from one explode; df and corpus
     stats are broadcast scalars; ranking is TakeOrdered."""
-    # NOT checkpointed (r13): the plan re-reads the corpus per derived
+    # NOT checkpointed: the plan re-reads the corpus per derived
     # frame (postings twice, doclen twice), but those subtrees execute
     # as OVERLAPPING stages of one job; an interleaved A/B measured the
     # checkpointed one-pass-each variant slightly SLOWER (med 0.84 s vs
@@ -209,7 +210,7 @@ def dq_rowhash_checksum(spark, sf_dir):
         F.col("event_id").cast("string"),
         F.col("user_id").cast("string"),
         F.unix_micros(F.col("ts")).cast("string"),
-        F.round(F.col("value") * 100, 0).cast("long").cast("string"),
+        F.expr(cents("value")).cast("string"),
     )
     h = md5_long(fingerprint)
     return ev.groupBy("event_type").agg(
@@ -292,7 +293,7 @@ def cur_winsorize_values(spark, sf_dir):
     )
     # decimal accumulation for the means: values are exact 6dp decimals
     # after clipping, and a DOUBLE sum's order-dependent last bits can
-    # flip a 4dp-half boundary run to run (the r7 sf1-audit bug class)
+    # flip a 4dp-half boundary run to run (an sf1 audit's bug class)
     clipped_dec = F.least(
         F.greatest(
             F.col("value").cast("decimal(16,6)"), F.col("lo").cast("decimal(16,6)")

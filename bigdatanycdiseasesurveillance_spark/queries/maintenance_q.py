@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents, exact_sum
 from ..operators.sampling import md5_long
 from ..registry import register
 from ..sources.sinks import (
@@ -113,12 +114,11 @@ def agg_incremental_merge(spark, sf_dir):
 
     def partials(df):
         # decimal sum partials: exact at any order AND exactly mergeable
-        # (sum-of-sums of decimals is the from-scratch decimal sum; the
-        # double form made merge==recompute hold only to float noise —
-        # r7 sf1-audit bug class)
+        # (sum-of-sums of decimals is the from-scratch decimal sum; a
+        # double sum makes merge==recompute hold only to float noise)
         return df.groupBy("event_type").agg(
             F.count("*").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(14,2)")).alias("s"),
+            F.expr(exact_sum("value")).alias("s"),
             F.min("value").alias("mn"),
             F.max("value").alias("mx"),
         )
@@ -352,10 +352,9 @@ def inc_join_delta_maintenance(spark, sf_dir):
     delta_rows = (
         j(o_delta, l_base).unionByName(j(o_base, l_delta)).unionByName(j(o_delta, l_delta))
     )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     return delta_rows.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("n_rows"),
-        F.sum(cents).cast("long").alias("revenue_cents"),
+        F.expr(f"sum({cents('l_extendedprice')})").cast("long").alias("revenue_cents"),
     )
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import token_count
 from ..operators.packing import pack_concat_chunks, pack_greedy_ffd
 from ..registry import register
 from ..tables import table
@@ -11,7 +12,7 @@ from ..tables import table
 
 def _with_tokens(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    n = F.size(F.filter(F.split(F.lower("text"), " "), lambda t: t != ""))
+    n = F.expr(token_count("text"))
     return d.select("doc_id", n.cast("long").alias("n_tokens"))
 
 

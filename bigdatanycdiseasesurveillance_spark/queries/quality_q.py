@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents, exact_sum
 from ..operators.sampling import hash_deviate
 from ..registry import register
 from ..tables import table, values_dim
@@ -214,13 +215,12 @@ def feat_quantile_binning(spark, sf_dir):
     cutpoints (min value at or past rank ceil(p*n), fully tie-broken
     so both engines pick the identical data value) then a CASE bin
     assignment and per-bin profile. The exact global ranking uses the
-    bucketed-rank device (operators/ranking.py, r10 verdict directive
-    #3): $1000 price bands + control-plane prefix-summed offsets —
-    value-identical to the oracle's naive ROW_NUMBER() with no
-    single-partition window; at 100 TB the cutpoint CTE can also swap
-    for approx_percentile (no rank at all) and keep the broadcast +
-    CASE assignment unchanged, since cutpoints are a 3-value broadcast
-    either way."""
+    bucketed-rank device (operators/ranking.py): $1000 price bands +
+    control-plane prefix-summed offsets — value-identical to the
+    oracle's naive ROW_NUMBER() with no single-partition window; at 100
+    TB the cutpoint CTE can also swap for approx_percentile (no rank at
+    all) and keep the broadcast + CASE assignment unchanged, since
+    cutpoints are a 3-value broadcast either way."""
     from ..operators.ranking import bucketed_global_rank
 
     orders = table(spark, sf_dir, "orders")
@@ -247,10 +247,10 @@ def feat_quantile_binning(spark, sf_dir):
     return binned.groupBy("bin").agg(
         F.count("*").cast("long").alias("n_orders"),
         # decimal sum: AVG over a DOUBLE money column is summation-order-
-        # dependent and can flip a half-cent boundary run to run (the r7
-        # sf1 audit's tpch_q3 finding, same class)
+        # dependent and can flip a half-cent boundary run to run (an sf1
+        # audit's tpch_q3 finding, same class)
         F.round(
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)")).cast("double")
+            F.expr(exact_sum("o_totalprice")).cast("double")
             / F.count(F.lit(1)),
             2,
         ).alias("avg_price"),
@@ -460,7 +460,7 @@ def dq_group_split_leakfree(spark, sf_dir):
     from ..operators import dedup as D
 
     docs = table(spark, sf_dir, "documents")
-    # lazy checkpoint (r14): the blocked pair join feeds BOTH the CC
+    # lazy checkpoint: the blocked pair join feeds BOTH the CC
     # labeling and the audit join below — without it the quadratic pair
     # join is planned and executed once per consumer (2-3x; CC's own
     # edge materialization covers only its branch)
@@ -947,16 +947,16 @@ def dq_observe_metrics(spark, sf_dir):
     is the engine-native form."""
     from pyspark.sql import Observation
 
-    cents = F.round(F.col("value") * 100).cast("long")
+    value_cents = cents("value")
     obs = Observation("dq")
     df = table(spark, sf_dir, "events").observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(cents).alias("sum_value_cents"),
+        F.expr(f"sum({value_cents})").alias("sum_value_cents"),
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
             "n_clicks"
         ),
-        F.max(cents).alias("max_value_cents"),
+        F.expr(f"max({value_cents})").alias("max_value_cents"),
     )
     df.write.format("noop").mode("overwrite").save()
     m = obs.get

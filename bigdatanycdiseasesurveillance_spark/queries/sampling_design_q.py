@@ -1,7 +1,6 @@
-"""Round-12 sampling-design + doc-structure queries: the SURVEY
-round-12 queue (Neyman allocation, sentence segmentation profile) plus
-the round-13 queue pulled forward (systematic sampling, paragraph
-structure, dedup-aware mixing).
+"""Sampling-design + doc-structure queries: Neyman allocation,
+sentence segmentation, systematic sampling, paragraph structure,
+dedup-aware mixing and the other samplers and profiles below.
 
 Reference analogue: the reference sizes its per-borough surveillance
 samples with ad-hoc driver-side proportions (`app_upgraded.py`
@@ -13,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text_funcs import (
+    SENT_INJECT,
+    SENT_SPLIT,
+    sentences,
+    tokens,
+    word_count,
+    words,
+)
 from ..operators.allocation import largest_remainder_allocation
 from ..operators.ranking import grouped_histogram_quantiles
 from ..registry import register
@@ -111,24 +118,16 @@ def samp_neyman_allocation(spark, sf_dir):
 
 # --- Sentence segmentation profile --------------------------------------
 
-# The synthetic corpus is punctuation-free, so the profile first injects
-# a deterministic period after every 10th word — the same both-engines
-# text-injection device the PII redaction oracle uses — and then runs
-# the REAL regex splitter. Both patterns are valid and semantically
-# identical in Java regex (Spark) and RE2 (DuckDB): non-overlapping
-# leftmost matches, scan resumes after each replacement.
-_SENT_INJECT = r"((?:\S+ ){9}\S+) "
-_SENT_SPLIT = r"\.\s+"
-
-
+# The oracles restate functions/text_funcs.sentences in DuckDB from
+# the same two patterns.
 @register(
     "txt_sentence_segmentation_profile",
     oracle=rf"""
         WITH s AS (
             SELECT lang,
                    unnest(string_split_regex(
-                       regexp_replace(text, '{_SENT_INJECT}', '\1. ', 'g'),
-                       '{_SENT_SPLIT}')) AS sent
+                       regexp_replace(text, '{SENT_INJECT}', '\1. ', 'g'),
+                       '{SENT_SPLIT}')) AS sent
             FROM documents
         ), sw AS (
             SELECT lang,
@@ -188,17 +187,10 @@ def txt_sentence_segmentation_profile(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     sent = docs.select(
         "lang",
-        F.explode(
-            F.split(
-                F.regexp_replace(F.col("text"), _SENT_INJECT, "$1. "),
-                _SENT_SPLIT,
-            )
-        ).alias("sent"),
+        F.explode(F.expr(sentences("text"))).alias("sent"),
     ).select(
         "lang",
-        F.size(F.filter(F.split(F.col("sent"), " "), lambda x: x != "")).alias(
-            "words"
-        ),
+        F.expr(word_count("sent")).alias("words"),
     ).filter(F.col("words") > 0)
     q = grouped_histogram_quantiles(
         sent,
@@ -225,7 +217,7 @@ def txt_sentence_segmentation_profile(spark, sf_dir):
     )
 
 
-# --- Systematic sampling (r13 queue, pulled forward) ---------------------
+# --- Systematic sampling -------------------------------------------------
 
 _SYS_BUDGET = 2_000
 _SYS_SALT = "sysint"
@@ -304,7 +296,7 @@ def samp_systematic_interval(spark, sf_dir):
     )
 
 
-# --- Paragraph structure profile (r13 queue, pulled forward) -------------
+# --- Paragraph structure profile -----------------------------------------
 
 _PARA_SENTS = 4  # paragraph = 4 consecutive sentences
 
@@ -315,8 +307,8 @@ _PARA_SENTS = 4  # paragraph = 4 consecutive sentences
         WITH s AS (
             SELECT doc_id, source,
                    string_split_regex(
-                       regexp_replace(text, '{_SENT_INJECT}', '\1. ', 'g'),
-                       '{_SENT_SPLIT}') AS sents
+                       regexp_replace(text, '{SENT_INJECT}', '\1. ', 'g'),
+                       '{SENT_SPLIT}') AS sents
             FROM documents
         ), idx AS (
             SELECT doc_id, source,
@@ -371,19 +363,12 @@ def txt_paragraph_structure_profile(spark, sf_dir):
     sent = docs.select(
         "doc_id",
         "source",
-        F.posexplode(
-            F.split(
-                F.regexp_replace(F.col("text"), _SENT_INJECT, "$1. "),
-                _SENT_SPLIT,
-            )
-        ).alias("i", "sent"),
+        F.posexplode(F.expr(sentences("text"))).alias("i", "sent"),
     ).select(
         "doc_id",
         "source",
         F.expr(f"i div {_PARA_SENTS}").alias("para_id"),
-        F.size(F.filter(F.split(F.col("sent"), " "), lambda x: x != "")).alias(
-            "w"
-        ),
+        F.expr(word_count("sent")).alias("w"),
     )
     para = (
         sent.groupBy("doc_id", "source", "para_id")
@@ -405,7 +390,7 @@ def txt_paragraph_structure_profile(spark, sf_dir):
     )
 
 
-# --- Dedup-aware mixing (r13 queue, pulled forward) ----------------------
+# --- Dedup-aware mixing --------------------------------------------------
 
 _MIX_BUDGET = 1_000_000
 
@@ -469,9 +454,7 @@ def cur_dedup_aware_mixing(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_tok"),
+        F.expr(word_count("text")).cast("long").alias("n_tok"),
         F.md5(F.col("text")).alias("h"),
     )
     keyed = docs.withColumn(
@@ -495,7 +478,7 @@ def cur_dedup_aware_mixing(spark, sf_dir):
     )
 
 
-# --- PPS Poisson sampling (r13 queue, pulled forward) --------------------
+# --- PPS Poisson sampling ------------------------------------------------
 
 _PPS_K = 1_000  # expected sample size
 _PPS_SCALE = 1 << 60
@@ -599,7 +582,7 @@ def samp_poisson_pps(spark, sf_dir):
     )
 
 
-# --- Readability profile (r13 queue, pulled forward) ----------------------
+# --- Readability profile -------------------------------------------------
 
 
 @register(
@@ -608,8 +591,8 @@ def samp_poisson_pps(spark, sf_dir):
         WITH s AS (
             SELECT doc_id, source, text,
                    string_split_regex(
-                       regexp_replace(text, '{_SENT_INJECT}', '\1. ', 'g'),
-                       '{_SENT_SPLIT}') AS sents
+                       regexp_replace(text, '{SENT_INJECT}', '\1. ', 'g'),
+                       '{SENT_SPLIT}') AS sents
             FROM documents
         ), per AS (
             SELECT source,
@@ -656,25 +639,14 @@ def txt_readability_profile(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
     per = docs.select(
         "source",
-        F.size(
-            F.filter(
-                F.split(
-                    F.regexp_replace(F.col("text"), _SENT_INJECT, "$1. "),
-                    _SENT_SPLIT,
-                ),
-                lambda x: F.trim(x) != F.lit(""),
-            )
-        )
+        F.expr(f"size(filter({sentences('text')}, s -> trim(s) != ''))")
         .cast("long")
         .alias("n_sents"),
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_words"),
+        F.expr(word_count("text")).cast("long").alias("n_words"),
         F.coalesce(
             F.aggregate(
                 F.transform(
-                    F.filter(F.split(F.col("text"), " "), lambda x: x != ""),
-                    lambda w: F.length(w).cast("long"),
+                    F.expr(words("text")), lambda w: F.length(w).cast("long")
                 ),
                 F.lit(0).cast("long"),
                 lambda acc, v: acc + v,
@@ -704,7 +676,7 @@ def txt_readability_profile(spark, sf_dir):
     )
 
 
-# --- Allocation drift monitor (r13 queue, pulled forward) -----------------
+# --- Allocation drift monitor --------------------------------------------
 
 _DRIFT_BUDGET = 100_000
 _DRIFT_HALF = _PPS_SCALE // 2  # deviate < 2^59 -> half A
@@ -792,9 +764,7 @@ def dq_allocation_drift(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents").select(
         "source",
-        F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        .cast("long")
-        .alias("n_tok"),
+        F.expr(word_count("text")).cast("long").alias("n_tok"),
         (hash_deviate(F.col("doc_id"), "driftsplit") < _DRIFT_HALF).alias(
             "in_half"
         ),
@@ -831,7 +801,7 @@ def dq_allocation_drift(spark, sf_dir):
     )
 
 
-# --- Balanced halves (r13 queue, third batch) -----------------------------
+# --- Balanced halves -----------------------------------------------------
 
 
 @register(
@@ -895,7 +865,7 @@ def samp_balanced_halves(spark, sf_dir):
     )
 
 
-# --- Vocabulary growth (Heaps law) profile (r13 queue, third batch) -------
+# --- Vocabulary growth (Heaps law) profile -------------------------------
 
 _VG_DECILE = _PPS_SCALE // 10
 
@@ -966,11 +936,7 @@ def txt_vocab_growth_profile(spark, sf_dir):
     d = docs.select(
         "lang",
         hash_deviate(F.col("doc_id"), "vocabgrow").alias("__dev"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col("text")), " "), lambda t: t != ""
-            )
-        ).alias("t"),
+        F.explode(F.expr(tokens("text"))).alias("t"),
     ).select(
         "lang",
         # TRUE integer div: the deviate exceeds 2^53, so a double
@@ -1015,7 +981,7 @@ def txt_vocab_growth_profile(spark, sf_dir):
     )
 
 
-# --- Temperature-scaled mixing allocation (r13 queue, third batch) --------
+# --- Temperature-scaled mixing allocation --------------------------------
 
 _TEMP_BUDGET = 100_000
 _TEMP_TAUS = (1, 2, 4)
@@ -1100,11 +1066,7 @@ def cur_mix_temperature_allocation(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     m = docs.groupBy("source").agg(
-        F.sum(
-            F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
-        )
-        .cast("long")
-        .alias("mass")
+        F.expr(f"sum({word_count('text')})").cast("long").alias("mass")
     )
     m = m.localCheckpoint(eager=False)  # shared by the three tau runs
     outs = []
@@ -1122,7 +1084,7 @@ def cur_mix_temperature_allocation(spark, sf_dir):
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
-# --- Zipf head profile (r13 queue, fourth batch) ---------------------------
+# --- Zipf head profile ---------------------------------------------------
 
 _ZIPF_K = 20
 _ZIPF_BUCKETS = 32
@@ -1184,11 +1146,7 @@ def txt_zipf_profile(spark, sf_dir):
     c = (
         docs.select(
             "lang",
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "), lambda t: t != ""
-                )
-            ).alias("t"),
+            F.explode(F.expr(tokens("text"))).alias("t"),
         )
         .groupBy("lang", "t")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -1228,7 +1186,7 @@ def txt_zipf_profile(spark, sf_dir):
     )
 
 
-# --- Deterministic bootstrap replicates (r13 queue, fourth batch) ----------
+# --- Deterministic bootstrap replicates ----------------------------------
 
 _BOOT_R = 8
 # Poisson(1) CDF thresholds quantized to the [0, 2^60) deviate domain:
@@ -1328,7 +1286,7 @@ def samp_bootstrap_profile(spark, sf_dir):
     )
 
 
-# --- Proportional-vs-Neyman efficiency compare (r13 queue, fifth batch) ---
+# --- Proportional-vs-Neyman efficiency compare ---------------------------
 
 
 @register(
@@ -1423,7 +1381,7 @@ def samp_stratified_neyman_compare(spark, sf_dir):
         # var_num ~ N_h^2 * var(n_chars): carried as exact DECIMAL(38,0)
         # — at large SF it exceeds 2^63, where DuckDB's HUGEINT->BIGINT
         # cast errors loudly but Spark's non-ANSI decimal->long cast
-        # silently NULLs (r12 advisor). The OUTPUT column is its
+        # silently NULLs. The OUTPUT column is its
         # correctly-rounded double (identical in both engines for the
         # same exact integer); the exact value exists only on this
         # internal frame.
@@ -1475,7 +1433,7 @@ def samp_stratified_neyman_compare(spark, sf_dir):
     )
 
 
-# --- N-gram novelty curve (r13 queue, fifth batch) -------------------------
+# --- N-gram novelty curve ------------------------------------------------
 
 
 def _novelty_oracle() -> str:
@@ -1568,7 +1526,7 @@ def txt_ngram_novelty_curve(spark, sf_dir):
     )
 
 
-# --- Capture-recapture coverage estimate (r13 queue, sixth batch) ----------
+# --- Capture-recapture coverage estimate ---------------------------------
 
 _CAP_RATE = int(0.3 * _PPS_SCALE)  # each capture samples 30%
 
@@ -1649,7 +1607,7 @@ def samp_capture_recapture(spark, sf_dir):
     )
 
 
-# --- Term burstiness profile (r13 queue) -----------------------------------
+# --- Term burstiness profile ---------------------------------------------
 
 _BURST_K = 20
 _BURST_MIN_DF = 5
@@ -1717,11 +1675,7 @@ def txt_burstiness_profile(spark, sf_dir):
         docs.select(
             "lang",
             "doc_id",
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), " "), lambda t: t != ""
-                )
-            ).alias("t"),
+            F.explode(F.expr(tokens("text"))).alias("t"),
         )
         .groupBy("lang", "doc_id", "t")
         .agg(F.count("*").alias("tf"))
@@ -1765,7 +1719,7 @@ def txt_burstiness_profile(spark, sf_dir):
     )
 
 
-# --- Fixed-size SRSWOR profile (r13 queue) ---------------------------------
+# --- Fixed-size SRSWOR profile -------------------------------------------
 
 _SRS_BUDGET = 5_000
 _SRS_SALT = "srswor"

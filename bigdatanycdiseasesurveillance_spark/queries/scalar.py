@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text_funcs import fingerprint
+from ..operators.aggregations import exact_sum
 from ..registry import register
 from ..tables import table
 
@@ -168,14 +169,14 @@ def sql_dashboard_severity(spark, sf_dir):
 
     table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(
-        """
+        f"""
         WITH mx AS (SELECT MAX(ts) AS max_ts FROM events)
         SELECT event_type,
                CASE WHEN event_type IN ('error')             THEN 'severe'
                     WHEN event_type IN ('purchase','signup') THEN 'moderate'
                     ELSE 'mild' END AS severity,
                CAST(COUNT(*) AS BIGINT) AS cnt,
-               CAST(ROUND(CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DOUBLE)
+               CAST(ROUND(CAST({exact_sum("value")} AS DOUBLE)
                           / COUNT(*), 2) AS DOUBLE) AS avg_value
         FROM events CROSS JOIN mx
         WHERE ts >= mx.max_ts - INTERVAL 72 HOURS

@@ -11,6 +11,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents
 from ..functions.sql_text import slit, str_array
 from ..registry import register
 from ..sources import sinks as SK
@@ -46,9 +47,7 @@ def stream_static_enrichment(spark, sf_dir):
         src.join(F.broadcast(c), src.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-            .cast("long")
-            .alias("revenue_cents"),
+            F.expr(f"sum({cents('o_totalprice')})").cast("long").alias("revenue_cents"),
             F.count("*").cast("long").alias("n_orders"),
         )
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.time_funcs import epoch_sec
+from ..operators.aggregations import cents
 from ..registry import register
 from ..sources.sinks import scratch_dir
 from ..streaming.pipelines import _run_to_memory, stream_table
@@ -293,19 +294,19 @@ def stream_user_totals(spark, sf_dir):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     src = stream_table(spark, sf_dir, "events").select(
-        "user_id", F.round(F.col("value") * 100, 0).cast("long").alias("cents")
+        "user_id", F.expr(cents("value")).alias("cents")
     )
 
     def fn(key, pdf_iter, state):
         import pandas as _pd
 
-        n, cents = state.get if state.exists else (0, 0)
+        n, total = state.get if state.exists else (0, 0)
         for pdf in pdf_iter:
             n += len(pdf)
-            cents += int(pdf["cents"].sum())
-        state.update((n, cents))
+            total += int(pdf["cents"].sum())
+        state.update((n, total))
         yield _pd.DataFrame(
-            [{"user_id": key[0], "n_events": n, "sum_cents": cents}]
+            [{"user_id": key[0], "n_events": n, "sum_cents": total}]
         )
 
     totals = src.groupBy("user_id").applyInPandasWithState(

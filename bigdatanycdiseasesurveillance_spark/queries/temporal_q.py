@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.aggregations import cents, exact_sum
 from ..registry import register
 from ..tables import table
 
@@ -122,7 +123,7 @@ def join_interval_binned(spark, sf_dir):
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.round(F.sum(F.col("value").cast("decimal(14,2)")), 2)
+            F.round(F.expr(exact_sum("value")), 2)
             .cast("double")
             .alias("sum_value"),
         )
@@ -289,8 +290,7 @@ def win_gap_fill_spine(spark, sf_dir):
         # in BIGINT arithmetic and only the final /10000 is float
         (
             F.expr(
-                "(sum(cast(round(value * 100, 0) as bigint)) * 200"
-                " + count(*)) div (2 * count(*))"
+                f"(sum({cents('value')}) * 200 + count(*)) div (2 * count(*))"
             ).cast("double")
             / 10000.0  # DataFrame-API double literal: in expr text,
             # 10000.0 parses as DECIMAL and poisons the output type
@@ -798,7 +798,7 @@ def seq_session_handoff_matrix(spark, sf_dir):
     )
 
 
-# --- Within-session dwell-time quantiles (r13 queue) -----------------------
+# --- Within-session dwell-time quantiles -----------------------------------
 
 
 @register(

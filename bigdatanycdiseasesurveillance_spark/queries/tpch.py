@@ -10,11 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.aggregations import cents
 from ..registry import register
 from ..tables import table
 
 
-# Exact-money device (r7 sf1-audit finding): SUM over DOUBLE money is
+# Exact-money device (an sf1 audit's finding): SUM over DOUBLE money is
 # summation-order-dependent, and Spark's order varies with partition
 # scheduling — at sf1 a revenue landing on a half-cent boundary rounds
 # differently RUN TO RUN (tpch_q3 flipped a cent between the audit run
@@ -115,7 +116,7 @@ def tpch_q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape: selective filters pushed below a 3-way join, then
     top-k (TakeOrderedAndProject — no global sort materialization).
     customer (filtered) broadcasts; orders⋈lineitem is the only shuffle.
-    Revenue accumulates in DECIMAL — the r7 sf1 audit caught this exact
+    Revenue accumulates in DECIMAL — an sf1 audit caught this exact
     query flipping a half-cent-boundary cent between runs on the
     double-sum formulation (see _MONEY)."""
     c = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
@@ -743,17 +744,17 @@ def tpch_q22_dormant_balance(spark, sf_dir):
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    cents = F.round(F.col("c_acctbal") * 100, 0).cast("long")
+    acct = cents("c_acctbal")
     pos = (
         c.filter(F.col("c_acctbal") > 0)
         .agg(
-            F.sum(cents).cast("long").alias("sum_cents"),
+            F.expr(f"sum({acct})").cast("long").alias("sum_cents"),
             F.count("*").cast("long").alias("n_pos"),
         )
     )
     return (
         c.crossJoin(F.broadcast(pos))
-        .filter(cents * F.col("n_pos") > F.col("sum_cents"))
+        .filter(F.expr(f"{acct} * n_pos > sum_cents"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy(F.substring("c_name", 17, 2).alias("cntrycode"))
         .agg(
@@ -811,8 +812,7 @@ def tpch_q2_min_cost_supplier(spark, sf_dir):
         "l_partkey",
         "l_suppkey",
         F.expr(
-            "(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) * 100)"
-            " DIV CAST(l_quantity AS BIGINT)"
+            f"({cents('l_extendedprice')} * 100) DIV CAST(l_quantity AS BIGINT)"
         ).alias("unit_e4"),
     )
     w = Window.partitionBy("l_partkey")
@@ -827,11 +827,10 @@ def tpch_q2_min_cost_supplier(spark, sf_dir):
     )
 
 
-def _cents(col):
-    """Exact integer cents from a 2-decimal money double — every
-    gating comparison in q8/q9/q11/q15 rides on BIGINT arithmetic, so
-    oracle parity never depends on float summation order."""
-    return F.round(col * 100, 0).cast("long")
+# Line revenue net of discount in integer cents x percent: every gating
+# comparison in q8/q9/q11/q15 rides on BIGINT arithmetic, so oracle
+# parity never depends on float summation order.
+_VOL_CENTS = f"{cents('l_extendedprice')} * (100 - {cents('l_discount')})"
 
 
 @register(
@@ -887,7 +886,7 @@ def tpch_q8_market_share(spark, sf_dir):
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
-    vol = (_cents(F.col("l_extendedprice")) * (100 - _cents(F.col("l_discount")))).alias("vol")
+    vol = F.expr(_VOL_CENTS).alias("vol")
     base = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -947,9 +946,8 @@ def tpch_q9_product_profit(spark, sf_dir):
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     o = table(spark, sf_dir, "orders")
-    amount = (
-        _cents(F.col("l_extendedprice")) * (100 - _cents(F.col("l_discount")))
-        - 10 * F.col("l_quantity").cast("long") * _cents(F.col("p_retailprice"))
+    amount = F.expr(
+        f"{_VOL_CENTS} - 10 * CAST(l_quantity AS BIGINT) * {cents('p_retailprice')}"
     ).alias("amount")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -992,7 +990,7 @@ def tpch_q11_important_stock(spark, sf_dir):
     boundary part can't flip between engines."""
     li = table(spark, sf_dir, "lineitem")
     val = li.groupBy(F.col("l_partkey").alias("p_partkey")).agg(
-        F.sum(_cents(F.col("l_extendedprice"))).cast("long").alias("v")
+        F.expr(f"sum({cents('l_extendedprice')})").cast("long").alias("v")
     )
     tot = val.agg(F.sum("v").cast("long").alias("t"))
     return (
@@ -1037,11 +1035,7 @@ def tpch_q15_top_supplier(spark, sf_dir):
     )
     s = table(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(
-            _cents(F.col("l_extendedprice")) * (100 - _cents(F.col("l_discount")))
-        )
-        .cast("long")
-        .alias("r")
+        F.expr(f"sum({_VOL_CENTS})").cast("long").alias("r")
     )
     m = rev.agg(F.max("r").alias("mr"))
     return (

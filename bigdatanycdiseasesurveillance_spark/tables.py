@@ -38,8 +38,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Session-scoped parquet SCHEMA memo (metadata only, never data): every
 # bare spark.read.parquet() runs a footer-inference job on the driver
 # (~30-70 ms + a scheduler round trip), and the bench pays it once per
-# table() call — ~50+ times per run (r13 profiling: the 'parquet at
-# NativeMethodAccessorImpl' jobs in every query). Passing the schema
+# table() call — ~50+ times per run (profiling shows a 'parquet at
+# NativeMethodAccessorImpl' job in every query). Passing the schema
 # explicitly skips inference while keeping pushdown/pruning identical.
 # Keyed by applicationId so a new SparkContext (tests churn sessions)
 # never sees a stale entry; the same device as Spark's own
@@ -47,10 +47,19 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _SCHEMA_MEMO: dict = {}
 
 
+def live_memo(memo: dict, app_id: str) -> dict:
+    """`memo`, keyed by (applicationId, ...) tuples, with the entries of
+    every other SparkContext dropped: a stopped context's schemas and
+    frames are never read again, so keeping them only holds memory."""
+    for key in [k for k in memo if k[0] != app_id]:
+        del memo[key]
+    return memo
+
+
 def raw_parquet_schema(spark: SparkSession, path: str):
-    # (mtime_ns, size) in the key (r13 advisor): a fixture regenerated
-    # at the same path mid-session re-infers instead of silently reading
-    # with a stale schema; os.stat is ~1000x cheaper than inference. A
+    # (mtime_ns, size) in the key: a fixture regenerated at the same
+    # path mid-session re-infers instead of silently reading with a
+    # stale schema; os.stat is ~1000x cheaper than inference. A
     # directory path (the 100 TB layout) stats the dir — partition
     # rewrites bump the dir mtime on file add/remove, and a same-name
     # in-place file swap is not a pattern the loader contract supports.
@@ -59,8 +68,9 @@ def raw_parquet_schema(spark: SparkSession, path: str):
         stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         stamp = None  # let spark.read.parquet raise its own error
-    key = (spark.sparkContext.applicationId, path, stamp)
-    s = _SCHEMA_MEMO.get(key)
+    app = spark.sparkContext.applicationId
+    key = (app, path, stamp)
+    s = live_memo(_SCHEMA_MEMO, app).get(key)
     if s is None:
         s = spark.read.parquet(path).schema
         _SCHEMA_MEMO[key] = s
@@ -81,10 +91,10 @@ def normalize_timestamps(df: DataFrame) -> DataFrame:
     to plain TimestampType (the only type ``withWatermark`` accepts):
 
     - INT64 TIMESTAMP(NANOS) parquet arrives as LongType nanos under
-      ``nanosAsLong`` (round-1 testdata); convert via integer division
+      ``nanosAsLong`` (the older test data); convert via integer division
       (DIV — double division would lose precision on 1e18-scale epochs);
     - ``timestamp[us]`` with isAdjustedToUTC=false arrives as
-      TIMESTAMP_NTZ (round-2 testdata); cast to TIMESTAMP, which under
+      TIMESTAMP_NTZ (the newer test data); cast to TIMESTAMP, which under
       the pinned UTC session timezone is a value-preserving
       reinterpretation (wall clock == instant), keeping hash parity with
       the DuckDB oracle's naive read.

@@ -6,6 +6,7 @@ and checks the invariant over all rows — one Spark job per example."""
 from __future__ import annotations
 
 import math
+import re
 
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -13,7 +14,11 @@ from pyspark.sql import functions as F
 from bigdatanycdiseasesurveillance_spark.functions.text_funcs import (
     distinct_tokens,
     fingerprint,
+    normalized,
+    sentences,
+    tokens,
     word_jaccard,
+    words,
 )
 from bigdatanycdiseasesurveillance_spark.functions.vectors import dot, unit
 
@@ -65,20 +70,55 @@ ASCII_TEXT = st.text(
 )
 
 
+# fixed extra inputs for the text helpers: empty, whitespace-only,
+# punctuation-only, mixed case with a sentence break, and NULL
+EDGE_TEXTS = ["", "   ", "!!,. .", "MiXeD  CaSe words. Next one", None]
+
+
+def _closed_forms(s: str) -> dict:
+    """What each text_funcs helper returns for `s`, in plain Python."""
+    sents = re.split(r"\.\s+", re.sub(r"((?:\S+ ){9}\S+) ", r"\1. ", s))
+    return {
+        "words": [w for w in s.split(" ") if w],
+        "tokens": [w for w in s.lower().split(" ") if w],
+        "sentences": sents,
+        "normalized": re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", s.lower()).strip(" ")),
+    }
+
+
 @settings(**_SETTINGS)
 @given(st.lists(ASCII_TEXT, min_size=1, max_size=20))
 def test_fingerprint_normalization_invariance(spark, texts):
     """Fingerprint ignores ASCII case and whitespace runs — the
     exact-dedup equivalence classes the reference's SHA tier implies.
     (ASCII only: Unicode case mappings like 'ŉ'->'ʼN' are not
-    length-preserving and are out of scope for the normalizer.)"""
-    rows = [(t, t.upper(), " ".join(t.split()) + " ") for t in texts]
+    length-preserving and are out of scope for the normalizer.)
+    The text helpers under it (words, tokens, sentences, normalized)
+    equal their closed forms in Python, and map NULL to NULL."""
+    rows = [
+        (
+            t,
+            None if t is None else t.upper(),
+            None if t is None else " ".join(t.split()) + " ",
+        )
+        for t in texts + EDGE_TEXTS
+    ]
     df = spark.createDataFrame(rows, "t string, up string, ws string")
     out = df.select(
+        "t",
         (F.expr(fingerprint("t")) == F.expr(fingerprint("up"))).alias("case_inv"),
         (F.expr(fingerprint("t")) == F.expr(fingerprint("ws"))).alias("ws_inv"),
+        F.expr(words("t")).alias("words"),
+        F.expr(tokens("t")).alias("tokens"),
+        F.expr(sentences("t")).alias("sentences"),
+        F.expr(normalized("t")).alias("normalized"),
     ).collect()
-    assert all(r["case_inv"] and r["ws_inv"] for r in out)
+    for r in out:
+        if r["t"] is None:
+            assert all(v is None for v in r), r
+            continue
+        assert r["case_inv"] and r["ws_inv"]
+        assert {k: r[k] for k in _closed_forms(r["t"])} == _closed_forms(r["t"]), r
 
 
 @settings(**_SETTINGS)

@@ -218,3 +218,24 @@ def test_schema_memo_keyed_per_context_and_pushdown_intact(spark, sf_dir):
         )
     )
     assert "PushedFilters" in plan and "event_type" in plan
+
+
+def test_memos_keep_only_the_live_context(spark, sf_dir):
+    """The schema memo and the IVF index memo drop the entries of every
+    other SparkContext, on a memo hit as well as on a miss."""
+    from bigdatanycdiseasesurveillance_spark.queries import similarity_q
+    from bigdatanycdiseasesurveillance_spark.tables import _SCHEMA_MEMO, table
+
+    app = spark.sparkContext.applicationId
+    for _ in range(2):  # a miss (maybe), then a hit
+        stale = ("local-stopped-context", f"{sf_dir}/events.parquet", None)
+        _SCHEMA_MEMO[stale] = object()
+        table(spark, sf_dir, "events")
+        assert stale not in _SCHEMA_MEMO
+        assert {k[0] for k in _SCHEMA_MEMO} == {app}
+
+        stale = ("local-stopped-context", sf_dir)
+        similarity_q._IVF_INDEX[stale] = object()
+        similarity_q._ivf_index(spark, sf_dir)
+        assert stale not in similarity_q._IVF_INDEX
+        assert {k[0] for k in similarity_q._IVF_INDEX} == {app}
