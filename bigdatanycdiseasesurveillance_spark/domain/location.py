@@ -91,9 +91,12 @@ def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
     4. text alias scan (J6) — first alias contained in lowercased text.
 
     Adds: neighborhood, borough, location_source. The signal columns are
-    subreddit, latitude, longitude, zip and text; sources that lack one
-    of them (e.g. reddit posts have no zip) contribute a
-    null signal for it — same as the reference's absent-field handling.
+    subreddit, latitude + longitude, zip and text; a lookup whose signal
+    the records lack (e.g. reddit posts have no zip) is not joined, and
+    its candidates read NULL — same as the reference's absent-field
+    handling. Leaving the join out matters on a stream: there Catalyst
+    keeps a join on a NULL key, as a nested-loop join against an empty
+    relation.
 
     Construction note: the cascade is assembled as ONE spark.sql
     statement over `records`, passed as spark.sql's DataFrame argument,
@@ -106,12 +109,7 @@ def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
     fact-side exchange — pinned in tests/test_plans.py).
     """
     cols = records.columns
-
-    def _sig(name: str, typ: str = "STRING") -> str:
-        return f"r.{ident(name)}" if name in cols else f"CAST(NULL AS {typ})"
-
-    sub_c, zip_c, text_c = _sig("subreddit"), _sig("zip"), _sig("text")
-    lat_c, lon_c = _sig("latitude", "DOUBLE"), _sig("longitude", "DOUBLE")
+    text_c = "r.`text`" if "text" in cols else "CAST(NULL AS STRING)"
 
     def _values(rows, names) -> str:
         def lit(v):
@@ -133,6 +131,25 @@ def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
     bbox_rows = [(n[0], n[1], n[2], n[3], n[4], n[5]) for n in NEIGHBORHOODS]
     nz_rows = [(z, n[0], n[1]) for n in NEIGHBORHOODS for z in n[6]]
     bz_rows = [(p, b) for b, p in BOROUGH_ZIP_PREFIXES]
+    # each lookup, by alias, with whether the records carry its signal
+    lookups = {
+        "s": ("subreddit" in cols, f"""({_values(sub_rows, ["subreddit", "sub_nbhd", "sub_borough"])}) s
+               ON lower(r.`subreddit`) = s.subreddit"""),
+        "n": ("latitude" in cols and "longitude" in cols, f"""({_values(bbox_rows, ["geo_nbhd", "geo_borough", "lat_min", "lat_max", "lon_min", "lon_max"])}) n
+               ON r.`latitude` >= n.lat_min AND r.`latitude` <= n.lat_max
+              AND r.`longitude` >= n.lon_min AND r.`longitude` <= n.lon_max"""),
+        "z": ("zip" in cols, f"""({_values(nz_rows, ["zip", "zip_nbhd", "zip_borough"])}) z
+               ON r.`zip` = z.zip"""),
+        "p": ("zip" in cols, f"""({_values(bz_rows, ["zip_prefix", "pfx_borough"])}) p
+               ON substring(r.`zip`, 1, 3) = p.zip_prefix"""),
+    }
+    joined = [a for a, (present, _) in lookups.items() if present]
+
+    def cand(alias: str, col: str) -> str:
+        return f"{alias}.{col}" if alias in joined else "NULL"
+
+    hint = ", ".join(f"BROADCAST({a})" for a in joined)
+    joins = "\n".join(f"LEFT JOIN {lookups[a][1]}" for a in joined)
 
     out_cols = ", ".join(f"r.{ident(c)}" for c in cols)
     # the alias when-chain is computed ONCE in the `r` subquery:
@@ -140,16 +157,17 @@ def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
     # generated-code size and was the dominant Janino-compile cost
     return spark.sql(
         f"""
-        SELECT /*+ BROADCAST(s), BROADCAST(n), BROADCAST(z), BROADCAST(p) */
+        SELECT {f"/*+ {hint} */" if hint else ""}
                {out_cols},
-               COALESCE(s.sub_nbhd, n.geo_nbhd, z.zip_nbhd, r.__alias_nbhd)
-                   AS neighborhood,
-               COALESCE(s.sub_borough, n.geo_borough, z.zip_borough,
-                        p.pfx_borough, r.__alias_borough) AS borough,
-               CASE WHEN s.sub_nbhd IS NOT NULL THEN 'subreddit'
-                    WHEN n.geo_nbhd IS NOT NULL THEN 'coordinates'
-                    WHEN z.zip_nbhd IS NOT NULL
-                         OR p.pfx_borough IS NOT NULL THEN 'zip'
+               COALESCE({cand("s", "sub_nbhd")}, {cand("n", "geo_nbhd")},
+                        {cand("z", "zip_nbhd")}, r.__alias_nbhd) AS neighborhood,
+               COALESCE({cand("s", "sub_borough")}, {cand("n", "geo_borough")},
+                        {cand("z", "zip_borough")}, {cand("p", "pfx_borough")},
+                        r.__alias_borough) AS borough,
+               CASE WHEN {cand("s", "sub_nbhd")} IS NOT NULL THEN 'subreddit'
+                    WHEN {cand("n", "geo_nbhd")} IS NOT NULL THEN 'coordinates'
+                    WHEN {cand("z", "zip_nbhd")} IS NOT NULL
+                         OR {cand("p", "pfx_borough")} IS NOT NULL THEN 'zip'
                     WHEN r.__alias_nbhd IS NOT NULL THEN 'text_extraction'
                     END AS location_source
         FROM (
@@ -158,15 +176,7 @@ def enrich_with_location(records: DataFrame, spark: SparkSession) -> DataFrame:
                    {_alias_case(lambda a, n: _NB_BOROUGH[n])} AS __alias_borough
             FROM (SELECT r.*, lower({text_c}) AS __text_lc FROM {{records}} r) r
         ) r
-        LEFT JOIN ({_values(sub_rows, ["subreddit", "sub_nbhd", "sub_borough"])}) s
-               ON lower({sub_c}) = s.subreddit
-        LEFT JOIN ({_values(bbox_rows, ["geo_nbhd", "geo_borough", "lat_min", "lat_max", "lon_min", "lon_max"])}) n
-               ON {lat_c} >= n.lat_min AND {lat_c} <= n.lat_max
-              AND {lon_c} >= n.lon_min AND {lon_c} <= n.lon_max
-        LEFT JOIN ({_values(nz_rows, ["zip", "zip_nbhd", "zip_borough"])}) z
-               ON {zip_c} = z.zip
-        LEFT JOIN ({_values(bz_rows, ["zip_prefix", "pfx_borough"])}) p
-               ON substring({zip_c}, 1, 3) = p.zip_prefix
+        {joins}
         """,
         records=records,
     )

@@ -22,12 +22,11 @@ def coalesce_timestamp(columns: list[str], candidates: list[str]) -> str:
     return f"coalesce({', '.join(cols)})" if cols else "CAST(NULL AS TIMESTAMP)"
 
 
-def synthesize_id(columns: list[str], id_candidates: list[str], content_cols: list[str]) -> str:
-    """First non-null id, else md5 of the concatenated content — the
-    reference's synthetic-id fallback (psql_db_client.py:285-288)."""
+def synthesize_id(columns: list[str], id_candidates: list[str]) -> str:
+    """First non-null id, else md5 of the post text — the reference's
+    synthetic-id fallback (psql_db_client.py:285-288)."""
     cands = [f"CAST({ident(c)} AS STRING)" for c in id_candidates if c in columns]
-    parts = ", ".join(f"CAST({ident(c)} AS STRING)" for c in content_cols)
-    content = f"md5(concat_ws('|', {parts}))"
+    content = f"md5(concat_ws('|', CAST({ident('text')} AS STRING)))"
     return f"coalesce({', '.join(cands + [content])})" if cands else content
 
 
@@ -55,25 +54,22 @@ def classify_source(source_file: str) -> str:
 
 
 def normalize_events(
-    df: DataFrame,
-    ts_candidates: list[str],
-    id_candidates: list[str],
-    content_cols: list[str],
-    text_col: str | None = None,
-    source_file_col: str | None = None,
+    df: DataFrame, ts_candidates: list[str], id_candidates: list[str]
 ) -> DataFrame:
     """Produce the unified (id, timestamp, source, text_content) core of
     the silver schema from any bronze source shape, as one projection
-    (one SQL statement, analysed once)."""
+    (one SQL statement, analysed once). `source` is classified from a
+    `source_path` column and `text_content` copies `text`, each where
+    the bronze shape has that column."""
     columns = df.columns
     cols = {
         "timestamp": coalesce_timestamp(columns, ts_candidates),
-        "id": synthesize_id(columns, id_candidates, content_cols),
+        "id": synthesize_id(columns, id_candidates),
     }
-    if source_file_col and source_file_col in columns:
-        cols["source"] = classify_source(ident(source_file_col))
-    if text_col and text_col in columns:
-        cols["text_content"] = ident(text_col)
+    if "source_path" in columns:
+        cols["source"] = classify_source(ident("source_path"))
+    if "text" in columns:
+        cols["text_content"] = ident("text")
     return df.sparkSession.sql(
         f"SELECT {with_columns(columns, cols)} FROM {{df}}", df=df
     )

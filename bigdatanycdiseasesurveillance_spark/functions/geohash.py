@@ -31,9 +31,9 @@ def _bit(var: str, j: int) -> str:
     return f"(CAST(floor({var} / {1 << j}.0) AS BIGINT) % 2)"
 
 
-def geohash_stages(lat_expr: str, lon_expr: str) -> tuple[str, str, str, str]:
-    """Return (cx_sql, cy_sql, value_sql, char_sql) of a
-    GEOHASH_PRECISION-character geohash.
+def geohash_stages() -> tuple[str, str, str, str]:
+    """Return (cx_sql, cy_sql, value_sql, char_sql) of the
+    GEOHASH_PRECISION-character geohash of columns `lat` and `lon`.
 
     value_sql references columns named gh_cx / gh_cy; char_sql
     references gh_v. Callers chain them as projections (Spark
@@ -44,11 +44,11 @@ def geohash_stages(lat_expr: str, lon_expr: str) -> tuple[str, str, str, str]:
     lon_bits = (total_bits + 1) // 2  # lon first -> gets the extra bit
     lat_bits = total_bits // 2
     cx = (
-        f"LEAST(CAST(floor((({lon_expr}) + 180.0) / 360.0 * {1 << lon_bits}"
+        f"LEAST(CAST(floor(((lon) + 180.0) / 360.0 * {1 << lon_bits}"
         f") AS BIGINT), {(1 << lon_bits) - 1})"
     )
     cy = (
-        f"LEAST(CAST(floor((({lat_expr}) + 90.0) / 180.0 * {1 << lat_bits}"
+        f"LEAST(CAST(floor(((lat) + 90.0) / 180.0 * {1 << lat_bits}"
         f") AS BIGINT), {(1 << lat_bits) - 1})"
     )
     terms = []

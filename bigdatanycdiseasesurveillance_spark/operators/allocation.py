@@ -27,12 +27,11 @@ def largest_remainder_allocation(
     df: DataFrame,
     weight_col: str,
     budget: int,
-    order_col: str,
     out_col: str = "alloc",
 ) -> DataFrame:
     """df + integer `alloc_base` (floor share) and `out_col` (final
     allocation; Σ out_col == budget exactly). `weight_col` must be a
-    non-negative BIGINT with a positive total; `order_col` breaks
+    non-negative BIGINT with a positive total; `source` breaks
     remainder ties deterministically (ascending)."""
     # shared across 3 consumers (total, leftover, rank) — without the
     # checkpoint Catalyst re-plans the upstream aggregate per consumer
@@ -60,7 +59,7 @@ def largest_remainder_allocation(
     extra = b.agg((F.lit(budget) - F.sum("alloc_base")).alias("__extra"))
     ranked = b.crossJoin(F.broadcast(extra)).withColumn(
         "__rk",
-        F.row_number().over(Window.orderBy(F.desc("__rem"), F.asc(order_col))),
+        F.row_number().over(Window.orderBy(F.desc("__rem"), F.asc("source"))),
     )
     return (
         ranked.withColumn(

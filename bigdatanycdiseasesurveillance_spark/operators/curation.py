@@ -29,9 +29,9 @@ from ..functions.text_funcs import tokens
 from .sampling import hash_deviate
 
 
-def token_shingles(text: str, n: int = 5) -> Column:
-    """Array of n-token shingles (space-joined) of the lowercased text
-    that the SQL text `text` (a column name) evaluates to.
+def token_shingles(n: int = 5) -> Column:
+    """Array of n-token shingles (space-joined) of the lowercased
+    `text` column.
 
     The token array is bound to a lambda variable via a one-element
     transform so it materializes once per row; referencing the raw
@@ -49,7 +49,7 @@ def token_shingles(text: str, n: int = 5) -> Column:
         )
         return F.slice(arr, 1, F.greatest(k, F.lit(0)))
 
-    return F.element_at(F.transform(F.array(F.expr(tokens(text))), _shingles), 1)
+    return F.element_at(F.transform(F.array(F.expr(tokens("text"))), _shingles), 1)
 
 
 def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
@@ -65,11 +65,11 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """
     c = corpus.select(
         F.col("doc_id").alias("c_id"),
-        F.explode(F.array_distinct(token_shingles("text", 5))).alias("sh"),
+        F.explode(F.array_distinct(token_shingles(5))).alias("sh"),
     )
     b = benchmark.select(
         F.col("doc_id").alias("b_id"),
-        F.explode(F.array_distinct(token_shingles("text", 5))).alias("sh"),
+        F.explode(F.array_distinct(token_shingles(5))).alias("sh"),
     )
     return (
         c.join(F.broadcast(b), "sh")
@@ -112,7 +112,7 @@ def repetition_signals(df: DataFrame) -> DataFrame:
     already-materialized array — bounded by document length, which a
     curation pipeline bounds upstream anyway.
     """
-    grams = token_shingles("text", 2)
+    grams = token_shingles(2)
 
     def _sig(g: Column) -> Column:
         total = F.size(g)

@@ -50,18 +50,15 @@ def exact_dedup_groups(df: DataFrame) -> DataFrame:
 
 
 def _blocked_pairs(
-    df: DataFrame,
-    id_col: str,
-    block_cols: list[Column],
-    payload: dict[str, Column],
+    df: DataFrame, block_cols: list[Column], payload: dict[str, Column]
 ) -> DataFrame:
-    """Self-join on block keys producing candidate pairs (id_a < id_b).
+    """Self-join on block keys producing candidate doc_id pairs (id_a < id_b).
     The equi-join on block keys is what keeps the pair space linear-ish:
     each block is small, so blocks shuffle independently and no executor
     ever sees the full corpus."""
     from ..tables import parallelize_scan
 
-    sel = [F.col(id_col).alias("id")] + [
+    sel = [F.col("doc_id").alias("id")] + [
         c.alias(f"blk_{i}") for i, c in enumerate(block_cols)
     ] + [v.alias(k) for k, v in payload.items()]
     # payload exprs (token arrays, shingle sets) are the map-side cost of
@@ -80,7 +77,6 @@ def jaccard_pairs(df: DataFrame) -> DataFrame:
     Returns (id_a, id_b, jaccard), jaccard >= JACCARD_DUP_THRESHOLD."""
     pairs = _blocked_pairs(
         df,
-        "doc_id",
         [F.col("source"), F.floor(F.col("n_chars") / F.lit(50))],
         {"tok": F.expr(distinct_tokens("text"))},
     )
@@ -230,9 +226,9 @@ def simhash_chunk_structs() -> list[Column]:
     ]
 
 
-def minhash_signature(tokens_expr: str, n_perm: int = MINHASH_N_PERM) -> str:
-    """MinHash signature as ONE SQL expression string over `tokens_expr`
-    (the SQL text of an array<string>): an array<long> whose slot i is
+def minhash_signature(n_perm: int = MINHASH_N_PERM) -> str:
+    """MinHash signature as ONE SQL expression string over the
+    array<string> column `tok`: an array<long> whose slot i is
     the min over tokens of xxhash64(token, i). The whole signature
     computes inside codegen, no Python, no ML-pipeline intermediate
     DataFrames. Text, not Column objects, for simhash_signature_sql's
@@ -240,7 +236,7 @@ def minhash_signature(tokens_expr: str, n_perm: int = MINHASH_N_PERM) -> str:
     (minhash_lsh_pairs' plan build: 0.48 -> 0.18 s, median of 10 calls
     on a 4-core VM)."""
     return "array(" + ", ".join(
-        f"array_min(transform({tokens_expr}, t -> xxhash64(t, {i})))"
+        f"array_min(transform(tok, t -> xxhash64(t, {i})))"
         for i in range(n_perm)
     ) + ")"
 
@@ -278,7 +274,7 @@ def minhash_lsh_pairs(
     return df.sparkSession.sql(
         f"""
         WITH toks AS (
-            SELECT id, tok, {minhash_signature("tok", n_perm)} AS sig
+            SELECT id, tok, {minhash_signature(n_perm)} AS sig
             FROM (SELECT doc_id AS id, {distinct_tokens("text")} AS tok FROM {{df}})
         ), cand AS (
             SELECT DISTINCT id_a, id_b

@@ -29,19 +29,19 @@ from pyspark.sql import functions as F
 EPOCH_DAY = "2024-01-01"
 
 
-def linear_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-group OLS forecast of a (keys..., day, cnt) daily series for
-    the next 7 days, clipped at 0 (the reference clips predictions at 0:
-    disease_outbreak_forecaster.py:84-86). Returns
-    (keys..., horizon_day, predicted)."""
+def linear_forecast(daily: DataFrame) -> DataFrame:
+    """Per-event_type OLS forecast of a (event_type, day, cnt) daily
+    series for the next 7 days, clipped at 0 (the reference clips
+    predictions at 0: disease_outbreak_forecaster.py:84-86). Returns
+    (event_type, horizon_day, predicted)."""
     x = F.datediff(F.col("day"), F.lit(EPOCH_DAY).cast("date")).cast("double")
-    fit = daily.groupBy(*keys).agg(
+    fit = daily.groupBy("event_type").agg(
         F.regr_slope(F.col("cnt").cast("double"), x).alias("slope"),
         F.regr_intercept(F.col("cnt").cast("double"), x).alias("icpt"),
         F.max(x).alias("mx"),
     )
     horizons = fit.select(
-        *keys,
+        "event_type",
         "slope",
         "icpt",
         "mx",
@@ -55,12 +55,14 @@ def linear_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
         4,
     )
     return horizons.select(
-        *keys, F.col("horizon_day").cast("long").alias("horizon_day"), pred.alias("predicted")
+        "event_type",
+        F.col("horizon_day").cast("long").alias("horizon_day"),
+        pred.alias("predicted"),
     )
 
 
-def seasonal_dow_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
-    """Additive weekly-seasonal 7-day forecast of a (keys..., day, cnt)
+def seasonal_dow_forecast(daily: DataFrame) -> DataFrame:
+    """Additive weekly-seasonal 7-day forecast of a (event_type, day, cnt)
     daily series — Prophet's weekly-seasonality
     niche (disease_outbreak_forecaster.py:56-126's weekly_seasonality)
     in closed form: per-group day-of-week means give the seasonal
@@ -71,38 +73,38 @@ def seasonal_dow_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
     shuffles on the group key (the dow table is groups×7 rows and
     broadcasts). Day-of-week is (days since 1970-01-01) % 7 on both
     engines, so no locale/weekstart ambiguity. Returns
-    (keys..., forecast_day, horizon_day, predicted >= 0)."""
+    (event_type, forecast_day, horizon_day, predicted >= 0)."""
     x = F.datediff(F.col("day"), F.to_date(F.lit("1970-01-01"))).cast("long")
     base = daily.select(
-        *keys,
+        "event_type",
         x.alias("idx"),
         (x % 7).alias("dow"),
         F.col("cnt").cast("double").alias("y"),
     )
-    dowm = base.groupBy(*keys, "dow").agg(F.avg("y").alias("dow_mean"))
-    gm = base.groupBy(*keys).agg(F.avg("y").alias("gmean"))
+    dowm = base.groupBy("event_type", "dow").agg(F.avg("y").alias("dow_mean"))
+    gm = base.groupBy("event_type").agg(F.avg("y").alias("gmean"))
     des = (
-        base.join(dowm, [*keys, "dow"])
-        .join(gm, list(keys))
+        base.join(dowm, ["event_type", "dow"])
+        .join(gm, "event_type")
         .select(
-            *keys,
+            "event_type",
             "idx",
             (F.col("y") - (F.col("dow_mean") - F.col("gmean"))).alias("z"),
         )
     )
-    fit = des.groupBy(*keys).agg(
+    fit = des.groupBy("event_type").agg(
         F.regr_slope(F.col("z"), F.col("idx").cast("double")).alias("slope"),
         F.regr_intercept(F.col("z"), F.col("idx").cast("double")).alias("icpt"),
         F.max("idx").alias("mx"),
     )
     fut = fit.select(
-        *keys,
+        "event_type",
         "slope",
         "icpt",
         F.explode(F.sequence(F.lit(1), F.lit(7))).alias("h"),
         F.col("mx"),
     ).select(
-        *keys,
+        "event_type",
         "slope",
         "icpt",
         F.col("h").cast("long").alias("horizon_day"),
@@ -119,10 +121,10 @@ def seasonal_dow_forecast(daily: DataFrame, keys: list[str]) -> DataFrame:
         4,
     )
     return (
-        fut.join(F.broadcast(dowm), [*keys, "dow"])
-        .join(F.broadcast(gm), list(keys))
+        fut.join(F.broadcast(dowm), ["event_type", "dow"])
+        .join(F.broadcast(gm), "event_type")
         .select(
-            *keys,
+            "event_type",
             F.date_add(F.to_date(F.lit("1970-01-01")), F.col("fidx").cast("int")).alias(
                 "forecast_day"
             ),

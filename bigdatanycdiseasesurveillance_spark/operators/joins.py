@@ -24,14 +24,13 @@ from pyspark.sql import functions as F
 def as_of_join(
     left: DataFrame,
     right: DataFrame,
-    key: str,
     left_ts: str,
     right_ts: str,
     payload_cols: Sequence[str],
     tiebreak: str | None = None,
 ) -> DataFrame:
     """As-of join: for each left row, the latest right row of the same
-    key with right_ts <= left_ts (SURVEY §2.3 lists as-of as a gap the
+    user_id with right_ts <= left_ts (SURVEY §2.3 lists as-of as a gap the
     engine fills; DuckDB `ASOF JOIN` is the oracle).
 
     Implementation: tag and union both sides, then `last(payload,
@@ -42,13 +41,13 @@ def as_of_join(
     """
     lcols = left.columns
     l2 = left.select(
-        F.col(key).alias("__key"),
+        F.col("user_id").alias("__key"),
         F.col(left_ts).alias("__ts"),
         F.lit(0).alias("__side"),
         F.struct(*[F.col(c) for c in lcols]).alias("__left"),
     )
     r2 = right.select(
-        F.col(key).alias("__key"),
+        F.col("user_id").alias("__key"),
         F.col(right_ts).alias("__ts"),
         F.lit(1).alias("__side"),
         F.struct(*[F.col(c) for c in payload_cols]).alias("__payload"),

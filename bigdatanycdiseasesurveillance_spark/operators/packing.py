@@ -54,9 +54,7 @@ def pack_concat_chunks(df: DataFrame) -> DataFrame:
         )
     bucket = F.expr("CAST(doc_id AS BIGINT) div 4096")
     wd = df.select("doc_id", F.col("n_tokens").cast("long").alias("n_tokens"))
-    summed = bucketed_running_sum(
-        wd, bucket, [F.asc("doc_id")], "n_tokens", out_col="end_tok"
-    )
+    summed = bucketed_running_sum(wd, bucket, [F.asc("doc_id")], out_col="end_tok")
     budget = PACK_BUDGET
     return summed.select(
         "doc_id",

@@ -122,21 +122,20 @@ def bucketed_running_sum(
     df: DataFrame,
     bucket: Column,
     order_cols: list,
-    sum_col: str,
     out_col: str = "running_sum",
 ) -> DataFrame:
-    """df + `out_col` = SUM(sum_col) OVER (ORDER BY *order_cols ROWS
+    """df + `out_col` = SUM(n_tokens) OVER (ORDER BY *order_cols ROWS
     UNBOUNDED PRECEDING) — inclusive running total, no single-partition
     window. Same bucket-key contract as bucketed_global_rank."""
     wd = df.withColumn(_B, bucket)
-    dim, _ = _offset_dim(wd, F.sum(sum_col))
+    dim, _ = _offset_dim(wd, F.sum("n_tokens"))
     wlocal = (
         Window.partitionBy(_B)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        wd.withColumn(_LOCAL, F.sum(sum_col).over(wlocal))
+        wd.withColumn(_LOCAL, F.sum("n_tokens").over(wlocal))
         .join(dim, _B)
         .withColumn(out_col, (F.col(_OFF) + F.col(_LOCAL)).cast("long"))
         .drop(_B, _LOCAL, _OFF)
@@ -191,18 +190,18 @@ def grouped_histogram_quantiles(
     return cum.groupBy(*group_cols).agg(*aggs)
 
 
-def ntile_from_rank(rank_sql: str, n_sql: str, k: int) -> Column:
-    """SQL NTILE(k) recomputed from a global rank in TRUE integer
-    arithmetic (`div`, never float division — IEEE rounding can flip a
-    bucket boundary past 2^53): the first n%k tiles get n div k + 1
-    rows, the rest n div k — exactly Spark's and DuckDB's NTILE
-    contract. With rn 1-based and q = n div k, r = n mod k: rows at
-    rn <= (q+1)*r sit in the (q+1)-sized tiles; later rows in q-sized
-    tiles (the q=0 degenerate case never reaches the ELSE branch
-    because the cut then equals n). Takes SQL fragments so the whole
-    expression stays in integer `div`."""
-    q = f"(({n_sql}) div {k})"
-    r = f"(({n_sql}) % {k})"
+def ntile_from_rank(rank_sql: str) -> Column:
+    """SQL NTILE(4) over `n_users` rows recomputed from a global rank in
+    TRUE integer arithmetic (`div`, never float division — IEEE rounding
+    can flip a bucket boundary past 2^53): with n = n_users and k = 4,
+    the first n%k tiles get n div k + 1 rows, the rest n div k — exactly
+    Spark's and DuckDB's NTILE contract. With rn 1-based and
+    q = n div k, r = n mod k: rows at rn <= (q+1)*r sit in the
+    (q+1)-sized tiles; later rows in q-sized tiles (the q=0 degenerate
+    case never reaches the ELSE branch because the cut then equals n).
+    Takes SQL text so the whole expression stays in integer `div`."""
+    q = "((n_users) div 4)"
+    r = "((n_users) % 4)"
     cut = f"(({q} + 1) * {r})"
     return F.expr(
         f"CAST(CASE WHEN ({rank_sql}) <= {cut}"

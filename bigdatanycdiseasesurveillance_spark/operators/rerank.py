@@ -21,22 +21,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 CE_SCALE = float(1 << 60)
+# the one query the rerank stage scores (ir_q's BM25 query terms, joined)
+RERANK_QUERY = "data stream join"
 
 
-def ce_sql(query: str, id_expr: str = "doc_id") -> str:
+def ce_sql(id_expr: str = "doc_id") -> str:
     """DuckDB twin of the md5 pseudo-cross-encoder below."""
     return (
-        f"CAST(('0x' || substr(md5('ce:{query}:' || CAST({id_expr} AS VARCHAR)),"
+        f"CAST(('0x' || substr(md5('ce:{RERANK_QUERY}:' || CAST({id_expr} AS VARCHAR)),"
         f" 1, 15)) AS BIGINT) / {CE_SCALE!r}"
     )
 
 
-def cross_encoder_scores(candidates: DataFrame, query_text: str) -> DataFrame:
-    """Append a pairwise (query, doc) relevance score `ce_score` to a
-    K-row candidate frame keyed by doc_id. Real path: a sentence-transformers CrossEncoder
-    held as a per-worker singleton; hermetic path: md5('ce:' || query
-    || ':' || doc_id) scaled to [0, 1) — deterministic and
-    SQL-replayable."""
+def cross_encoder_scores(candidates: DataFrame) -> DataFrame:
+    """Append a pairwise (RERANK_QUERY, doc) relevance score `ce_score`
+    to a K-row candidate frame keyed by doc_id. Real path: a
+    sentence-transformers CrossEncoder held as a per-worker singleton;
+    hermetic path: md5('ce:' || query || ':' || doc_id) scaled to
+    [0, 1) — deterministic and SQL-replayable."""
+    query_text = RERANK_QUERY
     cols = candidates.columns
     schema = candidates.schema.simpleString()[7:-1] + ",ce_score double"
 

@@ -23,6 +23,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SCALE = 1 << 60  # 15 hex digits of md5 -> [0, 2^60)
+# per-source keep rates of sample_stratified and token budgets of
+# take_token_budget; sources not listed take the call's default
+STRATUM_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25}
+TOKEN_BUDGETS = {"src0": 100_000, "src1": 600}
 
 
 def md5_long(expr: Column) -> Column:
@@ -46,35 +50,30 @@ def deviate_sql(key_expr: str, salt: str) -> str:
     )
 
 
-def sample_stratified(
-    df: DataFrame,
-    key_col: str,
-    stratum_col: str,
-    rates: dict[str, float],
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Per-stratum rates (`sampleBy` analog, but layout-independent):
-    e.g. keep 100% of a rare source and 5% of a dominant one — the
-    canonical rebalancing step before training-data mixing. Each row is
-    kept deterministically by key, with no shuffle: the predicate
-    evaluates inside the scan stage and at 100 TB composes with
-    partition pruning (filter first, then sample)."""
-    dev = hash_deviate(F.col(key_col), "strat")
+def sample_stratified(df: DataFrame, default_rate: float = 0.0) -> DataFrame:
+    """Per-source rates (`sampleBy` analog, but layout-independent):
+    keep STRATUM_RATES[source] of each listed source and `default_rate`
+    of the rest — the canonical rebalancing step before training-data
+    mixing. Each row is kept deterministically by doc_id, with no
+    shuffle: the predicate evaluates inside the scan stage and at
+    100 TB composes with partition pruning (filter first, then
+    sample)."""
+    dev = hash_deviate(F.col("doc_id"), "strat")
     threshold = F.lit(int(default_rate * _SCALE))
-    for stratum, rate in rates.items():
+    for stratum, rate in STRATUM_RATES.items():
         threshold = (
-            F.when(F.col(stratum_col) == stratum, F.lit(int(rate * _SCALE)))
+            F.when(F.col("source") == stratum, F.lit(int(rate * _SCALE)))
             .otherwise(threshold)
         )
     return df.filter(dev < threshold)
 
 
-def train_test_split(df: DataFrame, key_col: str, test_rate: float = 0.1) -> DataFrame:
-    """Tag every row 'train' or 'test' — disjoint and exhaustive by
-    construction (one deviate, one threshold), unlike two independent
-    sample() calls which can overlap or leak. Downstream filters on the
-    tag; the tag costs one md5 per row and no shuffle."""
-    dev = hash_deviate(F.col(key_col), "split")
+def train_test_split(df: DataFrame, test_rate: float = 0.1) -> DataFrame:
+    """Tag every row 'train' or 'test' by doc_id — disjoint and
+    exhaustive by construction (one deviate, one threshold), unlike two
+    independent sample() calls which can overlap or leak. Downstream
+    filters on the tag; the tag costs one md5 per row and no shuffle."""
+    dev = hash_deviate(F.col("doc_id"), "split")
     return df.withColumn(
         "split",
         F.when(dev < F.lit(int(test_rate * _SCALE)), F.lit("test")).otherwise(
@@ -83,18 +82,12 @@ def train_test_split(df: DataFrame, key_col: str, test_rate: float = 0.1) -> Dat
     )
 
 
-def take_token_budget(
-    df: DataFrame,
-    key_col: str,
-    stratum_col: str,
-    tokens_col: str,
-    budgets: dict[str, int],
-    default_budget: int = 0,
-) -> DataFrame:
-    """Data mixing by token budget: per stratum, keep documents (in
-    deterministic deviate order) while the RUNNING token total before
-    the document is still under the stratum's budget — so the selection
-    fills each budget with at most one document of overshoot.
+def take_token_budget(df: DataFrame, default_budget: int = 0) -> DataFrame:
+    """Data mixing by token budget: per source, keep documents (in
+    deterministic doc_id-deviate order) while the RUNNING `ntok` total
+    before the document is still under the source's budget
+    (TOKEN_BUDGETS, else `default_budget`) — so the selection fills
+    each budget with at most one document of overshoot.
 
     This is the mixture-weights step of a pretraining data pipeline
     ("2e9 tokens of src0, 5e8 of src1, ..."): membership is a pure
@@ -104,16 +97,16 @@ def take_token_budget(
     """
     from pyspark.sql.window import Window
 
-    dev = hash_deviate(F.col(key_col), "mix")
+    dev = hash_deviate(F.col("doc_id"), "mix")
     w = (
-        Window.partitionBy(stratum_col)
-        .orderBy(dev, F.col(key_col))
+        Window.partitionBy("source")
+        .orderBy(dev, F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     budget = F.lit(default_budget)
-    for stratum, b in budgets.items():
-        budget = F.when(F.col(stratum_col) == stratum, F.lit(b)).otherwise(budget)
-    cum_before = F.sum(F.col(tokens_col)).over(w) - F.col(tokens_col)
+    for stratum, b in TOKEN_BUDGETS.items():
+        budget = F.when(F.col("source") == stratum, F.lit(b)).otherwise(budget)
+    cum_before = F.sum(F.col("ntok")).over(w) - F.col("ntok")
     return df.withColumn("cum_tokens_before", cum_before).withColumn(
         "keep", F.col("cum_tokens_before") < budget
     )

@@ -140,12 +140,12 @@ def prefix_filter_jaccard_pairs(df: DataFrame) -> DataFrame:
 DIGEST_MOD = 1_000_003
 
 
-def weighted_digest(w: str, *keys: str):
-    """The order-insensitive pair digest: sum over rows of
+def weighted_digest(*keys: str):
+    """The order-insensitive pair digest: sum over rows of column
     w * (md5 of the ':'-joined keys mod DIGEST_MOD), mod DIGEST_MOD. An
     aggregate Column; it is null over no rows, so callers coalesce."""
     hv = md5_long(F.concat_ws(":", *[F.col(k).cast("string") for k in keys]))
-    return F.sum((F.col(w) * (hv % DIGEST_MOD)) % DIGEST_MOD) % DIGEST_MOD
+    return F.sum((F.col("w") * (hv % DIGEST_MOD)) % DIGEST_MOD) % DIGEST_MOD
 
 
 def mask_relation(df: DataFrame, extra_cols: tuple = (), keep_empty: bool = False):
@@ -243,7 +243,7 @@ def _pair_stats_row(g: DataFrame, cand: DataFrame, threshold: float = 0.7) -> Da
         F.coalesce(F.sum(F.col("w") * F.col("je4")), F.lit(0))
         .cast("long")
         .alias("jaccard_sum_e4"),
-        F.coalesce(weighted_digest("w", "mask_a", "mask_b", "je4"), F.lit(0))
+        F.coalesce(weighted_digest("mask_a", "mask_b", "je4"), F.lit(0))
         .cast("long")
         .alias("pair_digest"),
     )

@@ -220,14 +220,29 @@ def ivf_search(
     return brute_force_topk(emb, query_vec, IVF_TOPK, where=cond)
 
 
-def rp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH signature: bit b = sign of the dot product
-    with seeded hyperplane b, packed into an integer bucket key. Cosine-
-    similar vectors agree on most signs, so near-dups collide; the
-    signature is a handful of dot products per row, all in codegen."""
-    v = as_double(vec_col)
+# rp_signature's 8 seeded random hyperplanes (numpy default_rng(42),
+# 6-decimal literals so Spark and DuckDB hash identical planes)
+RP_PLANES = [
+    [0.304717, -1.039984, 0.750451, 0.940565, -1.951035, -1.302180, 0.127840, -0.316243, -0.016801, -0.853044, 0.879398, 0.777792, 0.066031, 1.127241, 0.467509, -0.859292, 0.368751, -0.958883, 0.878450, -0.049926, -0.184862, -0.680930, 1.222541, -0.154529, -0.428328, -0.352134, 0.532309, 0.365444, 0.412733, 0.430821, 2.141648, -0.406415, -0.512243, -0.813773, 0.615979, 1.128972, -0.113947, -0.840156, -0.824481, 0.650593, 0.743254, 0.543154, -0.665510, 0.232161, 0.116686, 0.218689, 0.871429, 0.223596, 0.678914, 0.067579, 0.289119, 0.631288, -1.457156, -0.319671, -0.470373, -0.638878, -0.275142, 1.494941, -0.865831, 0.968278, -1.682870, -0.334885, 0.162753, 0.586222],
+    [0.711227, 0.793347, -0.348725, -0.462352, 0.857976, -0.191304, -1.275686, -1.133287, -0.919452, 0.497161, 0.142426, 0.690485, -0.427253, 0.158540, 0.625590, -0.309347, 0.456775, -0.661926, -0.363054, -0.381738, -1.195840, 0.486972, -0.469402, 0.012494, 0.480747, 0.446531, 0.665385, -0.098485, -0.423298, -0.079718, -1.687334, -1.447112, -1.322700, -0.997247, 0.399774, -0.905479, -0.378163, 1.299228, -0.356264, 0.737516, -0.933618, -0.205438, -0.950022, -0.339033, 0.840308, -1.727320, 0.434424, 0.237736, -0.594150, -1.446058, 0.072130, -0.529493, 0.232676, 0.021852, 1.601779, -0.239356, -1.023497, 0.179276, 0.219997, 1.359188, 0.835111, 0.356871, 1.463303, -1.188763],
+    [-0.639752, -0.926576, -0.389810, -1.376686, 0.635151, -0.222223, -1.470806, -1.015579, 0.313514, 0.838127, 1.996731, 2.913862, 0.414409, -0.989538, -2.132046, 0.267711, -0.812941, -0.415357, -0.612097, -0.140791, 1.065980, 0.157049, -0.158635, -1.035654, -1.674683, -0.486308, -0.053783, 1.767930, 0.130275, 0.982740, -0.499296, -1.184944, -0.965117, -0.725226, 2.128470, -0.821387, 0.838489, -0.902927, 0.931573, 0.384951, -0.156638, -0.040763, -0.654788, 0.446072, -0.454983, -1.225606, -1.277938, 0.172588, 1.579091, 0.159992, -0.118638, 0.285826, 1.306002, 0.219383, -0.410927, 1.106289, 0.428756, 1.535756, 0.183234, -1.224469, -1.368159, 1.650928, 1.723666, -0.179519],
+    [-0.383187, 1.461444, -1.107046, -0.894727, 0.643327, -0.394605, -0.005122, -0.163443, 0.337575, 1.407482, 0.090585, 0.643939, -2.050172, -0.048718, -0.843230, -1.218813, -0.878152, -0.334123, 0.915903, -1.326393, 0.030631, -0.484169, -0.327673, 1.002758, 0.538115, 1.337398, -0.154506, -0.695943, -0.223859, 0.242497, 0.176573, -1.084388, 0.090490, 0.228228, 2.517474, 1.876845, -0.853243, -0.287383, -1.463442, -0.590707, 0.315605, 1.205854, -0.729084, -0.654146, -2.147289, -0.162666, -1.062414, -0.529439, -0.876861, -0.094263, -1.757728, -1.467045, 2.129247, -1.287423, -1.096786, 1.836914, 2.905067, -1.171567, -0.368249, 0.341556, 1.728698, -0.986857, -0.245278, 0.777338],
+    [0.434766, -0.376156, -0.133823, -1.374896, -0.238174, -0.266387, 0.232170, -0.555327, 0.471539, 1.012716, 0.155429, 0.351756, 0.053155, 0.000084, -0.721558, 0.316494, -0.097287, 2.093168, 1.573355, 0.385847, -0.763057, -1.112411, 1.191143, 0.262749, 0.480143, -1.744586, 0.927438, 0.454420, -1.110431, -0.471525, 0.263717, 0.052467, -0.292171, -0.103488, -0.251977, 0.152563, 1.471492, -2.566658, -0.236850, 0.176512, 0.295994, -0.371915, -1.756722, 0.327995, 1.727350, -1.533861, 0.863828, -0.328525, -0.061324, -1.052899, -0.334456, 1.300045, 0.582655, 1.732312, 1.177412, 0.439087, 1.743935, 0.438993, 0.827988, -0.296571, 0.066546, -0.697424, 0.989584, -1.178304],
+    [0.782350, -0.190651, 1.171247, 0.750869, 1.820646, 0.730775, -1.572040, -0.066953, -1.172007, -0.518280, 1.511228, 0.637534, -0.698930, -1.013717, 0.032782, -1.216560, -0.671140, 0.312009, 1.155312, 0.608761, -2.291290, 0.304367, 0.072034, 0.413890, 1.616210, -2.063238, -0.591103, 0.590906, -1.581594, 1.475949, 0.368357, 0.846584, -0.570944, 0.813764, 1.068472, 0.232878, 0.234401, 0.270343, -0.863345, -0.147529, -0.152523, 0.383394, 0.999824, -1.058536, -0.125009, 1.481456, -0.743588, -0.822250, 0.202306, 0.844385, 0.011426, 1.328961, 0.856794, 0.841820, 0.554117, 2.327653, -0.205162, -2.003522, 1.604254, -0.457699, 0.107880, 1.309551, -1.602260, -1.251647],
+    [-1.601278, -0.794136, 0.439637, 0.524188, 0.276274, -1.412766, -2.310103, 0.054354, -0.471776, 0.459386, 0.701954, 0.138241, 0.760133, 0.229211, 0.530065, -0.704673, -0.179611, 0.196776, 0.820528, -0.393741, 0.521167, -0.265839, -0.117542, 0.829519, -1.993060, -1.296472, -1.482185, -2.333616, -0.678264, 0.749434, -0.284884, 0.197790, 1.089217, 1.327686, -0.069138, 1.353586, 0.092127, -0.837398, -0.594400, -1.480537, -0.888134, -0.358017, 0.803585, 1.720770, -1.382182, 0.392827, -1.040544, 0.474697, -0.131087, -1.830906, 0.928297, -0.605001, -0.533900, -1.069752, -0.654283, 0.427890, -0.189244, 0.328662, 0.361922, 1.320662, -0.342786, -1.476858, 1.067222, -0.331488],
+    [1.114592, 0.383377, -0.131138, 0.348776, 1.951013, 2.076981, 0.069381, 0.160191, 1.076240, -0.845661, 0.333070, -0.025863, 0.313908, -0.833369, -1.589567, -2.072983, -1.117384, -0.458675, -0.293192, 1.937231, 1.105993, -0.962091, 0.347708, -0.407078, -0.284364, 0.185326, 0.619171, -0.339258, 1.063852, -1.141938, 0.006339, 2.597674, 0.223080, 1.433215, 0.091520, 0.580777, -0.056783, -0.170408, -0.779482, 0.430301, -0.851537, 0.665585, 1.085287, 0.366531, -0.286249, 0.453966, -0.308673, 0.935547, -1.831406, -0.335607, -1.990812, -1.495061, 1.363862, 0.895185, -0.719480, -1.502503, -2.964529, -0.543496, 2.420415, 0.434884, -0.559572, 0.465080, -1.560958, -0.297323],
+]
+
+
+def rp_signature() -> Column:
+    """Random-hyperplane LSH signature of the `embedding` column: bit b =
+    sign of the dot product with seeded hyperplane b of RP_PLANES,
+    packed into an integer bucket key. Cosine-similar vectors agree on
+    most signs, so near-dups collide; the signature is a handful of dot
+    products per row, all in codegen."""
+    v = as_double(F.col("embedding"))
     sig = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
+    for b, plane in enumerate(RP_PLANES):
         p = F.array(*[F.lit(float(x)) for x in plane])
         bit = F.when(dot(v, p) > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
             F.lit(0).cast("long")
@@ -236,7 +251,7 @@ def rp_signature(vec_col: Column, planes: list[list[float]]) -> Column:
     return sig
 
 
-def rp_lsh_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
+def rp_lsh_pairs(emb: DataFrame) -> DataFrame:
     """M3 at scale: embedding near-dup pairs WITHOUT a precomputed block
     column — random-projection buckets bound the candidate set (the
     unblocked-corpus replacement for label blocking / Spark ML's
@@ -244,7 +259,7 @@ def rp_lsh_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     (id_a, id_b, cosine_sim), cosine_sim >= 0.3."""
     side = emb.select(
         F.col("vec_id").alias("id"),
-        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        rp_signature().alias("bucket"),
         unit(F.col("embedding")).alias("u"),
     )
     a = side.select(F.col("id").alias("id_a"), "bucket", F.col("u").alias("v_a"))
@@ -256,7 +271,7 @@ def rp_lsh_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     )
 
 
-def hard_negatives(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
+def hard_negatives(emb: DataFrame) -> DataFrame:
     """Contrastive-pair mining: for each anchor, the most cosine-similar
     vector with a DIFFERENT label among its RP-LSH bucket mates — the
     "hard negative" a contrastive trainer wants (similar surface,
@@ -273,7 +288,7 @@ def hard_negatives(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     side = emb.select(
         F.col("vec_id").alias("id"),
         F.col("label").alias("lbl"),
-        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        rp_signature().alias("bucket"),
         unit(F.col("embedding")).alias("u"),
     )
     a = side.select(
@@ -300,7 +315,7 @@ def hard_negatives(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
     )
 
 
-def rp_lsh_multiprobe_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFrame:
+def rp_lsh_multiprobe_pairs(emb: DataFrame) -> DataFrame:
     """Multi-probe RP-LSH: each vector probes its own bucket AND every
     1-bit-flip neighbor, so pairs whose signatures differ in at most one
     hyperplane sign also become candidates — the standard recall lever
@@ -314,10 +329,10 @@ def rp_lsh_multiprobe_pairs(emb: DataFrame, planes: list[list[float]]) -> DataFr
     equi-join on the bucket key, and a.id < b.id + distinct dedups the
     multi-route hits.
     """
-    nbits = len(planes)
+    nbits = len(RP_PLANES)
     side = emb.select(
         F.col("vec_id").alias("id"),
-        rp_signature(F.col("embedding"), planes).alias("bucket"),
+        rp_signature().alias("bucket"),
         unit(F.col("embedding")).alias("u"),
     )
     probes = F.array(

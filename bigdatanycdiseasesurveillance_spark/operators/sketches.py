@@ -24,18 +24,22 @@ not have this repo on sys.path under the round driver.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .sampling import hash_deviate
 
 
-def misra_gries_candidates(items: DataFrame, col: str, k: int) -> DataFrame:
-    """Per-partition Misra-Gries summaries, unioned and deduped.
-    `items` is a one-column frame of occurrences (pre-exploded).
-    Returns a DataFrame of candidate values (column name preserved)."""
+# heavy hitter := frequency strictly > total / HH_DENOM
+HH_DENOM = 64
+
+
+def misra_gries_candidates(items: DataFrame) -> DataFrame:
+    """Per-partition Misra-Gries summaries with k = HH_DENOM counters,
+    unioned and deduped. `items` is a one-column frame of `token`
+    occurrences (pre-exploded). Returns a DataFrame of candidate `token`
+    values."""
+    k = HH_DENOM
 
     def mg(batches):
         import pandas as _pd
@@ -55,30 +59,28 @@ def misra_gries_candidates(items: DataFrame, col: str, k: int) -> DataFrame:
                         del counters[u]
                     for u in counters:
                         counters[u] -= 1
-        yield _pd.DataFrame({col: list(counters.keys())})
+        yield _pd.DataFrame({"token": list(counters.keys())})
 
     from ..tables import parallelize_scan
 
     # pass 1 is Python-per-item; more partitions only ENLARGE the
     # candidate superset (k per partition), never lose a heavy hitter,
     # and pass 2 recounts exactly — so the rebalance is result-safe
-    return parallelize_scan(items).mapInPandas(mg, schema=f"{col} string").distinct()
+    return parallelize_scan(items).mapInPandas(mg, schema="token string").distinct()
 
 
-def heavy_hitters_exact(
-    items: DataFrame, col: str, denom: int
-) -> DataFrame:
-    """Items with frequency strictly greater than total/denom, exactly:
-    Misra-Gries candidates (k = denom counters) then an exact count of
-    candidates only. Returns (col, cnt) gated in integer arithmetic."""
-    k = int(math.ceil(denom))
-    cand = misra_gries_candidates(items, col, k)
+def heavy_hitters_exact(items: DataFrame) -> DataFrame:
+    """`token` values with frequency strictly greater than
+    total/HH_DENOM, exactly: Misra-Gries candidates (k = HH_DENOM
+    counters) then an exact count of candidates only. Returns
+    (token, cnt) gated in integer arithmetic."""
+    cand = misra_gries_candidates(items)
     total = items.count()  # scalar; one job, no per-row driver work
     return (
-        items.join(F.broadcast(cand), col, "left_semi")
-        .groupBy(col)
+        items.join(F.broadcast(cand), "token", "left_semi")
+        .groupBy("token")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .filter(F.col("cnt") * denom > F.lit(total))
+        .filter(F.col("cnt") * HH_DENOM > F.lit(total))
     )
 
 
@@ -98,11 +100,12 @@ CMS_WIDTH = 32
 CMS_DEPTH = 4
 
 
-def cms_table(items: DataFrame, col: str) -> DataFrame:
-    """Count-min sketch in relational form: one row per (d, bucket) with
-    its counter. Mergeable: the sketch of a union of corpora is SUM(cnt)
-    grouped by (d, bucket) over the per-corpus sketches — the same
-    re-aggregable-partials contract as the HLL partials query.
+def cms_table(items: DataFrame) -> DataFrame:
+    """Count-min sketch of the `user_key` column in relational form: one
+    row per (d, bucket) with its counter. Mergeable: the sketch of a
+    union of corpora is SUM(cnt) grouped by (d, bucket) over the
+    per-corpus sketches — the same re-aggregable-partials contract as
+    the HLL partials query.
 
     Scale shape: one scan; the shuffle carries at most depth x width
     rows per map task (map-side combine), never the raw items — this is
@@ -110,7 +113,7 @@ def cms_table(items: DataFrame, col: str) -> DataFrame:
     would shuffle billions of distinct keys.
     """
     width, depth = CMS_WIDTH, CMS_DEPTH
-    v = F.col(col).cast("string")
+    v = F.col("user_key").cast("string")
     buckets = items.select(
         *[cms_bucket(v, d, width).alias(f"b{d}") for d in range(depth)]
     )
@@ -130,15 +133,16 @@ def cms_table(items: DataFrame, col: str) -> DataFrame:
     return stacked.groupBy("d", "bucket").agg(F.count("*").cast("long").alias("cnt"))
 
 
-def cms_estimates(queries: DataFrame, col: str, cms: DataFrame) -> DataFrame:
-    """Point-query estimates against a built sketch: est(x) = min over
-    depth rows of counter[d][bucket_d(x)] (0 when a bucket is absent —
-    only possible for items outside the sketched corpus). The sketch is
-    depth x width rows, so the join broadcasts; query volume streams."""
+def cms_estimates(queries: DataFrame, cms: DataFrame) -> DataFrame:
+    """Point-query estimates of `user_key` values against a built
+    sketch: est(x) = min over depth rows of counter[d][bucket_d(x)] (0
+    when a bucket is absent — only possible for items outside the
+    sketched corpus). The sketch is depth x width rows, so the join
+    broadcasts; query volume streams."""
     width, depth = CMS_WIDTH, CMS_DEPTH
-    v = F.col(col).cast("string")
+    v = F.col("user_key").cast("string")
     qb = queries.select(
-        F.col(col),
+        F.col("user_key"),
         F.explode(
             F.array(
                 *[
@@ -150,9 +154,9 @@ def cms_estimates(queries: DataFrame, col: str, cms: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("s"),
-    ).select(col, "s.d", "s.bucket")
+    ).select("user_key", "s.d", "s.bucket")
     return (
         qb.join(F.broadcast(cms), ["d", "bucket"], "left")
-        .groupBy(col)
+        .groupBy("user_key")
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).cast("long").alias("cms_est"))
     )

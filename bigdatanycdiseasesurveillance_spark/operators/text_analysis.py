@@ -74,10 +74,11 @@ def quality_score(df: DataFrame) -> DataFrame:
     )
 
 
-def char_trigrams(text: str) -> Column:
-    """Distinct character trigrams of normalized text (empty array if
-    the text is shorter than 3 chars — Spark's sequence() would count
-    DOWN for a negative span, so the guard matters).
+def char_trigrams() -> Column:
+    """Distinct character trigrams of the normalized `text` column
+    (empty array if the text is shorter than 3 chars — Spark's
+    sequence() would count DOWN for a negative span, so the guard
+    matters).
 
     The normalized string is bound to a lambda variable via a
     one-element transform() so the regexp normalization runs ONCE per
@@ -93,7 +94,7 @@ def char_trigrams(text: str) -> Column:
             F.array().cast("array<string>")
         )
 
-    return F.element_at(F.transform(F.array(F.expr(normalized(text))), _grams), 1)
+    return F.element_at(F.transform(F.array(F.expr(normalized("text"))), _grams), 1)
 
 
 # trigrams per language profile
@@ -112,12 +113,12 @@ def langid_trigram(docs: DataFrame) -> DataFrame:
     argmax ties break on language asc.
     """
     grams = docs.select(
-        "doc_id", "lang", F.explode(char_trigrams("text")).alias("g")
+        "doc_id", "lang", F.explode(char_trigrams()).alias("g")
     )
     # both the profile build and the scoring join consume the exploded
-    # gram stream — persist it so normalization+explode runs one scan,
+    # gram stream — checkpoint it so normalization+explode runs one scan,
     # not two (at 100 TB this is a stage output you'd materialize anyway)
-    grams = grams.persist()
+    grams = grams.localCheckpoint(eager=False)
     freq = grams.groupBy("lang", "g").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("lang").orderBy(F.desc("freq"), F.asc("g"))
     profiles = (

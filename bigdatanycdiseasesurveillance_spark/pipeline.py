@@ -73,14 +73,7 @@ def run_pipeline(
         bronze_obs, F.expr("count(1) AS n_bronze")
     )
 
-    normalized = normalize_events(
-        bronze,
-        ts_candidates=ts_candidates,
-        id_candidates=id_candidates,
-        content_cols=["text"],
-        text_col="text",
-        source_file_col="source_path",
-    )
+    normalized = normalize_events(bronze, ts_candidates, id_candidates)
     kwargs = {}
     if primary_vocab:
         kwargs = dict(

@@ -1,10 +1,1 @@
-from .inspect import (  # noqa: F401
-    broadcast_join_count,
-    codegen_stage_count,
-    executed_plan,
-    formatted_plan,
-    has_partial_aggregation,
-    plan_invariants,
-    pushed_filters,
-    shuffle_count,
-)
+from .inspect import executed_plan, plan_invariants  # noqa: F401

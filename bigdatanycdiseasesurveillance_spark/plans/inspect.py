@@ -2,12 +2,13 @@
 
 The reference hand-writes its pushdown as SQL strings and never looks at
 a plan; this engine's contract is the opposite — declare the logical
-plan, then ASSERT the physical properties that matter at 100 TB:
-filters reached the scan, small dims broadcast, aggregates have a
-map-side partial pass, the hot path stays in whole-stage codegen, and
-no plan grew an accidental extra shuffle. tests/test_plans.py pins these
-for the headline queries so a regression (e.g. a join falling back to
-sort-merge-join after a schema change) fails CI, not the cluster.
+plan, then ASSERT the physical properties that matter at 100 TB.
+`plan_invariants` counts the node families the registry-wide sweep
+(plans/sweep.py) pins per query: shuffles, cartesian products,
+nested-loop joins, row-at-a-time Python and unpartitioned windows.
+tests/test_plans.py asserts the rest (pushdown, broadcast dims, partial
+aggregation, codegen) on the headline queries, so a regression fails
+CI, not the cluster.
 """
 
 from __future__ import annotations
@@ -20,53 +21,6 @@ from pyspark.sql import DataFrame
 def executed_plan(df: DataFrame) -> str:
     """The physical plan after AQE initial planning, as text."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted_plan(df: DataFrame) -> str:
-    """explain("formatted") output (node list + details) as a string."""
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def broadcast_join_count(df: DataFrame) -> int:
-    """Number of broadcast joins (hash or nested-loop) in the plan."""
-    plan = executed_plan(df)
-    return len(re.findall(r"Broadcast(HashJoin|NestedLoopJoin)", plan))
-
-
-def shuffle_count(df: DataFrame) -> int:
-    """Number of exchange (shuffle) boundaries in the plan. The single
-    most important scale number: each one is a full network repartition
-    of its input."""
-    return executed_plan(df).count("Exchange hashpartitioning") + executed_plan(
-        df
-    ).count("Exchange rangepartitioning")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters lists from every scan node (non-empty when
-    predicates reached the parquet reader)."""
-    return [
-        m.group(1)
-        for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))
-        if m.group(1).strip()
-    ]
-
-
-def has_partial_aggregation(df: DataFrame) -> bool:
-    """True when the plan contains a map-side partial aggregate before
-    the exchange (Spark's two-phase agg — reduces shuffle volume by the
-    group-key cardinality ratio)."""
-    return "partial_" in executed_plan(df) or bool(
-        re.search(r"HashAggregate.*keys=.*\n(.|\n)*HashAggregate", executed_plan(df))
-    )
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans. Fewer, wider spans = more of
-    the plan runs as generated JVM loops instead of volcano iterators."""
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))
 
 
 _WINDOW_EXEC_CLASSES = ("WindowExec", "WindowInPandasExec", "WindowGroupLimitExec")
@@ -96,10 +50,9 @@ def _walk_physical(root):
 def global_window_count(df: DataFrame) -> int:
     """Number of window nodes with an EMPTY partition spec — the
     `WindowExec: No Partition Defined` shape that funnels its whole
-    input through ONE task (r10 verdict directive #3: the one
-    scale-killer class the text-grep invariants could not see;
-    agg_rfm_segments' three global ntile sorts sailed through the r9
-    pins). Counted by JVM tree traversal, not text parsing: the
+    input through ONE task: the one scale-killer class the text-grep
+    invariants could not see (agg_rfm_segments' three global ntile
+    sorts once passed the exchange pins). Counted by JVM tree traversal, not text parsing: the
     Window node's toString elides empty bracket groups, so partition
     emptiness is only reliable from partitionSpec() itself."""
     return sum(
@@ -112,8 +65,7 @@ def global_window_count(df: DataFrame) -> int:
 
 def plan_invariants(df: DataFrame) -> dict[str, int]:
     """Counts of the three node families no registry plan may grow
-    unvetted (the global invariants the r8 judge checked by hand,
-    mechanized per r8 verdict directive #5):
+    unvetted (global invariants once checked by hand, now mechanized):
 
     - cartesian:  CartesianProduct — an unbounded all-pairs blowup;
       never acceptable anywhere in the registry;
@@ -135,10 +87,10 @@ def plan_invariants(df: DataFrame) -> dict[str, int]:
     compares it against the per-query pinned budget
     (plans/shuffle_budget.json) so a refactor or Spark bump that
     silently adds a shuffle fails CI instead of surfacing as a bench
-    drift two rounds later (r9 verdict directive #3).
+    drift much later.
 
     ``global_window`` counts window nodes whose partition spec is
-    empty (r10 verdict directive #3). Like bnlj it is violation-grade
+    empty. Like bnlj it is violation-grade
     unless the query is on the vetted allowlist (bucket-frame /
     vocab-sized window inputs, or documented oracle-parity forms), and
     like exchanges it is pinned per query so drift in either direction

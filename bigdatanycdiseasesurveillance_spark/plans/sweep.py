@@ -1,7 +1,7 @@
-"""Registry-wide physical-plan invariant sweep (r8 verdict directive
-#5): this sweeps ALL registry queries so a plan regression (a Spark
-version bump or an innocent refactor injecting a cartesian / unvetted
-nested-loop / row-Python node) fails CI, not the cluster.
+"""Registry-wide physical-plan invariant sweep: this sweeps ALL
+registry queries so a plan regression (a Spark version bump or an
+innocent refactor injecting a cartesian / unvetted nested-loop /
+row-Python node) fails CI, not the cluster.
 tools/plan_sweep.py is the CLI that writes the PLAN_SWEEP.json
 artifact; tests/test_plan_sweep.py runs the same loop inside pytest."""
 
@@ -14,18 +14,18 @@ from .inspect import plan_invariants
 
 # Every BroadcastNestedLoopJoin the registry is ALLOWED to contain —
 # a BNLJ is fine iff one side is O(KB) by construction. Each entry was
-# vetted by reading its build subtree (r9; categories below), and the
+# vetted by reading its build subtree (categories below), and the
 # sweep flags STALE entries too, so the list shrinks with the code
 # instead of rotting.
 BNLJ_ALLOWLIST = {
     # 1-row scalar-stats crossJoins (HashAggregate keys=[] build side):
-    "cur_dedup_aware_mixing",  # sources frame x 1-row total/extra (r12)
-    "cur_mix_temperature_allocation",  # three tau runs, 1-row totals (r12)
-    "dq_allocation_drift",  # two allocation runs, 1-row totals (r12)
-    "samp_poisson_pps",  # corpus x 1-row grand-total T (r12)
-    "samp_stratified_neyman_compare",  # two allocation runs, 1-row totals (r12)
-    "txt_vocab_growth_profile",  # lang dim x 10-row decile spine (r12)
-    "cur_importance_resampling",  # 64-bucket stats x 1-row totals (r10)
+    "cur_dedup_aware_mixing",  # sources frame x 1-row total/extra
+    "cur_mix_temperature_allocation",  # three tau runs, 1-row totals
+    "dq_allocation_drift",  # two allocation runs, 1-row totals
+    "samp_poisson_pps",  # corpus x 1-row grand-total T
+    "samp_stratified_neyman_compare",  # two allocation runs, 1-row totals
+    "txt_vocab_growth_profile",  # lang dim x 10-row decile spine
+    "cur_importance_resampling",  # 64-bucket stats x 1-row totals
     "cur_quality_classifier",
     "dq_group_split_leakfree",
     "feat_quantile_binning",
@@ -33,7 +33,7 @@ BNLJ_ALLOWLIST = {
     "mix_temperature_sampling",
     "pack_greedy_ffd_profile",
     "risk_composite",
-    "samp_neyman_allocation",  # sources-sized strata x 1-row total/extra (r12)
+    "samp_neyman_allocation",  # sources-sized strata x 1-row total/extra
     "sql_dashboard_severity",
     "tpch_q11_important_stock",
     "tpch_q22_dormant_balance",
@@ -52,18 +52,17 @@ BNLJ_ALLOWLIST = {
     "txt_tfidf_top_terms",
     "txt_unigram_logprob",
     # KB-sized literal dims (LocalTableScan build side): value bands,
-    # subreddit->neighborhood dim, bbox rectangles (r13: the geo
-    # pipelines' bbox BNLJ became a least/when expression and left the
-    # list; cluster_geo_cellgrid left too when the cell cascade — and
-    # with it the 1-row stats crossJoins — moved driver-side into
+    # subreddit->neighborhood dim, bbox rectangles (the geo pipelines'
+    # bbox BNLJ became a least/when expression and left the list;
+    # cluster_geo_cellgrid left too when the cell cascade — and with it
+    # the 1-row stats crossJoins — moved driver-side into
     # cellgrid_assign):
     "join_quantity_bands",
     "loc_fallback_resolution",
     # single filtered row (the query vector vec_id=0):
     "emb_quantize_recall",
     # distinct-signature mask tables, pre-blocked band candidates — the
-    # bounded pair-generation shapes the r7/r8 judges re-read and
-    # justified:
+    # bounded pair-generation shapes, each re-read and justified:
     "dedup_minhash_lsh",
     "dedup_minhash_md5",
     "dedup_prefix_jaccard",
@@ -73,7 +72,7 @@ BNLJ_ALLOWLIST = {
 
 # Every unpartitioned window node (WindowExec with an empty partition
 # spec — `No Partition Defined`, the whole input through ONE task) the
-# registry is ALLOWED to contain (r10 verdict directive #3). A global
+# registry is ALLOWED to contain. A global
 # window is fine iff its INPUT frame is corpus-size independent; each
 # entry below names that bound. Counts are additionally pinned per
 # query in the budget file, so an injected global window in an
@@ -103,8 +102,7 @@ _BUDGET_PATH = os.path.join(os.path.dirname(__file__), "shuffle_budget.json")
 
 
 def load_shuffle_budget() -> dict:
-    """The pinned per-query Exchange budget (r9 verdict directive #3)
-    and global-window budget (r10 verdict directive #3).
+    """The pinned per-query Exchange budget and global-window budget.
 
     {"sf_dir": <dir it was pinned at>, "budget": {name: max_exchanges},
     "window_budget": {name: n_global_windows}}.
@@ -126,26 +124,17 @@ def sweep_specs(spark, sf_dir: str, specs: dict):
     passed: their registry fn drains the stream and returns a
     memory-sink table, so the inspectable batch plan is a trivial
     LocalTableScan — sweeping it would execute the whole pipeline
-    (including the two-pass restart-recovery run) to check nothing
-    (r9 review finding). Their Python/UDF hygiene is covered by the
+    (including the two-pass restart-recovery run) to check nothing.
+    Their Python/UDF hygiene is covered by the
     repo-wide anti-pattern greps and the streaming pytest pins; their
     micro-batch plans are not batch-inspectable from here."""
-    # Normalize cache-manager state: a query that calls .cache()
-    # (graph_pagerank_nations' normalized-edge table) plans DIFFERENT
-    # Exchange counts depending on whether an equivalent plan is
-    # already materialized in the session cache — measured 40 fresh vs
-    # 64 after a prior executed run in the same session (the shared
-    # pytest session runs the oracle-parity suite first). Clearing
-    # pins every sweep to the fresh-session baseline the rebaseline
-    # measures; other tests' caches are lazy and simply re-materialize.
-    spark.catalog.clearCache()
     results: dict[str, dict] = {}
     violations: list[str] = []
     try:
         pinned = load_shuffle_budget()
     except OSError:
         pinned = None  # no pin yet — counts recorded, not judged
-    except ValueError as exc:  # corrupt/truncated JSON (r10 advisor):
+    except ValueError as exc:  # corrupt/truncated JSON:
         # surface as a violation and keep sweeping — a broken pin file
         # must not silently disable (or abort) budget enforcement
         pinned = None

@@ -89,7 +89,7 @@ def ts_seasonal_dow_forecast(spark, sf_dir):
         .groupBy("event_type", "day")
         .agg(F.count("*").alias("cnt"))
     )
-    return seasonal_dow_forecast(daily, keys=["event_type"])
+    return seasonal_dow_forecast(daily)
 
 
 @register(
@@ -544,9 +544,9 @@ def agg_rfm_segments(spark, sf_dir):
         "recency_days",
         "frequency",
         "monetary_cents",
-        ntile_from_rank("rn_r", "n_users", 4).alias("r_score"),
-        ntile_from_rank("rn_f", "n_users", 4).alias("f_score"),
-        ntile_from_rank("rn_m", "n_users", 4).alias("m_score"),
+        ntile_from_rank("rn_r").alias("r_score"),
+        ntile_from_rank("rn_f").alias("f_score"),
+        ntile_from_rank("rn_m").alias("m_score"),
     )
 
 

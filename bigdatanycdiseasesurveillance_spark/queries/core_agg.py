@@ -27,7 +27,7 @@ from ..tables import table
 def agg_daily_type_counts(spark, sf_dir):
     """A1/A2: daily per-type counts + value sums (the reference's
     daily_disease_counts materialized view shape)."""
-    return agg.daily_counts(table(spark, sf_dir, "events"), "ts", ["event_type"], "value")
+    return agg.daily_counts(table(spark, sf_dir, "events"), "value")
 
 
 @register(
@@ -39,8 +39,13 @@ def agg_daily_type_counts(spark, sf_dir):
     tags=("agg", "A4"),
 )
 def agg_hourly_series(spark, sf_dir):
-    """A4: hourly event time-series (dashboard hourly chart)."""
-    return agg.hourly_series(table(spark, sf_dir, "events"), "ts")
+    """A4: hourly event time-series (dashboard hourly chart; reference:
+    src/dashboard/app.py:137-155)."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
 @register(
@@ -53,8 +58,17 @@ def agg_hourly_series(spark, sf_dir):
     tags=("agg", "A3", "O1"),
 )
 def agg_top_event_types(spark, sf_dir):
-    """A3/O1: top-N distribution with deterministic tie-break."""
-    return agg.top_n(table(spark, sf_dir, "events"), ["event_type"])
+    """A3/O1: top-10 distribution with deterministic tie-break
+    (reference: src/dashboard/app.py:72-195 ORDER BY count DESC LIMIT
+    10). It aggregates THEN sorts the small aggregated side, so Spark
+    plans TakeOrderedAndProject, never a global sort of raw rows."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count("*").alias("cnt"))
+        .orderBy(F.desc("cnt"), F.asc("event_type"))
+        .limit(10)
+    )
 
 
 @register(
@@ -66,8 +80,13 @@ def agg_top_event_types(spark, sf_dir):
     tags=("agg", "A5"),
 )
 def agg_type_summary(spark, sf_dir):
-    """A5: per-group count + latest timestamp (borough_severity_summary)."""
-    return agg.group_summary(table(spark, sf_dir, "events"), ["event_type"], "ts")
+    """A5: per-group count + latest timestamp (reference:
+    src/database/psql_db_client.py:211-222 borough_severity_summary)."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count("*").alias("cnt"), F.max("ts").alias("last_ts"))
+    )
 
 
 @register(
@@ -84,8 +103,18 @@ def agg_type_summary(spark, sf_dir):
     tags=("agg", "A6", "A9"),
 )
 def agg_global_stats(spark, sf_dir):
-    """A6/A9: global stats row (count / distinct / min / max / avg)."""
-    return agg.global_stats(table(spark, sf_dir, "events"), "ts", "value", "user_id")
+    """A6/A9: global stats row (count / distinct / min / max / avg;
+    reference: src/database/psql_db_client.py:461-509). `avg_value`
+    averages over the VALUE_DECIMAL-quantized exact sum."""
+    return table(spark, sf_dir, "events").agg(
+        F.count("*").alias("n_rows"),
+        F.countDistinct("user_id").alias("n_distinct_ids"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
+        F.round(
+            F.expr(agg.exact_sum("value")).cast("double") / F.count(F.lit(1)), 4
+        ).alias("avg_value"),
+    )
 
 
 @register(
@@ -101,8 +130,23 @@ def agg_global_stats(spark, sf_dir):
     tags=("agg", "A7"),
 )
 def agg_value_mean_std(spark, sf_dir):
-    """A7: historical mean/std per group (z-score denominator)."""
-    return agg.mean_std_per_group(table(spark, sf_dir, "events"), ["event_type"], "value")
+    """A7: historical mean/std per group, the z-score denominator
+    (reference: src/analysis/disease_outbreak_forecaster.py:374-375).
+
+    `mean_value` uses the VALUE_DECIMAL-quantized exact sum while
+    `std_value` keeps the raw double path (its result is a generic
+    irrational, so a 4dp-boundary landing has measure zero)."""
+    return (
+        table(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("cnt"),
+            F.round(
+                F.expr(agg.exact_sum("value")).cast("double") / F.count(F.lit(1)), 4
+            ).alias("mean_value"),
+            F.round(F.stddev_samp("value"), 4).alias("std_value"),
+        )
+    )
 
 
 @register(
@@ -313,10 +357,22 @@ def agg_value_percentiles(spark, sf_dir):
 def agg_profile_documents(spark, sf_dir):
     """Per-column data profile of the documents corpus — null counts,
     distinct counts, min/max — the ingest-validation rollup a training
-    pipeline runs before accepting a new data drop."""
-    return agg.profile_table(
-        table(spark, sf_dir, "documents"), ["doc_id", "lang", "n_chars"]
-    )
+    pipeline runs before accepting a new data drop. Each column's
+    profile is a global aggregate, so the whole profile is three
+    single-row shuffles unioned together."""
+    docs = table(spark, sf_dir, "documents")
+    parts = [
+        docs.agg(
+            F.lit(c).alias("column"),
+            F.count("*").cast("long").alias("n_rows"),
+            F.sum(F.col(c).isNull().cast("long")).cast("long").alias("n_null"),
+            F.countDistinct(c).cast("long").alias("n_distinct"),
+            F.min(F.col(c).cast("string")).alias("min_str"),
+            F.max(F.col(c).cast("string")).alias("max_str"),
+        )
+        for c in ("doc_id", "lang", "n_chars")
+    ]
+    return parts[0].unionByName(parts[1]).unionByName(parts[2])
 
 
 @register(

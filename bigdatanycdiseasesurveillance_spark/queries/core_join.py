@@ -179,7 +179,7 @@ def join_asof_purchase_click(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type")
     p = ev.filter(F.col("event_type") == "purchase").drop("event_type")
     c = ev.filter(F.col("event_type") == "click").drop("event_type")
-    out = as_of_join(p, c, "user_id", "ts", "ts", ["event_id", "ts"], tiebreak="event_id")
+    out = as_of_join(p, c, "ts", "ts", ["event_id", "ts"], tiebreak="event_id")
     return out.select(
         "event_id",
         "user_id",

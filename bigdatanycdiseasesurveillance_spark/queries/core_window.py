@@ -6,6 +6,7 @@ the same shape the reference's forecaster and anomaly detector consume.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators import aggregations as agg
@@ -25,7 +26,7 @@ _DAILY_CTE = """
 
 
 def _daily(spark, sf_dir):
-    return agg.daily_counts(table(spark, sf_dir, "events"), "ts", ["event_type"])
+    return agg.daily_counts(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -41,8 +42,15 @@ def _daily(spark, sf_dir):
     tags=("window", "W1"),
 )
 def win_lag_features(spark, sf_dir):
-    """W1: lag-1/lag-7 features per series (forecast feature prep)."""
-    return win.lag_features(_daily(spark, sf_dir), ["event_type"], "day", "cnt", (1, 7))
+    """W1: lag-1/lag-7 features per series, forecast feature prep
+    (reference: src/analysis/disease_outbreak_forecaster.py:317-321)."""
+    w = Window.partitionBy("event_type").orderBy("day")
+    out = _daily(spark, sf_dir)
+    for k in (1, 7):
+        out = out.withColumn(
+            f"lag_{k}", F.coalesce(F.lag("cnt", k).over(w), F.lit(0).cast("long"))
+        )
+    return out
 
 
 @register(
@@ -59,8 +67,15 @@ def win_lag_features(spark, sf_dir):
     tags=("window", "W2"),
 )
 def win_rolling_7d(spark, sf_dir):
-    """W2: trailing 7-row mean/std (rolling forecast features)."""
-    return win.rolling_stats(_daily(spark, sf_dir), ["event_type"], "day", "cnt")
+    """W2: trailing 7-row mean/std, rolling forecast features
+    (reference: src/analysis/disease_outbreak_forecaster.py:323-325,
+    rowsBetween(-6, 0))."""
+    w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
+    return (
+        _daily(spark, sf_dir)
+        .withColumn("roll_avg_7", F.round(F.avg("cnt").over(w), 4))
+        .withColumn("roll_std_7", F.round(F.stddev_samp("cnt").over(w), 4))
+    )
 
 
 @register(
@@ -102,7 +117,7 @@ def win_anomaly_zscore(spark, sf_dir):
     z-score excluding the current row, std=0 -> pct-change rule, plus
     M12 risk bands (reference: src/analysis/anomaly_detection.py:34-75;
     disease_outbreak_forecaster.py:128-145)."""
-    out = win.expanding_zscore(_daily(spark, sf_dir), ["event_type"], "day", "cnt")
+    out = win.expanding_zscore(_daily(spark, sf_dir))
     z = F.col("z_score")
     return out.withColumn(
         "risk_level",
@@ -145,10 +160,14 @@ def win_latest_per_user(spark, sf_dir):
 )
 def win_running_value(spark, sf_dir):
     """Cumulative per-user value (running-total window)."""
-    ev = table(spark, sf_dir, "events")
-    return win.running_total(ev, ["user_id"], ["ts", "event_id"], "value").select(
-        "event_id", "user_id", "running_total"
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
+    return table(spark, sf_dir, "events").withColumn(
+        "running_total", F.round(F.sum("value").over(w), 2)
+    ).select("event_id", "user_id", "running_total")
 
 
 @register(
@@ -165,7 +184,11 @@ def win_running_value(spark, sf_dir):
     tags=("window", "rank"),
 )
 def win_rank_types_daily(spark, sf_dir):
-    """Top-3 event types per day via dense_rank (ranking gap-fill)."""
-    return win.rank_within_group(
-        _daily(spark, sf_dir), ["day"], [F.desc("cnt"), F.asc("event_type")], top=3
+    """Top-3 event types per day via dense_rank (the reference has only
+    orderBy+limit top-k; SURVEY §2.5 notes rank as a gap we fill)."""
+    w = Window.partitionBy("day").orderBy(F.desc("cnt"), F.asc("event_type"))
+    return (
+        _daily(spark, sf_dir)
+        .withColumn("rnk", F.dense_rank().over(w))
+        .filter(F.col("rnk") <= 3)
     )

@@ -142,7 +142,7 @@ def cur_full_pipeline(spark, sf_dir):
         parallelize_scan(d.filter(is_bench))
         .select(
             F.explode(
-                F.array_distinct(token_shingles("text", 5))
+                F.array_distinct(token_shingles(5))
             ).alias("sh")
         )
         .distinct()
@@ -156,7 +156,7 @@ def cur_full_pipeline(spark, sf_dir):
         .select(
             "doc_id",
             F.explode(
-                F.array_distinct(token_shingles("text", 5))
+                F.array_distinct(token_shingles(5))
             ).alias("sh"),
         )
         .join(F.broadcast(bench_sh), "sh")
@@ -167,7 +167,7 @@ def cur_full_pipeline(spark, sf_dir):
 
     # all row-local signals in the scan stage; text is dropped before
     # the first exchange (guide §2.3: project before the exchange)
-    g2 = token_shingles("text", 2)
+    g2 = token_shingles(2)
     dup_frac = F.round(
         F.lit(1.0)
         - F.try_divide(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..operators.aggregations import exact_sum
+from ..operators.sketches import HH_DENOM
 from ..registry import register
 from ..streaming.pipelines import _run_to_memory, stream_table
 from ..tables import table
@@ -511,9 +512,6 @@ def txt_token_entropy(spark, sf_dir):
     )
 
 
-_HH_DENOM = 64  # heavy hitter := frequency strictly > total/64
-
-
 @register(
     "agg_heavy_hitters",
     oracle=f"""
@@ -525,7 +523,7 @@ _HH_DENOM = 64  # heavy hitter := frequency strictly > total/64
         SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM tok, tot
         GROUP BY token, tot.n
-        HAVING COUNT(*) * {_HH_DENOM} > tot.n
+        HAVING COUNT(*) * {HH_DENOM} > tot.n
     """,
     tags=("sketch", "heavy-hitters", "training-data"),
 )
@@ -541,19 +539,18 @@ def agg_heavy_hitters(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents")
     items = d.select(F.explode(F.expr(tokens("text"))).alias("token"))
-    return heavy_hitters_exact(items, "token", _HH_DENOM)
+    return heavy_hitters_exact(items)
 
 
-_MIX_BUDGETS = {"src0": 100_000, "src1": 600}
 _MIX_DEFAULT = 300
 
 
 def _mix_oracle() -> str:
-    from ..operators.sampling import deviate_sql
+    from ..operators.sampling import TOKEN_BUDGETS, deviate_sql
 
     dev = deviate_sql("doc_id", "mix")
     cases = " ".join(
-        f"WHEN source = '{s}' THEN {b}" for s, b in _MIX_BUDGETS.items()
+        f"WHEN source = '{s}' THEN {b}" for s, b in TOKEN_BUDGETS.items()
     )
     bud = f"CASE {cases} ELSE {_MIX_DEFAULT} END"
     return f"""
@@ -595,9 +592,7 @@ def mix_token_budget(spark, sf_dir):
     d = table(spark, sf_dir, "documents").withColumn(
         "ntok", F.expr(token_count("text")).cast("long")
     )
-    mixed = take_token_budget(
-        d, "doc_id", "source", "ntok", _MIX_BUDGETS, default_budget=_MIX_DEFAULT
-    )
+    mixed = take_token_budget(d, default_budget=_MIX_DEFAULT)
     return mixed.groupBy("source").agg(
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("n_docs_kept"),
         F.sum(F.when(F.col("keep"), F.col("ntok")).otherwise(0))

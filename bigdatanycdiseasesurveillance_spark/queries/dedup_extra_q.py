@@ -215,7 +215,7 @@ def dedup_containment_pairs(spark, sf_dir):
         F.sum("w").cast("long").alias("n_pairs"),
         F.sum(F.col("w") * F.col("cmax_e4")).cast("long").alias("contain_max_sum_e4"),
         F.sum(F.col("w") * F.col("cmin_e4")).cast("long").alias("contain_min_sum_e4"),
-        SS.weighted_digest("w", "source", "mask_a", "mask_b", "cmax_e4", "cmin_e4")
+        SS.weighted_digest("source", "mask_a", "mask_b", "cmax_e4", "cmin_e4")
         .cast("long")
         .alias("pair_digest"),
     )
@@ -553,7 +553,7 @@ def dedup_incremental_new_vs_old(spark, sf_dir):
         F.coalesce(F.sum(F.col("w") * F.col("je4")), F.lit(0))
         .cast("long")
         .alias("jaccard_sum_e4"),
-        F.coalesce(SS.weighted_digest("w", "mn", "mo", "je4"), F.lit(0))
+        F.coalesce(SS.weighted_digest("mn", "mo", "je4"), F.lit(0))
         .cast("long")
         .alias("pair_digest"),
     )

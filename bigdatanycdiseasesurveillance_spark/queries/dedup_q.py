@@ -171,7 +171,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     # tests/test_dedup.py pins replay == D.minhash_lsh_pairs buckets.
     bands = D.MINHASH_BANDS
     sigs = rep_toks.select(
-        "mask", F.expr(D.minhash_signature("tok")).alias("sig")
+        "mask", F.expr(D.minhash_signature()).alias("sig")
     )
     bh = sigs.select(
         "mask",

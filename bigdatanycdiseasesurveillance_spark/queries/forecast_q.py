@@ -9,7 +9,7 @@ from ..tables import table
 
 
 def _daily(spark, sf_dir):
-    return agg.daily_counts(table(spark, sf_dir, "events"), "ts", ["event_type"])
+    return agg.daily_counts(table(spark, sf_dir, "events"))
 
 
 @register(
@@ -38,7 +38,7 @@ def _daily(spark, sf_dir):
 def forecast_linear_trend(spark, sf_dir):
     """M10-class forecast, fully native: per-group OLS trend via
     regr_slope/regr_intercept aggregates, 7-day horizon, clipped at 0."""
-    return FC.linear_forecast(_daily(spark, sf_dir), ["event_type"])
+    return FC.linear_forecast(_daily(spark, sf_dir))
 
 
 @register(

@@ -207,7 +207,7 @@ def cluster_geo_pipeline(spark, sf_dir):
 def _geohash_oracle() -> str:
     from ..functions.geohash import geohash_stages
 
-    cx, cy, value, chars = geohash_stages("lat", "lon")
+    cx, cy, value, chars = geohash_stages()
     return f"""
         WITH pts AS (
             SELECT user_id,
@@ -246,7 +246,7 @@ def geo_geohash_rollup(spark, sf_dir):
     on the cell key; TakeOrdered top-20."""
     from ..functions.geohash import geohash_stages
 
-    cx, cy, value, chars = geohash_stages("lat", "lon")
+    cx, cy, value, chars = geohash_stages()
     pts = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")

@@ -218,9 +218,9 @@ def graph_pagerank_nations(spark, sf_dir):
     en = edges.join(outw, "src").select(
         "src", "dst", (F.col("w") / F.col("tw")).alias("wn")
     )
-    # nodes-sized tables from here on: cache the normalized edges so the
-    # fact joins above run once, not once per iteration
-    en = en.cache()
+    # nodes-sized tables from here on: checkpoint the normalized edges so
+    # the fact joins above run once, not once per iteration
+    en = en.localCheckpoint(eager=False)
     ranks = n.select(F.col("n_nationkey").alias("k"), F.lit(1.0 / _PR_N).alias("pr"))
     for _ in range(_PR_ITERS):
         contrib = (
@@ -399,7 +399,7 @@ def tree_subtree_rollup(spark, sf_dir):
             "parent",
             F.when(F.col("node") > 0, F.expr("(node - 1) DIV 2")),
         )
-        .cache()
+        .localCheckpoint(eager=False)
     )
     # Small-population fast path (operators.bounded.bounded_collect,
     # falling back on None): the node table is one row per DISTINCT

@@ -34,6 +34,37 @@ _SLIDE_S = 3 * 3600
 _WIN_S = 6 * 3600
 
 
+def _bm25_scored(spark, sf_dir):
+    """Okapi BM25 (k1=1.2, b=0.75) score `bm25` per doc_id for the fixed
+    3-term query: postings from one explode; df and corpus stats are
+    broadcast scalars. The ranked frame of search_bm25_topk and stage 1
+    of search_rerank_2stage."""
+    # NOT checkpointed: the plan re-reads the corpus per derived
+    # frame (postings twice, doclen twice), but those subtrees execute
+    # as OVERLAPPING stages of one job; an interleaved A/B measured the
+    # checkpointed one-pass-each variant slightly SLOWER (med 0.84 s vs
+    # 0.80 s) because the two materializations run sequentially.
+    docs = table(spark, sf_dir, "documents")
+    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
+    qterms = tok.filter(F.col("term").isin(*_QUERY_TERMS))
+    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
+    stats = dl.agg(F.count("*").alias("n"), F.avg("doclen").alias("avg_len"))
+    dfq = qterms.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    denom = F.col("tf") + _BM25_K1 * (
+        1.0 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avg_len")
+    )
+    return (
+        tf.join(F.broadcast(dfq), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.sum(idf * (F.col("tf") * (_BM25_K1 + 1.0)) / denom).alias("score"))
+        .select("doc_id", F.round("score", 4).alias("bm25"))
+    )
+
+
 @register(
     "search_bm25_topk",
     oracle=f"""
@@ -82,40 +113,10 @@ _WIN_S = 6 * 3600
     bench=True,
 )
 def search_bm25_topk(spark, sf_dir):
-    """Lexical ranked retrieval: Okapi BM25 (k1=1.2, b=0.75) top-10 for
-    a fixed 3-term query. Postings from one explode; df and corpus
-    stats are broadcast scalars; ranking is TakeOrdered."""
-    # NOT checkpointed: the plan re-reads the corpus per derived
-    # frame (postings twice, doclen twice), but those subtrees execute
-    # as OVERLAPPING stages of one job; an interleaved A/B measured the
-    # checkpointed one-pass-each variant slightly SLOWER (med 0.84 s vs
-    # 0.80 s) because the two materializations run sequentially.
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
-    qterms = tok.filter(F.col("term").isin(*_QUERY_TERMS))
-    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
-    stats = dl.agg(
-        F.count("*").alias("n"), F.avg("doclen").alias("avg_len")
-    )
-    dfq = qterms.groupBy("term").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
-    tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    idf = F.log(
-        (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    denom = F.col("tf") + _BM25_K1 * (
-        1.0 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avg_len")
-    )
-    scored = (
-        tf.join(F.broadcast(dfq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * (F.col("tf") * (_BM25_K1 + 1.0)) / denom).alias("score"))
-    )
+    """Lexical ranked retrieval: the BM25 top-10 for a fixed 3-term
+    query; ranking is TakeOrdered."""
     return (
-        scored.select("doc_id", F.round("score", 4).alias("bm25"))
+        _bm25_scored(spark, sf_dir)
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(10)
     )
@@ -362,7 +363,6 @@ def txt_keyword_context(spark, sf_dir):
 
 
 _RERANK_K = 50
-_RERANK_QUERY = "data stream join"
 
 # the WITH ... scored body shared with search_bm25_topk's oracle, kept
 # as one literal so the two stay in lock step
@@ -418,11 +418,11 @@ def _rerank_oracle() -> str:
         mm AS (SELECT MIN(bm25) AS mn, MAX(bm25) AS mx FROM cand),
         blended AS (
             SELECT c.doc_id, c.bm25,
-                   ROUND({ce_sql(_RERANK_QUERY, "c.doc_id")}, 6) AS ce_score,
+                   ROUND({ce_sql("c.doc_id")}, 6) AS ce_score,
                    ROUND(0.5 * CASE WHEN m.mx > m.mn
                                     THEN (c.bm25 - m.mn) / (m.mx - m.mn)
                                     ELSE 1.0 END
-                         + 0.5 * ROUND({ce_sql(_RERANK_QUERY, "c.doc_id")}, 6), 6)
+                         + 0.5 * ROUND({ce_sql("c.doc_id")}, 6), 6)
                        AS final_score
             FROM cand c, mm m
         )
@@ -430,30 +430,6 @@ def _rerank_oracle() -> str:
         FROM blended
         ORDER BY final_score DESC, doc_id LIMIT 10
     """
-
-
-def _bm25_scored(spark, sf_dir):
-    """Shared BM25 scoring frame (doc_id, bm25) — stage 1 of the
-    two-stage retrieval pipeline; identical math to search_bm25_topk."""
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.expr(tokens("text"))).alias("term"))
-    qterms = tok.filter(F.col("term").isin(*_QUERY_TERMS))
-    dl = docs.select("doc_id", F.expr(token_count("text")).alias("doclen"))
-    stats = dl.agg(F.count("*").alias("n"), F.avg("doclen").alias("avg_len"))
-    dfq = qterms.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    tf = qterms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    denom = F.col("tf") + _BM25_K1 * (
-        1.0 - _BM25_B + _BM25_B * F.col("doclen") / F.col("avg_len")
-    )
-    return (
-        tf.join(F.broadcast(dfq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * (F.col("tf") * (_BM25_K1 + 1.0)) / denom).alias("score"))
-        .select("doc_id", F.round("score", 4).alias("bm25"))
-    )
 
 
 @register(
@@ -478,7 +454,7 @@ def search_rerank_2stage(spark, sf_dir):
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
         .limit(_RERANK_K)
     )
-    scored = cross_encoder_scores(cand, _RERANK_QUERY)
+    scored = cross_encoder_scores(cand)
     mm = scored.agg(F.min("bm25").alias("mn"), F.max("bm25").alias("mx"))
     norm = F.when(
         F.col("mx") > F.col("mn"),

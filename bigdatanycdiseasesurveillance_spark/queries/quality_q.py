@@ -350,7 +350,7 @@ def dq_split_leakage(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     toks, masks = SS.mask_relation(docs)
-    split = train_test_split(docs, "doc_id", test_rate=0.2).select("doc_id", "split")
+    split = train_test_split(docs, test_rate=0.2).select("doc_id", "split")
     g = (
         masks.join(split, masks["id"] == split["doc_id"])
         .groupBy("mask")

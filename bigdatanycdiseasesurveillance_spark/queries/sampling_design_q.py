@@ -104,9 +104,7 @@ def samp_neyman_allocation(spark, sf_dir):
             f" - s1 * s1 AS DOUBLE)) * {_W_SCALE}.0) AS BIGINT)"
         ).alias("wq"),
     )
-    alloc = largest_remainder_allocation(
-        w, "wq", _NEYMAN_BUDGET, order_col="source"
-    )
+    alloc = largest_remainder_allocation(w, "wq", _NEYMAN_BUDGET)
     return alloc.select(
         "source",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -471,7 +469,7 @@ def cur_dedup_aware_mixing(spark, sf_dir):
         .alias("dedup_tokens"),
     )
     alloc = largest_remainder_allocation(
-        m, "dedup_tokens", _MIX_BUDGET, order_col="source", out_col="token_budget"
+        m, "dedup_tokens", _MIX_BUDGET, out_col="token_budget"
     )
     return alloc.select(
         "source", "n_docs", "n_kept", "raw_tokens", "dedup_tokens", "token_budget"
@@ -781,14 +779,12 @@ def dq_allocation_drift(spark, sf_dir):
         m.select("source", F.col("mass_full").alias("mass")),
         "mass",
         _DRIFT_BUDGET,
-        order_col="source",
         out_col="alloc_full",
     ).select("source", "alloc_full")
     ah = largest_remainder_allocation(
         m.select("source", F.col("mass_half").alias("mass")),
         "mass",
         _DRIFT_BUDGET,
-        order_col="source",
         out_col="alloc_half",
     ).select("source", "alloc_half")
     return af.join(ah, "source").select(
@@ -987,17 +983,15 @@ _TEMP_BUDGET = 100_000
 _TEMP_TAUS = (1, 2, 4)
 
 
-def _temp_weight_sql(tau: int, mass: str) -> str:
+def _temp_weight_sql(tau: int) -> str:
     """mass^(1/tau) floor-quantized to a BIGINT weight; tau in {1,2,4}
     uses only nested IEEE sqrt (correctly rounded, engine-identical) —
     no pow(), whose libm implementations may differ."""
     if tau == 1:
-        return mass
+        return "mass"
     if tau == 2:
-        return f"CAST(FLOOR(SQRT(CAST({mass} AS DOUBLE)) * 1000000.0) AS BIGINT)"
-    return (
-        f"CAST(FLOOR(SQRT(SQRT(CAST({mass} AS DOUBLE))) * 1000000.0) AS BIGINT)"
-    )
+        return "CAST(FLOOR(SQRT(CAST(mass AS DOUBLE)) * 1000000.0) AS BIGINT)"
+    return "CAST(FLOOR(SQRT(SQRT(CAST(mass AS DOUBLE))) * 1000000.0) AS BIGINT)"
 
 
 def _temp_oracle() -> str:
@@ -1007,7 +1001,7 @@ def _temp_oracle() -> str:
             f"""
         w{tau} AS (
             SELECT source, CAST({tau} AS BIGINT) AS tau,
-                   {_temp_weight_sql(tau, "mass")} AS wq
+                   {_temp_weight_sql(tau)} AS wq
             FROM m
         ),
         t{tau} AS (SELECT SUM(wq) AS w FROM w{tau}),
@@ -1074,12 +1068,12 @@ def cur_mix_temperature_allocation(spark, sf_dir):
         w = m.select(
             "source",
             F.lit(tau).cast("long").alias("tau"),
-            F.expr(_temp_weight_sql(tau, "mass")).alias("wq"),
+            F.expr(_temp_weight_sql(tau)).alias("wq"),
         )
         outs.append(
-            largest_remainder_allocation(
-                w, "wq", _TEMP_BUDGET, order_col="source"
-            ).select("source", "tau", F.col("wq").alias("weight"), "alloc")
+            largest_remainder_allocation(w, "wq", _TEMP_BUDGET).select(
+                "source", "tau", F.col("wq").alias("weight"), "alloc"
+            )
         )
     return reduce(lambda a, b: a.unionByName(b), outs)
 
@@ -1398,14 +1392,12 @@ def samp_stratified_neyman_compare(spark, sf_dir):
         w.select("source", F.col("n_docs").cast("long").alias("nw")),
         "nw",
         _NEYMAN_BUDGET,
-        order_col="source",
         out_col="alloc_prop",
     ).select("source", "alloc_prop")
     na = largest_remainder_allocation(
         w.select("source", "wq"),
         "wq",
         _NEYMAN_BUDGET,
-        order_col="source",
         out_col="alloc_ney",
     ).select("source", "alloc_ney")
     return (
@@ -1501,7 +1493,7 @@ def txt_ngram_novelty_curve(spark, sf_dir):
     d = docs.select(
         "source",
         hash_deviate(F.col("doc_id"), "novel").alias("__dev"),
-        F.explode(token_shingles("text", n=3)).alias("g"),
+        F.explode(token_shingles(3)).alias("g"),
     ).select(
         "source", F.expr(f"__dev div {_VG_DECILE}").alias("dec"), "g"
     )

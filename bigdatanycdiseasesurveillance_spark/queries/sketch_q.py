@@ -275,9 +275,9 @@ def sketch_cms_user_counts(spark, sf_dir):
     e = table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("user_key")
     )
-    cms = cms_table(e, "user_key")
+    cms = cms_table(e)
     exact = e.groupBy("user_key").agg(F.count("*").cast("long").alias("exact_cnt"))
-    est = cms_estimates(exact.select("user_key"), "user_key", cms)
+    est = cms_estimates(exact.select("user_key"), cms)
     return exact.join(est, "user_key").select(
         "user_key",
         "exact_cnt",

@@ -90,23 +90,21 @@ def stream_cms_partials(spark, sf_dir):
     )
     # key space = depth x width sketch cells (128 rows, FIXED by the
     # sketch dimensions regardless of stream volume)
-    return _run_to_memory(
-        cms_table(src, "user_key"), "complete", state_partitions=4
-    )
+    return _run_to_memory(cms_table(src), "complete", state_partitions=4)
 
 
 # tokens in the lead-in fingerprint
 _PREFIX_TOKENS = 8
 
 
-def _prefix_fp(text: str):
+def _prefix_fp():
     """Lead-in fingerprint: md5 of the first _PREFIX_TOKENS whitespace
-    tokens of the normalized text — the boilerplate/header dedup key
+    tokens of the normalized `text` — the boilerplate/header dedup key
     (full-text md5 catches only byte-exact copies; templated corpora
     share lead-ins)."""
     from ..functions.text_funcs import tokens
 
-    return F.expr(f"md5(concat_ws(' ', slice({tokens(text)}, 1, {_PREFIX_TOKENS})))")
+    return F.expr(f"md5(concat_ws(' ', slice({tokens('text')}, 1, {_PREFIX_TOKENS})))")
 
 
 # the lead-in key's DuckDB twin
@@ -149,10 +147,10 @@ def stream_ingest_dedup(spark, sf_dir):
     existing = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 != 0)
-        .select(_prefix_fp("text").alias("fp"))
+        .select(_prefix_fp().alias("fp"))
         .distinct()
     )
-    fresh = src.withColumn("fp", _prefix_fp("text")).join(existing, "fp", "left_anti")
+    fresh = src.withColumn("fp", _prefix_fp()).join(existing, "fp", "left_anti")
     agg = fresh.groupBy("source").agg(F.count("*").cast("long").alias("n_new"))
     return _run_to_memory(agg, "complete")
 
@@ -311,11 +309,10 @@ def stream_surveillance_e2e(spark, sf_dir):
     exactly.
 
     The location step is the zip-prefix and alias part of
-    enrich_with_location's cascade, inline: on this stream the full
-    cascade gives the same rows, but its absent subreddit and
-    coordinate lookups stay in the micro-batch plan as nested-loop
-    joins, and its three statements cost ~70 ms more driver time per
-    call.
+    enrich_with_location's cascade, inline. Calling it gives the same
+    rows and, since it joins only the lookups whose signals the stream
+    carries, no nested-loop join; but it splits this query's one
+    statement into three, which cost ~70 ms more driver time per call.
 
     Scale: relevance/enrichment are stateless map-side work; the only
     stream state is the final tiny aggregate; the static dims broadcast

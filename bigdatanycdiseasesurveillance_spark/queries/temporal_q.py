@@ -425,7 +425,6 @@ def join_scd2_point_in_time(spark, sf_dir):
     out = as_of_join(
         lookups,
         changes.select("user_id", F.col("event_type").alias("utype"), "valid_from"),
-        key="user_id",
         left_ts="lts",
         right_ts="valid_from",
         payload_cols=["utype"],

@@ -13,6 +13,7 @@ from ..operators.relevance import (
 )
 from ..operators import dedup as D
 from ..operators import text_analysis as TA
+from ..operators.sampling import STRATUM_RATES
 from ..registry import register
 from ..tables import table
 
@@ -434,7 +435,6 @@ def dedup_minhash_md5(spark, sf_dir):
 # IDENTICAL integers: membership is exact, never float-boundary.
 
 _S_SCALE = 1 << 60
-_S_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25}
 _S_DEFAULT = 0.1
 _S_TEST = 0.2
 
@@ -442,7 +442,7 @@ _S_TEST = 0.2
 def _strat_threshold_sql() -> str:
     cases = " ".join(
         f"WHEN source = '{s}' THEN {int(r * _S_SCALE)}"
-        for s, r in _S_RATES.items()
+        for s, r in STRATUM_RATES.items()
     )
     return f"CASE {cases} ELSE {int(_S_DEFAULT * _S_SCALE)} END"
 
@@ -475,9 +475,7 @@ def sample_stratified_sources(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     return (
-        sample_stratified(
-            docs, "doc_id", "source", _S_RATES, default_rate=_S_DEFAULT
-        )
+        sample_stratified(docs, default_rate=_S_DEFAULT)
         .groupBy("source")
         .agg(
             F.count("*").cast("long").alias("n_sampled"),
@@ -513,7 +511,7 @@ def split_train_test_profile(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     return (
-        train_test_split(docs, "doc_id", test_rate=_S_TEST)
+        train_test_split(docs, test_rate=_S_TEST)
         .groupBy("source", "split")
         .agg(
             F.count("*").cast("long").alias("n_docs"),

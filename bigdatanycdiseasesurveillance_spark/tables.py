@@ -32,8 +32,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Session-scoped parquet SCHEMA memo (metadata only, never data): every
 # bare spark.read.parquet() runs a footer-inference job on the driver

@@ -124,11 +124,11 @@ def test_cms_split_merge_identity(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(sketches, "CMS_DEPTH", 3)
 
     e = table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("string").alias("k"), "event_id"
+        F.col("user_id").cast("string").alias("user_key"), "event_id"
     )
-    full = cms_table(e, "k")
-    half_a = cms_table(e.filter(F.col("event_id") % 2 == 0), "k")
-    half_b = cms_table(e.filter(F.col("event_id") % 2 == 1), "k")
+    full = cms_table(e)
+    half_a = cms_table(e.filter(F.col("event_id") % 2 == 0))
+    half_b = cms_table(e.filter(F.col("event_id") % 2 == 1))
     merged = (
         half_a.unionByName(half_b)
         .groupBy("d", "bucket")

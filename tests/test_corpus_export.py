@@ -144,7 +144,7 @@ def test_geohash_sql_matches_python_twin(spark, monkeypatch):
         (40.60, -74.00),
         (-33.8688, 151.2093),
     ]
-    cx, cy, value, chars = geohash_stages("lat", "lon")
+    cx, cy, value, chars = geohash_stages()
     df = (
         values_dim(
             spark, [(float(a), float(b)) for a, b in pts], "lat double, lon double"

@@ -27,7 +27,7 @@ def test_token_shingles_exact_and_short(spark):
     )
     out = {
         r["id"]: r["sh"]
-        for r in df.select("id", token_shingles("text", 3).alias("sh")).collect()
+        for r in df.select("id", token_shingles(3).alias("sh")).collect()
     }
     assert out[1] == ["a b c", "b c d"]
     assert out[2] == []  # shorter than n -> empty, never [1, 0] descent
@@ -233,36 +233,40 @@ def test_mask_kernel_rejects_open_vocabulary(spark):
         jaccard_pair_stats(big_vocab).collect()
 
 
-def test_misra_gries_candidates_superset_of_heavy_hitters(spark):
+def test_misra_gries_candidates_superset_of_heavy_hitters(spark, monkeypatch):
     """MG with k counters must surface every item with freq > n/k,
     whatever the partition layout."""
+    from bigdatanycdiseasesurveillance_spark.operators import sketches
     from bigdatanycdiseasesurveillance_spark.operators.sketches import (
         heavy_hitters_exact,
         misra_gries_candidates,
     )
 
+    monkeypatch.setattr(sketches, "HH_DENOM", 8)
     # skewed: 'hot' appears 400/1000, 'warm' 200, the rest singletons
     vals = ["hot"] * 400 + ["warm"] * 200 + [f"cold{i}" for i in range(400)]
     items = spark.createDataFrame([(v,) for v in vals], "token string").repartition(7)
-    cand = {r["token"] for r in misra_gries_candidates(items, "token", 8).collect()}
+    cand = {r["token"] for r in misra_gries_candidates(items).collect()}
     exact = {
         r["token"]: r["cnt"]
         for r in items.groupBy("token").count().withColumnRenamed("count", "cnt").collect()
         if r["cnt"] * 8 > 1000
     }
     assert set(exact) <= cand
-    hh = {r["token"]: r["cnt"] for r in heavy_hitters_exact(items, "token", 8).collect()}
+    hh = {r["token"]: r["cnt"] for r in heavy_hitters_exact(items).collect()}
     assert hh == {"hot": 400, "warm": 200}
 
 
-def test_take_token_budget_fills_with_one_doc_overshoot(spark):
+def test_take_token_budget_fills_with_one_doc_overshoot(spark, monkeypatch):
+    from bigdatanycdiseasesurveillance_spark.operators import sampling
     from bigdatanycdiseasesurveillance_spark.operators.sampling import (
         take_token_budget,
     )
 
+    monkeypatch.setattr(sampling, "TOKEN_BUDGETS", {"s0": 95})
     rows = [(i, "s0" if i < 40 else "s1", 10) for i in range(80)]
     df = spark.createDataFrame(rows, "doc_id long, source string, ntok long")
-    out = take_token_budget(df, "doc_id", "source", "ntok", {"s0": 95}, default_budget=25)
+    out = take_token_budget(df, default_budget=25)
     kept = (
         out.filter("keep")
         .groupBy("source")
@@ -278,9 +282,7 @@ def test_take_token_budget_fills_with_one_doc_overshoot(spark):
     a = sorted(r["doc_id"] for r in out.filter("keep").collect())
     b = sorted(
         r["doc_id"]
-        for r in take_token_budget(
-            df.repartition(11), "doc_id", "source", "ntok", {"s0": 95}, default_budget=25
-        )
+        for r in take_token_budget(df.repartition(11), default_budget=25)
         .filter("keep")
         .collect()
     )

@@ -168,7 +168,7 @@ def test_certification_band_replay_equals_operator_buckets(spark):
     sigs = docs.select(
         F.col("doc_id").alias("id"), F.expr(D.distinct_tokens("text")).alias("tok")
     ).select(
-        "id", F.expr(D.minhash_signature("tok")).alias("sig")
+        "id", F.expr(D.minhash_signature()).alias("sig")
     ).select(
         "id", *[F.expr(h).alias(f"bh{b}") for b, h in enumerate(D.minhash_band_hashes())]
     )

@@ -157,9 +157,6 @@ def test_bronze_to_silver_slice(spark, tmp_path):
         bronze,
         ts_candidates=["created_utc", "scraped_at"],
         id_candidates=["post_id"],
-        content_cols=["text"],
-        text_col="text",
-        source_file_col="source_path",
     )
     row = normalized.filter(F.col("id") == "p1").collect()[0]
     assert row["source"] == "reddit"
@@ -191,3 +188,37 @@ def test_bronze_to_silver_slice(spark, tmp_path):
         ("2025-11-29", "Queens", 1),
         ("2025-11-30", "Queens", 1),
     ]
+
+
+def test_location_on_a_document_stream_joins_no_absent_signal(spark, sf_dir, tmp_path):
+    """Documents carry none of the subreddit, coordinate or zip signals.
+    A stream keeps a join on a NULL key as a nested-loop join against an
+    empty relation, so enrich_with_location must not join those lookups
+    at all: the micro-batch plan has no BroadcastNestedLoopJoin, and the
+    drained rows equal the batch enrichment's."""
+    from bigdatanycdiseasesurveillance_spark.streaming.pipelines import (
+        _run_to_memory,
+        stream_table,
+    )
+    from bigdatanycdiseasesurveillance_spark.tables import table
+
+    q = (
+        enrich_with_location(stream_table(spark, sf_dir, "documents"), spark)
+        .writeStream.format("noop")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path))
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        plan = q._jsq.explainInternal(True)
+    finally:
+        q.stop()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    drained = _run_to_memory(
+        enrich_with_location(stream_table(spark, sf_dir, "documents"), spark), "append"
+    )
+    batch = enrich_with_location(table(spark, sf_dir, "documents"), spark)
+    assert sorted(map(tuple, drained.collect()), key=repr) == sorted(
+        map(tuple, batch.collect()), key=repr
+    )

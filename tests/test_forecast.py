@@ -8,7 +8,7 @@ from bigdatanycdiseasesurveillance_spark.tables import table
 
 
 def _daily(spark, sf_dir):
-    return agg.daily_counts(table(spark, sf_dir, "events"), "ts", ["event_type"])
+    return agg.daily_counts(table(spark, sf_dir, "events"))
 
 
 def test_grouped_forecast_deterministic(spark, sf_dir):

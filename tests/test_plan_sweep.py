@@ -194,3 +194,42 @@ def test_registry_plan_invariants(spark, sf_dir):
     assert not violations, "\n".join(violations)
     assert not stale, f"stale BNLJ allowlist entries (BNLJ gone): {stale}"
     assert set(BNLJ_ALLOWLIST) <= set(results)
+
+
+def test_pagerank_leaves_no_cache_for_the_sweep(spark, sf_dir):
+    """A query run earlier in the session must not change what the
+    sweep plans. graph_pagerank_nations once cached its edge table, and
+    a later sweep in the same session then planned 64 exchanges instead
+    of the fresh session's pin. Its reuse is a lazy localCheckpoint
+    now, so collecting it leaves the CacheManager empty, and the sweep
+    after it gets the pinned count."""
+    from bigdatanycdiseasesurveillance_spark.plans.sweep import load_shuffle_budget
+
+    name = "graph_pagerank_nations"
+    spec = all_specs()[name]
+    assert spec.fn(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    results, violations, _ = sweep_specs(spark, sf_dir, {name: spec})
+    assert results[name]["exchanges"] == load_shuffle_budget()["budget"][name]
+    assert not violations, violations
+
+
+def test_package_reuses_frames_only_by_local_checkpoint():
+    """One reuse device: a frame read twice is `localCheckpoint`ed,
+    which the CacheManager never sees. `.cache()`, `.persist()` and
+    `.checkpoint()` leave session state that changes later plans (see
+    the pagerank test above) and that the engine would have to
+    release."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "bigdatanycdiseasesurveillance_spark"
+    sites = sorted(
+        f"{p.relative_to(pkg)}:{node.lineno} .{node.func.attr}()"
+        for p in pkg.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"cache", "persist", "checkpoint"}
+    )
+    assert not sites, f"cache-manager reuse in the package: {sites}"

@@ -162,7 +162,7 @@ def test_grouped_histogram_quantiles_exact():
 def test_largest_remainder_allocation_exact():
     """Hand-checkable shares: proportional weights split exactly; a
     non-divisible split tops up the largest remainders, ties broken by
-    the order column ascending."""
+    `source` ascending."""
     from bigdatanycdiseasesurveillance_spark.operators.allocation import (
         largest_remainder_allocation,
     )
@@ -170,28 +170,26 @@ def test_largest_remainder_allocation_exact():
 
     spark = get_spark("bdnds-tests")
     exact = {
-        r["k"]: r["alloc"]
+        r["source"]: r["alloc"]
         for r in largest_remainder_allocation(
             spark.createDataFrame(
-                [("a", 5), ("b", 3), ("c", 2)], "k string, w long"
+                [("a", 5), ("b", 3), ("c", 2)], "source string, w long"
             ),
             "w",
             10,
-            order_col="k",
         ).collect()
     }
     assert exact == {"a": 5, "b": 3, "c": 2}
     # equal weights, budget 10 over 3: bases are 3 each, remainders tie
-    # -> the +1 goes to the lowest order key
+    # -> the +1 goes to the lowest source
     tie = {
-        r["k"]: r["alloc"]
+        r["source"]: r["alloc"]
         for r in largest_remainder_allocation(
             spark.createDataFrame(
-                [("a", 1), ("b", 1), ("c", 1)], "k string, w long"
+                [("a", 1), ("b", 1), ("c", 1)], "source string, w long"
             ),
             "w",
             10,
-            order_col="k",
         ).collect()
     }
     assert tie == {"a": 4, "b": 3, "c": 3}
@@ -517,7 +515,7 @@ def test_novelty_curve_invariants(spark, sf_dir):
     distinct = {
         r["source"]: r["n"]
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("source", F.explode(token_shingles("text", n=3)).alias("g"))
+        .select("source", F.explode(token_shingles(3)).alias("g"))
         .groupBy("source")
         .agg(F.countDistinct("g").alias("n"))
         .collect()

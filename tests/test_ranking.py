@@ -45,12 +45,10 @@ def test_bucketed_rank_matches_global_window(spark):
 
 
 def test_bucketed_running_sum_matches_global_window(spark):
-    df = _skewed(spark)
-    got = bucketed_running_sum(
-        df, F.expr("id div 64"), [F.asc("id")], "w", out_col="rs"
-    )
+    df = _skewed(spark).withColumnRenamed("w", "n_tokens")
+    got = bucketed_running_sum(df, F.expr("id div 64"), [F.asc("id")], out_col="rs")
     win = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
-    want = df.withColumn("rs", F.sum("w").over(win))
+    want = df.withColumn("rs", F.sum("n_tokens").over(win))
     g = {r["id"]: r["rs"] for r in got.collect()}
     w = {r["id"]: r["rs"] for r in want.collect()}
     assert g == w
@@ -60,12 +58,12 @@ def test_bucketed_running_sum_matches_global_window(spark):
 def test_ntile_from_rank_matches_spark_ntile(spark, n):
     df = spark.range(n).select(F.col("id"))
     ranked = bucketed_global_rank(
-        df, F.expr("id div 16"), [F.asc("id")], rank_col="rn", total_col="nn"
+        df, F.expr("id div 16"), [F.asc("id")], rank_col="rn", total_col="n_users"
     )
     got = {
         r["id"]: r["t"]
         for r in ranked.select(
-            "id", ntile_from_rank("rn", "nn", 4).alias("t")
+            "id", ntile_from_rank("rn").alias("t")
         ).collect()
     }
     want = {

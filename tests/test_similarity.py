@@ -97,25 +97,20 @@ def test_search_by_text_deterministic(spark, sf_dir):
 def test_hard_negatives_are_cross_label_bucket_mates(spark, sf_dir):
     """Each mined pair must be cross-label, and brute-force checking one
     anchor's bucket reproduces its chosen negative."""
-    from pyspark.sql import functions as F
-
     from bigdatanycdiseasesurveillance_spark.operators.similarity import (
         hard_negatives,
         rp_signature,
     )
-    from bigdatanycdiseasesurveillance_spark.queries.similarity_q import _RP_PLANES
     from bigdatanycdiseasesurveillance_spark.tables import table
 
     emb = table(spark, sf_dir, "embeddings")
-    out = hard_negatives(emb, _RP_PLANES)
+    out = hard_negatives(emb)
     labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
     rows = out.collect()
     assert rows
     for r in rows:
         assert labels[r["vec_id"]] != labels[r["hard_neg_id"]]
-    sig = emb.select(
-        "vec_id", "label", rp_signature(F.col("embedding"), _RP_PLANES).alias("b")
-    ).collect()
+    sig = emb.select("vec_id", "label", rp_signature().alias("b")).collect()
     buckets = {r["vec_id"]: r["b"] for r in sig}
     anchor = rows[0]
     assert buckets[anchor["vec_id"]] == buckets[anchor["hard_neg_id"]]
@@ -128,17 +123,16 @@ def test_multiprobe_recall_superset(spark, sf_dir):
         rp_lsh_multiprobe_pairs,
         rp_lsh_pairs,
     )
-    from bigdatanycdiseasesurveillance_spark.queries.similarity_q import _RP_PLANES
     from bigdatanycdiseasesurveillance_spark.tables import table
 
     emb = table(spark, sf_dir, "embeddings")
     single = {
         (r["id_a"], r["id_b"])
-        for r in rp_lsh_pairs(emb, _RP_PLANES).collect()
+        for r in rp_lsh_pairs(emb).collect()
     }
     multi = {
         (r["id_a"], r["id_b"])
-        for r in rp_lsh_multiprobe_pairs(emb, _RP_PLANES).collect()
+        for r in rp_lsh_multiprobe_pairs(emb).collect()
     }
     assert single <= multi
     assert len(multi) >= len(single)

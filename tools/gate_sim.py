@@ -22,13 +22,14 @@ from pyspark.sql import SparkSession
 
 from gate_sim_lib import norm_rows
 
+from bigdatanycdiseasesurveillance_spark.tables import TABLE_NAMES
+
 if os.path.realpath(os.getcwd()) == os.path.realpath("/root/repo"):
     sys.exit("run from /tmp (or any non-repo cwd), not the repo root")
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 # optional: further argv entries restrict the sweep to those query names
 ONLY = set(sys.argv[2:])
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
 def main():
@@ -44,7 +45,7 @@ def main():
         .getOrCreate()
     )
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     import __spark_entry__ as E
 

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Registry-wide physical-plan tripwire CLI (r8 verdict directive #5).
+"""Registry-wide physical-plan tripwire CLI.
 
 Builds EVERY registry query at sf0.001 (plan shapes are scale-
 invariant), checks the global invariants — zero CartesianProduct,
