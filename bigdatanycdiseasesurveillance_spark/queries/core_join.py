@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.time_funcs import epoch_sec
-from ..operators import aggregations as agg
 from ..operators.joins import as_of_join
 from ..registry import register
 from ..tables import table, values_dim

@@ -4,8 +4,6 @@ so the DuckDB oracle can reproduce it with VALUES dims."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ..domain.location import enrich_with_location
 from ..registry import register
 from ..tables import parallelize_scan, table

@@ -18,7 +18,7 @@ which needs no sort at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregations import cents, exact_sum

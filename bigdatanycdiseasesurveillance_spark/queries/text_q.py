@@ -11,7 +11,6 @@ from ..operators.relevance import (
     SECONDARY_VOCAB,
     extract_relevance,
 )
-from ..operators import dedup as D
 from ..operators import text_analysis as TA
 from ..operators.sampling import STRATUM_RATES
 from ..registry import register

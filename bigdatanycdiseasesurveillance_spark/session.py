@@ -8,7 +8,17 @@ settings every operator relies on:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing);
 - Arrow on (all pandas-UDF paths are Arrow-batched);
 - UTC session timezone (deterministic timestamp semantics vs the oracle);
-- shuffle partitions sized from the core count, not the 200 default.
+- local cores, default parallelism and shuffle partitions are one count,
+  `SPARK_GRAFT_CPUS` or else the CPUs the process may run on, not the
+  200 default;
+- a codegen cache of CODEGEN_CACHE_ENTRIES generated classes, not 100.
+  Spark compiles each distinct generated source once per cache entry.
+  perfbench's two workloads compile 182 distinct classes in one JVM
+  (87 for the refresh, 95 more for the four registry reads, which
+  compile 104 on their own), and a registry pass at sf0.001 after them
+  brings the JVM to 3,846. With 100 entries the four reads evict each
+  other in a cycle and recompile 32–57 classes every warm round (0.4–0.8
+  s of Janino); 5,000 holds the whole registry with ~30 % headroom.
 
 The factory is local-mode and launches the driver JVM itself (from
 `python`, not `spark-submit`): that JVM is the only one, so classes put
@@ -36,15 +46,50 @@ processes and a drain 330–530. Three confs replace that with a syscall:
 A JVM started before this factory (by a plain `SparkSession.builder`,
 since stopped) cannot load the jar; its sessions keep the stock FS and
 the default checkpoint manager.
+
+Class-data sharing. A cold driver JVM loads ~25,000 classes before its
+first refresh ends. When the factory launches the JVM it also hands it
+an AppCDS archive (HotSpot's class-data-sharing archive, a file of
+pre-parsed classes the JVM maps at start):
+
+- On a miss the JVM dumps the archive when it exits
+  (`-XX:ArchiveClassesAtExit`): after a perfbench run, 182 MB and 9 s
+  added to the exit on 4 cores. Every later launch maps it
+  (`-XX:SharedArchiveFile`, `-Xshare:auto`, `-XX:+VerifySharedSpaces`).
+- It is cached beside the jar as `driver-<key>.jsa`, keyed by the
+  release of the JDK the launcher runs, the names, sizes and mtimes of
+  the Spark jars, and the jar's name. A miss deletes the archives of
+  other keys; the jar is never touched.
+- A stopped dump leaves a file without the header magic (HotSpot writes
+  the header last), and that is a miss. JDK 17 maps a truncated archive
+  without checking its size and dies of SIGBUS, so `_archive_complete`
+  also checks that every region lies in the file; only JDK 17's header
+  is read, so another JDK launches without an archive.
+- An archive the JVM refuses anyway (a failed checksum, a moved cache)
+  is dropped silently by `-Xshare:auto`. The factory then finds it
+  absent from the JVM's memory maps and deletes it, so the next launch
+  dumps a good one.
+- The launcher puts `$SPARK_CONF_DIR` (default `$SPARK_HOME/conf`) on
+  the driver classpath. A directory with files there makes a dump fail
+  at JVM start and makes a later launch drop the archive ("shared class
+  paths mismatch"). So the launch runs with `SPARK_CONF_DIR` set to an
+  empty dir in the cache, set in `os.environ` for the launch only and
+  restored after it, on success or failure.
+- That swap is made only when the caller's conf dir holds nothing Spark
+  reads (no file but `*.template`) and no env var puts a directory on
+  the classpath (`_CLASSPATH_ENV`). Otherwise the JVM launches as
+  before, with no archive.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
 import re
 import shutil
+import struct
 import subprocess
 import tempfile
 import zipfile
@@ -68,9 +113,6 @@ _JVM_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 # factory below starts its sessions with them.
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    # runtime-settable; externally-created sessions otherwise default to
-    # 200 shuffle partitions — wasteful for the per-query shuffles here
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -80,16 +122,43 @@ RUNTIME_CONFS = {
     # and matches DuckDB's ns->µs read).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+# HotSpot's dynamic-archive magic, as the little-endian header writes it
+CDS_DYNAMIC_MAGIC = (0xF00BABA8).to_bytes(4, "little")
+# env vars whose value the launcher puts on the driver classpath
+_CLASSPATH_ENV = (
+    "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+    "SPARK_PREPEND_CLASSES", "SPARK_TESTING",
+)
+CODEGEN_CACHE_ENTRIES = 5000  # see the module docstring
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local cores, default parallelism and shuffle partitions:
+    `SPARK_GRAFT_CPUS` when set, else the CPUs this process may run on.
+    Read at call time, so a caller may set it after importing this."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
-def _javac_version(javac: str) -> str:
-    """The JDK's `release` file, read without starting a JVM; `javac
+def runtime_confs() -> dict[str, str]:
+    """RUNTIME_CONFS and the shuffle partitions: an external session
+    otherwise has 200, wasteful for the per-query shuffles here."""
+    return {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(default_parallelism())}
+
+
+def _cache_dir() -> str:
+    return os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "bdnds"
+    )
+
+
+def _spark_home() -> str:
+    return os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+
+
+def _jdk_release(binary: str) -> str:
+    """The JDK's `release` file, read without starting a JVM; `<binary>
     -version` where the JDK has none."""
-    release = os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(javac))), "release")
+    release = os.path.join(os.path.dirname(os.path.dirname(os.path.realpath(binary))), "release")
     try:
         with open(release) as fh:
             m = re.search(r'^JAVA_RUNTIME_VERSION="([^"]+)"', fh.read(), re.M)
@@ -97,9 +166,8 @@ def _javac_version(javac: str) -> str:
             return m.group(1)
     except OSError:
         pass
-    return subprocess.run(
-        [javac, "-version"], capture_output=True, text=True, check=True
-    ).stdout.strip()
+    done = subprocess.run([binary, "-version"], capture_output=True, text=True, check=True)
+    return (done.stdout + done.stderr).strip()
 
 
 def local_fs_jar() -> str:
@@ -109,9 +177,7 @@ def local_fs_jar() -> str:
     outside the checkout, and keyed by the sha256 of the sources and the
     javac version; `os.replace` makes a concurrent build safe. Needs a
     JDK: raises when no `javac` is on PATH."""
-    cache = os.path.join(
-        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "bdnds"
-    )
+    cache = _cache_dir()
     javac = shutil.which("javac")
     if javac is None:
         raise RuntimeError(
@@ -119,7 +185,7 @@ def local_fs_jar() -> str:
             "(the engine's session factory needs a JDK 17 or later)"
         )
     sources = sorted(glob.glob(os.path.join(_JVM_SRC, "bdnds", "*.java")))
-    key = hashlib.sha256(_javac_version(javac).encode())
+    key = hashlib.sha256(_jdk_release(javac).encode())
     for src in sources:
         with open(src, "rb") as fh:
             key.update(os.path.basename(src).encode() + b"\0" + fh.read())
@@ -127,13 +193,12 @@ def local_fs_jar() -> str:
     if os.path.exists(jar):
         return jar
     os.makedirs(cache, exist_ok=True)
-    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
     tmp = tempfile.mkdtemp(dir=cache)
     try:
         classes = os.path.join(tmp, "classes")
         built = subprocess.run(
             [javac, "--release", "17", "-d", classes,
-             "-cp", os.path.join(spark_home, "jars", "*"), *sources],
+             "-cp", os.path.join(_spark_home(), "jars", "*"), *sources],
             capture_output=True, text=True,
         )
         if built.returncode != 0:
@@ -150,26 +215,131 @@ def local_fs_jar() -> str:
     return jar
 
 
+def _driver_archive(jar: str) -> str | None:
+    """Path of the driver JVM's AppCDS archive, or None where the
+    factory launches without one: a conf dir or an env var would put a
+    directory with files on the driver classpath, or the JDK is not 17.
+
+    Keyed by the release of the JDK the launcher runs, the names, sizes
+    and mtimes of the Spark jars, and the name of `jar`."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_spark_home(), "conf")
+    conf_files = os.listdir(conf_dir) if os.path.isdir(conf_dir) else []
+    if any(os.environ.get(v) for v in _CLASSPATH_ENV) or not all(
+        f.endswith(".template") for f in conf_files
+    ):
+        return None
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        return None
+    release = _jdk_release(java)
+    if not re.match(r"17\b", release):  # _archive_complete reads JDK 17's header
+        return None
+    os.makedirs(_empty_conf_dir(), exist_ok=True)
+    if os.listdir(_empty_conf_dir()):
+        return None
+    key = hashlib.sha256(release.encode())
+    for path in sorted(glob.glob(os.path.join(_spark_home(), "jars", "*"))):
+        st = os.stat(path)
+        key.update(f"{os.path.basename(path)}\0{st.st_size}\0{st.st_mtime_ns}\0".encode())
+    key.update(os.path.basename(jar).encode())
+    return os.path.join(_cache_dir(), f"driver-{key.hexdigest()[:16]}.jsa")
+
+
+def _empty_conf_dir() -> str:
+    return os.path.join(_cache_dir(), "empty-conf")
+
+
+def _archive_complete(path: str) -> bool:
+    """Whether ``path`` is a whole JDK 17 dynamic archive.
+
+    HotSpot writes the header last, so a dump that was stopped, like a
+    zeroed file, has no magic. JDK 17 maps a truncated archive without
+    checking its size and dies of SIGBUS, so every region must lie in the
+    file: the header's version 11 layout is magic, crc and version, then
+    7 regions of 72 bytes from byte 16, each with its file offset at +24
+    and its length at +40."""
+    try:
+        with open(path, "rb") as fh:
+            head = fh.read(16 + 7 * 72)
+            size = os.fstat(fh.fileno()).st_size
+    except OSError:
+        return False
+    if len(head) < 16 + 7 * 72 or head[:4] != CDS_DYNAMIC_MAGIC or head[8:12] != b"\x0b\0\0\0":
+        return False
+    for region in range(16, 16 + 7 * 72, 72):
+        offset, _, used = struct.unpack_from("<3Q", head, region + 24)
+        if offset + used > size:
+            return False
+    return True
+
+
+def _archive_mapped(spark: SparkSession, archive: str) -> bool:
+    """Whether the driver JVM kept ``archive`` mapped: `-Xshare:auto`
+    drops one it refuses (a failed checksum, a stale jar) without a
+    word."""
+    pid = spark.sparkContext._gateway.proc.pid
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            return os.path.realpath(archive) in fh.read()
+    except OSError:  # no procfs
+        return True
+
+
+def _launch(builder, jar: str) -> SparkSession:
+    """Launch the driver JVM with `jar` on its classpath and the AppCDS
+    archive: mapped when it is complete, else dumped when the JVM exits."""
+    builder = builder.config("spark.driver.extraClassPath", jar).config(map=LOCAL_FS_CONFS)
+    archive = _driver_archive(jar)
+    if archive is None:
+        return builder.getOrCreate()
+    hit = _archive_complete(archive)
+    if hit:
+        share = f"-XX:SharedArchiveFile={archive} -Xshare:auto -XX:+VerifySharedSpaces"
+    else:  # the cache keeps the current key's archive only
+        for old in glob.glob(os.path.join(_cache_dir(), "driver-*.jsa")):
+            with contextlib.suppress(FileNotFoundError):  # another launch's miss
+                os.remove(old)
+        share = f"-XX:ArchiveClassesAtExit={archive}"
+    # the launch's child env is os.environ: swap the conf dir for it only
+    caller_conf = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = _empty_conf_dir()
+    try:
+        spark = builder.config(
+            "spark.driver.extraJavaOptions", f"{share} -Xlog:cds*=error"
+        ).getOrCreate()
+    finally:
+        if caller_conf is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = caller_conf
+    if hit and not _archive_mapped(spark, archive):
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(archive)  # so that the next launch dumps a good one
+    return spark
+
+
 def get_spark(app_name: str = "bdnds-engine", master: str | None = None) -> SparkSession:
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config(map=RUNTIME_CONFS)
+        .config(map=runtime_confs())
         # the factory's own planner settings, beyond RUNTIME_CONFS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # launch-time confs
         .config("spark.default.parallelism", str(cpus))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # no UI: tools/profile_query.py and perfbench read per-job times
         # from the event log
         .config("spark.ui.enabled", "false")
     )
     if SparkContext._gateway is None:  # this call launches the JVM
-        builder = builder.config("spark.driver.extraClassPath", local_fs_jar())
-    elif not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(NIO_FS_CLASS):
+        return _launch(builder, local_fs_jar())
+    if not SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(NIO_FS_CLASS):
         return builder.getOrCreate()  # a JVM launched without the jar
     return builder.config(map=LOCAL_FS_CONFS).getOrCreate()
 
@@ -191,7 +361,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """
     if getattr(spark, _CONFS_SENTINEL, False):
         return spark
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in runtime_confs().items():
         try:
             spark.conf.set(k, v)
         except Exception:  # conf not settable at runtime in this build — keep going

@@ -13,6 +13,7 @@
 3. No required parameter of a top-level package function takes the
    same literal or UPPER_CASE constant at every non-test call. That
    value is a constant too.
+4. No package module imports a name it never references.
 """
 
 from __future__ import annotations
@@ -234,3 +235,28 @@ def test_no_required_parameter_takes_one_constant_outside_tests():
     assert not single, (
         f"required parameters every non-test call passes one constant: {single}"
     )
+
+
+def test_no_package_module_imports_a_name_it_never_uses():
+    """A name counts as used when the module reads it anywhere. Skipped:
+    `from __future__`, a package `__init__.py`'s re-exports, and an
+    import marked `# noqa: F401`, kept for its side effect."""
+    unused = []
+    for p, tree in _non_test_trees():
+        if PKG not in p.parents:
+            continue
+        lines = p.read_text().splitlines()
+        reexports = _reexports(p, tree)
+        used = {node.id for node in ast.walk(tree) if isinstance(node, ast.Name)}
+        for node in ast.walk(tree):
+            if (
+                not isinstance(node, (ast.Import, ast.ImportFrom))
+                or getattr(node, "module", None) == "__future__"
+                or "noqa: F401" in lines[node.lineno - 1]
+            ):
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if id(alias) not in reexports and name not in used:
+                    unused.append(f"{p.relative_to(REPO)}:{node.lineno} {name}")
+    assert not unused, f"imported names the module never uses: {unused}"
